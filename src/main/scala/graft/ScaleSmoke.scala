@@ -65,19 +65,10 @@ object ScaleSmoke {
 
     // Hot-key kernel skew: ~90% of requests hit ONE product, the SURVEY §9
     // shape where run() serializes the hot product's shuffle+sort+fold
-    // through a single task. runWithHotSplit sub-keys it by time range —
-    // parallel sort, carry-stitched fold. The skew corpus gets 3x the base
-    // replication (~16M hot rows at the default factor). What this measures
-    // honestly: single-JVM wall-clock is PARITY-grade (the carry chain
-    // keeps the stitch sequential, and one in-memory sort of ~16M rows is
-    // cheap — both paths are bounded by the same serial fold CPU here); the
-    // split's actual value is the per-task bound — sort/fold memory per
-    // task is one range, not one product's whole history, which is what an
-    // executor OOM on a true hot key turns into. The stitch overhead the
-    // split pays for that bound is the split/plain delta printed below.
-    // seq is re-derived unique (replicated seq collides across a shared
-    // orderkey, and fold ties are untestable); the frame is persisted so
-    // both paths fold the identical row set.
+    // through a single task. The skew corpus gets 3x the base replication
+    // (~16M hot rows at the default factor). seq is re-derived unique
+    // (replicated seq collides across a shared orderkey), and the frame is
+    // persisted so the timing covers the fold, not the corpus build.
     val hotPid = 99999999L
     val skewed = spark.range(factor * 3L).crossJoin(li)
       .select(
@@ -93,18 +84,10 @@ object ScaleSmoke {
       .persist()
     skewed.count()
     val skewInv = inventory + (hotPid -> InventoryEntry(Int.MaxValue / 2, 3.0))
-    def checksum(ds: org.apache.spark.sql.Dataset[graft.candy.FulfilledLine]) =
-      ds.agg(sum("quantity"), round(sum("line_total"), 2)).head()
     val tsp = System.nanoTime()
-    val plainFold = Fulfillment.run(spark, skewed, skewInv)
-    val plainSum = checksum(plainFold)
+    Fulfillment.run(spark, skewed, skewInv)
+      .agg(sum("quantity"), round(sum("line_total"), 2)).head()
     val skewPlainSec = (System.nanoTime() - tsp) / 1e9
-    val tss = System.nanoTime()
-    val splitFold = Fulfillment.runWithHotSplit(spark, skewed, skewInv,
-      hotRowThreshold = 1000000L) // subRanges auto-sized from hot volume
-    val splitSum = checksum(splitFold)
-    val skewSplitSec = (System.nanoTime() - tss) / 1e9
-    require(plainSum == splitSum, s"hot-split diverged: $splitSum vs $plainSum")
     skewed.unpersist()
     spark.catalog.clearCache()
 
@@ -281,8 +264,7 @@ object ScaleSmoke {
 
     println(s"""{"kernel_rows":$nRows,"kernel_sec":$kernelSec,""" +
       s""""kernel_rows_per_sec":${(nRows / kernelSec).toLong},""" +
-      s""""kernel_skew_plain_sec":$skewPlainSec,"kernel_skew_split_sec":$skewSplitSec,""" +
-      s""""kernel_split_speedup":${skewPlainSec / skewSplitSec},""" +
+      s""""kernel_skew_plain_sec":$skewPlainSec,""" +
       s""""dedup_docs":${docs.count() * factor},"dedup_pairs":$pairs,"dedup_sec":$dedupSec,""" +
       s""""ssjoin_pairs":${ssjoinPairs._1},"ssjoin_checksum":${ssjoinPairs._2},""" +
       s""""ssjoin_sec":$ssjoinSec,""" +

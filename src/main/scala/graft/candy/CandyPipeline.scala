@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * main() stage order (reference src/main.py:112-176) minus its eager
   * count()/show() jobs and double-loads. Stages are individually callable —
   * the orchestrator-agnostic replacement for the reference's Airflow DAG.
+  * Fulfillment is [[Fulfillment.run]], the one sequential fold kernel; the
+  * only fulfillment setting is the reference's own `RELOAD_INVENTORY_DAILY`.
   */
 object CandyPipeline {
 
@@ -17,25 +19,6 @@ object CandyPipeline {
       dailySummary: DataFrame,
       forecast: DataFrame)
 
-  /** Which fulfillment kernel executes the sequential per-product fold.
-    * All three produce identical rows (FulfillmentSpec equivalences;
-    * CandyGoldenSpec runs the golden E2E through each):
-    *  - [[Kernel.Fold]]     — manual repartition + sortWithinPartitions fold
-    *  - [[Kernel.Plan]]     — custom Catalyst operator (FulfillmentPlan);
-    *                          the planner inserts the exchange/sort
-    *  - [[Kernel.HotSplit]] — [[Fulfillment.runWithHotSplit]]: products above
-    *                          `hotRowThreshold` rows fold as `subRanges`
-    *                          time-ranges with stitched carries, bounding
-    *                          per-task memory at 100 TB-scale skew
-    */
-  sealed trait Kernel
-  object Kernel {
-    case object Fold extends Kernel
-    case object Plan extends Kernel
-    final case class HotSplit(hotRowThreshold: Long = 2000000L,
-                              subRanges: Int = 0) extends Kernel
-  }
-
   /** Run the full pipeline from a dataset directory (transactions_*.json +
     * products.csv). Returns all five output tables, lazily where possible.
     * `reloadDaily` mirrors the reference's RELOAD_INVENTORY_DAILY config
@@ -43,23 +26,14 @@ object CandyPipeline {
     * the inventory writeback subtracts only the final day's sales.
     */
   def run(spark: SparkSession, dataDir: String, forecastDays: Int = 1,
-          reloadDaily: Boolean = false,
-          kernel: Kernel = Kernel.Fold): Results = {
+          reloadDaily: Boolean = false): Results = {
     implicit val s: SparkSession = spark
-    import spark.implicits._
     val transactions = Ingest.readTransactionsOrdered(spark, dataDir)
     val products = Ingest.readProducts(spark, s"$dataDir/products.csv")
 
     val items = Outputs.prepareItems(transactions)
     val inventory = Fulfillment.snapshot(products)
-    val fulfilled = (kernel match {
-      case Kernel.Plan =>
-        graft.plans.FulfillmentPlan.run(items, inventory, reloadDaily).as[FulfilledLine]
-      case Kernel.HotSplit(thr, r) =>
-        Fulfillment.runWithHotSplit(spark, items, inventory, reloadDaily, thr, r)
-      case Kernel.Fold =>
-        Fulfillment.run(spark, items, inventory, reloadDaily)
-    }).cache()
+    val fulfilled = Fulfillment.run(spark, items, inventory, reloadDaily).cache()
 
     val lineItems = Outputs.lineItemsFinal(fulfilled)
     val orders = Outputs.ordersFinal(transactions, fulfilled)
@@ -87,11 +61,7 @@ object CandyPipeline {
     spark.sparkContext.setLogLevel("WARN")
     val reloadDaily =
       sys.env.getOrElse("RELOAD_INVENTORY_DAILY", "false").equalsIgnoreCase("true")
-    val kernel =
-      if (sys.env.getOrElse("GRAFT_PLAN_KERNEL", "false").equalsIgnoreCase("true"))
-        Kernel.Plan
-      else Kernel.Fold
-    val r = run(spark, dataDir, reloadDaily = reloadDaily, kernel = kernel)
+    val r = run(spark, dataDir, reloadDaily = reloadDaily)
     Ingest.saveSingleCsv(r.productsUpdated, outDir, "products_updated.csv")
     Ingest.saveSingleCsv(r.orders, outDir, "orders.csv")
     Ingest.saveSingleCsv(r.orderLineItems, outDir, "order_line_items.csv")

@@ -28,32 +28,52 @@ import org.apache.spark.sql.functions._
   * never has to fit in memory, so the operator survives products with
   * billions of rows. The inventory snapshot (one (stock, price) pair per
   * product) is a broadcast variable, as dimension state should be.
+  *
+  * [[run]] is the only kernel, and a hot product folds in one task:
+  * splitting hot products by time range measured slower than this fold on
+  * a 90%-one-product corpus (`kernel_split_speedup` 0.83 in
+  * scale_smoke.json).
   */
 object Fulfillment {
 
-  /** Pure per-product fold. `rows` MUST be sorted by the fulfillment order.
-    * Emits one output line per input row (cancelled rows keep quantity 0 with
-    * line_total 0.00, matching reference src/data_processor.py:53-58). With
-    * `resetDaily`, stock reloads to the snapshot at each day boundary.
+  /** The fold itself, pure and Spark-free. `rows` MUST arrive grouped by
+    * product (all rows of a product consecutive) and, within a product, in
+    * fulfillment order (day, seq). Carries `available` across the rows of
+    * the current product only. Emits one output line per input row
+    * (cancelled rows keep quantity 0 with line_total 0.00, matching
+    * reference src/data_processor.py:53-58); a product missing from
+    * `inventory` has no stock and price 0. With `reloadDaily`, stock
+    * reloads to the snapshot at each day boundary.
     */
-  def fulfillProduct(
-      initial: InventoryEntry,
+  def fold(
       rows: Iterator[ItemRow],
-      resetDaily: Boolean = false): Iterator[FulfilledLine] = {
-    var available = initial.stock
-    var currentDay: String = null
-    val price = initial.price
+      inventory: Map[Long, InventoryEntry],
+      reloadDaily: Boolean): Iterator[FulfilledLine] = {
+    var currentPid = Long.MinValue
+    var currentDay = ""
+    var available = 0
+    var snapshotStock = 0
+    var price = 0.0
     rows.map { r =>
-      val day = r.order_datetime.take(10)
-      if (currentDay == null) currentDay = day
-      else if (resetDaily && day != currentDay) {
-        currentDay = day
-        available = initial.stock
+      if (r.product_id != currentPid) {
+        currentPid = r.product_id
+        currentDay = r.order_datetime.take(10)
+        val e = inventory.getOrElse(r.product_id, InventoryEntry(0, 0.0))
+        snapshotStock = e.stock
+        available = e.stock
+        price = e.price
+      } else if (!r.order_datetime.regionMatches(0, currentDay, 0, 10)) {
+        // allocation-free day-boundary check on the hot path; the day is
+        // tracked in BOTH modes (order_date must be per-row truthful),
+        // but only reloadDaily resets the stock
+        currentDay = r.order_datetime.take(10)
+        if (reloadDaily) available = snapshotStock
       }
       val fulfilled =
         if (available > 0 && r.quantity <= available) { available -= r.quantity; r.quantity }
         else 0
-      FulfilledLine(r.order_id, r.product_id, fulfilled, price, round2(fulfilled * price), day)
+      FulfilledLine(r.order_id, r.product_id, fulfilled, price,
+        round2(fulfilled * price), currentDay)
     }
   }
 
@@ -64,7 +84,9 @@ object Fulfillment {
   def round2(x: Double): Double =
     BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Distributed fulfillment over cleaned line items.
+  /** Distributed fulfillment over cleaned line items: one repartition by
+    * product, one within-partition sort, then [[fold]] streams each
+    * partition.
     *
     * @param items       cleaned items (order_id, order_datetime, product_id, quantity)
     * @param inventory   product_id -> (stock, sales_price) snapshot, broadcast
@@ -87,287 +109,7 @@ object Fulfillment {
       // within the day's file (stable-sort-on-date semantics — SURVEY §5.3;
       // the ISO prefix substring is the date, avoiding a to_date cast).
       .sortWithinPartitions(col("product_id"), substring(col("order_datetime"), 1, 10), col("seq"))
-      .mapPartitions { rows =>
-        // Streaming secondary-sort fold: rows arrive grouped by product (all
-        // rows of a product are consecutive) and time-ordered within each
-        // product; carry `available` across rows of the current run only.
-        var currentPid = Long.MinValue
-        var currentDay = ""
-        var available = 0
-        var snapshotStock = 0
-        var price = 0.0
-        rows.map { r =>
-          if (r.product_id != currentPid) {
-            currentPid = r.product_id
-            currentDay = r.order_datetime.take(10)
-            val e = inv.value.getOrElse(r.product_id, InventoryEntry(0, 0.0))
-            snapshotStock = e.stock
-            available = e.stock
-            price = e.price
-          } else if (!r.order_datetime.regionMatches(0, currentDay, 0, 10)) {
-            // allocation-free day-boundary check on the hot path; the day is
-            // tracked in BOTH modes (order_date must be per-row truthful),
-            // but only reloadDaily resets the stock
-            currentDay = r.order_datetime.take(10)
-            if (reloadDaily) available = snapshotStock
-          }
-          val fulfilled =
-            if (available > 0 && r.quantity <= available) { available -= r.quantity; r.quantity }
-            else 0
-          FulfilledLine(r.order_id, r.product_id, fulfilled, price,
-            round2(fulfilled * price), currentDay)
-        }
-      }
-  }
-
-  /** Sub-range carry state for one hot product: stock entering the range and
-    * the last day seen before it (day-boundary detection under reloadDaily).
-    */
-  case class HotCarry(available: Int, prevDay: String)
-
-  /** Fulfillment with HOT-KEY SUB-SPLITTING (SURVEY §9's named residual
-    * risk): a product whose row count exceeds `hotRowThreshold` would
-    * serialize an entire partition through [[run]]'s single per-product
-    * task. Here its rows are split into `subRanges` time ranges instead:
-    *
-    *  1. the shuffle + within-partition SORT of the hot rows — the
-    *     expensive, memory-heavy phase — runs in PARALLEL across one task
-    *     per (product, range);
-    *  2. the scalar fold then advances the carry in `R` LIGHT sequential
-    *     jobs — each folds only its range and returns the per-(product,
-    *     day) fulfilled sums (a handful of rows), which advance the carry
-    *     exactly: carry-over stock is `start − Σ fulfilled` (fulfillment
-    *     only ever decrements by fulfilled units), and under reloadDaily
-    *     the carry re-derives from the snapshot when the range crossed a
-    *     day boundary;
-    *  3. once every range's carry-in is known, the OUTPUT rows materialize
-    *     in one final fully-parallel pass over all ranges (the fold CPU
-    *     runs twice, but the scalar fold is the cheap part — what must
-    *     never be serialized-then-cached is the row volume).
-    *
-    * The fold itself is inherently sequential per product (cancelled orders
-    * don't consume stock — not a prefix sum), so the carry chain stays
-    * serial; what the split buys is parallelizing everything around it
-    * (fetch, sort, spill) and bounding per-task memory to one range instead
-    * of one product's whole history. Non-hot products take the [[run]] path
-    * unchanged. Output rows are identical to [[run]] whenever (day, seq)
-    * is unique per product (ties at a range boundary may fold in a
-    * different — equally valid — tie order).
-    *
-    * `subRanges` <= 0 auto-sizes R to ~2x ceil(hotRows / hotRowThreshold),
-    * capped at the cluster parallelism: enough ranges that no task folds
-    * much more than the threshold, but no more — every extra range is an
-    * extra sequential stitch job, and at test scale per-job overhead is
-    * what loses to the serial fold.
-    *
-    * The sorted hot rows are CHECKPOINTED (reliable when a checkpoint dir
-    * is set, local otherwise): the final pass re-reads the exact
-    * materialized rows the stitch saw — eviction + recompute of a
-    * nondeterministic upstream could otherwise reorder ties and de-sync
-    * the carries. Checkpoint blocks free when the RDD is GC'd; callers
-    * running many kernels per session should allow that (no pinned cache
-    * to clear).
-    */
-  def runWithHotSplit(
-      spark: SparkSession,
-      items: Dataset[ItemRow],
-      inventory: Map[Long, InventoryEntry],
-      reloadDaily: Boolean = false,
-      hotRowThreshold: Long = 2000000L,
-      subRanges: Int = 0): Dataset[FulfilledLine] = {
-    import spark.implicits._
-    val debugT = spark.conf.getOption("graft.kernel.debugTiming")
-      .orElse(sys.props.get("graft.kernel.debugTiming")).contains("true")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      System.err.println(f"[hotsplit] $phase: ${(System.nanoTime() - tMark) / 1e9}%.2f s")
-      tMark = System.nanoTime()
-    }
-    val counts = items.groupBy("product_id").count()
-      .filter(col("count") >= hotRowThreshold)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    mark("count-hot")
-    if (counts.isEmpty) return run(spark, items, inventory, reloadDaily)
-    val hotIds = counts.keySet
-    val hotRows = counts.values.sum
-    val R = if (subRanges > 0) subRanges
-      else math.max(2, math.min(spark.sparkContext.defaultParallelism,
-        math.ceil(hotRows.toDouble / hotRowThreshold).toInt))
-    if (R <= 1) return run(spark, items, inventory, reloadDaily)
-
-    val coldOut = run(spark,
-      items.filter(!col("product_id").isin(hotIds.toSeq: _*)), inventory, reloadDaily)
-
-    // Per-product range boundaries from a sample: ~200 sample points per
-    // (product, range) suffice for near-even range sizes; exactness never
-    // depends on the split, only balance does.
-    val hot = items.filter(col("product_id").isin(hotIds.toSeq: _*))
-      .withColumn("day", substring(col("order_datetime"), 1, 10))
-    val fraction = math.min(1.0, R * 200.0 * hotIds.size / hotRows)
-    val sampled = hot.select("product_id", "day", "seq").sample(fraction, seed = 42)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val boundaries: Map[Long, Array[(String, Long)]] = sampled.groupBy(_._1).map {
-      case (pid, rows) =>
-        val sorted = rows.map(t => (t._2, t._3)).sortBy(identity)
-        pid -> (1 until R).map(i => sorted(i * sorted.length / R)).distinct.toArray
-    }
-    // Range index = number of boundaries at or before this row in the
-    // (day, seq) fold order — a codegen'd comparison chain, no UDF.
-    val subCol = hotIds.foldLeft(lit(0)) { (acc, pid) =>
-      val bexpr = boundaries.getOrElse(pid, Array.empty[(String, Long)])
-        .foldLeft(lit(0)) { case (a, (bd, bs)) =>
-          a + when(col("day") > bd || (col("day") === bd && col("seq") >= bs), 1)
-            .otherwise(0)
-        }
-      when(col("product_id") === pid, bexpr).otherwise(acc)
-    }
-    // Range partitioning, not hash: there are only hotIds x R distinct
-    // (product, sub) keys, and hashing that few keys into as many buckets
-    // birthday-collides (some partitions carry 2-3 ranges, some none). The
-    // range partitioner assigns exactly one key per partition.
-    // CHECKPOINT, not persist: the output pass re-folds these rows AFTER
-    // the stitch pass derived the carries from them. A mere persist can
-    // evict blocks, and a recompute of a nondeterministic upstream (seq
-    // from monotonically_increasing_id, duplicate (day, seq) ties) could
-    // reorder rows relative to what the stitch saw — making the broadcast
-    // carry-ins silently inconsistent with the refolded data. Checkpointing
-    // truncates the lineage so the materialized rows are the ONLY rows.
-    // Reliable checkpoint when a dir is configured (survives executor
-    // loss); localCheckpoint otherwise — on a real cluster without a
-    // checkpoint dir, losing an executor fails the job loudly instead of
-    // recomputing wrongly, which is the correct failure mode here.
-    val sortedPlan = hot.withColumn("sub", subCol)
-      .repartitionByRange(math.max(R, hotIds.size * R), col("product_id"), col("sub"))
-      .sortWithinPartitions("product_id", "sub", "day", "seq")
-    val sorted =
-      if (spark.sparkContext.getCheckpointDir.isDefined) sortedPlan.checkpoint()
-      else sortedPlan.localCheckpoint()
-    mark(s"sort-checkpoint (R=$R)")
-
-    val invB = spark.sparkContext.broadcast(inventory)
-    var carry: Map[Long, HotCarry] = hotIds.map { p =>
-      p -> HotCarry(inventory.get(p).map(_.stock).getOrElse(0), null)
-    }.toMap
-    def rangeFold(r: Int, carryB: org.apache.spark.broadcast.Broadcast[Map[Long, HotCarry]]) =
-      sorted.filter(col("sub") === r)
-        .drop("day", "sub").as[ItemRow]
-        .mapPartitions(rows => foldHot(rows, invB.value, carryB.value, reloadDaily))
-    val carries = (0 until R).map { r =>
-      val carryB = spark.sparkContext.broadcast(carry)
-      // Stitch: per-(product, day) fulfilled sums within this range are
-      // enough to advance the carry exactly. The sums come from the LEAN
-      // fold (ints only — no FulfilledLine allocation, no BigDecimal
-      // rounding; those are ~90% of the full fold's per-row cost and are
-      // deferred to the parallel output pass), accumulated INSIDE the fold
-      // task (no exchange, no cache): each sequential stitch job is one
-      // light stage collecting a handful of rows. The carry chain is the
-      // split's only serial work, so it has to be this thin.
-      val perDay = sorted.filter(col("sub") === r)
-        .drop("day", "sub").as[ItemRow]
-        .mapPartitions(rows => foldHotSums(rows, invB.value, carryB.value, reloadDaily))
-        .collect()
-      mark(s"stitch-$r")
-      carry = carry.map { case (p, c) =>
-        val mine = perDay.filter(_._1 == p)
-        if (mine.isEmpty) p -> c
-        else {
-          val lastDay = mine.map(_._2).max
-          val snap = inventory.get(p).map(_.stock).getOrElse(0)
-          val avail =
-            if (reloadDaily && c.prevDay != null && lastDay != c.prevDay)
-              snap - mine.filter(_._2 == lastDay).map(_._3).sum.toInt
-            else if (reloadDaily && c.prevDay == null && mine.map(_._2).distinct.length > 1)
-              snap - mine.filter(_._2 == lastDay).map(_._3).sum.toInt
-            else c.available - mine.map(_._3).sum.toInt
-          p -> HotCarry(avail, lastDay)
-        }
-      }
-      carryB
-    }
-    // Output rows materialize in ONE fully-parallel pass: every range's
-    // fold recomputes over the persisted sorted blocks with its (final)
-    // carry broadcast.
-    (0 until R).map(r => rangeFold(r, carries(r)))
-      .foldLeft(coldOut)(_ union _)
-  }
-
-  /** LEAN twin of [[foldHot]] for the carry stitch: identical state
-    * machine, but emits only per-(product, day) fulfilled sums — integer
-    * arithmetic, no output-row allocation, no 2-dp rounding. Days where
-    * every order cancelled still appear (sum 0): the carry update keys off
-    * the range's LAST day, fulfilled or not.
-    */
-  private def foldHotSums(rows: Iterator[ItemRow], inv: Map[Long, InventoryEntry],
-                          carry: Map[Long, HotCarry],
-                          reloadDaily: Boolean): Iterator[(Long, String, Long)] = {
-    val sums = scala.collection.mutable.LinkedHashMap.empty[(Long, String), Long]
-    var pid = Long.MinValue
-    var avail = 0
-    var snap = 0
-    var curDay: String = null
-    rows.foreach { row =>
-      if (row.product_id != pid) {
-        pid = row.product_id
-        snap = inv.get(pid).map(_.stock).getOrElse(0)
-        val c = carry(pid)
-        avail = c.available
-        curDay = c.prevDay
-        val day = row.order_datetime.take(10)
-        if (curDay == null) curDay = day
-        else if (day != curDay) {
-          curDay = day
-          if (reloadDaily) avail = snap
-        }
-      } else if (!row.order_datetime.regionMatches(0, curDay, 0, 10)) {
-        curDay = row.order_datetime.take(10)
-        if (reloadDaily) avail = snap
-      }
-      val fulfilled =
-        if (avail > 0 && row.quantity <= avail) { avail -= row.quantity; row.quantity }
-        else 0
-      val k = (pid, curDay)
-      sums(k) = sums.getOrElse(k, 0L) + fulfilled
-    }
-    sums.iterator.map { case ((p, d), s) => (p, d, s) }
-  }
-
-  /** The hot-range fold: rows arrive sorted by (product, day, seq) with the
-    * range's carry-in state per product in `carry`. Shared by the stitch
-    * pass (via the lean [[foldHotSums]] twin) and the final output pass.
-    */
-  private def foldHot(rows: Iterator[ItemRow], inv: Map[Long, InventoryEntry],
-                      carry: Map[Long, HotCarry],
-                      reloadDaily: Boolean): Iterator[FulfilledLine] = {
-    var pid = Long.MinValue
-    var avail = 0
-    var snap = 0
-    var price = 0.0
-    var curDay: String = null
-    rows.map { row =>
-      if (row.product_id != pid) {
-        pid = row.product_id
-        val e = inv.getOrElse(pid, InventoryEntry(0, 0.0))
-        snap = e.stock
-        price = e.price
-        val c = carry(pid)
-        avail = c.available
-        curDay = c.prevDay
-        val day = row.order_datetime.take(10)
-        if (curDay == null) curDay = day
-        else if (day != curDay) {
-          curDay = day
-          if (reloadDaily) avail = snap
-        }
-      } else if (!row.order_datetime.regionMatches(0, curDay, 0, 10)) {
-        curDay = row.order_datetime.take(10)
-        if (reloadDaily) avail = snap
-      }
-      val fulfilled =
-        if (avail > 0 && row.quantity <= avail) { avail -= row.quantity; row.quantity }
-        else 0
-      FulfilledLine(row.order_id, pid, fulfilled, price,
-        round2(fulfilled * price), curDay)
-    }
+      .mapPartitions(rows => fold(rows, inv.value, reloadDaily))
   }
 
   /** Inventory snapshot for the kernel: product_id -> (stock, sales_price).

@@ -1227,8 +1227,10 @@ object Dedup {
     // submitted concurrently by AQE, and a cold cache makes each recompute
     // the signature pipeline (for the image queries that is the full
     // render+decode kernel — profiled as twin 5.2 s 32-task jobs in one
-    // q_m16 action)
-    base.count()
+    // q_m16 action). The base is not yet the caller's to release, so a
+    // failed warm count unpersists it here.
+    try base.count()
+    catch { case t: Throwable => base.unpersist(); throw t }
     val keyed = base.select(col("*"),
       posexplode(expr(keysExpr)).as(Seq("combo_idx", "combo_val")))
     val pairCols =

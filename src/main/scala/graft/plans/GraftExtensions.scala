@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions registering graft's native expressions as SQL
-  * functions. Install at session build time with
+  * functions — functions only: no planner strategies or optimizer rules.
+  * Install at session build time with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, or on a
   * live session with `GraftExtensions.register(spark)` (idempotent).
   */
@@ -16,7 +17,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (ident, info, builder) =>
       ext.injectFunction((ident, info, builder))
     }
-    ext.injectPlannerStrategy(_ => FulfillmentStrategy)
   }
 }
 
@@ -177,12 +177,4 @@ object GraftExtensions {
     functions.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
-
-  /** Register the custom planner strategy on a live session (idempotent). */
-  def registerStrategy(spark: SparkSession): Unit = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!ss.experimental.extraStrategies.contains(FulfillmentStrategy))
-      ss.experimental.extraStrategies =
-        ss.experimental.extraStrategies :+ FulfillmentStrategy
-  }
 }

@@ -1,22 +1,18 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** Bridge into the package-private Dataset/Column factories: building a
-  * DataFrame from a custom LogicalPlan node (graft.plans.FulfillmentNode)
-  * requires Dataset.ofRows, and wrapping a data-bearing custom Expression
-  * (graft.functions.BpeDocTokenCount carries its merge table as a
-  * constructor object, so it cannot route through a SQL function
-  * registration) requires ExpressionUtils.column — both private[sql].
-  * Lives under org.apache.spark.sql for access; contains no logic.
+/** Bridge into the package-private Column factories: wrapping a
+  * data-bearing custom Expression (graft.functions.BpeDocTokenCount carries
+  * its merge table as a constructor object, so it cannot route through a
+  * SQL function registration) requires ExpressionUtils.column, and
+  * unwrapping a Column requires ExpressionUtils.expression — both
+  * private[sql]. Lives under org.apache.spark.sql for access; contains no
+  * logic.
   */
 object GraftDatasetBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

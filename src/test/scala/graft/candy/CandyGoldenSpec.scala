@@ -12,11 +12,8 @@ import scala.jdk.CollectionConverters._
   * parsed-datetime equality, everything else exact; the forecast CSV is
   * validated structurally only.
   *
-  * The E2E runs through ALL THREE fulfillment kernels — the manual fold,
-  * the custom Catalyst plan operator, and the hot-split path with a tiny
-  * threshold (50 rows) so every product actually splits and stitches on
-  * dataset_32 — each must reproduce the golden files. The unit-level
-  * equivalences live in FulfillmentSpec; this is the end-to-end contract.
+  * The unit-level fold checks live in FulfillmentSpec; this is the
+  * end-to-end contract of the one fulfillment kernel (the `[fold]` tests).
   */
 class CandyGoldenSpec extends SparkTestBase {
 
@@ -24,18 +21,7 @@ class CandyGoldenSpec extends SparkTestBase {
   private val goldenDir = "/root/reference/data/answers_32"
   private val moneyCols = Set("total_amount", "line_total", "total_sales", "total_profit")
 
-  private val kernels: Seq[(String, CandyPipeline.Kernel)] = Seq(
-    "fold" -> CandyPipeline.Kernel.Fold,
-    "plan" -> CandyPipeline.Kernel.Plan,
-    "hotsplit" -> CandyPipeline.Kernel.HotSplit(hotRowThreshold = 50L, subRanges = 4))
-
-  private val resultsByKernel =
-    scala.collection.mutable.Map.empty[String, CandyPipeline.Results]
-  private def resultsFor(kernel: String): CandyPipeline.Results =
-    resultsByKernel.getOrElseUpdate(kernel,
-      CandyPipeline.run(spark, dataDir,
-        kernel = kernels.find(_._1 == kernel).get._2))
-  private def results = resultsFor("fold")
+  private lazy val results: CandyPipeline.Results = CandyPipeline.run(spark, dataDir)
 
   private def readCsv(path: String): (Array[String], Array[Array[String]]) = {
     val lines = Files.readAllLines(Paths.get(path)).asScala.toArray
@@ -78,33 +64,20 @@ class CandyGoldenSpec extends SparkTestBase {
       s"$name: $mismatches mismatched cells (${frac * 100}%, allowed ${maxMismatchFrac * 100}%)")
   }
 
-  for ((kname, _) <- kernels) {
-    test(s"[$kname] products_updated matches golden") {
-      compare("products_updated", resultsFor(kname).productsUpdated, "products_updated.csv")
-    }
-
-    test(s"[$kname] daily_summary matches golden") {
-      compare("daily_summary", resultsFor(kname).dailySummary, "daily_summary.csv")
-    }
-
-    test(s"[$kname] orders matches golden") {
-      compare("orders", resultsFor(kname).orders, "orders.csv")
-    }
-
-    test(s"[$kname] order_line_items matches golden") {
-      compare("order_line_items", resultsFor(kname).orderLineItems, "order_line_items.csv")
-    }
+  test("[fold] products_updated matches golden") {
+    compare("products_updated", results.productsUpdated, "products_updated.csv")
   }
 
-  test("hotsplit actually split: tiny threshold forces the stitched path") {
-    // guard against the parameterization silently degenerating to run():
-    // dataset_32 has >50 rows for every product, so counts must be non-empty
-    import org.apache.spark.sql.functions.col
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val transactions = Ingest.readTransactionsOrdered(spark, dataDir)
-    val items = Outputs.prepareItems(transactions)
-    val over = items.groupBy("product_id").count().filter(col("count") >= 50L).count()
-    assert(over > 0, "no product exceeds the tiny hot threshold — the hotsplit golden leg is vacuous")
+  test("[fold] daily_summary matches golden") {
+    compare("daily_summary", results.dailySummary, "daily_summary.csv")
+  }
+
+  test("[fold] orders matches golden") {
+    compare("orders", results.orders, "orders.csv")
+  }
+
+  test("[fold] order_line_items matches golden") {
+    compare("order_line_items", results.orderLineItems, "order_line_items.csv")
   }
 
   test("forecast is structurally valid: next-day date, 2dp values") {

@@ -60,18 +60,21 @@ object FulfillmentFuzzProps extends Properties("FulfillmentFold") {
     reset <- Gen.oneOf(false, true)
   } yield (stock, price, rows, reset)
 
+  /** The production fold over one product's rows (pid 7, as genRows makes). */
+  private def fold(rows: List[ItemRow], stock: Int, price: Double,
+                   reset: Boolean): List[FulfilledLine] =
+    Fulfillment.fold(rows.iterator, Map(7L -> InventoryEntry(stock, price)), reset).toList
+
   property("kernel fold == in-memory reference model") =
     forAllNoShrink(genCase) { case (stock, price, rows, reset) =>
-      val got = Fulfillment.fulfillProduct(
-        InventoryEntry(stock, price), rows.iterator, reset).toList
+      val got = fold(rows, stock, price, reset)
       val want = Model.fold(stock, price, rows, reset)
       Prop(got == want) :| s"got=$got want=$want"
     }
 
   property("fulfilled is all-or-nothing and never exceeds requested") =
     forAllNoShrink(genCase) { case (stock, price, rows, reset) =>
-      val out = Fulfillment.fulfillProduct(
-        InventoryEntry(stock, price), rows.iterator, reset).toList
+      val out = fold(rows, stock, price, reset)
       Prop(out.zip(rows).forall { case (o, r) =>
         (o.quantity == 0 || o.quantity == r.quantity) && o.quantity <= r.quantity
       })
@@ -79,8 +82,7 @@ object FulfillmentFuzzProps extends Properties("FulfillmentFold") {
 
   property("total fulfilled never exceeds initial stock (per day under reload)") =
     forAllNoShrink(genCase) { case (stock, price, rows, reset) =>
-      val out = Fulfillment.fulfillProduct(
-        InventoryEntry(stock, price), rows.iterator, reset).toList
+      val out = fold(rows, stock, price, reset)
       if (reset)
         Prop(out.groupBy(_.order_date).forall(_._2.map(_.quantity).sum <= math.max(0, stock)))
       else
@@ -99,10 +101,8 @@ object FulfillmentFuzzProps extends Properties("FulfillmentFold") {
         val giant = ItemRow(999999999L, s"${day}T08:00:00.000000", 7L,
           math.max(stock, 0) + 26, 999999L)
         val spliced = rows.take(pos) ::: giant :: rows.drop(pos)
-        val base = Fulfillment.fulfillProduct(
-          InventoryEntry(stock, price), rows.iterator, reset).toList
-        val withGiant = Fulfillment.fulfillProduct(
-          InventoryEntry(stock, price), spliced.iterator, reset).toList
+        val base = fold(rows, stock, price, reset)
+        val withGiant = fold(spliced, stock, price, reset)
         val giantOut = withGiant(pos)
         Prop(giantOut.quantity == 0 &&
           withGiant.patch(pos, Nil, 1) == base) :|
@@ -111,8 +111,7 @@ object FulfillmentFuzzProps extends Properties("FulfillmentFold") {
 
   property("oversize orders always cancel; zero-qty orders never consume stock") =
     forAllNoShrink(genCase) { case (stock, price, rows, reset) =>
-      val out = Fulfillment.fulfillProduct(
-        InventoryEntry(stock, price), rows.iterator, reset).toList
+      val out = fold(rows, stock, price, reset)
       val oversize = out.zip(rows).filter(_._2.quantity > math.max(stock, 0))
       val zeros = out.zip(rows).filter(_._2.quantity == 0)
       Prop(oversize.forall(_._1.quantity == 0) &&

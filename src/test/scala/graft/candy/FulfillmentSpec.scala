@@ -3,8 +3,9 @@ package graft.candy
 import graft.SparkTestBase
 
 /** Property-style checks of the pure fulfillment fold (seeded random cases)
-  * plus a distributed equivalence check: Fulfillment.run must agree with a
-  * sequential driver reference on arbitrary inputs.
+  * plus a distributed equivalence check: Fulfillment.run must agree with
+  * the in-memory reference model (FulfillmentFuzzProps.Model) on arbitrary
+  * inputs.
   */
 class FulfillmentSpec extends SparkTestBase {
 
@@ -21,7 +22,8 @@ class FulfillmentSpec extends SparkTestBase {
       val stock = rnd.nextInt(100)
       val items = randomItems(rnd, rnd.nextInt(40), 1)
         .sortBy(r => (r.order_datetime, r.seq))
-      val out = Fulfillment.fulfillProduct(InventoryEntry(stock, 2.5), items.iterator).toList
+      val out = Fulfillment.fold(items.iterator, Map(0L -> InventoryEntry(stock, 2.5)),
+        reloadDaily = false).toList
       assert(out.length == items.length)
       out.zip(items).foreach { case (f, r) =>
         assert(f.quantity == 0 || f.quantity == r.quantity)
@@ -35,13 +37,14 @@ class FulfillmentSpec extends SparkTestBase {
       ItemRow(1, "2024-02-01T00:00:00", 1, 8, 0),
       ItemRow(2, "2024-02-01T01:00:00", 1, 9, 1), // cancelled (only 2 left)
       ItemRow(3, "2024-02-01T02:00:00", 1, 2, 2)) // still fulfills
-    val out = Fulfillment.fulfillProduct(InventoryEntry(10, 1.0), items.iterator).toList
+    val out = Fulfillment.fold(items.iterator, Map(1L -> InventoryEntry(10, 1.0)),
+      reloadDaily = false).toList
     assert(out.map(_.quantity) == List(8, 0, 2))
   }
 
   test("line_total is 2dp of fulfilled * price") {
-    val out = Fulfillment.fulfillProduct(InventoryEntry(100, 6.7),
-      Iterator(ItemRow(1, "t", 1, 4, 0))).toList
+    val out = Fulfillment.fold(Iterator(ItemRow(1, "t", 1, 4, 0)),
+      Map(1L -> InventoryEntry(100, 6.7)), reloadDaily = false).toList
     assert(out.head.line_total == 26.8)
   }
 
@@ -74,44 +77,11 @@ class FulfillmentSpec extends SparkTestBase {
         .sorted.toSeq
       val want = items.groupBy(_.product_id).flatMap { case (pid, rs) =>
         val sorted = rs.sortBy(r => (r.order_datetime.take(10), r.seq))
-        Fulfillment.fulfillProduct(inv.getOrElse(pid, InventoryEntry(0, 0.0)),
-            sorted.iterator, resetDaily = reload)
+        val e = inv.getOrElse(pid, InventoryEntry(0, 0.0))
+        FulfillmentFuzzProps.Model.fold(e.stock, e.price, sorted, reload)
           .map(f => (f.order_id, f.product_id, f.quantity, f.order_date))
       }.toSeq.sorted
       assert(got == want, s"reloadDaily=$reload")
-    }
-  }
-
-  test("hot-key sub-split run equals plain run when one product is 90% of rows") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    // product 1 = 90% of all rows (the SURVEY §9 hot-key shape), spread
-    // over 10 days so sub-ranges cross day boundaries in both modes; seq is
-    // globally unique, so the fold order is a total order and both paths
-    // must agree EXACTLY.
-    val hot = (1 to 9000).map { i =>
-      ItemRow(rnd.nextInt(500).toLong,
-        f"2024-02-${1 + i / 900}%02dT${rnd.nextInt(24)}%02d:00:00.000000",
-        1L, rnd.nextInt(15), i.toLong)
-    }
-    val cold = (1 to 1000).map { i =>
-      ItemRow(rnd.nextInt(500).toLong,
-        f"2024-02-${1 + rnd.nextInt(10)}%02dT${rnd.nextInt(24)}%02d:00:00.000000",
-        (2 + rnd.nextInt(10)).toLong, rnd.nextInt(15), 100000L + i)
-    }
-    val inv = (1L to 12L).map(p =>
-      p -> InventoryEntry(if (p == 1) 40000 else 300, 1.0 + p)).toMap
-    Seq(false, true).foreach { reload =>
-      val items = (hot ++ cold).toDS()
-      def tuples(ds: org.apache.spark.sql.Dataset[FulfilledLine]) =
-        ds.collect()
-          .map(f => (f.order_id, f.product_id, f.quantity, f.line_total, f.order_date))
-          .sorted.toSeq
-      val plain = tuples(Fulfillment.run(spark, items, inv, reloadDaily = reload))
-      val split = tuples(Fulfillment.runWithHotSplit(spark, items, inv,
-        reloadDaily = reload, hotRowThreshold = 5000, subRanges = 8))
-      assert(split == plain, s"reloadDaily=$reload")
-      spark.catalog.clearCache()
     }
   }
 }

@@ -384,6 +384,20 @@ class DedupSpec extends SparkTestBase {
       s"expected >=10x candidate collapse, got minimal=$candMinimal combo=$candCombo")
   }
 
+  test("hammingCandidates64 releases its signature base when the warm count fails") {
+    // the hash column throws at evaluation, so the count that warms the
+    // persisted base fails before the caller ever receives it (a range, not
+    // a local Seq: the optimizer would evaluate a projection over local
+    // rows while planning, before anything is persisted)
+    val sigs = spark.range(1, 4)
+      .selectExpr("id", "CAST(raise_error('bad signature') AS BIGINT) AS h")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Dedup.hammingCandidates64(sigs, "id", "h", maxDist = 4)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("pigeonholeChunksAuto: minimal banding for small corpora, wide " +
        "combination keys at scale, bounded expansion everywhere") {
     // small n: the expansion term dominates -> minimal maxDist+1 geometry
