@@ -1,14 +1,23 @@
 package graft.candy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** End-to-end candy pipeline: ingest → explode/clean → fulfillment →
   * outputs → daily summary → forecast, mirroring the reference's batch
-  * main() stage order (reference src/main.py:112-176) minus its eager
-  * count()/show() jobs and double-loads. Stages are individually callable —
-  * the orchestrator-agnostic replacement for the reference's Airflow DAG.
-  * Fulfillment is [[Fulfillment.run]], the one sequential fold kernel; the
-  * only fulfillment setting is the reference's own `RELOAD_INVENTORY_DAILY`.
+  * main() stage order (reference src/main.py:112-176). Stages are
+  * individually callable — the orchestrator-agnostic replacement for the
+  * reference's Airflow DAG. Fulfillment is [[Fulfillment.run]], the one
+  * sequential fold kernel; the only fulfillment setting is the reference's
+  * own `RELOAD_INVENTORY_DAILY`.
+  *
+  * [[run]] reads each input once and computes each output once. It caches
+  * the ordered transactions, `fulfilled`, `orders`, `lineItems` and `daily`,
+  * and holds products.csv as a driver-local frame, so the forecast and the
+  * five sinks consume the same materialized frames. The caller releases the
+  * caches (`spark.catalog.clearCache()` or `spark.stop()`); only when `run`
+  * itself throws does it unpersist them before rethrowing.
   */
 object CandyPipeline {
 
@@ -20,7 +29,8 @@ object CandyPipeline {
       forecast: DataFrame)
 
   /** Run the full pipeline from a dataset directory (transactions_*.json +
-    * products.csv). Returns all five output tables, lazily where possible.
+    * products.csv). Returns all five output tables; all but the inventory
+    * and forecast tables are cached (see the object doc).
     * `reloadDaily` mirrors the reference's RELOAD_INVENTORY_DAILY config
     * (reference src/main.py:79): stock resets to the snapshot each day, and
     * the inventory writeback subtracts only the final day's sales.
@@ -28,21 +38,32 @@ object CandyPipeline {
   def run(spark: SparkSession, dataDir: String, forecastDays: Int = 1,
           reloadDaily: Boolean = false): Results = {
     implicit val s: SparkSession = spark
-    val transactions = Ingest.readTransactionsOrdered(spark, dataDir)
-    val products = Ingest.readProducts(spark, s"$dataDir/products.csv")
+    val cached = mutable.ArrayBuffer.empty[Dataset[_]]
+    def keep[T](ds: Dataset[T]): Dataset[T] = { cached += ds; ds.cache() }
+    try {
+      val transactions = keep(Ingest.readTransactionsOrdered(spark, dataDir))
+      val scan = Ingest.readProducts(spark, s"$dataDir/products.csv")
+      // one scan; the snapshot, the write-back and the summary's cost join
+      // all read this LocalRelation
+      val products = spark.createDataFrame(scan.collect().toSeq.asJava, scan.schema)
 
-    val items = Outputs.prepareItems(transactions)
-    val inventory = Fulfillment.snapshot(products)
-    val fulfilled = Fulfillment.run(spark, items, inventory, reloadDaily).cache()
+      val items = Outputs.prepareItems(transactions)
+      val inventory = Fulfillment.snapshot(products)
+      val fulfilled = keep(Fulfillment.run(spark, items, inventory, reloadDaily))
 
-    val lineItems = Outputs.lineItemsFinal(fulfilled)
-    val orders = Outputs.ordersFinal(transactions, fulfilled)
-    val updated = Outputs.updatedInventoryFinal(
-      if (reloadDaily) Fulfillment.updatedInventoryDailyReload(products, fulfilled)
-      else Fulfillment.updatedInventory(products, fulfilled))
-    val daily = Outputs.dailySummary(orders, lineItems, products).cache()
-    val forecast = Forecast.forecastSalesAndProfits(spark, daily, forecastDays)
-    Results(orders, lineItems, updated, daily, forecast)
+      val lineItems = keep(Outputs.lineItemsFinal(fulfilled))
+      val orders = keep(Outputs.ordersFinal(transactions, fulfilled))
+      val updated = Outputs.updatedInventoryFinal(
+        if (reloadDaily) Fulfillment.updatedInventoryDailyReload(products, fulfilled)
+        else Fulfillment.updatedInventory(products, fulfilled))
+      val daily = keep(Outputs.dailySummary(orders, lineItems, products))
+      val forecast = Forecast.forecastSalesAndProfits(spark, daily, forecastDays)
+      Results(orders, lineItems, updated, daily, forecast)
+    } catch {
+      case t: Throwable =>
+        cached.foreach(_.unpersist())
+        throw t
+    }
   }
 
   /** CLI: CandyPipeline <dataDir> <outputDir> — writes the five golden CSVs. */

@@ -88,6 +88,12 @@ object Fulfillment {
     * product, one within-partition sort, then [[fold]] streams each
     * partition.
     *
+    * The repartition is a no-op when `items` already arrives hash-partitioned
+    * by product_id into the session's shuffle-partition count, as
+    * [[Outputs.prepareItems]] leaves it: the planner (`EnsureRequirements`)
+    * then drops this exchange, so the batch shuffles once for dedup and
+    * fold together. Any other input (specs, ScaleSmoke) is shuffled here.
+    *
     * @param items       cleaned items (order_id, order_datetime, product_id, quantity)
     * @param inventory   product_id -> (stock, sales_price) snapshot, broadcast
     * @param reloadDaily reference config `reload_inventory_daily`

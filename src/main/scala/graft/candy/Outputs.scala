@@ -17,6 +17,12 @@ object Outputs {
     * :398; the reference dedupes after joining inventory columns, but those
     * are functionally dependent on product_id, so deduping the item columns
     * is equivalent).
+    *
+    * The items are hash-partitioned by product before the dedup, not after:
+    * the dedup aggregate then runs on the product partitioning (its keys
+    * include product_id), and [[Fulfillment.run]]'s own repartition by
+    * product is planned away, leaving one shuffle for both where a dedup
+    * shuffle followed by a fulfillment shuffle would move every row twice.
     */
   def prepareItems(transactions: DataFrame)(implicit spark: SparkSession): Dataset[ItemRow] = {
     import spark.implicits._
@@ -37,6 +43,7 @@ object Outputs {
         col("seq"))
       .filter(col("quantity").isNotNull)
       .withColumn("quantity", col("quantity").cast(IntegerType))
+      .repartition(col("product_id"))
       // whole-row dedup, keeping the earliest arrival so the fulfillment
       // order is unaffected by which duplicate survives
       .groupBy("order_id", "order_datetime", "product_id", "quantity")
