@@ -13,14 +13,22 @@ import scala.jdk.CollectionConverters._
   * own `RELOAD_INVENTORY_DAILY`.
   *
   * [[run]] reads each input once and computes each output once. It caches
-  * the ordered transactions, `fulfilled`, `orders`, `lineItems` and `daily`,
-  * and holds products.csv as a driver-local frame, so the forecast and the
-  * five sinks consume the same materialized frames. The caller releases the
-  * caches (`spark.catalog.clearCache()` or `spark.stop()`); only when `run`
-  * itself throws does it unpersist them before rethrowing.
+  * the ordered transactions, `fulfilled`, `orders` and `lineItems`, and
+  * holds products.csv as a driver-local frame. The batch shuffles once per
+  * key it needs (product for dedup and fold, order for the orders table)
+  * and once more into the single partition each large output's sink
+  * writes; the dimension-sized outputs (daily summary, inventory
+  * write-back, forecast) are collected and handed on as driver-local
+  * frames. The caller releases the caches (`spark.catalog.clearCache()` or
+  * `spark.stop()`); only when `run` itself throws does it unpersist them
+  * before rethrowing.
   */
 object CandyPipeline {
 
+  /** The five output tables, each in its sink's row order. `orders` and
+    * `orderLineItems` are cached, each in one sorted partition;
+    * `productsUpdated`, `dailySummary` and `forecast` are driver-local
+    * frames (local relations). Writing any of them recomputes nothing. */
   final case class Results(
       orders: DataFrame,
       orderLineItems: DataFrame,
@@ -29,8 +37,7 @@ object CandyPipeline {
       forecast: DataFrame)
 
   /** Run the full pipeline from a dataset directory (transactions_*.json +
-    * products.csv). Returns all five output tables; all but the inventory
-    * and forecast tables are cached (see the object doc).
+    * products.csv). Returns all five output tables (see [[Results]]).
     * `reloadDaily` mirrors the reference's RELOAD_INVENTORY_DAILY config
     * (reference src/main.py:79): stock resets to the snapshot each day, and
     * the inventory writeback subtracts only the final day's sales.
@@ -53,11 +60,13 @@ object CandyPipeline {
 
       val lineItems = keep(Outputs.lineItemsFinal(fulfilled))
       val orders = keep(Outputs.ordersFinal(transactions, fulfilled))
-      val updated = Outputs.updatedInventoryFinal(
-        if (reloadDaily) Fulfillment.updatedInventoryDailyReload(products, fulfilled)
-        else Fulfillment.updatedInventory(products, fulfilled))
-      val daily = keep(Outputs.dailySummary(orders, lineItems, products))
+      // one row per day: collected once, in date order, for the forecast
+      // and the sink
+      val summary = Outputs.dailySummary(orders, lineItems, products)
+      val daily = spark.createDataFrame(summary.collect().toSeq.asJava, summary.schema)
       val forecast = Forecast.forecastSalesAndProfits(spark, daily, forecastDays)
+      val updated = Outputs.updatedInventoryFinal(
+        Fulfillment.updatedInventory(products, fulfilled, reloadDaily))
       Results(orders, lineItems, updated, daily, forecast)
     } catch {
       case t: Throwable =>

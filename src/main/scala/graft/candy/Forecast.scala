@@ -60,12 +60,14 @@ object Forecast {
     * 2 dp (reference src/data_processor.py:616-642, :745-767). Forecast dates
     * are last_date + 1..days — derived from the REAL series dates, matching
     * the reference's output-date logic (src/data_processor.py:752-754).
+    * The summary may arrive in any row order: its rows (one per day) are
+    * sorted by date here, on the driver.
     */
   def forecastSalesAndProfits(spark: SparkSession, dailySummary: DataFrame,
                               days: Int = 1): DataFrame = {
     import spark.implicits._
-    val rows = dailySummary.select("date", "total_sales", "total_profit")
-      .orderBy("date").collect()
+    val rows = dailySummary.select("date", "total_sales", "total_profit").collect()
+      .sortBy(_.get(0).toString)
     require(rows.nonEmpty, "daily summary is empty")
     val dates = rows.map(r => LocalDate.parse(r.get(0).toString))
     val sales = rows.map(_.getString(1).toDouble)

@@ -1,7 +1,9 @@
 package graft.candy
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Sequential, time-ordered, per-product inventory fulfillment.
   *
@@ -33,6 +35,10 @@ import org.apache.spark.sql.functions._
   * splitting hot products by time range measured slower than this fold on
   * a 90%-one-product corpus (`kernel_split_speedup` 0.83 in
   * scale_smoke.json).
+  *
+  * The inventory write-back, [[updatedInventory]], is one path for both
+  * stock modes: a dimension-sized sum of units sold per (product, day),
+  * subtracted from the product rows on the driver.
   */
 object Fulfillment {
 
@@ -120,46 +126,49 @@ object Fulfillment {
 
   /** Inventory snapshot for the kernel: product_id -> (stock, sales_price).
     * 30 rows in the reference corpus; at scale this is still a dimension
-    * (products), so collect-and-broadcast is the right shape.
+    * (products), so collect-and-broadcast is the right shape. A row with an
+    * empty product_id is skipped: no item can match it.
     */
   def snapshot(products: DataFrame): Map[Long, InventoryEntry] =
-    products.select("product_id", "stock", "sales_price").collect().map { r =>
-      val pid = r.get(0) match { case i: Int => i.toLong; case l: Long => l }
-      pid -> InventoryEntry(
-        if (r.isNullAt(1)) 0 else r.getInt(1),
-        if (r.isNullAt(2)) 0.0 else r.getDouble(2))
+    products.select("product_id", "stock", "sales_price").collect().collect {
+      case r if !r.isNullAt(0) =>
+        r.getAs[Number](0).longValue -> InventoryEntry(
+          if (r.isNullAt(1)) 0 else r.getInt(1),
+          if (r.isNullAt(2)) 0.0 else r.getDouble(2))
     }.toMap
 
-  /** Post-fulfillment inventory under CARRY-OVER semantics: initial stock
-    * minus all fulfilled units (replaces the reference's per-day outer-join
-    * stack, reference src/data_processor.py:444-464). NOT valid when the
-    * kernel ran with reloadDaily — use updatedInventoryDailyReload, which
-    * only subtracts the final day's sales.
+  /** Post-fulfillment inventory (replaces the reference's per-day
+    * outer-join stack, reference src/data_processor.py:444-464): every
+    * product row with its stock minus the units it sold, as a driver-local
+    * frame in product_id order (an empty id first, its stock unchanged).
+    *
+    * Units sold per (product, day) are summed inside each partition of
+    * `fulfilled` and merged on the driver: one job and no shuffle, and at
+    * most partitions × products × days rows reach the driver. Under
+    * carry-over every day's sales count; with `reloadDaily` each day
+    * restarts from the snapshot, so only the final day's sales do.
+    *
+    * @param products the product rows, driver-local (its collect runs no job)
     */
-  def updatedInventory(products: DataFrame, fulfilled: Dataset[FulfilledLine]): DataFrame = {
-    val sold = fulfilled.groupBy("product_id")
-      .agg(sum("quantity").as("total_quantity_sold"))
-    products
-      .join(broadcast(sold), Seq("product_id"), "left")
-      .withColumn("stock",
-        (col("stock") - coalesce(col("total_quantity_sold"), lit(0))).cast("int"))
-      .drop("total_quantity_sold")
-  }
-
-  /** Post-fulfillment inventory under DAILY-RELOAD semantics: every day
-    * starts from the snapshot, so the end state is the snapshot minus units
-    * sold on the period's final day only.
-    */
-  def updatedInventoryDailyReload(products: DataFrame,
-                                  fulfilled: Dataset[FulfilledLine]): DataFrame = {
-    val lastDay = fulfilled.agg(max("order_date")).head().getString(0)
-    val sold = fulfilled.filter(col("order_date") === lit(lastDay))
-      .groupBy("product_id")
-      .agg(sum("quantity").as("total_quantity_sold"))
-    products
-      .join(broadcast(sold), Seq("product_id"), "left")
-      .withColumn("stock",
-        (col("stock") - coalesce(col("total_quantity_sold"), lit(0))).cast("int"))
-      .drop("total_quantity_sold")
+  def updatedInventory(products: DataFrame, fulfilled: Dataset[FulfilledLine],
+                       reloadDaily: Boolean): DataFrame = {
+    val spark = products.sparkSession
+    import spark.implicits._
+    val sold = fulfilled.mapPartitions { lines =>
+      val units = mutable.HashMap.empty[(Long, String), Long].withDefaultValue(0L)
+      lines.foreach(l => units((l.product_id, l.order_date)) += l.quantity)
+      units.iterator.map { case ((pid, day), n) => (pid, day, n) }
+    }.collect()
+    val lastDay = if (sold.isEmpty) "" else sold.map(_._2).max
+    val soldByProduct = sold.collect { case (pid, day, n) if !reloadDaily || day == lastDay => pid -> n }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val pid = products.schema.fieldIndex("product_id")
+    val stock = products.schema.fieldIndex("stock")
+    val updated = products.collect().map { r =>
+      if (r.isNullAt(pid) || r.isNullAt(stock)) r
+      else Row.fromSeq(r.toSeq.updated(stock,
+        (r.getInt(stock) - soldByProduct.getOrElse(r.getAs[Number](pid).longValue, 0L)).toInt))
+    }.sortBy(r => Option(r.getAs[Number](pid)).map(_.longValue))
+    spark.createDataFrame(updated.toSeq.asJava, products.schema)
   }
 }

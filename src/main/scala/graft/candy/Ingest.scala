@@ -73,19 +73,22 @@ object Ingest {
 
   /** S7 — single-file CSV sink (reference src/data_processor.py:584-610):
     * coalesce(1) + header, then promote the lone part file to the target name.
-    * Only used for final, small, ordered outputs — never mid-pipeline.
+    * Only used for final, small, ordered outputs — never mid-pipeline. The
+    * scratch directory `.tmp_<fileName>` is removed whether or not the write
+    * succeeds; a failed write leaves an existing target file as it was.
     */
   def saveSingleCsv(df: DataFrame, outputDir: String, fileName: String): Unit = {
     val out = Paths.get(outputDir)
     Files.createDirectories(out)
     val tmp = out.resolve(s".tmp_$fileName")
-    df.coalesce(1).write.option("header", value = true).mode("overwrite")
-      .csv(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".csv"))
-      .getOrElse(sys.error(s"no part file produced under $tmp"))
-    Files.move(part, out.resolve(fileName), StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(tmp)
+    try {
+      df.coalesce(1).write.option("header", value = true).mode("overwrite")
+        .csv(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".csv"))
+        .getOrElse(sys.error(s"no part file produced under $tmp"))
+      Files.move(part, out.resolve(fileName), StandardCopyOption.REPLACE_EXISTING)
+    } finally deleteRecursively(tmp)
   }
 
   private def deleteRecursively(p: Path): Unit = {

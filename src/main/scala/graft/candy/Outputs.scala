@@ -8,6 +8,12 @@ import org.apache.spark.sql.types.IntegerType
   * outputs (orders, order_line_items, products_updated, daily_summary).
   * Column-level semantics mirror reference src/data_processor.py:316-345,
   * :466-572 — see each method.
+  *
+  * Each output arrives in the one partition its single-file sink writes,
+  * already in golden row order, so no output pays for a global sort: line
+  * items and orders take one exchange into that partition and sort there,
+  * the daily summary (one row per day) merges into it without an exchange,
+  * and products_updated is a driver-local frame built in product order.
   */
 object Outputs {
 
@@ -51,54 +57,69 @@ object Outputs {
       .as[ItemRow]
   }
 
+  /** A sink's rows in its golden order: one exchange into the single
+    * partition the sink writes, sorted there. Row order is part of the
+    * golden contract; a global `orderBy` would instead range-partition
+    * (sampling job plus exchange) only for the sink to coalesce it back.
+    */
+  private def sortedInOnePartition(df: DataFrame, by: String*): DataFrame =
+    df.repartition(1).sortWithinPartitions(by.map(col): _*)
+
   /** Final order_line_items table (reference src/data_processor.py:476-487):
-    * sorted by (order_id, product_id) — row order is part of the golden
-    * contract — with money columns rendered 2-dp via format_number.
+    * sorted by (order_id, product_id) with money columns rendered 2-dp via
+    * format_number, in one partition (see [[sortedInOnePartition]]).
     */
   def lineItemsFinal(fulfilled: Dataset[FulfilledLine]): DataFrame =
-    fulfilled.toDF()
-      .select(
+    sortedInOnePartition(
+      fulfilled.toDF().select(
         col("order_id"), col("product_id"), col("quantity"),
-        col("unit_price"), round(col("line_total").cast("double"), 2).as("line_total"))
-      .orderBy("order_id", "product_id")
-      .withColumn("unit_price", format_number(col("unit_price"), 2))
-      .withColumn("line_total", format_number(col("line_total"), 2))
+        format_number(col("unit_price"), 2).as("unit_price"),
+        format_number(round(col("line_total").cast("double"), 2), 2).as("line_total")),
+      "order_id", "product_id")
 
   /** Final orders table (reference src/data_processor.py:490-513): distinct
     * transaction headers left-joined to per-order totals; orders whose every
     * item had null qty produce no line items, get a null total, and are
     * silently dropped by na.drop (154 orders in the corpus — load-bearing).
-    * num_items counts ALL line items including cancelled ones.
+    * num_items counts ALL line items including cancelled ones. Sorted by
+    * order_id in one partition (see [[sortedInOnePartition]]).
+    *
+    * The headers are hash-partitioned by order_id before the `distinct`, so
+    * the distinct and the join to the per-order totals share that one
+    * partitioning instead of shuffling the headers twice.
     */
   def ordersFinal(transactions: DataFrame, fulfilled: Dataset[FulfilledLine]): DataFrame = {
     val totals = fulfilled.groupBy("order_id").agg(
       round(sum("line_total"), 2).as("total_amount"),
       count("product_id").as("num_items"))
-    transactions
+    val orders = transactions
       .na.drop()
       .select(
         col("transaction_id").as("order_id"),
         col("timestamp").as("order_datetime"),
         col("customer_id"))
+      .repartition(col("order_id"))
       .distinct()
       .join(totals, Seq("order_id"), "left")
       .select("order_id", "order_datetime", "customer_id", "total_amount", "num_items")
-      .orderBy("order_id")
       .na.drop()
       .withColumn("total_amount", format_number(col("total_amount"), 2))
+    sortedInOnePartition(orders, "order_id")
   }
 
-  /** products_updated output projection (reference src/data_processor.py:574-582). */
+  /** products_updated output projection (reference
+    * src/data_processor.py:574-582) of [[Fulfillment.updatedInventory]]'s
+    * driver-local frame, which is already in product_id order; the
+    * projection stays a local relation, so the sink runs one job.
+    */
   def updatedInventoryFinal(updated: DataFrame): DataFrame =
-    updated
-      .select(col("product_id"), col("product_name"), col("stock").as("current_stock"))
-      .orderBy("product_id")
+    updated.select(col("product_id"), col("product_name"), col("stock").as("current_stock"))
 
-  /** Daily summary (reference src/data_processor.py:517-572). NOTE: consumes
-    * the FORMATTED orders/line-items tables (strings) exactly like the
-    * reference does — line_total is re-cast string→double, which is part of
-    * the observable numeric behavior. cost_to_make joins from the inventory
-    * dimension (broadcast).
+  /** Daily summary (reference src/data_processor.py:517-572), sorted by
+    * date in one partition. NOTE: consumes the FORMATTED orders/line-items
+    * tables (strings) exactly like the reference does — line_total is
+    * re-cast string→double, which is part of the observable numeric
+    * behavior. cost_to_make joins from the inventory dimension (broadcast).
     */
   def dailySummary(ordersFinal: DataFrame, lineItemsFinal: DataFrame,
                    inventory: DataFrame): DataFrame = {
@@ -121,11 +142,14 @@ object Outputs {
         round(sum("line_total").cast("double"), 2).as("total_sales"),
         round(sum("line_profit").cast("double"), 2).as("total_profit"))
 
+    // one row per day: the final stage merges into one partition without
+    // an exchange and sorts there
     dailyOrders.join(salesProfit, Seq("date"), "inner")
-      .orderBy("date")
       .select(
         col("date"), col("num_orders"),
         format_string("%.2f", col("total_sales")).as("total_sales"),
         format_string("%.2f", col("total_profit")).as("total_profit"))
+      .coalesce(1)
+      .sortWithinPartitions("date")
   }
 }

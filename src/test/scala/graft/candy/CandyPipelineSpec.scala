@@ -2,13 +2,17 @@ package graft.candy
 
 import graft.SparkTestBase
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.{lit, raise_error}
 import org.apache.spark.sql.util.QueryExecutionListener
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The whole candy batch — `CandyPipeline.run` plus the five sinks of
@@ -24,8 +28,10 @@ import scala.jdk.CollectionConverters._
   * wins, although 104 sorts first by id).
   *
   * Beside the values it pins the batch's shape: every input record is read
-  * from its file once, dedup and fold share one shuffle, and a failing
-  * `run` leaves nothing cached.
+  * from its file once, dedup and fold share one shuffle, no output is
+  * range-sorted, the inventory sink shuffles nothing, the bytes written do
+  * not depend on the shuffle partition count, and neither a failing `run`
+  * nor a failing sink leaves anything behind.
   */
 class CandyPipelineSpec extends SparkTestBase {
 
@@ -55,7 +61,7 @@ class CandyPipelineSpec extends SparkTestBase {
 
   private val transactionCount = days.map(_._2.size).sum
 
-  private def writeCorpus(days: Seq[(String, Seq[String])]): Path = {
+  private def writeCorpus(days: Seq[(String, Seq[String])], products: Seq[String]): Path = {
     val dir = Files.createTempDirectory("graft-candy-batch")
     Files.write(dir.resolve("products.csv"), products.asJava)
     for ((file, rows) <- days) Files.writeString(dir.resolve(file), rows.mkString("[\n", ",\n", "\n]"))
@@ -71,22 +77,29 @@ class CandyPipelineSpec extends SparkTestBase {
     "daily_summary.csv", "sales_profit_forecast.csv")
 
   /** `CandyPipeline.main`'s batch: run, then the five sinks in its order;
-    * returns each file's lines. The caches `run` leaves are cleared. */
-  private def batch(dataDir: Path, reloadDaily: Boolean): Map[String, Seq[String]] = {
+    * returns each file's bytes. The caches `run` leaves are cleared. */
+  private def batchBytes(dataDir: Path, reloadDaily: Boolean): Map[String, Seq[Byte]] = {
     val out = Files.createTempDirectory("graft-candy-out")
     try {
       val r = CandyPipeline.run(spark, dataDir.toString, reloadDaily = reloadDaily)
       val frames = Seq(r.productsUpdated, r.orders, r.orderLineItems, r.dailySummary, r.forecast)
       for ((df, file) <- frames.zip(sinks)) Ingest.saveSingleCsv(df, out.toString, file)
-      sinks.map(f => f -> Files.readAllLines(out.resolve(f)).asScala.toSeq).toMap
+      sinks.map(f => f -> Files.readAllBytes(out.resolve(f)).toSeq).toMap
     } finally {
       spark.catalog.clearCache()
       deleteRecursively(out)
     }
   }
 
-  private def withCorpus[A](days: Seq[(String, Seq[String])])(body: Path => A): A = {
-    val dir = writeCorpus(days)
+  /** [[batchBytes]], as each file's lines. */
+  private def batch(dataDir: Path, reloadDaily: Boolean): Map[String, Seq[String]] =
+    batchBytes(dataDir, reloadDaily).map { case (f, bytes) =>
+      f -> new String(bytes.toArray, StandardCharsets.UTF_8).linesIterator.toSeq
+    }
+
+  private def withCorpus[A](days: Seq[(String, Seq[String])], products: Seq[String] = products)(
+      body: Path => A): A = {
+    val dir = writeCorpus(days, products)
     try body(dir) finally deleteRecursively(dir)
   }
 
@@ -152,6 +165,48 @@ class CandyPipelineSpec extends SparkTestBase {
       "2024-02-03,-18.75,-11.25"))
   }
 
+  test("a product row with an empty id is written back unchanged and first") {
+    val ghost = ",Ghost,candy,chewing,stick,1.00,0.40,7"
+    val out = withCorpus(days, products :+ ghost)(batch(_, reloadDaily = false))
+    assert(out("products_updated.csv") == Seq(
+      "product_id,product_name,current_stock",
+      ",Ghost,7",
+      "1,Gum,0",
+      "2,Taffy,0",
+      "3,Mint,85"))
+    assert(out("order_line_items.csv") == lineItemsCarry)
+    assert(out("orders.csv") == orders("4.00"))
+  }
+
+  test("the outputs do not depend on the shuffle partition count") {
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      withCorpus(days) { dir =>
+        for (reloadDaily <- Seq(false, true)) {
+          val outs = Seq("1", "4", "7").map { partitions =>
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            partitions -> batchBytes(dir, reloadDaily)
+          }
+          for ((partitions, files) <- outs.tail; f <- sinks)
+            assert(files(f) == outs.head._2(f), s"$f at $partitions partitions, reloadDaily=$reloadDaily")
+        }
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  test("a failing sink write leaves no scratch behind and the existing file untouched") {
+    val out = Files.createTempDirectory("graft-candy-out")
+    try {
+      Files.writeString(out.resolve("orders.csv"), "previous\n")
+      val failing = spark.range(3).select(raise_error(lit("boom")).cast("string").as("x"))
+      val e = intercept[Exception](Ingest.saveSingleCsv(failing, out.toString, "orders.csv"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+      assert(Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("orders.csv"))
+      assert(Files.readString(out.resolve("orders.csv")) == "previous\n")
+    } finally deleteRecursively(out)
+  }
+
   /** Every node of an executed plan, through the adaptive, command and
     * cache wrappers. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -185,6 +240,45 @@ class CandyPipelineSpec extends SparkTestBase {
       } finally spark.listenerManager.unregister(listener)
       val rowsRead = scans.synchronized(scans.asScala.toSeq.map(_.metrics("numOutputRows").value).sum)
       assert(rowsRead == transactionCount + products.size - 1)
+    }
+  }
+
+  test("no output is range-sorted, and the inventory sink shuffles nothing") {
+    withCorpus(days) { dir =>
+      val plans = mutable.ArrayBuffer.empty[SparkPlan]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          plans.synchronized(plans += qe.executedPlan)
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      /** The executed plans of every action `body` runs. */
+      def executed(body: => Unit): Seq[SparkPlan] = {
+        plans.synchronized(plans.clear())
+        body
+        ListenerBusDrain(spark.sparkContext)
+        plans.synchronized(plans.toList)
+      }
+      val out = Files.createTempDirectory("graft-candy-out")
+      spark.listenerManager.register(listener)
+      val (batchPlans, inventoryPlans) = try {
+        var r: CandyPipeline.Results = null
+        val runPlans = executed { r = CandyPipeline.run(spark, dir.toString) }
+        val inventoryPlans = executed(Ingest.saveSingleCsv(r.productsUpdated, out.toString, sinks.head))
+        val sinkPlans = executed {
+          val frames = Seq(r.orders, r.orderLineItems, r.dailySummary, r.forecast)
+          for ((df, file) <- frames.zip(sinks.tail)) Ingest.saveSingleCsv(df, out.toString, file)
+        }
+        (runPlans ++ inventoryPlans ++ sinkPlans, inventoryPlans)
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.catalog.clearCache()
+        deleteRecursively(out)
+      }
+      def exchanges(ps: Seq[SparkPlan]) = ps.flatMap(nodes).collect { case e: ShuffleExchangeLike => e }
+      val ranged = exchanges(batchPlans).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+      assert(ranged.isEmpty, ranged.mkString("\n"))
+      assert(inventoryPlans.nonEmpty)
+      assert(exchanges(inventoryPlans).isEmpty, inventoryPlans.mkString("\n"))
     }
   }
 
