@@ -11,43 +11,25 @@ import java.nio.file.{Files, Paths}
   * parsing of stdout.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r18 (guide §1.2 step 3, config AFTER algorithm): the generated-
-      // class cache default (100 entries) thrashes under a battery of 241
-      // distinct plans — kernel-heavy queries re-Janino-compile subtrees
-      // that an earlier query already compiled. 8192 entries holds the
-      // whole battery (measured: -12.6 s / geomean 0.936 over the full
-      // single-shot battery, wins concentrated in the kernel queries).
-      // Scale-independent: any long-lived session running many distinct
-      // queries (a 100 TB driver more so) wants the same headroom; the
-      // cost is bounded driver metaspace.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // r18 finding 6: localCheckpoint blocks from finished queries stay
-      // pinned until the ContextCleaner sees their RDD objects die — and
-      // that needs a DRIVER FULL GC, which Spark only forces every
-      // spark.cleaner.periodicGC.interval (default 30 MIN — never inside
-      // a battery). Stale blocks occupy the non-evictable half of the
-      // unified pool (spark.memory.storageFraction), so later queries run
-      // execution-memory-starved: paired single-shot-battery A/B measured
-      // 255.0 s -> 225.1 s (geomean 0.916) at a 30 s interval, with the
-      // post-lifecycle e-class queries recovering 6-8x (q_e1 3.29 ->
-      // 0.45). Interval tuned against the REAL 3-rep-median bench:
-      // 30 s taxes the tail with stop-the-world pauses (186.5 s total)
-      // while 120 s keeps the cleanup and drops the tax (165.3 s vs
-      // 179.9 s without the conf). Scale-honest: any long-lived session
-      // with high query turnover wants the cleaner interval scaled to
-      // turnover, not wall-clock defaults.
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+
+  /** JSON string-literal body: escapes the quote, the backslash and every
+    * control character (< 0x20), so error text or a query's SQL
+    * carrying a tab or newline still leaves a line `json.load` accepts. */
+  def esc(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  /** The battery's untimed set-up, shared with [[ConfSweep]]: silences two
+    * known-benign loggers, warms the JVM, codegen and every table footer,
+    * then builds the shared query artifacts. Returns each build's seconds.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     // The only unpartitioned windows left are LIMIT-BOUNDED rank slices
     // (q_t13 ranks a <=100-row TakeOrdered result; Spark warns on any
     // empty partitionSpec regardless of input size, and PlanSpec bans the
@@ -79,7 +61,6 @@ object Bench {
     wl.select(sum((col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))).count()
     // the custom bloom aggregate + probe expressions JIT on first use
     // (measured: a 12.7s -> 0.9s rep decay on q_j8 before this line)
-    graft.plans.GraftExtensions.register(spark)
     val wbf = wl.limit(4096)
       .select(org.apache.spark.sql.functions.expr(
         "bloom_agg(xxhash64(l_orderkey), 4096L, 65536L)").as("bf"))
@@ -105,23 +86,19 @@ object Bench {
     def timedBuild(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val builds = Seq(
+    Seq(
       "ivf" -> timedBuild(graft.operators.DedupQueries.ivfCached(spark, sfDir, nlist = 32)),
       "d6_index" -> timedBuild(graft.operators.PipelineQueries.d6IndexCached(spark, sfDir)),
       "d9_index" -> timedBuild(graft.operators.PipelineQueries.d9IndexCached(spark, sfDir)),
       "v6_pairs" -> timedBuild(graft.operators.DedupQueries.nearDupPairsShared(spark, sfDir).count()),
       "d3_pairs" -> timedBuild(graft.operators.DedupQueries.textPairsShared(spark, sfDir).count()),
       "d6_pairs" -> timedBuild(graft.operators.PipelineQueries.jaccardPairsShared(spark, sfDir).count()))
+  }
 
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.build()
+    val builds = warmUp(spark, sfDir)
 
     val headline = Set(
       "q1_agg", "q_k1_fulfillment",

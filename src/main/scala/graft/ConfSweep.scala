@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** MEASUREMENT TOOLING (like [[Profile]] — not a query path, not part of
@@ -13,60 +12,17 @@ import java.nio.file.{Files, Paths}
 object ConfSweep {
   def main(args: Array[String]): Unit = {
     val out = args(0)
-    val overrides: Seq[(String, String)] =
+    val overrides: Map[String, String] =
       if (args.length > 1 && args(1).nonEmpty)
-        args(1).split(",").toSeq.map { kv =>
+        args(1).split(",").map { kv =>
           val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1))
-        }
-      else Nil
+        }.toMap
+      else Map.empty
     val prefix = if (args.length > 2) args(2) else ""
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Bench's adopted r18 config — the control for further sweeps
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-    overrides.foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.storage.BlockManager",
-      org.apache.logging.log4j.Level.ERROR)
-    // Bench's untimed warmup, verbatim
-    import org.apache.spark.sql.functions.{broadcast, col, sum}
-    val wl = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    wl.groupBy("l_returnflag").agg(sum("l_quantity")).count()
-    wl.limit(1000)
-      .join(broadcast(wl.select("l_orderkey").limit(10)), "l_orderkey")
-      .count()
-    wl.select(sum((col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))).count()
-    graft.plans.GraftExtensions.register(spark)
-    val wbf = wl.limit(4096)
-      .select(org.apache.spark.sql.functions.expr(
-        "bloom_agg(xxhash64(l_orderkey), 4096L, 65536L)").as("bf"))
-      .head().getAs[Array[Byte]](0)
-    wl.limit(4096).filter(org.apache.spark.sql.functions.call_function(
-      "bloom_might_contain", org.apache.spark.sql.functions.lit(wbf),
-      org.apache.spark.sql.functions.xxhash64(col("l_orderkey")))).count()
-    Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
-      .foreach(f => graft.operators.Tables.read(spark, sfDir,
-        f.getName.stripSuffix(".parquet")).limit(1).count())
-    // shared artifact builds (untimed, same as Bench)
-    graft.operators.DedupQueries.ivfCached(spark, sfDir, nlist = 32)
-    graft.operators.PipelineQueries.d6IndexCached(spark, sfDir)
-    graft.operators.PipelineQueries.d9IndexCached(spark, sfDir)
-    graft.operators.DedupQueries.nearDupPairsShared(spark, sfDir).count()
-    graft.operators.DedupQueries.textPairsShared(spark, sfDir).count()
-    graft.operators.PipelineQueries.jaccardPairsShared(spark, sfDir).count()
+    // Bench's session and untimed set-up: the control for every sweep
+    val spark = GraftSession.build(conf = overrides)
+    Bench.warmUp(spark, sfDir)
 
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def gcMs: Long = { var t = 0L; gcBeans.forEach(x => t += x.getCollectionTime); t }
@@ -82,9 +38,9 @@ object ConfSweep {
     val total = timed.map(_._2).sum
     val gcD = gcMs - gc0
     val qs = timed.map { case (k, v, _) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val errs = timed.collect { case (k, _, Some(m)) => s""""$k":"${m.replace("\"", "'")}"""" }
+    val errs = timed.collect { case (k, _, Some(m)) => s""""$k":"${Bench.esc(m)}"""" }
       .mkString("{", ",", "}")
-    val line = s"""{"total":$total,"gc_ms":$gcD,"n":${timed.size},"queries":$qs,"errors":$errs,"overrides":"${args.lift(1).getOrElse("")}"}"""
+    val line = s"""{"total":$total,"gc_ms":$gcD,"n":${timed.size},"queries":$qs,"errors":$errs,"overrides":"${Bench.esc(args.lift(1).getOrElse(""))}"}"""
     Files.writeString(Paths.get(out), line + "\n")
     println(f"[sweep] total ${total}%.1f s, gc ${gcD}ms, n=${timed.size}, errors=${timed.count(_._3.isDefined)} -> $out")
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI for the end-to-end curation build: documents.parquet in, packed
   * split corpus + one-line JSON report out.
   * Usage: runMain graft.CurateMain <sfDir> <outDir> [seed]
@@ -10,14 +8,7 @@ object CurateMain {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val seed = if (args.length > 2) args(2) else "graft-curate-1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val r = operators.Curation.curate(docs, outDir, seed)
     val splits = r.splitCounts.toSeq.sortBy(_._1)

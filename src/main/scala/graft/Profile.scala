@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Empirical attribution harness (guide §1.1/§7): run one named SparkEntry
   * query warm, then once more under a listener that records every job's
@@ -13,18 +12,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = (args(0), args(1).split(",").toSeq)
     val warm = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror the bench session (r18)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     final case class Job(id: Int, var site: String = "", var start: Long = 0L,
                          var end: Long = 0L, var stages: Int = 0,
                          var tasks: Int = 0, var taskMs: Long = 0L,
@@ -72,7 +60,7 @@ object Profile {
       Force.rows(fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
       val gcD = gcMs - gc0
-      Thread.sleep(700) // let the listener bus drain
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       val js = jobs.synchronized(jobs.values.toSeq)
       val jobWall = js.map(j => (j.end - j.start) / 1e3).sum

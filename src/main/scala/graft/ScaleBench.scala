@@ -54,22 +54,6 @@ object ScaleBench {
     def reset(): Unit =
       Seq(shuffleWrite, shuffleRead, memSpill, diskSpill, peakTaskMem, tasks)
         .foreach(_.set(0L))
-    /** Listener-bus delivery is asynchronous: wait until the task counter
-      * has been stable for `quietMs` (bounded by `maxWaitMs`) before
-      * reading — the tail of a just-finished job's events is still
-      * draining when the action returns.
-      */
-    def settle(quietMs: Long = 250, maxWaitMs: Long = 3000): Unit = {
-      val deadline = System.nanoTime() + maxWaitMs * 1000000L
-      var last = -1L
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             (tasks.get() != last ||
-              (System.nanoTime() - stableSince) < quietMs * 1000000L)) {
-        if (tasks.get() != last) { last = tasks.get(); stableSince = System.nanoTime() }
-        Thread.sleep(25)
-      }
-    }
   }
 
   /** Clustered-signature candidate frame for the two Hamming-geometry
@@ -105,16 +89,7 @@ object ScaleBench {
     // inputs to the indexed legs).
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     // Untimed warmup (Bench's rationale): JVM/codegen/FS init must not land
     // on the first timed query. Touch every table footer + one agg/join.
@@ -527,7 +502,6 @@ object ScaleBench {
       // rank it. Both legs pre-project to (lang, doc_id) so the comparison
       // is the mechanism, not the payload width.
       ("q_sp7_agg_scale" -> ((s: SparkSession, d: String) => {
-        graft.plans.GraftExtensions.register(s)
         s.read.parquet(s"$d/documents.parquet").select("lang", "doc_id")
           .groupBy("lang")
           .agg(expr("sample_ids(md5(concat('graft-shuffle-7:', " +
@@ -1007,14 +981,16 @@ object ScaleBench {
       require(unknown.isEmpty, s"unknown legs: $unknown")
     }
     val results = flagships.filter(f => only.forall(_(f._1))).map { case (name, fn) =>
-      listener.settle(); listener.reset()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext); listener.reset()
       val t0 = System.nanoTime()
       val rows = try Force.rows(fn(spark, dir))
       catch { case e: Throwable =>
         System.err.println(s"[scalebench] $name FAILED: $e"); -1L
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      listener.settle()
+      // listener-bus delivery is asynchronous: read the counters only
+      // after the bus has delivered every event of the leg's jobs
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       val mb = 1024.0 * 1024.0
       val metrics = Map(
         "shuffle_write_mb" -> listener.shuffleWrite.get() / mb,

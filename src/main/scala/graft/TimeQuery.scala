@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local profiling harness: runs one named SparkEntry query N times against
   * a dataset dir and prints per-iteration wall times, separating steady-state
@@ -10,19 +9,7 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val (sfDir, name, iters) = (args(0), args(1),
       if (args.length > 2) args(2).toInt else 5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror the bench session (r18): isolated adjudication numbers
-      // must see the same codegen-cache behavior Bench does
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val fn = SparkEntry.queries(name)
     val times = (1 to iters).map { i =>
       val t0 = System.nanoTime()

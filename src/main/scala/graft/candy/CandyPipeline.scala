@@ -82,13 +82,7 @@ object CandyPipeline {
       sys.exit(2)
     }
     val Array(dataDir, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("CandyPipeline")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val reloadDaily =
       sys.env.getOrElse("RELOAD_INVENTORY_DAILY", "false").equalsIgnoreCase("true")
     val r = run(spark, dataDir, reloadDaily = reloadDaily)

@@ -44,12 +44,7 @@ object SeedDatabase {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: SeedDatabase <datasetDir> <jdbcUrl> [docUri] [docDatabase] [docFormat]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val (tables, collections) = seed(spark, args(0), args(1),
       docUri = if (args.length > 2) args(2) else "",
       docDatabase = if (args.length > 3) args(3) else "candy_store",

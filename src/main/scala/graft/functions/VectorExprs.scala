@@ -26,13 +26,9 @@ object VectorExprs {
   /** Cosine similarity via the native codegen'd expression
     * (graft.functions.CosineSimilarity) — bit-identical results to
     * `cosine`, ~an order of magnitude faster on wide fan-outs because it
-    * stays in whole-stage codegen with zero per-row allocation. Registers
-    * the function on the session if needed.
+    * stays in whole-stage codegen with zero per-row allocation.
     */
-  def cosineFast(spark: org.apache.spark.sql.SparkSession, a: String, b: String): Column = {
-    graft.plans.GraftExtensions.register(spark)
-    expr(s"cosine_sim($a, $b)")
-  }
+  def cosineFast(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 
   /** Squared euclidean distance. */
   def sqDist(a: String, b: String): Column = expr(

@@ -79,8 +79,6 @@ object Dedup {
     // Native codegen'd expression (graft.functions.MinHashSignatureExpr):
     // hashes each shingle once, then numHashes cheap hashLong mins — the
     // interpreted HOF formulation re-hashed the string per hash index.
-    // Requires GraftExtensions.register on the session (operator entry
-    // points do this).
     expr(s"minhash_sig($shinglesCol, $numHashes)")
 
   /** LSH band keys from a minhash signature: `bands` hashes of `rowsPerBand`
@@ -182,7 +180,6 @@ object Dedup {
       shingleSize: Int = 2, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.7): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val r = numHashes / bands
     // Persisted: the signature frame feeds both sides of the bucket
     // self-join plus the verification join — without it each reuse
@@ -245,7 +242,6 @@ object Dedup {
     */
   private def verifyPairs(pairs: DataFrame, sets0: DataFrame, idCol: String,
                           threshold: Double, setsRows: Long): DataFrame = {
-    graft.plans.GraftExtensions.register(sets0.sparkSession)
     val sets = if (setsRows <= SmallSetsDocs) sets0.hint("shuffle_hash") else sets0
     pairs
       .join(sets.select(col(idCol).as("id_a"), col("shh").as("shh_a"),
@@ -270,7 +266,6 @@ object Dedup {
                shingleSize: Int = 2, numHashes: Int = 128,
                bands: Int = 32): DataFrame = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs.select(col(idCol), shingles(textCol, shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
       .withColumn("sz", size(col("sh")))
@@ -420,7 +415,6 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, threshold: Double = 0.6): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val prepared = shingleSets(docs, idCol, textCol, shingleSize).persist()
     try {
       val nDocs = prepared.count()
@@ -461,7 +455,6 @@ object Dedup {
   private def verifyContainment(pairs: DataFrame, sets0: DataFrame,
                                 idCol: String, threshold: Double,
                                 setsRows: Long): DataFrame = {
-    graft.plans.GraftExtensions.register(sets0.sparkSession)
     val sets = if (setsRows <= SmallSetsDocs) sets0.hint("shuffle_hash") else sets0
     pairs
       .join(sets.select(col(idCol).as("id_a"), col("shh").as("shh_a"),
@@ -789,7 +782,6 @@ object Dedup {
                 family: String = graft.functions.HashFamily.Xx64): Column =
     // Native codegen'd fused loop (graft.functions.SimHash60Expr); the HOF
     // formulation allocated a vote array per token, interpreted.
-    // Requires GraftExtensions.register on the session.
     expr(s"simhash60(${tokensExpr(textCol)}, '${graft.functions.HashFamily.validate(family)}')")
 
   /** Hamming distance between two fingerprints. */
@@ -1144,7 +1136,6 @@ object Dedup {
       maxDist: Int = 3,
       family: String = graft.functions.HashFamily.Xx64,
       chunks: Int = 0): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val c = if (chunks == 0) maxDist + 1 else chunks
     val keysExpr = pigeonholeKeys(60, c, maxDist, "sim")
     // Persisted across the two sides of the key self-join, released after
@@ -1217,7 +1208,6 @@ object Dedup {
       sigs: DataFrame, idCol: String, hashCol: String,
       maxDist: Int, carry: Seq[String] = Nil,
       chunks: Int = 0): (DataFrame, DataFrame) = {
-    graft.plans.GraftExtensions.register(sigs.sparkSession)
     val c = if (chunks == 0) maxDist + 1 else chunks
     val keysExpr = pigeonholeKeys(64, c, maxDist, "h64")
     val base = sigs.select(

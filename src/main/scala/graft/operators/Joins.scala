@@ -135,8 +135,6 @@ object Joins {
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
                       dimKey: String, expectedItems: Long,
                       fpp: Double = 0.03): DataFrame = {
-    val spark = fact.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     // optimal bit count for the target fpp: m = -n ln(p) / (ln 2)^2
     val numBits = math.max(64L,
       math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
@@ -168,7 +166,6 @@ object Joins {
     // the band bails on those after a couple of rows. The exact distance
     // is then recomputed only for the survivors (block-pair-count-bounded,
     // tiny next to the candidate count).
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val b = df.select(col(idCol), col(strCol),
       substring(col(strCol), 1, blockLen).as("_blk"))
     b.as("a")

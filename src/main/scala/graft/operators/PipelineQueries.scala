@@ -291,7 +291,6 @@ object PipelineQueries {
     // window-ranked q_sp5 cannot have (it shuffles every row). Same
     // selection function, so the output is q_sp5's rank <= 10 prefix.
     "q_sp7_sample_agg" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       docs(s, dir)
         .groupBy("lang")
         .agg(expr(s"sample_ids(md5(concat('$shuffleSeed:', " +

@@ -24,7 +24,7 @@ object SimilaritySearch {
   def srpBucketKeys(embCol: String, tables: Int, bits: Int, seed: Int = 42): Column =
     // Native codegen'd expression (graft.functions.SrpBucketKeysExpr); the
     // HOF formulation paid an interpreted 4-arg xxhash64 per (table, bit,
-    // component). Requires GraftExtensions.register (callers do this).
+    // component).
     expr(s"srp_buckets($embCol, $tables, $bits, $seed)")
 
   /** Exact brute-force cosine top-k against one query vector. */
@@ -33,7 +33,7 @@ object SimilaritySearch {
     val q = typedLit(query.toSeq)
     emb
       .withColumn("q_emb", q)
-      .withColumn("cosine", VectorExprs.cosineFast(emb.sparkSession, embCol, "q_emb"))
+      .withColumn("cosine", VectorExprs.cosineFast(embCol, "q_emb"))
       .select(col(idCol), col("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
@@ -55,7 +55,6 @@ object SimilaritySearch {
     val tables = tablesForRecall(minCosine, bits, targetRecall)
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val withBuckets = emb.withColumn("buckets", srpBucketKeys(embCol, tables, bits, seed))
     val queryProbes = Seq(Tuple1(query.toSeq)).toDF("q_emb_src")
       .withColumn("buckets", srpBucketKeys("q_emb_src", tables, bits, seed))
@@ -74,7 +73,7 @@ object SimilaritySearch {
       .select(col(idCol)).distinct()
       .join(emb.select(col(idCol), col(embCol)), Seq(idCol))
       .withColumn("q_emb", typedLit(query.toSeq))
-      .withColumn("cosine", VectorExprs.cosineFast(emb.sparkSession, embCol, "q_emb"))
+      .withColumn("cosine", VectorExprs.cosineFast(embCol, "q_emb"))
       .select(col(idCol), col("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
@@ -93,7 +92,7 @@ object SimilaritySearch {
     val b = emb.select(col(idCol).as("id_b"), col(embCol).as("emb_b"))
     a.crossJoin(b)
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", VectorExprs.cosineFast(emb.sparkSession, "emb_a", "emb_b"))
+      .withColumn("cosine", VectorExprs.cosineFast("emb_a", "emb_b"))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -133,7 +132,6 @@ object SimilaritySearch {
                       embCol: String, k: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val spark = left.sparkSession
     // r17 perf: spread the streamed side — a cartesian over two single-
     // split frames yields ONE task for the whole cosine matrix (q_v15
     // measured a 1.46 s single-task job at sf0.1); guide §2.5
@@ -142,7 +140,7 @@ object SimilaritySearch {
     val y = right.select(col(idCol).as("y_id"), col(embCol).as("y_emb"))
     val pairs = x.crossJoin(y)
       .withColumn("c6",
-        round(round(VectorExprs.cosineFast(spark, "x_emb", "y_emb"), 6) * 1e6)
+        round(round(VectorExprs.cosineFast("x_emb", "y_emb"), 6) * 1e6)
           .cast("long"))
       .select("x_id", "y_id", "c6")
     scoreMargins(pairs, k)
@@ -167,7 +165,6 @@ object SimilaritySearch {
                            bench: DataFrame, benchIdCol: String,
                            benchEmbCol: String,
                            minCosine: Double): DataFrame = {
-    val spark = corpus.sparkSession
     val floor6 = Math.round(minCosine * 1e6)
     // r17 perf: spread the streamed corpus side of the broadcast nested
     // loop — single-split sources otherwise score |corpus|×|bench|
@@ -177,7 +174,7 @@ object SimilaritySearch {
       .crossJoin(broadcast(bench.select(col(benchIdCol).as("bench_id"),
         col(benchEmbCol).as("b_emb"))))
       .withColumn("c6",
-        round(round(VectorExprs.cosineFast(spark, "x_emb", "b_emb"), 6) * 1e6)
+        round(round(VectorExprs.cosineFast("x_emb", "b_emb"), 6) * 1e6)
           .cast("long"))
       .filter(col("c6") >= floor6)
       .select(col("id"), col("bench_id"),
@@ -226,7 +223,6 @@ object SimilaritySearch {
                     maxCosine: Double = 1.0): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val spark = corpus.sparkSession
     val floor6 = Math.round(minCosine * 1e6)
     val ceil6 = Math.round(maxCosine * 1e6)
     // r17 perf: spread the streamed corpus side (see semanticFlaggedPairs)
@@ -239,7 +235,7 @@ object SimilaritySearch {
         col(queryEmbCol).as("q_emb"))))
       .filter(col("neg_id") =!= col("positive_id"))
       .withColumn("c6",
-        round(round(VectorExprs.cosineFast(spark, "c_emb", "q_emb"), 6) * 1e6)
+        round(round(VectorExprs.cosineFast("c_emb", "q_emb"), 6) * 1e6)
           .cast("long"))
       .filter(col("c6") >= floor6 && col("c6") <= ceil6)
       .withColumn("rank", row_number().over(
@@ -274,7 +270,6 @@ object SimilaritySearch {
     */
   def semDeDup(emb: DataFrame, idCol: String, embCol: String, k: Int,
                iterations: Int, minCosine: Double): DataFrame = {
-    val spark = emb.sparkSession
     val floor6 = Math.round(minCosine * 1e6)
     // one k-means run, materialized: both sides of the cell self-join and
     // the final per-doc frame read it
@@ -287,7 +282,7 @@ object SimilaritySearch {
       .join(assigned.select(col("id").as("id_b"), col("cluster_id"),
         col("e").as("e_b")), Seq("cluster_id"))
       .filter(col("id_a") < col("id_b"))
-      .filter(round(round(VectorExprs.cosineFast(spark, "e_a", "e_b"), 6)
+      .filter(round(round(VectorExprs.cosineFast("e_a", "e_b"), 6)
         * 1e6).cast("long") >= floor6)
       .select("id_a", "id_b")
     val comps = Dedup.connectedComponents(pairs)
@@ -383,8 +378,6 @@ object SimilaritySearch {
                          minCenteredThreshold: Double = 0.15,
                          thresholdBounded: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = left.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val x = left.select(col(idCol).as("x_id"), col(embCol).as("x_emb"))
     val y = right.select(col(idCol).as("y_id"), col(embCol).as("y_emb"))
     val (hx, hy, tune) =
@@ -419,7 +412,7 @@ object SimilaritySearch {
       .select("x_id", "y_id").distinct()
     val pairs = cands.join(x, "x_id").join(y, "y_id")
       .withColumn("c6",
-        round(round(VectorExprs.cosineFast(spark, "x_emb", "y_emb"), 6) * 1e6)
+        round(round(VectorExprs.cosineFast("x_emb", "y_emb"), 6) * 1e6)
           .cast("long"))
       .select("x_id", "y_id", "c6")
     val bounded =
@@ -539,7 +532,6 @@ object SimilaritySearch {
     require(nprobe >= 1 && nprobe <= index.centroids.length,
       s"nprobe must be in [1, ${index.centroids.length}], got $nprobe")
     import org.apache.spark.sql.expressions.Window
-    val spark = left.sparkSession
     val entries = index.centroids.zipWithIndex.map { case (c, i) =>
       struct(sqDistTo(col("_nvec"), c).as("d"), lit(i).as("i"))
     }
@@ -560,7 +552,7 @@ object SimilaritySearch {
     val w = Window.partitionBy("q_id").orderBy(col("c6").desc, col("n_id"))
     kept
       .withColumn("c6",
-        round(round(VectorExprs.cosineFast(spark, "q_emb", "n_emb"), 6) * 1e6)
+        round(round(VectorExprs.cosineFast("q_emb", "n_emb"), 6) * 1e6)
           .cast("long"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -804,7 +796,6 @@ object SimilaritySearch {
                             seed: Int = 42, center: Boolean = false,
                             multiprobe: Boolean = true,
                             minCenteredThreshold: Double = 0.15): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     val (hashCol, tuneThreshold) =
       if (!center) (embCol, threshold)
       else {
@@ -867,7 +858,7 @@ object SimilaritySearch {
     candidates
       .join(spreadEmb.select(col(idCol).as("id_a"), col(embCol).as("emb_a")), "id_a")
       .join(spreadEmb.select(col(idCol).as("id_b"), col(embCol).as("emb_b")), "id_b")
-      .withColumn("cosine", VectorExprs.cosineFast(emb.sparkSession, "emb_a", "emb_b"))
+      .withColumn("cosine", VectorExprs.cosineFast("emb_a", "emb_b"))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: print the SRP auto-sizing numbers (key width, table
   * count, exploded-frame rows, expected background candidate volume) the
   * exact-key near-dup flagship would use on a given embeddings dir. This is
@@ -14,10 +12,7 @@ import org.apache.spark.sql.SparkSession
 object SrpSizingProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/tmp/synth/x1", "/tmp/synth/x30")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     for (dir <- dirs) {
       val emb = Tables.read(spark, dir, "embeddings")
       val n = emb.count()

@@ -360,7 +360,6 @@ object TextQueries {
     // appended after each 'e' (an NFD-style form) — raw text dedup sees
     // three distinct documents, the normalized key sees one.
     "q_t14_normalized_dedup" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val base = docs(s, dir).select(col("doc_id"), col("text"))
       val accented = base.filter(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 300000L).as("doc_id"),

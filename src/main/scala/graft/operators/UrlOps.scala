@@ -366,7 +366,6 @@ object UrlOps {
                    canonicalCol: String = "canonical_url",
                    hostCol: Option[String] = None,
                    domainCol: Option[String] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     var out = df.withColumn(canonicalCol,
       call_function("url_canonical", col(urlCol)))
     hostCol.foreach { hc =>
@@ -431,7 +430,6 @@ object UrlOps {
     */
   def domainListFilter(df: DataFrame, urlCol: String, domains: DataFrame,
                        allow: Boolean = false): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     // IDN normalization (r11 VERDICT #4): BOTH sides compare after ONE
     // punycode decode (url_idn_host, RFC 3492 kernel) — an `xn--`
     // spelling of a listed unicode domain (or vice versa) can no longer

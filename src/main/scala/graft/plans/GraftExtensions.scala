@@ -2,24 +2,14 @@ package graft.plans
 
 import graft.functions.{CosineSimilarity, LevenshteinWithin, MinHashSignatureExpr, SimHash60Expr, SortedLongIntersectCount, SrpBucketKeysExpr}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions registering graft's native expressions as SQL
-  * functions — functions only: no planner strategies or optimizer rules.
-  * Install at session build time with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, or on a
-  * live session with `GraftExtensions.register(spark)` (idempotent).
+/** graft's native expressions as SQL functions — functions only: no planner
+  * strategies or optimizer rules. [[graft.GraftSession.build]] registers
+  * them on every session it builds; [[register]] adds them to any other
+  * live session.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      ext.injectFunction((ident, info, builder))
-    }
-  }
-}
-
 object GraftExtensions {
 
   private def intArg(e: Expression, fn: String): Int = e.eval() match {
@@ -172,7 +162,8 @@ object GraftExtensions {
           args(0), args(1))
       }))
 
-  /** Register on a live session (no-op if already present). */
+  /** Register on a live session. Idempotent: registering again replaces
+    * each function with the same builder. */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)

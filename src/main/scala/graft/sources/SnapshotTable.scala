@@ -1199,8 +1199,6 @@ object SnapshotTable {
     val statsByFile: Map[String, (Long, Map[String, ColStats], Map[String, Array[Byte]])] =
       if ((statsCols.isEmpty && bloomCols.isEmpty) || files.isEmpty) Map.empty
       else {
-        if (bloomCols.nonEmpty)
-          graft.plans.GraftExtensions.register(spark) // bloom_agg (idempotent)
         val back = spark.read.parquet(dataDir)
         val typeOf = back.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
         (statsCols ++ bloomCols).foreach(c => require(typeOf.contains(c),

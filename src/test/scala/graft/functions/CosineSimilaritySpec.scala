@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** The native cosine expression must be bit-identical to the declarative
@@ -18,7 +17,7 @@ class CosineSimilaritySpec extends SparkTestBase {
     val both = emb
       .withColumn("q_emb", typedLit(q))
       .withColumn("hof", VectorExprs.cosine("embedding", "q_emb"))
-      .withColumn("native", VectorExprs.cosineFast(spark, "embedding", "q_emb"))
+      .withColumn("native", VectorExprs.cosineFast("embedding", "q_emb"))
       .select("hof", "native").collect()
     both.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
@@ -27,7 +26,6 @@ class CosineSimilaritySpec extends SparkTestBase {
   }
 
   test("SQL registration and basic values") {
-    GraftExtensions.register(spark)
     val v = spark.sql(
       "SELECT cosine_sim(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)), array(CAST(0 AS FLOAT), CAST(1 AS FLOAT))) AS c," +
         " cosine_sim(array(CAST(2 AS FLOAT), CAST(0 AS FLOAT)), array(CAST(4 AS FLOAT), CAST(0 AS FLOAT))) AS d")
@@ -37,7 +35,6 @@ class CosineSimilaritySpec extends SparkTestBase {
   }
 
   test("null contract: null array, null element, mismatched length -> null") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1 AS FLOAT))) AS a,
@@ -51,7 +48,7 @@ class CosineSimilaritySpec extends SparkTestBase {
     val a = Seq(0.5f, -1.25f, 3.0f)
     val b = Seq(2.0f, 0.75f, -0.5f)
     val codegen = Seq((a, b)).toDF("x", "y")
-      .select(VectorExprs.cosineFast(spark, "x", "y")).head().getDouble(0)
+      .select(VectorExprs.cosineFast("x", "y")).head().getDouble(0)
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, FloatType}
     val interpreted = CosineSimilarity(

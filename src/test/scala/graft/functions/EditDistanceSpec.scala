@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** The banded thresholded kernel must agree with the full-DP
@@ -26,7 +25,6 @@ class EditDistanceSpec extends SparkTestBase {
       (0 until nextInt(12)).map(_ => ('a' + nextInt(3)).toChar).mkString
     val pairs = (1 to 400).map(_ => (word(), word()))
     val df = pairs.toDF("a", "b")
-    GraftExtensions.register(spark)
     for (k <- Seq(0, 1, 2, 3)) {
       val rows = df.selectExpr(s"lev_within(a, b, $k) AS got",
           s"levenshtein(a, b) <= $k AS want", "a", "b")
@@ -39,7 +37,6 @@ class EditDistanceSpec extends SparkTestBase {
   }
 
   test("edge cases: empties, equality, length gap beyond k, nulls") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  lev_within('', '', 0), lev_within('', 'abc', 2),

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkTestBase
 import graft.operators.Pipeline
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** The bounded sample aggregate must select exactly the window-ranked
@@ -22,7 +21,6 @@ class SampleAggSpec extends SparkTestBase {
     "sample_ids(md5(concat('s7:', CAST(id AS STRING))), id, 10)"
 
   test("selects the window-ranked bottom-n, invariant under repartitioning") {
-    GraftExtensions.register(spark)
     def run(input: org.apache.spark.sql.DataFrame) = input
       .groupBy("grp").agg(expr(sampleExpr).as("ids"))
       .select(col("grp"), posexplode(col("ids")).as(Seq("pos", "id")))
@@ -37,7 +35,6 @@ class SampleAggSpec extends SparkTestBase {
   }
 
   test("null keys/ids are skipped; small groups return whole; n respected") {
-    GraftExtensions.register(spark)
     val withNulls = Seq((Some("g"), Some(1L)), (Some("g"), None),
       (None, Some(3L)), (Some("g"), Some(2L))).toDF("k", "id")
       .select(col("k"), col("id"),
@@ -49,7 +46,6 @@ class SampleAggSpec extends SparkTestBase {
   }
 
   test("bounding happens map-side: partial aggregate sits below the exchange") {
-    GraftExtensions.register(spark)
     val saved = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {

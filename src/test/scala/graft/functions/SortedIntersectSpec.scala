@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 /** The sorted-merge intersection count must equal the general
   * array_intersect size on sorted distinct inputs, honor the null
@@ -12,7 +11,6 @@ class SortedIntersectSpec extends SparkTestBase {
   import spark.implicits._
 
   test("SQL registration and basic values") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  sorted_long_intersect(array(1L, 3L, 5L), array(2L, 3L, 5L, 9L)) AS a,
@@ -25,7 +23,6 @@ class SortedIntersectSpec extends SparkTestBase {
   }
 
   test("null contract: null array -> null; null elements skipped") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  sorted_long_intersect(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS a,
@@ -54,7 +51,6 @@ class SortedIntersectSpec extends SparkTestBase {
   }
 
   test("codegen path agrees with interpreted on dataframe data") {
-    GraftExtensions.register(spark)
     val df = (1 to 500).map { i =>
       val a = (0 until (i % 40)).map(j => (j * 7 + i).toLong).sorted
       val b = (0 until (i % 30)).map(j => (j * 11 + i).toLong).sorted

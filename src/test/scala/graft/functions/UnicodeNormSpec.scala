@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.plans.GraftExtensions
 
 /** NFC composition and accent stripping: canonical-equivalence collapse,
   * idempotence, null contract, and batch (codegen) evaluation via SQL.
@@ -14,7 +13,6 @@ class UnicodeNormSpec extends SparkTestBase {
   private val nfc = "caf\u00e9"   // precomposed 'é'
 
   test("NFD and NFC forms of the same word share one normalized key") {
-    GraftExtensions.register(spark)
     assert(nfd != nfc, "fixture must start from distinct forms")
     val r = spark.sql(
       s"""SELECT nfc_normalize('$nfd') = '$nfc',
@@ -31,7 +29,6 @@ class UnicodeNormSpec extends SparkTestBase {
   }
 
   test("idempotence over a batch (whole-stage codegen path)") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(nfd, nfc, "naïve", "x").toDF("s")
     df.createOrReplaceTempView("norm_in")

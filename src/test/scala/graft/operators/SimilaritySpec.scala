@@ -98,7 +98,7 @@ class SimilaritySpec extends SparkTestBase {
     val w = Window.partitionBy("q_id").orderBy(col("c6").desc, col("n_id"))
     val brute = a.crossJoin(b).filter(col("q_id") =!= col("n_id"))
       .withColumn("c6", round(round(
-        graft.functions.VectorExprs.cosineFast(spark, "q_emb", "n_emb"), 6) * 1e6)
+        graft.functions.VectorExprs.cosineFast("q_emb", "n_emb"), 6) * 1e6)
         .cast("long"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
       .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank")) ->
