@@ -257,7 +257,7 @@ object ScaleBench {
         val n = e.count()
         val nlist = math.max(16, math.round(math.sqrt(n.toDouble)).toInt)
         val idx = operators.SimilaritySearch.ivfIndex(
-          e, "vec_id", "embedding", nlist = nlist, maxIter = 3,
+          e, "embedding", nlist = nlist, maxIter = 3,
           trainFraction = math.min(1.0, 20000.0 / n))
         operators.SimilaritySearch.knnJoin(idx, e, "vec_id", "embedding",
             k = 4, nprobe = 4)
@@ -356,7 +356,7 @@ object ScaleBench {
           .withColumn("_deleted", col("o_orderkey") % 3 === 0)
         st.mergeUpsert(s, path, updates, keyCols = Seq("o_orderkey"),
           partitionCols = Seq("o_year"), deleteCol = Some("_deleted"))
-        st.commitDeleteByKeys(s, path,
+        st.commitDeleteByKeys(path,
           base.filter(col("o_orderkey") % 23 === 0).select("o_orderkey"),
           Seq("o_orderkey"))
         follow(2)
@@ -1081,7 +1081,7 @@ object ScaleBench {
     val snapFullSec = (System.nanoTime() - tSn2) / 1e9
     val snTotalFiles = sources.SnapshotTable.manifest(snapDir, None).size
     val tSn3 = System.nanoTime()
-    sources.SnapshotTable.commitDeleteByKeys(spark, snapDir,
+    sources.SnapshotTable.commitDeleteByKeys(snapDir,
       snOrders.filter(col("o_orderkey") % 1009 === 0).select("o_orderkey"),
       Seq("o_orderkey"))
     val snapMorDeleteSec = (System.nanoTime() - tSn3) / 1e9

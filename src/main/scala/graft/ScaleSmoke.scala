@@ -241,7 +241,7 @@ object ScaleSmoke {
     val lshSec = (System.nanoTime() - tl) / 1e9
 
     val ti = System.nanoTime()
-    val ivf = SimilaritySearch.ivfIndex(bigEmb, "vec_id", "embedding",
+    val ivf = SimilaritySearch.ivfIndex(bigEmb, "embedding",
       nlist = 64, trainFraction = 0.05)
     val assigned = ivf.assigned.persist()
     assigned.count()

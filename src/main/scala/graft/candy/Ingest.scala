@@ -14,16 +14,9 @@ import scala.jdk.CollectionConverters._
   */
 object Ingest {
 
-  /** S1 — multiline JSON transaction scan (reference src/data_processor.py:109-114).
-    * One glob over the directory; explicit schema (no inference pass).
-    */
-  def readTransactions(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .schema(Schemas.transactions)
-      .option("multiLine", value = true)
-      .json(s"$dir/transactions_*.json")
-
-  /** S1 variant with a deterministic arrival sequence. The golden outputs
+  /** S1 — multiline JSON transaction scan (reference
+    * src/data_processor.py:109-114) with a deterministic arrival sequence
+    * and an explicit schema (no inference pass). The golden outputs
     * were produced by a run that processed each day's rows in JSON-array
     * order (a stable sort on the date only — see SURVEY §5.3; simulation
     * confirms zero golden diff under this order). We materialize that order

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native BPE ENCODE kernel: the merge table rides as DATA (a plain
   * serialized object shipped with the plan, broadcast once per executor
   * with the task binary), not as an expression tree — the fix for the
-  * round-11 finding that `Tokenizer.encodedSyms`' literal-replace chain
+  * round-11 finding that the encoder's literal-replace chain
   * (a) runs as an interpreted higher-order lambda on the hot path and
   * (b) grows the plan linearly with the vocabulary, structurally capping
   * the tokenizer layer at toy merge counts. One expression node, one

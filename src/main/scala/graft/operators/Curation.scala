@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The end-to-end CORPUS CURATION pipeline — the engine's operators
   * composed into the sequence a production training-data build runs, with
   * a per-stage survivor report:
   *
-  *   raw docs              (for a web corpus: `WarcIngest.readWarcFiles`
+  *   raw docs              (for a web corpus: `WarcIngest.readWarc`
   *                            splits raw crawl segments into (url,
   *                            fetch_ts, payload) rows file-parallel —
   *                            quarantined records dropped or audited —
@@ -182,14 +182,16 @@ object Curation {
 
   /** Run the full curation build. Writes the packed corpus to `outDir`
     * partitioned by split, returns the survivor report. Deterministic:
-    * same inputs + seed ⇒ byte-identical outputs and report.
+    * same inputs + seed ⇒ byte-identical outputs and report. A document's
+    * shard is the first two hex digits of its seeded md5 bucket, so every
+    * build packs into 256 shards per split.
     */
   def curate(docs: DataFrame, outDir: String, seed: String,
              quality: QualityConfig = QualityConfig(),
              nearDupThreshold: Double = 0.7,
              splits: Seq[(String, Double)] =
                Seq("train" -> 0.9, "valid" -> 0.05, "test" -> 0.05),
-             shards: Int = 8, budgetTokens: Long = 512L,
+             budgetTokens: Long = 512L,
              benchmark: Option[DataFrame] = None, decontamWindow: Int = 8,
              scrubWindow: Int = 0,
              gopher: Option[GopherConfig] = None,

@@ -199,7 +199,7 @@ object Dedup {
       val pairs = lshCandidatePairs(prepared, idCol, "bands")
       // Shingle sets are distinct, so |A∪B| = |A|+|B|-|A∩B| with per-doc
       // sizes carried from `prepared`; the intersection is the sorted-
-      // token merge scan (hashedVerifyNote).
+      // token merge scan (see hashedShingleSet).
       verifyPairs(pairs, prepared.select(col(idCol), col("shh"), col("sz")),
           idCol, threshold, setsRows = nDocs)
         .pipe(materialize)
@@ -249,7 +249,7 @@ object Dedup {
       .join(sets.select(col(idCol).as("id_b"), col("shh").as("shh_b"),
         col("sz").as("sz_b")), "id_b")
       // merge-scan intersection over the sorted token sets — see
-      // hashedVerifyNote for why this is not array_intersect over strings
+      // hashedShingleSet for why this is not array_intersect over strings
       .withColumn("inter", expr("sorted_long_intersect(shh_a, shh_b)"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
@@ -271,7 +271,7 @@ object Dedup {
       .withColumn("sz", size(col("sh")))
       .withColumn("sig", minHashSignature("sh", numHashes))
       .withColumn("bands", bandKeys("sig", bands, numHashes / bands))
-      // the stored set is the sorted hashed form (hashedVerifyNote):
+      // the stored set is the sorted hashed form (hashedShingleSet):
       // ~3x fewer index bytes at rest and on the verify exchange
       .select(col(idCol), hashedShingleSet("sh").as("shh"), col("sz"),
         posexplode(col("bands")).as(Seq("band_idx", "band_key")))
@@ -556,33 +556,11 @@ object Dedup {
       setsRows = nDocs)
   }
 
-  /** Brute-force directed containment — the quadratic oracle twin of
-    * [[containmentSimilarityJoin]]; dimension-sized inputs only.
-    */
-  def bruteContainmentPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, threshold: Double = 0.6): DataFrame = {
-    val sets = docs.select(col(idCol), shingles(textCol, shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0)
-    sets.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-      .crossJoin(sets.select(col(idCol).as("id_b"), col("sh").as("sh_b")))
-      .filter(col("id_a") =!= col("id_b"))
-      .withColumn("containment",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(col("sh_a")))
-      .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
-  }
-
   /** Ascending-sorted xxhash64 token set of a shingle-array column — the
-    * form every verification join consumes (see [[hashedVerifyNote]]).
-    */
-  private def hashedShingleSet(shCol: String): Column =
-    sort_array(expr(s"transform($shCol, x -> xxhash64(x))"))
-
-  /** Why verification runs on hashed token sets, not string arrays.
+    * form every verification join consumes.
     *
-    * |A∩B| over `array<string>` (`array_intersect`) builds a hash map and
+    * Verification runs on hashed token sets, not string arrays. |A∩B| over
+    * `array<string>` (`array_intersect`) builds a hash map and
     * re-hashes every string PER CANDIDATE PAIR — at 125k candidates of
     * ~50-shingle docs (sf0.1) the verify stage measured 50-340 s of
     * executor time, 50-67 s of it GC, and shuffled 108 MB of string
@@ -595,7 +573,8 @@ object Dedup {
     * bound the prefix candidate join already accepts; DedupSpec pins
     * hashed-verify == string-brute-force equality.
     */
-  private val hashedVerifyNote = ()
+  private def hashedShingleSet(shCol: String): Column =
+    sort_array(expr(s"transform($shCol, x -> xxhash64(x))"))
 
   /** (id, shh, sz): each doc's shingle set as ascending-sorted xxhash64
     * tokens, with the set size.

@@ -410,7 +410,7 @@ object DedupQueries {
       val marker = new java.io.File(s"$path/_graft_index_ready")
       if (!marker.exists()) {
         SimilaritySearch.ivfWrite(
-          SimilaritySearch.ivfIndex(emb(s, dir), "vec_id", "embedding", nlist = nlist),
+          SimilaritySearch.ivfIndex(emb(s, dir), "embedding", nlist = nlist),
           path)
         marker.createNewFile()
       }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 
 import javax.imageio.ImageIO

@@ -252,8 +252,6 @@ object Multimodal {
            |            acc -> CAST(acc / greatest(1, CAST(size(features) / $newDim AS INT)) AS FLOAT)))""".stripMargin))
   }
 
-  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
-
   /** One voice-activity segment of [[pcmVad]]: consecutive speech frames
     * merged, with the EXACT integer energy mass (sum over the segment's
     * frames of Σ sample² — LONG arithmetic throughout, no float, so the
@@ -261,22 +259,6 @@ object Multimodal {
   case class VadSegment(id: Long, seg_idx: Int, start_frame: Int,
                         end_frame: Int, n_frames: Int, energy_sum: Long)
 
-  /** Voice-activity detection over RAW PCM (signed 16-bit little-endian
-    * mono) binary columns — real DSP with no codec dependency, unlike the
-    * stubbed image/video decode paths: frame the samples
-    * (`samplesPerFrame` each; a trailing partial frame is dropped),
-    * compute each frame's exact integer energy Σ sample² in LONG
-    * (max 2^31·spf per frame — overflow-free for any real frame size),
-    * mark frames with energy ≥ `energyFloor` as speech, and merge
-    * consecutive speech frames into segments.
-    *
-    * Scale shape: one typed partition-preserving pass, per-row work
-    * linear in audio length, output segments-sized — the same posture as
-    * [[decodeFeatures]]/[[sampleFrames]]; at 100 TB this rides the scan
-    * of the audio lake. Integer energies make the speech/silence boundary
-    * exact, so the q_m8 oracle derives expected segments analytically
-    * from its planted loud/quiet frame pattern.
-    */
   /** One parsed WAV container: header fields + the raw PCM payload, or a
     * `valid = false` row naming the defect — malformed audio surfaces as
     * DATA, never a task failure (the [[ImageCodec.decodeImages]]
@@ -299,69 +281,96 @@ object Multimodal {
     * then chunks of `id(4) size(4 LE) payload(size, padded to even)`;
     * `"fmt "` carries (format, channels, sampleRate, byteRate,
     * blockAlign, bitsPerSample) little-endian; `"data"` carries PCM. */
-  def parseWav(df: DataFrame, idCol: String, payloadCol: String): Dataset[WavRecord] = {
+  def parseWav(df: DataFrame, idCol: String, payloadCol: String): Dataset[WavRecord] =
+    wavRows(df, idCol, payloadCol) { (id, b, h) =>
+      if (h.format != 1) invalidWav(id, "not-pcm")
+      else if (h.bits != 16) invalidWav(id, "unsupported-bits")
+      else if (h.channels < 1) invalidWav(id, "bad-channels")
+      // rate is an unsigned 32-bit field: 0 and > Int.MaxValue (which
+      // wrapped negative through toInt) are corrupt headers, and a
+      // zero rate would crash downstream rate arithmetic
+      // ([[pcmMonoResample]]'s gcd/division) instead of quarantining
+      else if (h.rate < 1) invalidWav(id, "bad-rate")
+      else {
+        val pcm = java.util.Arrays.copyOfRange(b, h.dataOff, h.dataOff + h.dataLen)
+        WavRecord(id, valid = true, "", h.rate, h.channels, h.bits,
+          pcm.length / 2L / h.channels, pcm)
+      }
+    }
+
+  /** One typed partition-preserving pass over `(idCol, payloadCol)`:
+    * each payload's container is walked by [[walkWav]]; a defect becomes
+    * a `valid = false` row, a well-formed header goes to `decode` with
+    * the payload bytes. Payloads never visit the driver. */
+  private def wavRows(df: DataFrame, idCol: String, payloadCol: String)
+                     (decode: (Long, Array[Byte], WavHeader) => WavRecord): Dataset[WavRecord] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(payloadCol))
       .as[(Long, Array[Byte])]
       .map { case (id, payload) =>
-        def invalid(reason: String) =
-          WavRecord(id, valid = false, reason, 0, 0, 0, 0L, Array.emptyByteArray)
         val b = if (payload == null) Array.emptyByteArray else payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def u32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-          ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-        def tag(o: Int): String =
-          new String(b, o, 4, StandardCharsets.US_ASCII)
-        if (b.length < 12) invalid("truncated-preamble")
-        else if (tag(0) != "RIFF") invalid("bad-magic")
-        else if (tag(8) != "WAVE") invalid("not-wave")
-        else {
-          var off = 12
-          var fmtSeen = false
-          var format = 0
-          var channels = 0
-          var rate = 0
-          var bits = 0
-          var pcm: Array[Byte] = null
-          var defect: String = null
-          while (defect == null && pcm == null && off + 8 <= b.length) {
-            val id4 = tag(off)
-            val size = u32(off + 4)
-            val body = off + 8
-            if (size < 0 || body + size > b.length) defect = "chunk-overruns-file"
-            else id4 match {
-              case "fmt " =>
-                if (size < 16) defect = "fmt-too-short"
-                else {
-                  format = u16(body)
-                  channels = u16(body + 2)
-                  rate = u32(body + 4).toInt
-                  bits = u16(body + 14)
-                  fmtSeen = true
-                }
-              case "data" =>
-                if (!fmtSeen) defect = "data-before-fmt"
-                else pcm = java.util.Arrays.copyOfRange(b, body, (body + size).toInt)
-              case _ => () // LIST/INFO/junk: skipped
-            }
-            // RIFF rule: chunk payloads pad to even length
-            off = body + size.toInt + (size.toInt & 1)
-          }
-          if (defect != null) invalid(defect)
-          else if (pcm == null) invalid(if (fmtSeen) "no-data-chunk" else "no-fmt-chunk")
-          else if (format != 1) invalid("not-pcm")
-          else if (bits != 16) invalid("unsupported-bits")
-          else if (channels < 1) invalid("bad-channels")
-          // rate is an unsigned 32-bit field: 0 and > Int.MaxValue (which
-          // wrapped negative through toInt) are corrupt headers, and a
-          // zero rate would crash downstream rate arithmetic
-          // ([[pcmMonoResample]]'s gcd/division) instead of quarantining
-          else if (rate < 1) invalid("bad-rate")
-          else WavRecord(id, valid = true, "", rate, channels, bits,
-            pcm.length / 2L / channels, pcm)
+        walkWav(b) match {
+          case Left(defect) => invalidWav(id, defect)
+          case Right(h) => decode(id, b, h)
         }
       }
+  }
+
+  private def invalidWav(id: Long, reason: String): WavRecord =
+    WavRecord(id, valid = false, reason, 0, 0, 0, 0L, Array.emptyByteArray)
+
+  /** The `fmt ` chunk fields of a RIFF/WAVE container and where its
+    * `data` chunk lies (`dataOff` is -1 until the walk reaches it). */
+  private final case class WavHeader(format: Int, channels: Int, rate: Int,
+                                     blockAlign: Int, bits: Int,
+                                     dataOff: Int, dataLen: Int)
+
+  private def u16le(b: Array[Byte], o: Int): Int =
+    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+
+  private def u32le(b: Array[Byte], o: Int): Long =
+    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
+      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
+
+  /** The one RIFF/WAVE container walk behind [[parseWav]],
+    * [[parseWavAdpcm]] and [[parseWavG711]]: checks the preamble, walks
+    * the chunk list (fmt before data; unknown chunks skipped; RIFF's
+    * even-byte padding honored) and stops at the data chunk. Returns the
+    * header, or the stable defect reason of the container; each decoder
+    * then checks only its own format fields. */
+  private def walkWav(b: Array[Byte]): Either[String, WavHeader] = {
+    def tag(o: Int): String = new String(b, o, 4, StandardCharsets.US_ASCII)
+    if (b.length < 12) Left("truncated-preamble")
+    else if (tag(0) != "RIFF") Left("bad-magic")
+    else if (tag(8) != "WAVE") Left("not-wave")
+    else {
+      var off = 12
+      var fmt: WavHeader = null
+      var result: Either[String, WavHeader] = null
+      while (result == null && off + 8 <= b.length) {
+        val size = u32le(b, off + 4)
+        val body = off + 8
+        if (body + size > b.length) result = Left("chunk-overruns-file")
+        else tag(off) match {
+          case "fmt " =>
+            if (size < 16) result = Left("fmt-too-short")
+            else fmt = WavHeader(format = u16le(b, body),
+              channels = u16le(b, body + 2), rate = u32le(b, body + 4).toInt,
+              blockAlign = u16le(b, body + 12), bits = u16le(b, body + 14),
+              dataOff = -1, dataLen = 0)
+          case "data" =>
+            result =
+              if (fmt == null) Left("data-before-fmt")
+              else Right(fmt.copy(dataOff = body, dataLen = size.toInt))
+          case _ => () // LIST/INFO/junk: skipped
+        }
+        // RIFF rule: chunk payloads pad to even length
+        off = body + size.toInt + (size.toInt & 1)
+      }
+      if (result != null) result
+      else Left(if (fmt != null) "no-data-chunk" else "no-fmt-chunk")
+    }
   }
 
   /** Mono 16-bit PCM at a normalized rate, or the propagated parse
@@ -581,7 +590,7 @@ object Multimodal {
     * `diff = step>>3 (+ step if b2) (+ step>>1 if b1) (+ step>>2 if b0)`,
     * sign bit b3 subtracts; predictor clamps to s16; index adapts by the
     * table and clamps to [0, 88]. Returns (sample, newIndex). */
-  @inline private def adpcmStep(nibble: Int, pred: Int, idx: Int): (Int, Int) = {
+  @inline private[operators] def adpcmStep(nibble: Int, pred: Int, idx: Int): (Int, Int) = {
     val step = AdpcmStepTable(idx)
     var diff = step >> 3
     if ((nibble & 4) != 0) diff += step
@@ -615,47 +624,6 @@ object Multimodal {
       i += 1; o += 2
     }
     out
-  }
-
-  /** Encode s16 samples as one IMA ADPCM block: sample 0 becomes the
-    * block header predictor; each later sample quantizes its delta
-    * through the mirrored state machine (encoder and decoder run the
-    * SAME reconstruction, so state never drifts — the property the
-    * round-trip spec pins). Returns (headerPredictor, headerIndex,
-    * packed nibble bytes); each block is self-contained — its header
-    * restarts the decoder state, so multi-block encodes need no state
-    * threading. Sample count must be odd (header + 2 per byte — the
-    * WAV samplesPerBlock shape). */
-  private[operators] def adpcmEncodeBlock(samples: Array[Short],
-                                          idx0: Int): (Int, Int, Array[Byte]) = {
-    require(samples.nonEmpty && samples.length % 2 == 1,
-      s"block sample count must be odd, got ${samples.length}")
-    val data = new Array[Byte]((samples.length - 1) / 2)
-    var pred = samples(0).toInt
-    var idx = idx0
-    var s = 1
-    var o = 0
-    while (s < samples.length) {
-      def nibbleFor(target: Int): Int = {
-        val step = AdpcmStepTable(idx)
-        var delta = target - pred
-        var nib = 0
-        if (delta < 0) { nib = 8; delta = -delta }
-        if (delta >= step) { nib |= 4; delta -= step }
-        if (delta >= (step >> 1)) { nib |= 2; delta -= step >> 1 }
-        if (delta >= (step >> 2)) { nib |= 1 }
-        nib
-      }
-      val lo = nibbleFor(samples(s).toInt)
-      val (p1, i1) = adpcmStep(lo, pred, idx)
-      pred = p1; idx = i1
-      val hi = nibbleFor(samples(s + 1).toInt)
-      val (p2, i2) = adpcmStep(hi, pred, idx)
-      pred = p2; idx = i2
-      data(o) = (lo | (hi << 4)).toByte
-      s += 2; o += 1
-    }
-    (samples(0).toInt, idx0, data)
   }
 
   /** Build a mono IMA-ADPCM WAV (WAVE_FORMAT_IMA_ADPCM = 0x11): fmt
@@ -705,102 +673,49 @@ object Multimodal {
     * in, s16 out, one partition-preserving typed pass, payloads never
     * on the driver. */
   def parseWavAdpcm(df: DataFrame, idCol: String,
-                    payloadCol: String): Dataset[WavRecord] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, payload) =>
-        def invalid(reason: String) =
-          WavRecord(id, valid = false, reason, 0, 0, 0, 0L, Array.emptyByteArray)
-        val b = if (payload == null) Array.emptyByteArray else payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def s16(o: Int): Int = u16(o).toShort.toInt
-        def u32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-          ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-        def tag(o: Int): String =
-          new String(b, o, 4, StandardCharsets.US_ASCII)
-        if (b.length < 12) invalid("truncated-preamble")
-        else if (tag(0) != "RIFF") invalid("bad-magic")
-        else if (tag(8) != "WAVE") invalid("not-wave")
-        else {
-          var off = 12
-          var fmtSeen = false
-          var format = 0
-          var channels = 0
-          var rate = 0
-          var bits = 0
-          var blockAlign = 0
-          var dataOff = -1
-          var dataLen = 0
-          var defect: String = null
-          while (defect == null && dataOff < 0 && off + 8 <= b.length) {
-            val id4 = tag(off)
-            val size = u32(off + 4)
-            val body = off + 8
-            if (size < 0 || body + size > b.length) defect = "chunk-overruns-file"
-            else id4 match {
-              case "fmt " =>
-                if (size < 16) defect = "fmt-too-short"
-                else {
-                  format = u16(body)
-                  channels = u16(body + 2)
-                  rate = u32(body + 4).toInt
-                  blockAlign = u16(body + 12)
-                  bits = u16(body + 14)
-                  fmtSeen = true
-                }
-              case "data" =>
-                if (!fmtSeen) defect = "data-before-fmt"
-                else { dataOff = body; dataLen = size.toInt }
-              case _ => ()
-            }
-            off = body + size.toInt + (size.toInt & 1)
-          }
-          if (defect != null) invalid(defect)
-          else if (dataOff < 0) invalid(if (fmtSeen) "no-data-chunk" else "no-fmt-chunk")
-          else if (format != 0x11) invalid("not-ima-adpcm")
-          else if (bits != 4) invalid("unsupported-bits")
-          else if (channels != 1) invalid("unsupported-channels")
-          else if (rate < 1) invalid("bad-rate")
-          else if (blockAlign < 5) invalid("bad-block-align")
+                    payloadCol: String): Dataset[WavRecord] =
+    wavRows(df, idCol, payloadCol) { (id, b, h) =>
+      if (h.format != 0x11) invalidWav(id, "not-ima-adpcm")
+      else if (h.bits != 4) invalidWav(id, "unsupported-bits")
+      else if (h.channels != 1) invalidWav(id, "unsupported-channels")
+      else if (h.rate < 1) invalidWav(id, "bad-rate")
+      else if (h.blockAlign < 5) invalidWav(id, "bad-block-align")
+      else {
+        // decode block by block. A PARTIAL FINAL block (data length
+        // not a blockAlign multiple) is the WAV convention for a
+        // stream whose true sample count ends mid-block — it decodes
+        // to its shorter sample run; only a fragment too small for a
+        // block header (< 5 bytes) quarantines, along with any
+        // malformed header (a half-decoded stream there is worse
+        // than none)
+        val outBlocks = Seq.newBuilder[Array[Short]]
+        var defect: String = null
+        var pos = h.dataOff
+        val end = h.dataOff + h.dataLen
+        while (defect == null && pos < end) {
+          if (end - pos < 5) defect = "truncated-block-header"
           else {
-            // decode block by block. A PARTIAL FINAL block (data length
-            // not a blockAlign multiple) is the WAV convention for a
-            // stream whose true sample count ends mid-block — it decodes
-            // to its shorter sample run; only a fragment too small for a
-            // block header (< 5 bytes) quarantines, along with any
-            // malformed header (a half-decoded stream there is worse
-            // than none)
-            val outBlocks = Seq.newBuilder[Array[Short]]
-            var pos = dataOff
-            val end = dataOff + dataLen
-            while (defect == null && pos < end) {
-              if (end - pos < 5) defect = "truncated-block-header"
-              else {
-                val pred0 = s16(pos)
-                val idx0 = b(pos + 2) & 0xff
-                if (idx0 > 88) defect = "block-index-out-of-range"
-                else {
-                  val until = math.min(pos + blockAlign, end)
-                  outBlocks += adpcmDecodeCore(b, pos + 4, until, pred0, idx0)
-                  pos += blockAlign
-                }
-              }
-            }
-            if (defect != null) invalid(defect)
+            val pred0 = u16le(b, pos).toShort.toInt
+            val idx0 = b(pos + 2) & 0xff
+            if (idx0 > 88) defect = "block-index-out-of-range"
             else {
-              val all = outBlocks.result().flatten.toArray
-              val pcm = java.nio.ByteBuffer.allocate(all.length * 2)
-                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              all.foreach(pcm.putShort)
-              WavRecord(id, valid = true, "", rate, 1, 16, all.length.toLong,
-                pcm.array())
+              val until = math.min(pos + h.blockAlign, end)
+              outBlocks += adpcmDecodeCore(b, pos + 4, until, pred0, idx0)
+              pos += h.blockAlign
             }
           }
         }
+        if (defect != null) invalidWav(id, defect)
+        else {
+          val all = outBlocks.result().flatten.toArray
+          val pcm = java.nio.ByteBuffer.allocate(all.length * 2)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          all.foreach(pcm.putShort)
+          WavRecord(id, valid = true, "", h.rate, 1, 16, all.length.toLong,
+            pcm.array())
+        }
       }
-  }
+    }
 
   // ------------------------------------------------------ G.711 companding
 
@@ -835,81 +750,30 @@ object Multimodal {
     * through (bytes interleave exactly like PCM frames). Output
     * composes into [[pcmMonoResample]]/[[pcmVad]] unchanged. */
   def parseWavG711(df: DataFrame, idCol: String,
-                   payloadCol: String): Dataset[WavRecord] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, payload) =>
-        def invalid(reason: String) =
-          WavRecord(id, valid = false, reason, 0, 0, 0, 0L, Array.emptyByteArray)
-        val b = if (payload == null) Array.emptyByteArray else payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def u32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-          ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-        def tag(o: Int): String =
-          new String(b, o, 4, StandardCharsets.US_ASCII)
-        if (b.length < 12) invalid("truncated-preamble")
-        else if (tag(0) != "RIFF") invalid("bad-magic")
-        else if (tag(8) != "WAVE") invalid("not-wave")
-        else {
-          var off = 12
-          var fmtSeen = false
-          var format = 0
-          var channels = 0
-          var rate = 0
-          var bits = 0
-          var dataOff = -1
-          var dataLen = 0
-          var defect: String = null
-          while (defect == null && dataOff < 0 && off + 8 <= b.length) {
-            val id4 = tag(off)
-            val size = u32(off + 4)
-            val body = off + 8
-            if (size < 0 || body + size > b.length) defect = "chunk-overruns-file"
-            else id4 match {
-              case "fmt " =>
-                if (size < 16) defect = "fmt-too-short"
-                else {
-                  format = u16(body)
-                  channels = u16(body + 2)
-                  rate = u32(body + 4).toInt
-                  bits = u16(body + 14)
-                  fmtSeen = true
-                }
-              case "data" =>
-                if (!fmtSeen) defect = "data-before-fmt"
-                else { dataOff = body; dataLen = size.toInt }
-              case _ => ()
-            }
-            off = body + size.toInt + (size.toInt & 1)
-          }
-          if (defect != null) invalid(defect)
-          else if (dataOff < 0) invalid(if (fmtSeen) "no-data-chunk" else "no-fmt-chunk")
-          else if (format != 6 && format != 7) invalid("not-g711")
-          else if (bits != 8) invalid("unsupported-bits")
-          else if (channels < 1) invalid("bad-channels")
-          else if (rate < 1) invalid("bad-rate")
-          // a data length not divisible by the channel count is a torn
-          // final frame: n_samples and the decoded buffer would disagree
-          // (the parseWav PCM invariant consumers iterate by)
-          else if (dataLen % channels != 0) invalid("partial-frame")
-          else {
-            val pcm = java.nio.ByteBuffer.allocate(dataLen * 2)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            var i = dataOff
-            val end = dataOff + dataLen
-            while (i < end) {
-              val s = if (format == 7) ulawToPcm(b(i)) else alawToPcm(b(i))
-              pcm.putShort(s.toShort)
-              i += 1
-            }
-            WavRecord(id, valid = true, "", rate, channels, 16,
-              dataLen.toLong / channels, pcm.array())
-          }
+                   payloadCol: String): Dataset[WavRecord] =
+    wavRows(df, idCol, payloadCol) { (id, b, h) =>
+      if (h.format != 6 && h.format != 7) invalidWav(id, "not-g711")
+      else if (h.bits != 8) invalidWav(id, "unsupported-bits")
+      else if (h.channels < 1) invalidWav(id, "bad-channels")
+      else if (h.rate < 1) invalidWav(id, "bad-rate")
+      // a data length not divisible by the channel count is a torn
+      // final frame: n_samples and the decoded buffer would disagree
+      // (the parseWav PCM invariant consumers iterate by)
+      else if (h.dataLen % h.channels != 0) invalidWav(id, "partial-frame")
+      else {
+        val pcm = java.nio.ByteBuffer.allocate(h.dataLen * 2)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        var i = h.dataOff
+        val end = h.dataOff + h.dataLen
+        while (i < end) {
+          val s = if (h.format == 7) ulawToPcm(b(i)) else alawToPcm(b(i))
+          pcm.putShort(s.toShort)
+          i += 1
         }
+        WavRecord(id, valid = true, "", h.rate, h.channels, 16,
+          h.dataLen.toLong / h.channels, pcm.array())
       }
-  }
+    }
 
   /** Build a G.711 WAV container (format 6 = A-law, 7 = µ-law; 8-bit). */
   def g711Wav(sampleRate: Int, channels: Int, format: Int,
@@ -976,7 +840,6 @@ object Multimodal {
         def invalid(reason: String) = Seq(AviFrame(id, valid = false,
           reason, -1, 0, 0, "", 0, Array.emptyByteArray))
         val b = if (payload == null) Array.emptyByteArray else payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
         def u32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
           ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
         def tag(o: Int): String =
@@ -1228,6 +1091,22 @@ object Multimodal {
       box("mdat", new Array[Byte](mdatBytes))
   }
 
+  /** Voice-activity detection over RAW PCM (signed 16-bit little-endian
+    * mono) binary columns — real DSP with no codec dependency, unlike the
+    * stubbed image/video decode paths: frame the samples
+    * (`samplesPerFrame` each; a trailing partial frame is dropped),
+    * compute each frame's exact integer energy Σ sample² in LONG
+    * (max 2^31·spf per frame — overflow-free for any real frame size),
+    * mark frames with energy ≥ `energyFloor` as speech, and merge
+    * consecutive speech frames into segments.
+    *
+    * Scale shape: one typed partition-preserving pass, per-row work
+    * linear in audio length, output segments-sized — the same posture as
+    * [[decodeFeatures]]/[[sampleFrames]]; at 100 TB this rides the scan
+    * of the audio lake. Integer energies make the speech/silence boundary
+    * exact, so the q_m8 oracle derives expected segments analytically
+    * from its planted loud/quiet frame pattern.
+    */
   def pcmVad(df: DataFrame, idCol: String, pcmCol: String,
              samplesPerFrame: Int, energyFloor: Long): Dataset[VadSegment] = {
     require(samplesPerFrame >= 1, s"samplesPerFrame >= 1, got $samplesPerFrame")

@@ -502,7 +502,7 @@ object PipelineQueries {
         .withColumn("o_year", year(col("o_orderdate")))
       val path = RunDirs.fresh("graft_snapmor")
       graft.sources.SnapshotTable.commitOverwrite(base, path, Seq("o_year"))
-      graft.sources.SnapshotTable.commitDeleteByKeys(s, path,
+      graft.sources.SnapshotTable.commitDeleteByKeys(path,
         base.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"),
         Seq("o_orderkey"))
       def snap(v: Long) =
@@ -543,7 +543,7 @@ object PipelineQueries {
       graft.sources.SnapshotTable.mergeUpsert(s, path,
         updates.unionByName(inserts), keyCols = Seq("o_orderkey"),
         partitionCols = Seq("o_year"), deleteCol = Some("_deleted"))
-      graft.sources.SnapshotTable.commitDeleteByKeys(s, path,
+      graft.sources.SnapshotTable.commitDeleteByKeys(path,
         base.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"),
         Seq("o_orderkey"))
       RunDirs.seal(
@@ -596,7 +596,7 @@ object PipelineQueries {
       graft.sources.SnapshotTable.mergeUpsert(s, path,
         updates.unionByName(inserts), keyCols = Seq("o_orderkey"),
         partitionCols = Seq("o_year"), deleteCol = Some("_deleted"))
-      graft.sources.SnapshotTable.commitDeleteByKeys(s, path,
+      graft.sources.SnapshotTable.commitDeleteByKeys(path,
         base.filter(col("o_orderkey") % 17 === 0).select("o_orderkey"),
         Seq("o_orderkey"))
       follow(2) // fused (1, 3] range
@@ -835,7 +835,7 @@ object PipelineQueries {
       st.mergeUpsert(s, src, updates.unionByName(inserts),
         keyCols = Seq("o_orderkey"), partitionCols = Seq("o_year"),
         deleteCol = Some("_deleted")) // v2
-      st.commitDeleteByKeys(s, src,
+      st.commitDeleteByKeys(src,
         base.filter(col("o_orderkey") % 19 === 0).select("o_orderkey"),
         Seq("o_orderkey")) // v3
       st.mirrorChanges(s, src, dst, wm, Seq("o_orderkey"), Seq("o_year"))
@@ -909,7 +909,7 @@ object PipelineQueries {
       val path = RunDirs.fresh("graft_snaprw")
       val st = graft.sources.SnapshotTable
       st.commitOverwrite(base, path, Seq("o_year"))
-      st.commitDeleteByKeys(s, path,
+      st.commitDeleteByKeys(path,
         base.filter(col("o_orderkey") % 13 === 0).select("o_orderkey"),
         Seq("o_orderkey"))
       val v = st.rewriteDeletes(s, path, Seq("o_year"))

@@ -131,7 +131,6 @@ object SimilaritySearch {
   def marginAlignment(left: DataFrame, right: DataFrame, idCol: String,
                       embCol: String, k: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    import org.apache.spark.sql.expressions.Window
     // r17 perf: spread the streamed side — a cartesian over two single-
     // split frames yields ONE task for the whole cosine matrix (q_v15
     // measured a 1.46 s single-task job at sf0.1); guide §2.5
@@ -460,7 +459,7 @@ object SimilaritySearch {
     s"greatest(sqrt(aggregate($embCol, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 1e-12d)",
     "n", s"transform($embCol, x -> CAST(x AS DOUBLE) / n)"))
 
-  def ivfIndex(emb: DataFrame, idCol: String, embCol: String,
+  def ivfIndex(emb: DataFrame, embCol: String,
                nlist: Int = 16, seed: Long = 42L,
                trainFraction: Double = 1.0,
                maxIter: Int = 10): IvfIndex = {
@@ -577,7 +576,7 @@ object SimilaritySearch {
     * Adds `list_id` plus `_qdist` (the quantization error the drift gate
     * reads; callers that don't need it drop it).
     */
-  def ivfAssign(emb: DataFrame, idCol: String, embCol: String,
+  def ivfAssign(emb: DataFrame, embCol: String,
                 centroids: Array[Array[Double]]): DataFrame = {
     val entries = centroids.zipWithIndex.map { case (c, i) =>
       struct(sqDistTo(col("_nvec"), c).as("d"), lit(i).as("i"))
@@ -674,7 +673,7 @@ object SimilaritySearch {
     * and a same-path read-under-overwrite conflict), while append writes
     * only the batch's own rows and leaves every pre-existing file
     * byte-identical BY CONSTRUCTION. Replay-idempotence comes from the
-    * anti-join (the ContinuousDedup posture): re-appending a batch finds
+    * anti-join: re-appending a batch finds
     * all its ids present, appends zero rows, writes zero files, and
     * leaves the stats sidecar untouched — so a retried ingest job cannot
     * duplicate vectors. The anti-join scans ONLY the touched partitions
@@ -694,7 +693,7 @@ object SimilaritySearch {
     val statsRow = spark.read.parquet(s"${path}__stats").head()
     val (buildN, buildSum) = (statsRow.getLong(0), statsRow.getDouble(1))
 
-    val assigned = ivfAssign(batch.dropDuplicates(idCol), idCol, embCol,
+    val assigned = ivfAssign(batch.dropDuplicates(idCol), embCol,
       centroids).persist()
     val nBatch = assigned.count()
     val touched = assigned.select("list_id").distinct()

@@ -457,8 +457,8 @@ object TextQueries {
     }),
 
     // BPE tokenizer TRAINING on the corpus: 6 merges learned from the
-    // word-frequency table (one corpus pass; iterations vocabulary-sized;
-    // one argmax row per iteration reaches the driver). The oracle
+    // word-frequency table (one corpus pass; the vocabulary-sized table
+    // is collected and the merges fold on the driver). The oracle
     // replays all 6 unrolled iterations including the string-level merge
     // application — a single wrong count or tie-break fails the hash.
     "q_t18_bpe_train" -> ((s, dir) =>
@@ -1131,7 +1131,7 @@ object TextQueries {
     * are `u`-prefixed so the chain composes beside the BPE stages in one
     * WITH. */
   private def unigramOracleStages(vocabSize: Int, maxLen: Int, rounds: Int,
-                                  maxW: Int = 12): String = {
+                                  maxW: Int): String = {
     def ilog(x: String): String =
       s"""(1000 * CAST(floor(log2($x)) AS BIGINT)
          | + (1000 * ($x - (CAST(1 AS BIGINT) << CAST(floor(log2($x)) AS INT))))

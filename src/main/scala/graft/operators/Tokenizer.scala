@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,16 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale design. Classic BPE trainers (Sennrich et al. 2016) operate on
   * the word-frequency table, not the raw corpus — merges depend only on
   * (distinct word, count). The corpus is touched EXACTLY ONCE to build
-  * that table (one hash-agg shuffle, map-side combined); every merge
-  * iteration then runs on the vocabulary-sized frame, and the only thing
-  * that ever reaches the driver is the single argmax pair per iteration
-  * (the k-means-centroid / PageRank-literal idiom). Encoding is purely
-  * row-local: the learned merge list compiles into a chain of literal
-  * `replace` calls executed inside codegen — the corpus never shuffles to
-  * be tokenized.
+  * that table (one hash-agg shuffle, map-side combined); the
+  * vocabulary-sized table is collected and every merge iteration folds
+  * on the driver ([[bpeTrainLocal]]). Encoding is purely row-local: the
+  * learned merge list rides as data inside one codegen'd kernel
+  * expression ([[graft.functions.BpeCodec]]) — the corpus never shuffles
+  * to be tokenized.
   *
-  * Exact replayability. Symbol sequences are represented as DOUBLE-SPACE
-  * joined strings with leading/trailing double spaces ("  a  b  c  ").
+  * Exact replayability. The specs and the DuckDB oracles represent
+  * symbol sequences as DOUBLE-SPACE joined strings with leading/trailing
+  * double spaces ("  a  b  c  ").
   * Applying merge (a, b) is then the literal string replacement
   * " a  b " -> " ab ": the single outer spaces consume one space from
   * each two-space boundary, so consecutive overlapping occurrences
@@ -39,25 +39,6 @@ object Tokenizer {
     * the most frequent adjacent pair with weighted count `pair_freq`.
     */
   final case class Merge(step: Int, lhs: String, rhs: String, pairFreq: Long)
-
-  private def esc(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
-
-  /** Symbol-string of a word column: each character a symbol, double-space
-    * joined, double-space padded.
-    */
-  private[operators] def symExpr(wordCol: String): String =
-    s"concat('  ', array_join(transform(sequence(1, length($wordCol)), i -> substring($wordCol, i, 1)), '  '), '  ')"
-
-  /** Symbols of a symbol-string. */
-  private def symsOf(symCol: String): String =
-    s"filter(split($symCol, '  '), x -> x != '')"
-
-  /** Adjacent-pair structs of a symbol array column. */
-  private def pairsOf(symsCol: String): String =
-    s"""CASE WHEN size($symsCol) >= 2
-       |  THEN transform(sequence(0, size($symsCol) - 2),
-       |                 j -> struct($symsCol[j] AS lhs, $symsCol[j + 1] AS rhs))
-       |  ELSE array() END""".stripMargin
 
   /** The word-frequency table of a corpus — the ONE corpus-sized pass of
     * BPE training. (word, freq), freq = total occurrences.
@@ -77,46 +58,6 @@ object Tokenizer {
       .select(explode(expr(Dedup.tokensExpr(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
-  /** Learn `numMerges` BPE merges from the corpus: repeatedly merge the
-    * most frequent adjacent symbol pair (ties broken by (lhs, rhs) string
-    * order — a total order, so training is deterministic on any engine and
-    * any partitioning). Stops early if no pair remains. Returns the merge
-    * list in learned order.
-    */
-  def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    // vocabulary-sized from here on; localCheckpoint cuts the corpus scan
-    // out of every iteration's lineage
-    var words = wordFreq(docs, textCol)
-      .withColumn("sym", expr(symExpr("word")))
-      .select("freq", "sym")
-      .localCheckpoint()
-    val merges = Seq.newBuilder[Merge]
-    var step = 1
-    var exhausted = false
-    while (step <= numMerges && !exhausted) {
-      val top = words
-        .select(col("freq"), expr(symsOf("sym")).as("syms"))
-        .select(col("freq"), explode(expr(pairsOf("syms"))).as("p"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum("freq").as("c"))
-        .orderBy(col("c").desc, col("lhs"), col("rhs"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += Merge(step, l, r, c)
-        words = words
-          .withColumn("sym",
-            expr(s"replace(sym, ' ${esc(l)}  ${esc(r)} ', ' ${esc(l + r)} ')"))
-          .localCheckpoint()
-        step += 1
-      }
-    }
-    merges.result()
-  }
-
   /** The learned merges as a DataFrame (step, lhs, rhs, pair_freq) — the
     * tokenizer-training artifact a pipeline persists.
     */
@@ -133,13 +74,13 @@ object Tokenizer {
   private def utf8Lt(a: String, b: String): Boolean =
     UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
-  /** PRODUCTION trainer: identical merges to [[bpeTrain]] (spec-pinned in
-    * TokenizerSpec), but the corpus is touched EXACTLY ONCE — the
-    * word-frequency table (vocabulary-sized, the training artifact scale:
+  /** PRODUCTION trainer: identical merges to the distributed reference
+    * trainer `BpeReference.bpeTrain` (spec-pinned in TokenizerSpec), but
+    * the corpus is touched EXACTLY ONCE — the word-frequency table (vocabulary-sized, the training artifact scale:
     * the same bounded-collect class as k-means centroids) is collected
     * and the merge iterations fold DRIVER-SIDE with incremental pair
     * accounting, so 1 merge or 32k merges is still ONE Spark job.
-    * [[bpeTrain]] launches a job per merge (localCheckpoint per
+    * The reference trainer launches a job per merge (localCheckpoint per
     * iteration), which at production merge counts is thousands of
     * scheduler round-trips over a frame that fits in driver memory — it
     * stays as the distributed executable spec.
@@ -149,9 +90,9 @@ object Tokenizer {
     * touched — their old adjacent-pair counts are subtracted, the merge
     * pass applied, new counts added — and the argmax scans the pair-count
     * map (distinct ADJACENT pairs: alphabet²-ish plus one entry per
-    * applied merge, thousands not millions). Tie-break matches
-    * [[bpeTrain]]'s `orderBy(c desc, lhs, rhs)` exactly: UTF-8 byte order
-    * (Spark's string comparator), not Java's UTF-16 order.
+    * applied merge, thousands not millions). Tie-break matches the
+    * reference trainer's `orderBy(c desc, lhs, rhs)` exactly: UTF-8 byte
+    * order (Spark's string comparator), not Java's UTF-16 order.
     */
   def bpeTrainLocal(docs: DataFrame, textCol: String, numMerges: Int,
                     byteLevel: Boolean = false): Seq[Merge] = {
@@ -162,14 +103,14 @@ object Tokenizer {
   }
 
   /** Driver-side BPE training over a (word, freq) table — the in-memory
-    * twin of [[bpeTrain]]'s per-iteration argmax + literal-replace
+    * twin of the reference trainer's per-iteration argmax + literal-replace
     * application (see [[graft.functions.BpeCodec]] for why the array
     * merge pass is byte-equivalent to the double-space string replace).
     */
   def trainFromWordFreq(wordFreq: Seq[(String, Long)], numMerges: Int,
                         byteLevel: Boolean = false): Seq[Merge] = {
     import scala.collection.mutable
-    // code-point symbols, matching symExpr's substring(word, i, 1) — or
+    // code-point symbols (one per substring(word, i, 1)) — or
     // the GPT-2 byte remap in byte-level mode (ByteSymbols doc)
     val words = new Array[Array[String]](wordFreq.size)
     val freqs = new Array[Long](wordFreq.size)
@@ -307,14 +248,6 @@ object Tokenizer {
     vocab(merges, chars).map { case (s, i) => (i, s) }.toDF("token_id", "symbol")
   }
 
-  /** Token count of one word-symbol-string after applying `merges` in
-    * order — the merge list compiles into a chain of literal replaces.
-    */
-  private def encodedSyms(symCol: String, merges: Seq[Merge]): String =
-    merges.foldLeft(symCol) { (acc, m) =>
-      s"replace($acc, ' ${esc(m.lhs)}  ${esc(m.rhs)} ', ' ${esc(m.lhs + m.rhs)} ')"
-    }
-
   /** ENCODE: per-document token counts under the learned tokenizer —
     * (idCol, n_words, n_tokens). Entirely row-local and zero-shuffle: the
     * merge table rides as DATA inside ONE codegen'd kernel expression
@@ -331,48 +264,6 @@ object Tokenizer {
       col(idCol),
       size(ws).cast("long").as("n_words"),
       graft.functions.BpeExprs.docTokenCount(ws, codecOf(merges)).as("n_tokens"))
-  }
-
-  /** The EXECUTABLE SPEC of [[bpeEncodeCounts]]: the merge list compiled
-    * into a chain of literal `replace` calls over the double-space symbol
-    * string, folded per word through an aggregate HOF. Interpreted and
-    * plan-sized-in-the-vocab — usable only at test vocabularies, kept
-    * because it is engine-replayable as plain SQL (the DuckDB oracles
-    * replay exactly this) and TokenizerKernelProps pins kernel ≡ spec.
-    */
-  def bpeEncodeCountsSpec(docs: DataFrame, idCol: String, textCol: String,
-                          merges: Seq[Merge]): DataFrame = {
-    val perWord = encodedSyms(symExpr("w"), merges)
-    docs.select(
-      col(idCol),
-      expr(Dedup.letBind(Dedup.tokensExpr(textCol), "ws",
-        s"""named_struct(
-           |  'n_words', size(ws),
-           |  'n_tokens', aggregate(ws, 0, (acc, w) ->
-           |      acc + size(${symsOf(s"($perWord)")}))
-           |)""".stripMargin)).as("r"))
-      .select(col(idCol),
-        col("r.n_words").cast("long").as("n_words"),
-        col("r.n_tokens").cast("long").as("n_tokens"))
-  }
-
-  /** Plain-Scala spec of encoding ONE word under `merges` applied in step
-    * order: the literal-replace chain over the double-space symbol string
-    * — the reference TokenizerKernelProps fuzzes [[graft.functions.BpeCodec]]
-    * against (same semantics as [[encodedSyms]], evaluated without Spark).
-    */
-  def encodeWordSpec(word: String, merges: Seq[Merge],
-                     byteLevel: Boolean = false): Seq[String] = {
-    val syms0 =
-      if (byteLevel) graft.functions.ByteSymbols.of(word).toSeq
-      else word.codePoints().toArray.toSeq
-        .map(cp => new String(Character.toChars(cp)))
-    if (syms0.isEmpty) return Nil
-    var sym = syms0.mkString("  ", "  ", "  ")
-    merges.sortBy(_.step).foreach { m =>
-      sym = sym.replace(s" ${m.lhs}  ${m.rhs} ", s" ${m.lhs + m.rhs} ")
-    }
-    sym.split("  ", -1).filter(_.nonEmpty).toSeq
   }
 
   // ------------------- unigram-LM trainer (r15 VERDICT #7) -------------------

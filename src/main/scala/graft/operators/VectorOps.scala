@@ -87,12 +87,12 @@ object VectorOps {
       .limit(k)
   }
 
-  /** (id, q_scale, q_emb) + reconstruction diagnostics per vector:
+  /** `emb` plus q_scale, q_emb and reconstruction diagnostics per vector:
     * `max_abs_err` (worst component error — bounded by q_scale/2 up to
     * clamping) and `cosine_recon` (cosine between the original and its
     * dequantized reconstruction).
     */
-  def quantizeWithError(emb: DataFrame, idCol: String, embCol: String): DataFrame = {
+  def quantizeWithError(emb: DataFrame, embCol: String): DataFrame = {
     val dot =
       s"aggregate(zip_with($embCol, _deq, (x, y) -> CAST(x AS DOUBLE) * y), CAST(0 AS DOUBLE), (a, v) -> a + v)"
     val n1 = s"sqrt(aggregate($embCol, CAST(0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"

@@ -201,7 +201,7 @@ object VectorQueries {
         "(((vec_id * 13 + d * 7) % 9) - 4) / 64.0D AS FLOAT))"
       val planted = Tables.read(s, dir, "embeddings")
         .select("vec_id").withColumn("embedding", expr(plantExpr))
-      val idx = SimilaritySearch.ivfIndex(planted, "vec_id", "embedding",
+      val idx = SimilaritySearch.ivfIndex(planted, "embedding",
         nlist = 16, maxIter = 3)
       val left = planted.filter(col("vec_id") % 50 === 0)
       SimilaritySearch.knnJoin(idx, left, "vec_id", "embedding",
@@ -239,7 +239,7 @@ object VectorQueries {
     // maxima/minima are order-independent and the one cross-row mean
     // accumulates in DECIMAL, so the driver hash is deterministic.
     "q_v11_quantize_error" -> ((s, dir) =>
-      VectorOps.quantizeWithError(emb(s, dir), "vec_id", "embedding")
+      VectorOps.quantizeWithError(emb(s, dir), "embedding")
         .select(col("label"),
           col("max_abs_err").cast("decimal(27,12)").as("e"),
           col("cosine_recon").as("c"))

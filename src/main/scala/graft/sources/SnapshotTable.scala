@@ -63,9 +63,8 @@ object ColStats {
   * writers can never collide on a directory, (b) composes and writes the
   * new snapshot's manifest (every file of version N, tab-separated
   * `partitionSpec \t relativePath [\t attrs]` lines), and only then (c)
-  * swaps the `_current` pointer via write-temp + ATOMIC_MOVE (the
-  * [[JdbcIncremental]] watermark discipline). The pointer swap IS the
-  * commit point:
+  * swaps the `_current` pointer via write-temp + ATOMIC_MOVE, so readers
+  * never observe a torn pointer. The pointer swap IS the commit point:
   *
   *  - a reader pinned to snapshot N reads a byte-stable file set no
   *    matter how many commits land meanwhile (nothing it references is
@@ -829,7 +828,7 @@ object SnapshotTable {
                           dataEntries: Seq[ManifestEntry],
                           deletes: Seq[(Long, Seq[String], DataFrame)],
                           allowSchemaEvolution: Boolean,
-                          targetSchema: Option[Seq[FieldDef]] = None): DataFrame = {
+                          targetSchema: Option[Seq[FieldDef]]): DataFrame = {
     val r = root(tablePath)
     val byCommit = dataEntries.groupBy(_.relPath.split("/").take(2).mkString("/"))
     byCommit.toSeq.sortBy(_._1).map { case (commitDir, es) =>
@@ -959,7 +958,7 @@ object SnapshotTable {
     * this rebases over interleaved commits; serialization order decides
     * whether a concurrently-merged row is deleted (the delete applies to
     * everything committed before it). */
-  def commitDeleteByKeys(spark: SparkSession, tablePath: String,
+  def commitDeleteByKeys(tablePath: String,
                          keys: DataFrame, keyCols: Seq[String],
                          filesPerPartition: Int = 1,
                          txnId: Option[String] = None): Long = {
@@ -1551,8 +1550,8 @@ object SnapshotTable {
 
   /** Incremental CONSUMER front door over [[changes]]: process everything
     * committed since the last call, tracked by a version watermark file
-    * (the [[JdbcIncremental]] watermark discipline — write-temp +
-    * ATOMIC_MOVE, advanced only AFTER `process` returns).
+    * (write-temp + ATOMIC_MOVE, like the `_current` pointer, advanced
+    * only AFTER `process` returns).
     *
     *  - no watermark yet → the INITIAL LOAD: the full current snapshot is
     *    delivered as `_change_type = insert` rows;
@@ -1656,7 +1655,7 @@ object SnapshotTable {
       val nByType = ch.groupBy("_change_type").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       if (nByType.getOrElse("delete", 0L) > 0L && currentVersion(dst).isDefined)
-        commitDeleteByKeys(spark, dst, dels, keyCols,
+        commitDeleteByKeys(dst, dels, keyCols,
           txnId = Some(s"$txnAppId-v$v-d"))
       if (nByType.getOrElse("insert", 0L) > 0L)
         commitAppendTxn(ins, dst, partitionCols, s"$txnAppId-v$v-i",

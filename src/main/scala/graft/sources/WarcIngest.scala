@@ -3,8 +3,7 @@ package graft.sources
 import java.io.{BufferedInputStream, ByteArrayInputStream, InputStream, PushbackInputStream}
 import java.util.zip.GZIPInputStream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Dataset
 
 /** WARC (Web ARChive, ISO 28500) record ingestion — the missing FIRST
   * stage of the web pipeline the URL/HTML layers already serve: raw crawl
@@ -93,7 +92,7 @@ object WarcIngest {
       sb.append(b.toChar)
       b = in.read()
     }
-    var n = sb.length()
+    val n = sb.length()
     if (n > 0 && sb.charAt(n - 1) == '\r') sb.setLength(n - 1)
     sb.toString
   }
@@ -379,14 +378,5 @@ object WarcIngest {
     segments.flatMap { case (file, bytes) =>
       parseStream(new ByteArrayInputStream(bytes), file)
     }
-  }
-
-  /** Directory/glob entry point over `binaryFile`. */
-  def readWarcFiles(spark: SparkSession, pathGlob: String): Dataset[WarcRecord] = {
-    import spark.implicits._
-    readWarc(
-      spark.read.format("binaryFile").load(pathGlob)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])])
   }
 }

@@ -255,19 +255,19 @@ object EventStreams {
   def enrichEvents(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
 
-  /** Windowed TOP-K over the stream (trending keys): per tumbling
-    * event-time window, the k most frequent values of `keyCol` with
-    * (count DESC, key) tie-break. Built as the watermarked windowed
-    * count (state = windows x distinct keys, evicted on watermark
-    * passage, same bound as [[hourlyRollup]]) in APPEND mode — a window's
-    * counts emit exactly once, when the watermark seals it — followed by
-    * a per-window rank in the foreachBatch sink, where the sealed
-    * window's frame is tiny (distinct keys of ONE window). Emitting
-    * top-k mid-window would be wrong under disorder: a late-but-admitted
-    * event can reorder ranks until the seal, which is why the rank runs
-    * on sealed windows only.
+  /** The counting half of windowed TOP-K over the stream (trending keys):
+    * per tumbling event-time window, the count of EVERY value of `keyCol`.
+    * Built as the watermarked windowed count (state = windows x distinct
+    * keys, evicted on watermark passage, same bound as [[hourlyRollup]])
+    * in APPEND mode — a window's counts emit exactly once, when the
+    * watermark seals it. [[topKOfWindows]] then keeps the k most frequent
+    * per window with a (count DESC, key) tie-break, in the foreachBatch
+    * sink, where the sealed window's frame is tiny (distinct keys of ONE
+    * window). Emitting top-k mid-window would be wrong under disorder: a
+    * late-but-admitted event can reorder ranks until the seal, which is
+    * why the rank runs on sealed windows only.
     */
-  def windowedTopK(events: DataFrame, keyCol: String, k: Int,
+  def windowedTopK(events: DataFrame, keyCol: String,
                    windowLength: String = "1 hour",
                    watermark: String = "2 hours"): DataFrame =
     events

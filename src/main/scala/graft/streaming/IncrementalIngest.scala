@@ -88,9 +88,9 @@ object IncrementalIngest {
 
   /** The crawl front door: drain newly-arrived WARC segment files into a
     * parquet RECORD table, exactly-once — the incremental twin of
-    * [[graft.sources.WarcIngest.readWarcFiles]] and the stage that feeds
+    * [[graft.sources.WarcIngest.readWarc]] and the stage that feeds
     * `UrlOps.withUrlParts` / `TextAnalysis.extractMainText` /
-    * `ContinuousUrlDedup` downstream. Each invocation splits only the
+    * [[ContinuousCuration]] downstream. Each invocation splits only the
     * segments that arrived since the last run (binaryFile stream source +
     * seen-files checkpoint; gzip members aren't splittable, so per-FILE
     * parallelism is already the right grain — see WarcIngest's scale

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** AVI container walk + frame extraction (round 17): DIB frames round-trip
   * byte-identically, MJPEG frames compose into the REAL JPEG decoder

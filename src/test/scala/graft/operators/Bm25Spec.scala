@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** BM25 scoring against a hand-computed fixture plus plan/scale
   * invariants (corpus never exploded on its full token list; stats and

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Code-filter card against handcrafted files: detection markers, exact
   * threshold boundaries, and the keep-rule composition.

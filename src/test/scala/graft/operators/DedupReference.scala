@@ -1,0 +1,27 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Quadratic reference the dedup specs compare the production joins
+  * against. */
+object DedupReference {
+
+  /** Brute-force directed containment — the quadratic oracle twin of
+    * [[Dedup.containmentSimilarityJoin]]; dimension-sized inputs only.
+    */
+  def bruteContainmentPairs(
+      docs: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int = 3, threshold: Double = 0.6): DataFrame = {
+    val sets = docs.select(col(idCol), Dedup.shingles(textCol, shingleSize).as("sh"))
+      .filter(size(col("sh")) > 0)
+    sets.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
+      .crossJoin(sets.select(col(idCol).as("id_b"), col("sh").as("sh_b")))
+      .filter(col("id_a") =!= col("id_b"))
+      .withColumn("containment",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(col("sh_a")))
+      .filter(col("containment") >= threshold)
+      .select("id_a", "id_b", "containment")
+  }
+}

@@ -89,7 +89,7 @@ class DedupSpec extends SparkTestBase {
       val fast = Dedup.containmentSimilarityJoin(df(corpus), "doc_id", "text",
           shingleSize = 2, threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val brute = Dedup.bruteContainmentPairs(df(corpus), "doc_id", "text",
+      val brute = DedupReference.bruteContainmentPairs(df(corpus), "doc_id", "text",
           shingleSize = 2, threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(fast == brute, s"mismatch at threshold $t")
@@ -98,7 +98,7 @@ class DedupSpec extends SparkTestBase {
     val fast = Dedup.containmentSimilarityJoin(docs, "doc_id", "text",
         shingleSize = 3, threshold = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val brute = Dedup.bruteContainmentPairs(docs, "doc_id", "text",
+    val brute = DedupReference.bruteContainmentPairs(docs, "doc_id", "text",
         shingleSize = 3, threshold = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fast == brute)

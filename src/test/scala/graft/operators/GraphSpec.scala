@@ -73,7 +73,6 @@ class GraphSpec extends SparkTestBase {
     val edges = Seq.fill(200)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .filter { case (a, b) => a != b }
     val canon = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
-    val adj = canon.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val nodes = canon.flatMap { case (a, b) => Seq(a, b) }
     val brute = nodes.map { n =>
       val nbrs = canon.collect { case (a, b) if a == n => b

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Heavy-hitter guarantees: exact output, partitioning-independence (the
   * Misra-Gries stage must never cost a true heavy hitter), bounded

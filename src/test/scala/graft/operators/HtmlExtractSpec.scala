@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** extractMainText against hostile markup: scripts with `<` in the body,
   * nested/unclosed blocks, uppercase tags, inline markup inside prose,

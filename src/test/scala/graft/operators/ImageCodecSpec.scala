@@ -6,7 +6,6 @@ import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Real-codec fixture leg for the image branch (r12 VERDICT #1 done-
   * criteria): genuine PNG/JPEG/BMP bytes — PNG and BMP written by

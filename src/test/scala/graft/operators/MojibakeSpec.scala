@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Mojibake detection/repair against the JVM's own encoders as ground
   * truth: corruption fixtures are built by the real UTF-8→cp1252

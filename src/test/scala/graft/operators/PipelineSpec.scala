@@ -572,7 +572,7 @@ class PipelineSpec extends SparkTestBase {
       Seq((1, 30), (21, 50), (41, 70)))
     assert(!byDoc.contains(5L))
     // chunk text matches its declared bounds; n_tokens consistent
-    got.foreach { case (id, _, sw, ew, n, text) =>
+    got.foreach { case (_, _, sw, ew, n, text) =>
       assert(n == ew - sw + 1)
       val ws = text.split(" ")
       assert(ws.length == n && ws.head == s"w$sw" && ws.last == s"w$ew")

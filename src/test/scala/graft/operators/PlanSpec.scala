@@ -88,8 +88,6 @@ class PlanSpec extends SparkTestBase {
     // runtime filter leaves a handful of rows. AQE must switch the join to
     // broadcast at runtime — the mechanism we rely on for selective joins
     // at 100 TB instead of hand-tuning every threshold.
-    val spark2 = spark
-    import spark2.implicits._
     val sc = spark.conf
     val prev = sc.get("spark.sql.autoBroadcastJoinThreshold")
     sc.set("spark.sql.autoBroadcastJoinThreshold", "1024") // 1 KB: static planner won't broadcast

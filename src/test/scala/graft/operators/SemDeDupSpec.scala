@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** [[SimilaritySearch.semDeDup]]: cluster-bounded semantic dedup
   * (SemDeDup). Planted geometry pins the whole decision chain: k-means

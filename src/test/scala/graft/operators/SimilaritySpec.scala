@@ -34,7 +34,7 @@ class SimilaritySpec extends SparkTestBase {
     val base = emb.filter(col("vec_id") =!= 0)
     val brute = SimilaritySearch.bruteForceTopK(base, "vec_id", "embedding", query, 10)
       .collect().map(_.getLong(0)).toSet
-    val idx = SimilaritySearch.ivfIndex(base, "vec_id", "embedding", nlist = 16)
+    val idx = SimilaritySearch.ivfIndex(base, "embedding", nlist = 16)
     // probing every list must reproduce brute force exactly
     val full = SimilaritySearch.ivfTopK(idx, "vec_id", "embedding", query,
         k = 10, nprobe = 16)
@@ -64,7 +64,7 @@ class SimilaritySpec extends SparkTestBase {
     val base = df.filter(col("vec_id") =!= 0)
     val brute = SimilaritySearch.bruteForceTopK(base, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val idx = SimilaritySearch.ivfIndex(base, "vec_id", "embedding", nlist = 8)
+    val idx = SimilaritySearch.ivfIndex(base, "embedding", nlist = 8)
     val probed = SimilaritySearch.ivfTopK(idx, "vec_id", "embedding", q,
         k = 10, nprobe = 2)
       .collect().map(_.getLong(0)).toSet
@@ -86,7 +86,7 @@ class SimilaritySpec extends SparkTestBase {
       (c.toLong * 25 + i, v)
     }
     val df = rows.toDF("vec_id", "embedding").localCheckpoint()
-    val idx = SimilaritySearch.ivfIndex(df, "vec_id", "embedding", nlist = 8)
+    val idx = SimilaritySearch.ivfIndex(df, "embedding", nlist = 8)
     val knn = SimilaritySearch.knnJoin(idx, df, "vec_id", "embedding",
         k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
@@ -114,10 +114,10 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ivfAssign matches the MLlib model's list assignment on the corpus") {
-    val idx = SimilaritySearch.ivfIndex(emb, "vec_id", "embedding", nlist = 8)
+    val idx = SimilaritySearch.ivfIndex(emb, "embedding", nlist = 8)
     val fromModel = idx.assigned.select("vec_id", "list_id").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val fromAssign = SimilaritySearch.ivfAssign(emb, "vec_id", "embedding",
+    val fromAssign = SimilaritySearch.ivfAssign(emb, "embedding",
         idx.centroids)
       .select("vec_id", "list_id").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -135,7 +135,7 @@ class SimilaritySpec extends SparkTestBase {
     SnapshotTable.commitOverwrite(evens, t + "/tbl") // v1
     val built = SimilaritySearch.ivfIndex(
       SnapshotTable.readSnapshot(spark, t + "/tbl", Some(1L)),
-      "vec_id", "embedding", nlist = 8)
+      "embedding", nlist = 8)
     SimilaritySearch.ivfWrite(built, path)
     SnapshotTable.commitAppend(odds, t + "/tbl") // v2
     // the CDC read IS the batch: pure-append range → inserts only
@@ -173,7 +173,7 @@ class SimilaritySpec extends SparkTestBase {
     }
     val evens = emb.filter(col("vec_id") % 2 === 0)
     val odds = emb.filter(col("vec_id") % 2 === 1)
-    val built = SimilaritySearch.ivfIndex(evens, "vec_id", "embedding", nlist = 8)
+    val built = SimilaritySearch.ivfIndex(evens, "embedding", nlist = 8)
     SimilaritySearch.ivfWrite(built, path)
     val before = fileMap()
 
@@ -196,13 +196,13 @@ class SimilaritySpec extends SparkTestBase {
     val reread = SimilaritySearch.ivfRead(spark, path)
     val gotRows = reread.assigned.select("vec_id", "list_id").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val expRows = SimilaritySearch.ivfAssign(emb, "vec_id", "embedding",
+    val expRows = SimilaritySearch.ivfAssign(emb, "embedding",
         built.centroids)
       .select("vec_id", "list_id").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(gotRows == expRows)
     val rebuilt = SimilaritySearch.IvfIndex(
-      SimilaritySearch.ivfAssign(emb, "vec_id", "embedding", built.centroids),
+      SimilaritySearch.ivfAssign(emb, "embedding", built.centroids),
       built.centroids)
     val sGot = SimilaritySearch.ivfTopK(reread, "vec_id", "embedding", query,
       k = 10, nprobe = 3).collect().map(_.getLong(0)).toSeq
@@ -234,7 +234,7 @@ class SimilaritySpec extends SparkTestBase {
       (id, centers(c).map(x => (x + 0.1 * rnd.nextGaussian()).toFloat).toSeq)
     val base = (for (c <- centers.indices; i <- 0 until 25)
       yield around(c.toLong * 25 + i, c)).toDF("vec_id", "embedding")
-    val built = SimilaritySearch.ivfIndex(base, "vec_id", "embedding", nlist = 8)
+    val built = SimilaritySearch.ivfIndex(base, "embedding", nlist = 8)
     SimilaritySearch.ivfWrite(built, path)
     // in-distribution: more points around the same centers — no flag
     val inDist = (for (c <- centers.indices; i <- 0 until 5)
@@ -257,7 +257,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("hardNegatives: positive id-excluded, ceiling excludes unlabeled near-positives, queries broadcast") {
-    import spark.implicits._
     val base = emb.select("vec_id", "embedding")
     def twin(tag: Long, amp: String) = base.filter(col("vec_id") % 10 === 0)
       .select((col("vec_id") + lit(tag)).as("vec_id"),

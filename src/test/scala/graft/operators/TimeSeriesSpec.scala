@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** As-of join semantics against a hand-computed fixture plus plan-shape

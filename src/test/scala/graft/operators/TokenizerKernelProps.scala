@@ -1,11 +1,10 @@
 package graft.operators
 
-import graft.functions.BpeCodec
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAllNoShrink
 
 /** Property fuzz of the native BPE encode kernel against the
-  * literal-replace-chain executable spec ([[Tokenizer.encodeWordSpec]]):
+  * literal-replace-chain executable spec ([[BpeReference.encodeWordSpec]]):
   * for ANY merge table — not just trained ones — and any word, the
   * kernel's `minAllowed` rank loop must reproduce the sequential
   * source-scan replace semantics byte-for-byte. The generators
@@ -44,7 +43,7 @@ object TokenizerKernelProps extends Properties("BpeKernel") {
       val codec = Tokenizer.codecOf(merges)
       words.forall { w =>
         val kernel = codec.tokens(w).toSeq
-        val spec = Tokenizer.encodeWordSpec(w, merges)
+        val spec = BpeReference.encodeWordSpec(w, merges)
         if (kernel != spec)
           println(s"BPE-DIVERGE word='$w' merges=$merges\n  kernel=$kernel\n  spec  =$spec")
         kernel == spec
@@ -62,7 +61,7 @@ object TokenizerKernelProps extends Properties("BpeKernel") {
       val codec = Tokenizer.codecOf(merges)
       dedup.forall { case (w, _) =>
         val kernel = codec.tokens(w).toSeq
-        val spec = Tokenizer.encodeWordSpec(w, merges)
+        val spec = BpeReference.encodeWordSpec(w, merges)
         if (kernel != spec)
           println(s"BPE-TRAINED-DIVERGE word='$w' merges=$merges\n  kernel=$kernel\n  spec=$spec")
         kernel == spec
@@ -110,7 +109,7 @@ object TokenizerKernelProps extends Properties("BpeKernel") {
           org.apache.spark.unsafe.types.UTF8String.fromString(doc), codec)
           .toLongArray().toSeq
         val exp = doc.split(" ").filter(_.nonEmpty).toSeq
-          .flatMap(w => Tokenizer.encodeWordSpec(w, merges))
+          .flatMap(w => BpeReference.encodeWordSpec(w, merges))
           .map(idOf(_).toLong)
         got == exp
       }
@@ -151,7 +150,7 @@ object TokenizerKernelProps extends Properties("BpeKernel") {
       val codec = Tokenizer.codecOf(merges, byteLevel = true)
       words.forall { w =>
         val kernel = codec.tokens(w).toSeq
-        val spec = Tokenizer.encodeWordSpec(w, merges, byteLevel = true)
+        val spec = BpeReference.encodeWordSpec(w, merges, byteLevel = true)
         if (kernel != spec)
           println(s"BPE-BYTE-DIVERGE word='$w' merges=$merges\n  kernel=$kernel\n  spec  =$spec")
         kernel == spec
@@ -169,7 +168,7 @@ object TokenizerKernelProps extends Properties("BpeKernel") {
       val codec = Tokenizer.codecOf(merges, byteLevel = true)
       dedup.forall { case (w, _) =>
         val toks = codec.tokens(w)
-        toks.toSeq == Tokenizer.encodeWordSpec(w, merges, byteLevel = true) &&
+        toks.toSeq == BpeReference.encodeWordSpec(w, merges, byteLevel = true) &&
           unremap(toks.mkString("")) == w
       }
     }
@@ -186,7 +185,7 @@ object TokenizerKernelProps extends Properties("BpeKernel") {
         Tokenizer.Merge(2, "a", "b", 1L), Tokenizer.Merge(3, "ab", "c", 1L))
       val codec = Tokenizer.codecOf(merges)
       val allAgree = Seq("aabc", "abc", "aabcabc", "ababc").forall { w =>
-        codec.tokens(w).toSeq == Tokenizer.encodeWordSpec(w, merges)
+        codec.tokens(w).toSeq == BpeReference.encodeWordSpec(w, merges)
       }
       allAgree && codec.tokens("aabc").toSeq == Seq("a", "abc")
     }

@@ -15,7 +15,7 @@ class TokenizerSpec extends SparkTestBase {
   ).toDF("doc_id", "text")
 
   test("bpeTrain learns the hand-computed merges with deterministic tie-breaks") {
-    val got = Tokenizer.bpeTrain(corpus, "text", numMerges = 5)
+    val got = BpeReference.bpeTrain(corpus, "text", numMerges = 5)
       .map(m => (m.step, m.lhs, m.rhs, m.pairFreq))
     // pair counts by hand: (l,o)=5 ties (o,w)=5 -> lhs order picks (l,o);
     // then (lo,w)=5; then (e,r)=2 ties (low,e)=2 -> "e" < "low";
@@ -30,13 +30,13 @@ class TokenizerSpec extends SparkTestBase {
 
   test("bpeTrain stops early when no pair remains") {
     val tiny = Seq((1L, "ab ab")).toDF("doc_id", "text")
-    val got = Tokenizer.bpeTrain(tiny, "text", numMerges = 10)
+    val got = BpeReference.bpeTrain(tiny, "text", numMerges = 10)
     // one merge exhausts the vocabulary: [a,b] -> [ab], no pairs left
     assert(got.map(m => (m.lhs, m.rhs)) == Seq(("a", "b")))
   }
 
   test("bpeEncodeCounts applies the merge chain row-locally") {
-    val merges = Tokenizer.bpeTrain(corpus, "text", numMerges = 5)
+    val merges = BpeReference.bpeTrain(corpus, "text", numMerges = 5)
     val enc = Seq((1L, "low lower newest"), (2L, ""))
       .toDF("doc_id", "text")
     val got = Tokenizer.bpeEncodeCounts(enc, "doc_id", "text", merges)
@@ -52,7 +52,7 @@ class TokenizerSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(sfDir("0.001") + "/documents.parquet")
     val budget = 512L
-    val merges = Tokenizer.bpeTrain(docs, "text", numMerges = 6)
+    val merges = BpeReference.bpeTrain(docs, "text", numMerges = 6)
     val enc = Tokenizer.bpeEncodeCounts(docs, "doc_id", "text", merges)
     val packed = Pipeline.packSequences(
       docs.select(col("doc_id"), col("lang")).join(enc, "doc_id"),
@@ -83,8 +83,8 @@ class TokenizerSpec extends SparkTestBase {
 
   test("training is partitioning-invariant on real docs") {
     val docs = spark.read.parquet(sfDir("0.001") + "/documents.parquet")
-    val a = Tokenizer.bpeTrain(docs, "text", numMerges = 4)
-    val b = Tokenizer.bpeTrain(docs.repartition(7), "text", numMerges = 4)
+    val a = BpeReference.bpeTrain(docs, "text", numMerges = 4)
+    val b = BpeReference.bpeTrain(docs.repartition(7), "text", numMerges = 4)
     assert(a == b)
     assert(a.length == 4)
     // merge frequencies are non-increasing: a later merge can never beat
@@ -102,7 +102,7 @@ class TokenizerSpec extends SparkTestBase {
     val exhaust = Seq((1L, "ab ab")).toDF("doc_id", "text")
     val docs = spark.read.parquet(sfDir("0.001") + "/documents.parquet")
     for ((df, n) <- Seq((corpus, 5), (tieHeavy, 8), (exhaust, 10), (docs, 6))) {
-      val dist = Tokenizer.bpeTrain(df, "text", numMerges = n)
+      val dist = BpeReference.bpeTrain(df, "text", numMerges = n)
       val local = Tokenizer.bpeTrainLocal(df, "text", numMerges = n)
       assert(local == dist, s"trainer divergence at numMerges=$n:\n  local=$local\n  dist =$dist")
     }
@@ -113,7 +113,7 @@ class TokenizerSpec extends SparkTestBase {
     val merges = Tokenizer.bpeTrainLocal(docs, "text", numMerges = 6)
     val kernel = Tokenizer.bpeEncodeCounts(docs, "doc_id", "text", merges)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val spec = Tokenizer.bpeEncodeCountsSpec(docs, "doc_id", "text", merges)
+    val spec = BpeReference.bpeEncodeCountsSpec(docs, "doc_id", "text", merges)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(kernel == spec)
     // multibyte: symbols are CODE POINTS on both paths (é and 漢 are one
@@ -122,10 +122,10 @@ class TokenizerSpec extends SparkTestBase {
     val mbMerges = Tokenizer.bpeTrainLocal(mb, "text", numMerges = 3)
     val mk = Tokenizer.bpeEncodeCounts(mb, "doc_id", "text", mbMerges)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val ms = Tokenizer.bpeEncodeCountsSpec(mb, "doc_id", "text", mbMerges)
+    val ms = BpeReference.bpeEncodeCountsSpec(mb, "doc_id", "text", mbMerges)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(mk == ms, s"multibyte divergence:\n  kernel=$mk\n  spec=$ms")
-    assert(Tokenizer.bpeTrainLocal(mb, "text", 3) == Tokenizer.bpeTrain(mb, "text", 3))
+    assert(Tokenizer.bpeTrainLocal(mb, "text", 3) == BpeReference.bpeTrain(mb, "text", 3))
   }
 
   test("kernel encode at a 1k+-merge vocabulary: plan stays flat, counts are consistent") {
@@ -168,7 +168,7 @@ class TokenizerSpec extends SparkTestBase {
       .distinct().collect().map(_.getString(0))
     val codec = Tokenizer.codecOf(all)
     words.foreach { w =>
-      assert(codec.tokens(w).toSeq == Tokenizer.encodeWordSpec(w, all),
+      assert(codec.tokens(w).toSeq == BpeReference.encodeWordSpec(w, all),
         s"kernel/spec divergence at 1k+ merges on '$w'")
     }
   }

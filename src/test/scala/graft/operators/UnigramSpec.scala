@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Unigram-LM trainer + Viterbi encode kernel (r15 VERDICT #7):
   * correctness properties a segmentation tokenizer must hold, plus the

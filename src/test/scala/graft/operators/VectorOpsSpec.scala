@@ -14,7 +14,7 @@ class VectorOpsSpec extends SparkTestBase {
   private lazy val emb = spark.read.parquet(sfDir("0.001") + "/embeddings.parquet")
 
   test("quantized column is array<tinyint> with codes in [-127, 127]") {
-    val q = VectorOps.quantizeWithError(emb, "vec_id", "embedding")
+    val q = VectorOps.quantizeWithError(emb, "embedding")
     assert(q.schema("q_emb").dataType == ArrayType(ByteType, containsNull = false) ||
       q.schema("q_emb").dataType == ArrayType(ByteType, containsNull = true))
     val bounds = q.select(
@@ -25,7 +25,7 @@ class VectorOpsSpec extends SparkTestBase {
   }
 
   test("reconstruction error bounded by scale/2 and cosine stays near 1") {
-    val q = VectorOps.quantizeWithError(emb, "vec_id", "embedding")
+    val q = VectorOps.quantizeWithError(emb, "embedding")
     val viol = q.filter(col("max_abs_err") > col("q_scale") * 0.5 + lit(1e-9)).count()
     assert(viol == 0, s"$viol vectors exceed the scale/2 error bound")
     val worst = q.agg(min("cosine_recon")).head().getDouble(0)
@@ -35,13 +35,13 @@ class VectorOpsSpec extends SparkTestBase {
 
   test("zero vector quantizes to zero codes with zero error") {
     val z = Seq((1L, Array.fill(8)(0.0f))).toDF("vec_id", "embedding")
-    val r = VectorOps.quantizeWithError(z, "vec_id", "embedding").head()
+    val r = VectorOps.quantizeWithError(z, "embedding").head()
     assert(r.getAs[Seq[Byte]]("q_emb").forall(_ == 0))
     assert(r.getAs[Double]("max_abs_err") == 0.0)
   }
 
   test("quantization is a pure row-local map: no exchange in the plan") {
-    val plan = VectorOps.quantizeWithError(emb, "vec_id", "embedding")
+    val plan = VectorOps.quantizeWithError(emb, "embedding")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
   }

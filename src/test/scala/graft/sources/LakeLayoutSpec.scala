@@ -150,7 +150,7 @@ class LakeLayoutSpec extends SparkTestBase {
     val query = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
     val base = emb.filter(col("vec_id") =!= 0)
-    val idx = SimilaritySearch.ivfIndex(base, "vec_id", "embedding", nlist = 8)
+    val idx = SimilaritySearch.ivfIndex(base, "embedding", nlist = 8)
     val path = Files.createTempDirectory("lake").toString + "/ivf"
     SimilaritySearch.ivfWrite(idx, path)
     val reread = SimilaritySearch.ivfRead(spark, path)

@@ -38,7 +38,7 @@ class MirrorSpec extends SparkTestBase {
       keyCols = Seq("id"), partitionCols = Seq("year"),
       deleteCol = Some("_deleted"))
     // v3: MoR key delete
-    commitDeleteByKeys(spark, src, Seq(3L, 7L).toDF("id"), Seq("id"))
+    commitDeleteByKeys(src, Seq(3L, 7L).toDF("id"), Seq("id"))
     assert(mirrorChanges(spark, src, dst, wm, Seq("id"), Seq("year")) == 2)
     assert(state(dst) == state(src))
     // caught up: no-op

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** FIELD-ID schema evolution (r16 VERDICT #2): before round 17 the lake
   * layer versioned data but not schemas — evolution was name-based parquet
@@ -112,7 +111,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       evolveSchema(t, Seq(DropColumn("year")))
     }
-    commitDeleteByKeys(spark, t, Seq(1L).toDF("id"), Seq("id"))
+    commitDeleteByKeys(t, Seq(1L).toDF("id"), Seq("id"))
     intercept[IllegalArgumentException] {
       evolveSchema(t, Seq(RenameColumn("id", "key")))
     }
@@ -132,7 +131,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
       .toDF("a", "year", "payload"), t, Seq("year"))
     evolveSchema(t, Seq(RenameColumn("a", "b")))
     // keys under the NEW name against files whose physical column is 'a'
-    commitDeleteByKeys(spark, t, Seq(2L).toDF("b"), Seq("b"))
+    commitDeleteByKeys(t, Seq(2L).toDF("b"), Seq("b"))
     val out = readSnapshot(spark, t, allowSchemaEvolution = true)
       .select("b").as[Long].collect().sorted.toSeq
     assert(out == Seq(1L, 3L), s"delete under renamed key must bite: $out")

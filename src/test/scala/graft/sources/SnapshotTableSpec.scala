@@ -654,7 +654,7 @@ class SnapshotTableSpec extends SparkTestBase {
     val before = SnapshotTable.readSnapshot(spark, t)
     assert(before.count() == 40)
     val delKeys = Seq(3L, 17L, 29L).toDF("id")
-    val v2 = SnapshotTable.commitDeleteByKeys(spark, t, delKeys, Seq("id"))
+    val v2 = SnapshotTable.commitDeleteByKeys(t, delKeys, Seq("id"))
     assert(v2 == 2L)
     val now = SnapshotTable.readSnapshot(spark, t)
     assert(now.count() == 37)
@@ -735,7 +735,7 @@ class SnapshotTableSpec extends SparkTestBase {
       (100L, 2000, 42.0, false)).toDF("id", "year", "amount", "_del")
     SnapshotTable.mergeUpsert(spark, t, ch, Seq("id"), Seq("year"), Some("_del"))
     // v3: merge-on-read delete of id in {9, 10}
-    SnapshotTable.commitDeleteByKeys(spark, t, Seq(9L, 10L).toDF("id"), Seq("id"))
+    SnapshotTable.commitDeleteByKeys(t, Seq(9L, 10L).toDF("id"), Seq("id"))
     val cdc = SnapshotTable.changes(spark, t, 1L, 3L)
       .select("_change_type", "id", "amount").orderBy("_change_type", "id")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -788,7 +788,7 @@ class SnapshotTableSpec extends SparkTestBase {
     val ch = Seq((3L, 2001, 999.0, false), (100L, 2000, 5.0, false))
       .toDF("id", "year", "amount", "_del")
     SnapshotTable.mergeUpsert(spark, t, ch, Seq("id"), Seq("year"), Some("_del"))
-    SnapshotTable.commitDeleteByKeys(spark, t, Seq(4L).toDF("id"), Seq("id"))
+    SnapshotTable.commitDeleteByKeys(t, Seq(4L).toDF("id"), Seq("id"))
     // crash inside process: watermark untouched, next call REDELIVERS
     intercept[RuntimeException] { run("crash", fail = true) }
     assert(run("retry").contains((1L, 3L)))
@@ -865,7 +865,7 @@ class SnapshotTableSpec extends SparkTestBase {
     val t = freshTable()
     SnapshotTable.commitOverwrite(rows(2000, 10, "a"), t, Seq("year"),
       statsCols = Seq("id"))
-    SnapshotTable.commitDeleteByKeys(spark, t, Seq(3L).toDF("id"), Seq("id"))
+    SnapshotTable.commitDeleteByKeys(t, Seq(3L).toDF("id"), Seq("id"))
     val e1 = intercept[IllegalArgumentException] {
       SnapshotTable.metadataAggregate(spark, t)
     }

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** TFRecord framing invariants: byte-lossless round trip in deterministic
   * (key, sort) order, CRC32C masking per the public spec, and every

@@ -203,7 +203,7 @@ class EventStreamsSpec extends SparkTestBase {
     // append mode: a window's counts appear only when the watermark seals
     // it, so the top-k rank can never be reordered by an admitted
     // straggler after emission
-    val q = windowedTopK(input.toDS().toDF(), "event_type", k = 2,
+    val q = windowedTopK(input.toDS().toDF(), "event_type",
         windowLength = "1 hour", watermark = "1 hour")
       .writeStream.format("memory").queryName("topk")
       .outputMode(OutputMode.Append()).start()

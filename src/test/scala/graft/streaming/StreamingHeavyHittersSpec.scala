@@ -6,7 +6,6 @@ import graft.SparkTestBase
 import graft.operators.HeavyHitters
 import graft.streaming.EventStreams._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Misra-Gries heavy hitters (r14 VERDICT #5): candidates per
