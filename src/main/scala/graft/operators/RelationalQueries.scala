@@ -27,13 +27,10 @@ object RelationalQueries {
     * 3-5 batches). Durability is irrelevant by construction here (the
     * checkpoint can never be resumed — it is removed before the query
     * returns); a production stream would point checkpointLocation at
-    * durable storage instead. Falls back to java.io.tmpdir. */
+    * durable storage instead. Created under [[RunDirs.base]]. */
   private def ephemeralStreamDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp"))
+    val base = java.nio.file.Paths.get(RunDirs.base)
+    java.nio.file.Files.createDirectories(base)
     java.nio.file.Files.createTempDirectory(base, prefix).toString
   }
 

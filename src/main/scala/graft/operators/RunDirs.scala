@@ -25,9 +25,9 @@ object RunDirs {
     * else java.io.tmpdir. Run dirs never outlive the query, so the 100 TB
     * analogue is fast node-local scratch, not durable storage; keeping
     * them off the root fs also stops parquet-staging writeback from
-    * contaminating later queries (the r16 VERDICT #1 mechanism). Keyed
-    * session-lifetime artifact caches (graft_ivf, graft_merge, …) stay on
-    * java.io.tmpdir. Override with -Dgraft.scratch.dir. */
+    * contaminating later queries (the r16 VERDICT #1 mechanism).
+    * Session-lifetime artifacts live in [[Artifacts]]' per-context root
+    * instead. Override with -Dgraft.scratch.dir. */
   def base: String = {
     val cfg = System.getProperty("graft.scratch.dir")
     if (cfg != null) cfg

@@ -11,9 +11,9 @@ package graft.operators
   */
 object SrpSizingProbe {
   def main(args: Array[String]): Unit = {
-    val dirs = if (args.nonEmpty) args.toSeq else Seq("/tmp/synth/x1", "/tmp/synth/x30")
+    require(args.nonEmpty, "usage: SrpSizingProbe <embeddingsDir> [<embeddingsDir> ...]")
     val spark = graft.GraftSession.build()
-    for (dir <- dirs) {
+    for (dir <- args) {
       val emb = Tables.read(spark, dir, "embeddings")
       val n = emb.count()
       val st = SimilaritySearch.dimStats(emb, "embedding")

@@ -14,32 +14,15 @@ object VectorQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.read(s, dir, "embeddings")
 
-  /** Ingest-time int8 quantized corpus, memoized per (source-file
-    * fingerprint) under /tmp like the IVF index: phase-1 ANN scans read
-    * ONLY this table (int8 codes — 4x fewer bytes than the float column),
-    * the full-precision table is touched for the short rerank list alone.
-    * The key fingerprints file (name, length, mtime) so a regenerated
-    * dataset at the same path invalidates the artifact.
+  /** Ingest-time int8 quantized corpus, built once per session like the
+    * IVF index: phase-1 ANN scans read ONLY this table (int8 codes — 4x
+    * fewer bytes than the float column), the full-precision table is
+    * touched for the short rerank list alone.
     */
-  private val quantLock = new Object
   private[graft] def quantCached(s: SparkSession, dir: String): DataFrame =
-    quantLock.synchronized {
-      val src = new java.io.File(s"$dir/embeddings.parquet")
-      val entries = (if (src.isDirectory) src.listFiles().sortBy(_.getName).toSeq
-                     else Seq(src))
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest((dir +: entries).mkString("|").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val path = s"/tmp/graft_quant/$key-v1"
-      val marker = new java.io.File(s"$path/_graft_index_ready")
-      if (!marker.exists()) {
-        VectorOps.quantizedTable(emb(s, dir), "vec_id", "embedding")
-          .write.mode("overwrite").parquet(path)
-        marker.createNewFile()
-      }
-      s.read.parquet(path)
-    }
+    s.read.parquet(Artifacts.directory(s, dir, "graft_quant")(path =>
+      VectorOps.quantizedTable(emb(s, dir), "vec_id", "embedding")
+        .write.parquet(path)))
 
   /** dot(a, b) in double precision, sequential left-to-right fold. */
   private def dotExpr(a: String, b: String): String =

@@ -14,7 +14,7 @@ class MirrorSpec extends SparkTestBase {
   import spark.implicits._
   import SnapshotTable._
 
-  private def tmp(): String = Files.createTempDirectory("graft-mirror").toString
+  private def tmp(): String = tempDir("graft-mirror")
 
   private def state(t: String): Seq[(Long, Double)] =
     readSnapshot(spark, t).select("id", "amount").as[(Long, Double)]

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 
 /** MoR delete-file maintenance (r16 VERDICT #4): [[SnapshotTable.rewriteDeletes]]
@@ -13,7 +11,7 @@ class RewriteDeletesSpec extends SparkTestBase {
   import spark.implicits._
   import SnapshotTable._
 
-  private def tmp(): String = Files.createTempDirectory("graft-rwdel").toString
+  private def tmp(): String = tempDir("graft-rwdel")
 
   private def table(t: String): Unit = {
     // 4 partitions x 25 rows

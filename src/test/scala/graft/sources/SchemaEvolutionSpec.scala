@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 
 /** FIELD-ID schema evolution (r16 VERDICT #2): before round 17 the lake
@@ -23,7 +21,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   import SnapshotTable._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-evo").toString
+    tempDir("graft-evo")
 
   test("rename keeps the field id: old files read under the new name") {
     val t = tmp()
@@ -149,7 +147,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
       AddColumn("note", "string")))
     commitAppend(Seq((2L, 2000, 7.0, "n")).toDF("id", "year", "amount", "note"),
       t, Seq("year"))
-    val wm = Files.createTempDirectory("graft-evo-wm").toString + "/wm"
+    val wm = tempDir("graft-evo-wm") + "/wm"
     var got: Seq[(Long, Double)] = Nil
     followChanges(spark, t, wm) { (df, _, _) =>
       got = df.select("id", "amount").as[(Long, Double)].collect().sorted.toSeq

@@ -16,7 +16,7 @@ class SnapshotTableSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft-snap").toString
+    tempDir("graft-snap")
 
   private def rows(y1: Int, n: Int, tag: String) =
     (1 to n).map(i => (i.toLong, y1 + i % 2, s"$tag-$i")).toDF("id", "year", "payload")
@@ -202,9 +202,9 @@ class SnapshotTableSpec extends SparkTestBase {
 
   test("snapshotAvailableNow: streamed arrivals become atomic versioned commits, exactly-once") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val src = Files.createTempDirectory("graft-snap-src").toString
+    val src = tempDir("graft-snap-src")
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft-snap-ckpt").toString
+    val ckpt = tempDir("graft-snap-ckpt")
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("year", org.apache.spark.sql.types.IntegerType),
       StructField("payload", StringType)))

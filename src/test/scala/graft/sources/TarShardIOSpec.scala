@@ -14,7 +14,7 @@ class TarShardIOSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-tar").toString
+    tempDir("graft-tar")
 
   private def members(n: Int, shards: Int = 3) = (0 until n).flatMap { i =>
     Seq(

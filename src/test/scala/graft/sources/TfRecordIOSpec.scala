@@ -12,7 +12,7 @@ class TfRecordIOSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-tfrec").toString
+    tempDir("graft-tfrec")
 
   test("round trip is byte-lossless and (file, sort)-deterministic; empty payloads survive") {
     val dir = freshDir()
