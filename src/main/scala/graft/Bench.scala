@@ -1,14 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
-/** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
-  * prints ONE machine-parseable JSON line. Failures are never swallowed:
-  * each failing query is recorded in an "errors" map (name -> exception
-  * class + message) and still contributes its elapsed time, so a broken
-  * query can't masquerade as a fast one. The same JSON line is also
-  * written to bench_out.json so sbt log prefixes can't break driver
-  * parsing of stdout.
+/** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR under
+  * one fixed protocol ([[measure]]) and prints ONE machine-parseable JSON
+  * line. Failures are never swallowed: each failing query is recorded in an
+  * "errors" map (name -> exception class + message) and still contributes
+  * its elapsed time, so a broken query can't masquerade as a fast one. The
+  * full record (every query's median, min and reps) goes to [[DetailFile]],
+  * which Bench writes and never reads: no run depends on an earlier one.
   */
 object Bench {
 
@@ -25,9 +26,9 @@ object Bench {
     case c => c.toString
   }
 
-  /** The battery's untimed set-up, shared with [[ConfSweep]]: silences two
-    * known-benign loggers, warms the JVM, codegen and every table footer,
-    * then builds the shared query artifacts. Returns each build's seconds.
+  /** The battery's untimed set-up: silences two known-benign loggers, warms
+    * the JVM, codegen and every table footer, then builds the shared query
+    * artifacts. Returns each build's seconds.
     */
   def warmUp(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     // The only unpartitioned windows left are LIMIT-BOUNDED rank slices
@@ -100,252 +101,95 @@ object Bench {
       "d6_pairs" -> timedBuild(PipelineQueries.jaccardPairsShared(spark, sfDir).count()))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.build()
-    val builds = warmUp(spark, sfDir)
+  /** Timed runs per query. */
+  val TimedReps = 3
 
-    val headline = Set(
-      "q1_agg", "q_k1_fulfillment",
-      "q_h1_pricing_summary", "q_h5_local_supplier_volume", "q_h10_returned_items", "q_h18_big_orders",
-      "q_d1_dedup_exact", "q_d3_minhash_neardup", "q_d5_neardup_clusters",
-      "q_d6_ngram_jaccard", "q_d7_ngram_jaccard_indexed", "q_d15_winnowing_pairs",
-      "q_v1_knn_cosine", "q_v5_ann_lsh", "q_v6_embedding_neardup_lsh", "q_v7_ann_ivf",
-      "q_v9_embedding_dedup_clusters",
-      "q_str2_fuzzy_block", "q_r1_range_join", "q_j7_salted_join",
-      "q_a4_daily_revenue", "q_w1_topk_per_group", "q_q1_quality_audit",
-      "q_t1_token_stats", "q_m2_media_similarity",
-      "q_j8_bloom_prune", "q_t12_tfidf", "q_e4_funnel", "q_sp7_sample_agg",
-      "q_l3_agg_maintain", "q_a15_outliers",
-      "q_v13_kmeans_topics", "q_t15_domain_drift",
-      "q_l4_snapshot_diff", "q_q3_dp_counts",
-      "q_t16_lm_perplexity", "q_t17_linear_classifier",
-      "q_d9_containment_join", "q_v15_margin_align", "q_v16_margin_align_lsh",
-      "q_t18_bpe_train", "q_t19_bpe_encode",
-      "q_d10_substring_spans", "q_d11_substring_scrub",
-      "q_d12_decontamination", "q_t22_chunking", "q_a20_correlation",
-      // the two most expensive queries in the suite: medians keep their
-      // iterative-job jitter from reading as round-over-round regressions
-      "q_g1_pagerank", "q_g2_triangles",
-      // round-9 heavyweights: the repetition card and char entropy carry
-      // multi-second one-time codegen compilation (giant row-local
-      // expression trees), so a single-shot reads as 2-3x the steady
-      // state; medians report what a second run of the same plan costs
-      "q_t28_repetition_card", "q_t21_char_entropy", "q_a10_sketches",
-      "q_sp14_split_leak_audit", "q_v17_semdedup",
-      // round-10 additions: the BPE-chain packer re-trains in-query
-      // (q_t19-class JIT), the pref-pair card carries a from_json +
-      // window chain, the alignment scorer a typed pass + HOF tree
-      "q_t30_pack_bpe", "q_f5_pref_pairs", "q_m6_caption_align",
-      // round-11 hygiene (VERDICT r10 #3): every single-shot query that
-      // read over ~2 s at sf0.1 joins the 3-rep list — they are the
-      // one-time-JIT class whose single-shot numbers read 2-3x steady
-      // state and polluted round-over-round deltas
-      "q_sp13_domain_mix", "q_sp10_temperature_mix", "q_sp12_weighted_sample",
-      "q_t20_vocab_growth", "q_t23_chunk_retrieval", "q_t25_perceptron_train",
-      "q_t27_tokenizer_fertility", "q_a16_approx_quantiles",
-      "q_c1_dataset_card", "q_l1_merge_upsert",
-      // round-11 addition: new query, typed gzip construct + parse carries
-      // one-time codegen (8.5s cold vs 1.1s warm, isolated runs)
-      "q_warc1_record_split",
-      // r11 final sweep of the remaining ~2s single-shots (same rule)
-      "q_a12_sketch_merge", "q_d14_scrub_keepfirst", "q_v10_centered_neardup",
-      "q_v4_embedding_neardup", "q_t8_boilerplate",
-      // r11 new queries (one-time typed-pipeline codegen on first run)
-      "q_v18_hard_negatives", "q_f7_ranking_pairs", "q_m8_pcm_vad",
-      "q_warc2_cdx_index",
-      // r12: q_d13 was the one remaining ~2s single-shot (VERDICT r11
-      // nit); the new r12 queries carry one-time codegen (the BPE-kernel
-      // table build + recursive-construction collect in q_t35; two full
-      // snapshot commits + a merge in q_l4)
-      "q_d13_decontaminated_corpus", "q_t35_bpe_kernel_1k", "q_t36_pack_bpe1k",
-      "q_t37_bpe_token_ids", "q_t38_bpe_byte_level",
-      "q_t39_bpe_doc_token_ids", "q_t40_pack_token_stream",
-      "q_f9_sft_loss_mask", "q_f10_bradley_terry",
-      "q_l5_snapshot_time_travel", "q_u6_idn_blocklist", "q_u7_robots_filter",
-      "q_l6_snapshot_agg_maintain", "q_l7_snapshot_stats_skipping",
-      "q_l8_snapshot_mor_delete", "q_l9_snapshot_changes",
-      "q_l10_follow_changes",
-      // r13 new queries (typed decode/commit pipelines, one-time codegen)
-      "q_m9_image_ahash_dedup", "q_m10_image_caption_align",
-      "q_m11_wav_vad", "q_m12_mp4_meta", "q_tf1_tfrecord_roundtrip",
-      // r15: the pair→CC composition reads ~2.2 s single-shot at sf0.1
-      // (decode + banded join + iterative label propagation)
-      "q_m18_image_dedup_clusters",
-      // r14 new queries (lifecycle/commit pipelines + decode kernels)
-      "q_l11_snapshot_refs", "q_u8_robots_wildcards",
-      "q_tar1_webdataset_shards", "q_m13_exif_gps", "q_v19_ann_ivfpq",
-      "q_m14_flac_meta", "q_m15_mp3_census", "q_v20_ann_ivfadc",
-      "q_tar2_webdataset_export", "q_u9_crawl_delay",
-      // r17 new queries (lifecycle commit pipelines + the in-query IVF
-      // index build — the one-time-JIT class)
-      "q_l13_schema_evolution", "q_l14_stream_snapshot_ingest",
-      "q_l15_mor_rewrite", "q_v22_knn_join",
-      "q_l16_type_widening", "q_l17_mirror", "q_m22_avi_dib_frames",
-      "q_d18_bbit_minhash", "q_e8_stream_stream_join",
-      "q_l18_bloom_point_lookup")
+  /** The full record's file: written by every run, read by none. */
+  val DetailFile = "bench_out.json"
 
-    // Headline queries run 3 reps and report the MEDIAN: the single-shot
-    // noise floor on this box is ±2x (calibrated rounds 5-6), which made
-    // round-over-round comparisons re-litigate phantom regressions. All
-    // rep times are preserved in bench_out.json ("reps") so a bimodal
-    // distribution is still visible. Non-headline queries stay single-shot
-    // (86 queries x 3 would triple the driver's bench wall-clock for
-    // numbers nobody compares).
-    //
-    // ADAPTIVE warm-up (r14 VERDICT #4, replacing three rounds of
-    // hand-listed jitWarm sets): giant-codegen queries get their
-    // generated classes churned OUT of Spark's bounded generated-class
-    // cache by the ~190 queries that run before them, so even a 3-rep
-    // median can catch two JIT-compile reps (r12: q_t28 median 6.29 s
-    // vs 0.97 s warm, plan unchanged; r13: q_g1 14.6 s vs 2.3 s). The
-    // rule: while the median of the LAST 3 reps exceeds 2x their
-    // minimum, the distribution is bimodal-by-JIT — run one more rep
-    // (capped at 3 extras). Reported reps are the final window; the
-    // discarded reps' total stays visible in "warmups" (the JIT cost
-    // never masquerades as per-rep execution time, and never hides).
-    // SINGLE-SHOT outlier rule (r15 VERDICT #2, extending the adaptive
-    // warm-up to the non-headline class): a single-shot entry that reads
-    // over 3 s — or over 3x its value in the PREVIOUS bench_out.json —
-    // is first-touch/JIT noise until proven otherwise (r15 evidence:
-    // q_e1_hourly_rollup recorded 11.05 s driver-side vs 0.4 s isolated
-    // steady state — a 10.6 s phantom in the round total). Such a query
-    // gets ONE extra rep; the MIN is reported and the discarded rep's
-    // time stays visible in "warmups". Steady >3 s queries pay one
-    // cheap extra rep; phantoms stop landing in the total.
-    val priorSecs: Map[String, Double] = try {
-      val txt = Files.readString(Paths.get("bench_out.json"))
-      val qStart = txt.indexOf("\"queries\":{")
-      if (qStart < 0) Map.empty
-      else {
-        val seg = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-        """"([^"]+)":([0-9.Ee+\-]+)""".r.findAllMatchIn(seg)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+  /** The stdout line must survive a 2000-char tail capture (the consumer
+    * only keeps the end of the log, and sbt appends a "[success]" line). */
+  val MaxLine = 1800
 
-    val warmups = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Locale-fixed: under a comma-decimal default locale f"%.3f" would emit
-    // "1,062" and break the JSON headline.
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def repOf(name: String): (Double, Option[String]) = {
+  /** One query under [[measure]]: its timed reps in run order and the first
+    * error of any of its runs. */
+  final case class Timing(name: String, reps: Seq[Double], error: Option[String]) {
+    def median: Double = reps.sorted.apply(reps.size / 2)
+    def min: Double = reps.min
+  }
+
+  /** The one timing protocol of the battery: one untimed warm run, then
+    * [[TimedReps]] timed runs, the same for every query. A run that throws
+    * still counts its elapsed time; the first error of any run, the warm
+    * one included, marks the query failed. NonFatal only: an OOM or linkage
+    * error must kill the bench, not leave later runs on a broken JVM.
+    */
+  def measure(name: String)(run: => Unit): Timing = {
+    def once(): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      // NonFatal only: an OOM/linkage error must kill the bench, not
-      // leave later reps running on a broken JVM
-      val err = try {
-        Force.rows(SparkEntry.queries(name)(spark, sfDir)); None
-      } catch {
-        case scala.util.control.NonFatal(e) =>
+      val err = try { run; None } catch {
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: $e")
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
       }
       ((System.nanoTime() - t0) / 1e9, err)
     }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, _) =>
-      val nReps = if (headline(name)) 3 else 1
-      def rep(): (Double, Option[String]) = repOf(name)
-      val runs = scala.collection.mutable.ArrayBuffer.empty[(Double, Option[String])]
-      (1 to nReps).foreach(_ => runs += rep())
-      if (nReps == 1 && runs.head._2.isEmpty) {
-        val first = runs.head._1
-        // the relative arm is floored at 1 s so sub-second jitter on fast
-        // queries can't buy pointless reps across the whole battery
-        if (first > 3.0 ||
-            (first > 1.0 && priorSecs.get(name).exists(p => first > 3 * p))) {
-          runs += rep()
-          // keep the fastest SUCCESSFUL rep (the guard above means the
-          // first rep succeeded): a transient failure in the extra rep
-          // must not replace a healthy run with a fast-failing one
-          // (the r15 kept-window discipline, extended here)
-          val best = runs.filter(_._2.isEmpty).minBy(_._1)
-          warmups(name) = runs.map(_._1).sum - best._1
-          runs.clear()
-          runs += best
-        }
-      }
-      if (nReps > 1) {
-        def window = runs.takeRight(nReps).map(_._1).sorted
-        var extra = 0
-        while (extra < 3 && window(nReps / 2) > 2 * window.head) {
-          runs += rep()
-          extra += 1
-        }
-        if (runs.size > nReps)
-          warmups(name) = runs.dropRight(nReps).map(_._1).sum
-      }
-      val kept = runs.takeRight(nReps)
-      val secs = kept.map(_._1).sorted
-      val median = secs(secs.size / 2)
-      // error attribution follows the KEPT window: a transient failure
-      // in a discarded warm-up rep must not mark a healthy median as
-      // errored (r15 review)
-      (name, median, kept.flatMap(_._2).headOption, kept.map(_._1).toSeq)
+    val warm = once()._2
+    val timed = Seq.fill(TimedReps)(once())
+    Timing(name, timed.map(_._1), (warm +: timed.map(_._2)).flatten.headOption)
+  }
+
+  def total(ts: Seq[Timing]): Double = ts.map(_.median).sum
+
+  // Locale-fixed: under a comma-decimal default locale f"%.3f" would emit
+  // "1,062" and break the JSON line.
+  private def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
+
+  private def errors(ts: Seq[Timing], width: Int): Seq[(String, String)] =
+    ts.collect { case Timing(k, _, Some(m)) => k -> s""""${esc(m.take(width))}"""" }
+
+  /** The [[DetailFile]] line: every query's median, min and reps at full
+    * precision, the builds and every error. */
+  def detailLine(ts: Seq[Timing], builds: Seq[(String, Double)], sfDir: String): String =
+    s"""{"metric":"total","value":${total(ts)},"unit":"sec",""" +
+      s""""queries":${obj(ts.map(t => t.name -> t.median.toString))},""" +
+      s""""min":${obj(ts.map(t => t.name -> t.min.toString))},""" +
+      s""""reps":${obj(ts.map(t => t.name -> t.reps.mkString("[", ",", "]")))},""" +
+      s""""builds":${obj(builds.map { case (k, v) => k -> v.toString })},""" +
+      s""""errors":${obj(errors(ts, 200))},"n_errors":${ts.count(_.error.isDefined)},""" +
+      s""""sf":"${esc(sfDir)}"}"""
+
+  /** The stdout line: the total, as many of the slowest medians (rounded to
+    * ms) as fit in [[MaxLine]], the builds, and the first three errors cut
+    * to 60 chars. Every query is in the [[DetailFile]] line. */
+  def stdoutLine(ts: Seq[Timing], builds: Seq[(String, Double)], sfDir: String): String = {
+    val slowest = ts.sortBy(-_.median)
+    def line(k: Int) =
+      s"""{"metric":"total","value":${fmt(total(ts))},"unit":"sec",""" +
+        s""""queries":${obj(slowest.take(k).sortBy(_.name).map(t => t.name -> fmt(t.median)))},""" +
+        s""""builds":${obj(builds.map { case (b, v) => b -> fmt(v) })},""" +
+        s""""n_queries":${ts.size},"errors":${obj(errors(ts, 60).take(3))},""" +
+        s""""n_errors":${ts.count(_.error.isDefined)},"reps":$TimedReps,""" +
+        s""""detail":"$DetailFile","sf":"${esc(sfDir)}"}"""
+    (ts.size to 1 by -1).iterator.map(line).find(_.length <= MaxLine).getOrElse(line(0))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.build()
+    val builds = warmUp(spark, sfDir)
+    val ts = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      measure(name)(Force.rows(q(spark, sfDir)))
     }
-    // HEADLINE re-measure rule (r16 VERDICT #1): the adaptive warm-up is
-    // blind to UNIFORM contamination — when every rep of a battery
-    // session is slow (dirty page-cache writeback from 200 prior
-    // queries' /tmp writes, heap pressure), the median-vs-min test
-    // passes on a stable-and-wrong window (r16: q_l6 recorded 12.8 s,
-    // reps 12.8/13.6/12.1, isolated steady state 2.1–2.9 s). The cross-
-    // round signal catches it: a headline median over 3x its prior
-    // bench_out.json value is suspect. Such queries are re-measured in a
-    // SECOND pass after the whole battery drains (writeback settled, the
-    // moment an isolated rerun approximates); the FASTER window is
-    // reported and the slower one stays visible in "warmups" — phantom
-    // regressions stop landing in the total, while a real regression
-    // reproduces in the second pass and is reported as measured.
-    val timed = firstPass.map { case t @ (name, median, err, reps) =>
-      val suspect = err.isEmpty && headline(name) && median > 1.0 &&
-        priorSecs.get(name).exists(p => median > 3 * p)
-      if (!suspect) t
-      else {
-        System.err.println(
-          s"[bench] $name median ${fmt(median)}s > 3x prior " +
-            s"${priorSecs(name)}s — re-measuring post-battery")
-        val rr = (1 to 3).map(_ => repOf(name))
-        val ok = rr.filter(_._2.isEmpty).map(_._1).sorted
-        if (ok.size == 3 && ok(1) < median) {
-          warmups(name) = warmups.getOrElse(name, 0.0) + reps.sum
-          (name, ok(1), None, ok)
-        } else {
-          warmups(name) = warmups.getOrElse(name, 0.0) + rr.map(_._1).sum
-          t
-        }
-      }
-    }
-    val errs = timed.collect { case (k, _, Some(m), _) => s""""$k":"${esc(m)}"""" }
-      .mkString("{", ",", "}")
-    val total = timed.map(_._2).sum
-    // Full per-query detail (all queries, ns precision, every rep) goes to
-    // bench_out.json; the "queries" map stays name -> seconds (median).
-    val qsFull = timed.map { case (k, v, _, _) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val repsFull = timed.collect { case (k, _, _, rs) if rs.size > 1 =>
-      s""""$k":${rs.mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
-    val buildsJson = builds.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val warmupsJson = warmups.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"reps":$repsFull,"builds":$buildsJson,"warmups":$warmupsJson,"errors":$errs,"n_errors":${timed.count(_._3.isDefined)},"sf":"${esc(sfDir)}"}"""
-    Files.writeString(Paths.get("bench_out.json"), fullLine + "\n")
-    // The stdout line must survive a 2000-char tail capture (the consumer only
-    // keeps the end of the log, and sbt appends a "[success]" line after us),
-    // so print the SLOWEST 45 headline queries only, rounded to ms — the
-    // r11 headline list (68 entries) no longer fits whole, and the slow
-    // end is what round-over-round comparison reads; full per-query and
-    // per-rep detail is in the file.
-    val qsHead = timed.filter(t => headline(t._1)).sortBy(-_._2).take(45)
-      .sortBy(_._1)
-      .map { case (k, v, _, _) => s""""$k":${fmt(v)}""" }
-      .mkString("{", ",", "}")
-    val errsHead = timed.collect { case (k, _, Some(m), _) => s""""$k":"${esc(m.take(60))}"""" }
-      .take(3).mkString("{", ",", "}")
-    val buildsHead = builds.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsHead,"builds":$buildsHead,"n_queries":${timed.size},"errors":$errsHead,"n_errors":${timed.count(_._3.isDefined)},"headline_reps":3,"detail":"bench_out.json","sf":"${esc(sfDir)}"}"""
-    require(line.length <= 1800, s"bench line too long for tail capture: ${line.length}")
+    Files.writeString(Paths.get(DetailFile), detailLine(ts, builds, sfDir) + "\n")
+    val line = stdoutLine(ts, builds, sfDir)
+    require(line.length <= MaxLine, s"bench line too long for tail capture: ${line.length}")
     println(line)
-    if (timed.exists(_._3.isDefined)) {
-      System.err.println(s"[bench] ${timed.count(_._3.isDefined)} queries failed — see errors map")
-    }
+    val failed = ts.count(_.error.isDefined)
+    if (failed > 0) System.err.println(s"[bench] $failed queries failed — see errors map")
     spark.stop()
   }
 }

@@ -14,13 +14,11 @@ object GraftSession {
 
   /** Builds (or returns the live) session: master `SPARK_MASTER`, else
     * `local[cpus]`; `cpus` shuffle partitions; UTC session time zone,
-    * parquet nanosecond timestamps read as longs, no UI; then `conf`
-    * applied over all of that. Log level WARN, graft's SQL functions
-    * registered.
+    * parquet nanosecond timestamps read as longs, no UI. Log level WARN,
+    * graft's SQL functions registered.
     */
-  def build(cpus: Int = defaultCpus,
-            conf: Map[String, String] = Map.empty): SparkSession = {
-    val base = SparkSession.builder()
+  def build(cpus: Int = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -50,7 +48,6 @@ object GraftSession {
       // the conf). A long-lived session with high query turnover wants the
       // cleaner interval scaled to turnover, not wall-clock defaults.
       .config("spark.cleaner.periodicGC.interval", "120s")
-    val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     plans.GraftExtensions.register(spark)

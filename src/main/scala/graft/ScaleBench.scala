@@ -18,43 +18,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    so output = planted structure, which SynthScale grows linearly.
   *  - the IVF index build is timed separately (ivf_build_sec) — it is an
   *    ingest-time cost, amortized over every query served.
+  *  - each leg runs once, not under [[Bench.measure]]: a leg is one point of
+  *    a scale curve, and its counters come from the [[JobMeter]].
   *
   * Usage: ScaleBench <dataDir> <outFile> [label]
   */
 object ScaleBench {
-
-  /** Per-query physical-resource counters, accumulated from task-end
-    * events. Wall-time alone hid the round-6 SRP frame wall until it was a
-    * 210 s surprise; shuffle volume and spill counts make the next one a
-    * NUMBER that moves before the wall-time does — a query whose shuffle
-    * bytes grow superlinearly in corpus size is about to fall over at 100 TB
-    * even while its local seconds still look fine.
-    */
-  private final class TaskMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new AtomicLong
-    val shuffleRead  = new AtomicLong
-    val memSpill     = new AtomicLong
-    val diskSpill    = new AtomicLong
-    val peakTaskMem  = new AtomicLong
-    val tasks        = new AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakTaskMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        tasks.incrementAndGet()
-      }
-    }
-    def reset(): Unit =
-      Seq(shuffleWrite, shuffleRead, memSpill, diskSpill, peakTaskMem, tasks)
-        .foreach(_.set(0L))
-  }
 
   /** Clustered-signature candidate frame for the two Hamming-geometry
     * receipt legs: 64 fixed clusters over the documents table's ids,
@@ -62,7 +31,12 @@ object ScaleBench {
     * (positions xxhash64(doc_id, j) mod 64 — no RNG, replayable at any
     * scale). Returns the PRE-verification candidate pairs from
     * [[graft.operators.Dedup.hammingCandidates64]] at the requested
-    * geometry; Force.rows on it IS the candidate count. The persisted
+    * geometry; Force.rows on it IS the candidate count. Building the frame
+    * already runs `hammingCandidates64`'s warm count of the persisted
+    * signature base, and the leg calls this inside its timer, so that
+    * count is part of the leg's seconds and counters; receipts taken
+    * before `hammingCandidates64` gained that count do not include it, so
+    * compare these two legs only with receipts that do. The persisted
     * signature base (16 B/row) is left for session teardown — the legs
     * share a short-lived process. */
   private def hammingCandidateLeg(
@@ -974,31 +948,31 @@ object ScaleBench {
           .agg(sum("n_samples").as("n_out_total"), count(lit(1)).as("n"))
       }))
 
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-
     only.foreach { o =>
       val unknown = o -- flagships.map(_._1).toSet
       require(unknown.isEmpty, s"unknown legs: $unknown")
     }
     val results = flagships.filter(f => only.forall(_(f._1))).map { case (name, fn) =>
-      org.apache.spark.ListenerBusDrain(spark.sparkContext); listener.reset()
-      val t0 = System.nanoTime()
-      val rows = try Force.rows(fn(spark, dir))
-      catch { case e: Throwable =>
-        System.err.println(s"[scalebench] $name FAILED: $e"); -1L
+      // Per-leg physical-resource counters: wall time alone hid the round-6
+      // SRP frame wall until it was a 210 s surprise; shuffle volume and
+      // spill make the next one a NUMBER that moves before the wall does.
+      val m = JobMeter(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        val rows = try Force.rows(fn(spark, dir))
+        catch { case e: Throwable =>
+          System.err.println(s"[scalebench] $name FAILED: $e"); -1L
+        }
+        (rows, (System.nanoTime() - t0) / 1e9)
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener-bus delivery is asynchronous: read the counters only
-      // after the bus has delivered every event of the leg's jobs
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val (rows, sec) = m.value
       val mb = 1024.0 * 1024.0
+      def sumMb(f: JobRecord => Long) = m.jobs.map(f).sum / mb
       val metrics = Map(
-        "shuffle_write_mb" -> listener.shuffleWrite.get() / mb,
-        "shuffle_read_mb"  -> listener.shuffleRead.get() / mb,
-        "spill_mem_mb"     -> listener.memSpill.get() / mb,
-        "spill_disk_mb"    -> listener.diskSpill.get() / mb,
-        "peak_task_mem_mb" -> listener.peakTaskMem.get() / mb)
+        "shuffle_write_mb" -> sumMb(_.shuffleWrite),
+        "shuffle_read_mb"  -> sumMb(_.shuffleRead),
+        "spill_mem_mb"     -> sumMb(_.memSpill),
+        "spill_disk_mb"    -> sumMb(_.diskSpill),
+        "peak_task_mem_mb" -> m.jobs.map(_.peakExecMem).maxOption.getOrElse(0L) / mb)
       System.err.println(f"[scalebench] $name%-28s $sec%8.2f s  $rows%10d rows  " +
         f"shufW ${metrics("shuffle_write_mb")}%.1f MB  spillD ${metrics("spill_disk_mb")}%.1f MB")
       (name, sec, rows, metrics)

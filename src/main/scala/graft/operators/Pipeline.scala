@@ -435,12 +435,17 @@ object Pipeline {
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val NumberRe = "[0-9]+(\\.[0-9]+)?"
 
-  /** International (`+CC ...`, separators space or dash) and NANP
-    * (`(212) 555-0123`) phone shapes. Must be scrubbed BEFORE [[NumberRe]]
-    * or the generic number pass shreds the digit groups.
+  /** International and NANP (`(212) 555-0123`) phone shapes. An
+    * international number keeps one separator after its first group:
+    * dashes (`+1-555-867-5309`, `+1 212-555-0123`) or spaces throughout
+    * (`+44 20 7946 0958`), so a bare number after a dashed phone
+    * (`+1-555-925-6475 8349`) stays a number. Must be scrubbed BEFORE
+    * [[NumberRe]] or the generic number pass shreds the digit groups.
     */
   val PhoneRe: String =
-    "\\+[0-9]{1,3}[ -][0-9]{2,4}([ -][0-9]{2,4}){1,3}|\\([0-9]{3}\\) [0-9]{3}-[0-9]{4}"
+    "\\+[0-9]{1,3}[ -][0-9]{2,4}(-[0-9]{2,4}){1,3}|" +
+      "\\+[0-9]{1,3} [0-9]{2,4}( [0-9]{2,4}){1,3}|" +
+      "\\([0-9]{3}\\) [0-9]{3}-[0-9]{4}"
 
   /** Dotted-quad IPv4 (word-bounded so trailing prose doesn't extend it). */
   val Ipv4Re: String = "\\b([0-9]{1,3}\\.){3}[0-9]{1,3}\\b"

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions.{lit, raise_error}
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -62,7 +62,7 @@ class CandyPipelineSpec extends SparkTestBase {
   private val transactionCount = days.map(_._2.size).sum
 
   private def writeCorpus(days: Seq[(String, Seq[String])], products: Seq[String]): Path = {
-    val dir = Files.createTempDirectory("graft-candy-batch")
+    val dir = Paths.get(tempDir("graft-candy-batch"))
     Files.write(dir.resolve("products.csv"), products.asJava)
     for ((file, rows) <- days) Files.writeString(dir.resolve(file), rows.mkString("[\n", ",\n", "\n]"))
     dir
@@ -79,7 +79,7 @@ class CandyPipelineSpec extends SparkTestBase {
   /** `CandyPipeline.main`'s batch: run, then the five sinks in its order;
     * returns each file's bytes. The caches `run` leaves are cleared. */
   private def batchBytes(dataDir: Path, reloadDaily: Boolean): Map[String, Seq[Byte]] = {
-    val out = Files.createTempDirectory("graft-candy-out")
+    val out = Paths.get(tempDir("graft-candy-out"))
     try {
       val r = CandyPipeline.run(spark, dataDir.toString, reloadDaily = reloadDaily)
       val frames = Seq(r.productsUpdated, r.orders, r.orderLineItems, r.dailySummary, r.forecast)
@@ -195,7 +195,7 @@ class CandyPipelineSpec extends SparkTestBase {
   }
 
   test("a failing sink write leaves no scratch behind and the existing file untouched") {
-    val out = Files.createTempDirectory("graft-candy-out")
+    val out = Paths.get(tempDir("graft-candy-out"))
     try {
       Files.writeString(out.resolve("orders.csv"), "previous\n")
       val failing = spark.range(3).select(raise_error(lit("boom")).cast("string").as("x"))
@@ -258,7 +258,7 @@ class CandyPipelineSpec extends SparkTestBase {
         ListenerBusDrain(spark.sparkContext)
         plans.synchronized(plans.toList)
       }
-      val out = Files.createTempDirectory("graft-candy-out")
+      val out = Paths.get(tempDir("graft-candy-out"))
       spark.listenerManager.register(listener)
       val (batchPlans, inventoryPlans) = try {
         var r: CandyPipeline.Results = null

@@ -2,7 +2,7 @@ package graft.candy
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 /** Guards the arrival-order invariant behind the golden fulfillment order
   * (SURVEY §5.3): `Ingest.readTransactionsOrdered` must yield `seq` values
@@ -30,7 +30,7 @@ class IngestOrderSpec extends SparkTestBase {
     * day 2 largest), so size-ordered packing != name-ordered arrival.
     */
   private def writeDays(): (Path, Seq[Long]) = {
-    val dir = Files.createTempDirectory("graft-ingest-order")
+    val dir = Paths.get(tempDir("graft-ingest-order"))
     val rowsPerDay = Seq(1 -> 2, 2 -> 30, 3 -> 10)
     for ((day, n) <- rowsPerDay) {
       val body = (0 until n).map(txJson(day, _)).mkString("[\n", ",\n", "\n]")

@@ -3,7 +3,6 @@ package graft.candy
 import graft.SparkTestBase
 import graft.sources.DocumentStore
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** S3/S5 exercised end-to-end against embedded Derby (its jars ship with
   * Spark for the Hive metastore — a real JDBC engine, no network), S4/S6
@@ -15,7 +14,7 @@ class JdbcDocStoreSpec extends SparkTestBase {
 
   private val fakeDocFormat = classOf[graft.sources.FakeDocStoreProvider].getName
   private def derbyUrl(name: String): String = {
-    val dir = Files.createTempDirectory(s"graft-derby-$name")
+    val dir = tempDir(s"graft-derby-$name")
     s"jdbc:derby:$dir/db;create=true"
   }
   private val dataset = "/root/reference/data/dataset_32"
@@ -41,7 +40,7 @@ class JdbcDocStoreSpec extends SparkTestBase {
 
   test("document-store write + read round-trips via the option contract") {
     import spark.implicits._
-    val uri = s"file://${Files.createTempDirectory("graft-docstore")}"
+    val uri = s"file://${tempDir("graft-docstore")}"
     val df = Seq((1L, "lollipop", 2.5), (2L, "taffy", 0.75))
       .toDF("id", "name", "price")
     DocumentStore.writeCollection(df, uri, "candy", "inventory",
@@ -55,7 +54,7 @@ class JdbcDocStoreSpec extends SparkTestBase {
 
   test("SeedDatabase seeds JDBC tables and per-day collections like the reference") {
     val url = derbyUrl("seed")
-    val uri = s"file://${Files.createTempDirectory("graft-seed-doc")}"
+    val uri = s"file://${tempDir("graft-seed-doc")}"
     val (tables, collections) =
       SeedDatabase.seed(spark, dataset, url, docUri = uri,
         docDatabase = "candy_store", docFormat = fakeDocFormat)
@@ -94,11 +93,11 @@ class JdbcDocStoreSpec extends SparkTestBase {
       catch { case _: ClassNotFoundException => Seq.empty }
     Seq("derby" -> ((n: String) => derbyUrl(n))) ++
       ifPresent("org.duckdb.DuckDBDriver", "duckdb" -> ((n: String) =>
-        s"jdbc:duckdb:${Files.createTempDirectory(s"graft-duckdb-$n")}/db")) ++
+        s"jdbc:duckdb:${tempDir(s"graft-duckdb-$n")}/db")) ++
       ifPresent("org.h2.Driver", "h2" -> ((n: String) =>
-        s"jdbc:h2:${Files.createTempDirectory(s"graft-h2-$n")}/db")) ++
+        s"jdbc:h2:${tempDir(s"graft-h2-$n")}/db")) ++
       ifPresent("org.hsqldb.jdbc.JDBCDriver", "hsqldb" -> ((n: String) =>
-        s"jdbc:hsqldb:file:${Files.createTempDirectory(s"graft-hsqldb-$n")}/db"))
+        s"jdbc:hsqldb:file:${tempDir(s"graft-hsqldb-$n")}/db"))
   }
 
   test("dialect matrix: DECIMAL, TIMESTAMP, DATE and nulls round-trip exactly") {
@@ -152,7 +151,7 @@ class JdbcDocStoreSpec extends SparkTestBase {
 
   test("readCollections unions per-day collections, tolerating schema drift") {
     import spark.implicits._
-    val uri = s"file://${Files.createTempDirectory("graft-multicoll")}"
+    val uri = s"file://${tempDir("graft-multicoll")}"
     DocumentStore.writeCollection(
       Seq((1L, "gummy"), (2L, "mint")).toDF("id", "name"),
       uri, "candy", "day_20240101", format = fakeDocFormat)

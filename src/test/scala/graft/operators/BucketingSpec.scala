@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 
 /** Co-located joins via bucketing: two tables bucketed on the join key must
@@ -13,7 +12,7 @@ class BucketingSpec extends SparkTestBase {
   test("bucketed tables join without a shuffle exchange") {
     // external-table paths under /tmp; warehouse dir is a static conf and
     // irrelevant when an explicit path is given
-    val wh = Files.createTempDirectory("graft-warehouse").toString
+    val wh = tempDir("graft-warehouse")
     val li = spark.read.parquet(sfDir("0.001") + "/lineitem.parquet")
     val ord = spark.read.parquet(sfDir("0.001") + "/orders.parquet")
 
@@ -43,7 +42,7 @@ class BucketingSpec extends SparkTestBase {
   }
 
   test("prefix-token index: exchange-free candidate join, equal to direct similarity join") {
-    val wh = Files.createTempDirectory("graft-d6idx").toString
+    val wh = tempDir("graft-d6idx")
     val docs = spark.read.parquet(sfDir("0.01") + "/documents.parquet")
     Dedup.prefixTokenIndexWrite(docs, "doc_id", "text", name = "d6idx",
       shingleSize = 3, threshold = 0.5, buckets = 8, externalPath = Some(wh))
@@ -88,7 +87,7 @@ class BucketingSpec extends SparkTestBase {
   }
 
   test("containment index: exchange-free candidate join, equal to direct containment join") {
-    val wh = Files.createTempDirectory("graft-d9idx").toString
+    val wh = tempDir("graft-d9idx")
     val docs = spark.read.parquet(sfDir("0.01") + "/documents.parquet")
     Dedup.containmentIndexWrite(docs, "doc_id", "text", name = "d9idx",
       shingleSize = 3, buckets = 8, externalPath = Some(wh))

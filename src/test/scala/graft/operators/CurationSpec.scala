@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end curation composition: stage monotonicity, output
   * dedup-freeness, packing bounds, and bit-level rerun determinism.
@@ -13,7 +12,7 @@ class CurationSpec extends SparkTestBase {
     spark.read.parquet(sfDir("0.001") + "/documents.parquet")
 
   test("curate: monotone survivors, leak-free dedup, bounded bins, deterministic rerun") {
-    val out1 = Files.createTempDirectory("graft-curate-1").toString
+    val out1 = tempDir("graft-curate-1")
     val r1 = Curation.curate(docs, out1, seed = "cur-7", budgetTokens = 256L)
 
     // stage survivor counts are monotone and non-degenerate
@@ -46,7 +45,7 @@ class CurationSpec extends SparkTestBase {
     }
 
     // rerun: identical report AND identical shipped rows (bit-level)
-    val out2 = Files.createTempDirectory("graft-curate-2").toString
+    val out2 = tempDir("graft-curate-2")
     val r2 = Curation.curate(docs, out2, seed = "cur-7", budgetTokens = 256L)
     assert(r2 == r1)
     val a = written.orderBy("doc_id").collect().map(_.toSeq).toSeq
@@ -54,7 +53,7 @@ class CurationSpec extends SparkTestBase {
     assert(a == b, "rerun must reproduce the corpus byte-for-byte")
 
     // a different seed moves split membership (the seed actually flows)
-    val out3 = Files.createTempDirectory("graft-curate-3").toString
+    val out3 = tempDir("graft-curate-3")
     val r3 = Curation.curate(docs, out3, seed = "cur-OTHER", budgetTokens = 256L)
     assert(r3.nAfterNearDedup == r1.nAfterNearDedup) // dedup is seed-free
     assert(r3.splitCounts != r1.splitCounts ||
@@ -64,7 +63,7 @@ class CurationSpec extends SparkTestBase {
   test("curate with decontamination + scrub: monotone stages, zero residual benchmark overlap") {
     val bench = docs.filter(col("doc_id") % 13 === 0)
       .selectExpr("doc_id AS bench_id", "text AS btext")
-    val out = Files.createTempDirectory("graft-curate-d").toString
+    val out = tempDir("graft-curate-d")
     val r = Curation.curate(docs, out, seed = "cur-7", budgetTokens = 256L,
       benchmark = Some(bench), scrubWindow = 5)
 
@@ -109,7 +108,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("gopher-card gate: per-rule drop accounting and deterministic rerun") {
-    val out1 = Files.createTempDirectory("graft-curate-g1").toString
+    val out1 = tempDir("graft-curate-g1")
     val cfg = Curation.GopherConfig(minWords = 20, maxWords = 100000)
     val r1 = Curation.curate(docs, out1, seed = "cur-7", budgetTokens = 256L,
       gopher = Some(cfg))
@@ -135,7 +134,7 @@ class CurationSpec extends SparkTestBase {
     assert(r1.nAfterQuality == card.filter(col("pass") === 1).count())
 
     // bit-level rerun determinism is preserved with the audited gate on
-    val out2 = Files.createTempDirectory("graft-curate-g2").toString
+    val out2 = tempDir("graft-curate-g2")
     val r2 = Curation.curate(docs, out2, seed = "cur-7", budgetTokens = 256L,
       gopher = Some(cfg))
     assert(r2 == r1)
@@ -151,7 +150,7 @@ class CurationSpec extends SparkTestBase {
         when(col("doc_id") % 2 === 0,
           concat(lit("\n\n"), lit("subscribe to the newsletter")))
           .otherwise(lit(""))))
-    val out1 = Files.createTempDirectory("graft-curate-p1").toString
+    val out1 = tempDir("graft-curate-p1")
     val r1 = Curation.curate(planted, out1, seed = "cur-7",
       budgetTokens = 256L, paragraphDedupStage = true, repetitionGate = true)
 
@@ -173,7 +172,7 @@ class CurationSpec extends SparkTestBase {
     assert(r1.nAfterExactDedup <= r1.nAfterRepetition)
 
     // rerun determinism with both stages on
-    val out2 = Files.createTempDirectory("graft-curate-p2").toString
+    val out2 = tempDir("graft-curate-p2")
     val r2 = Curation.curate(planted, out2, seed = "cur-7",
       budgetTokens = 256L, paragraphDedupStage = true, repetitionGate = true)
     assert(r2 == r1)
@@ -183,7 +182,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("classifier gate composes after the rule gate and reports its survivors") {
-    val out = Files.createTempDirectory("graft-curate-c").toString
+    val out = tempDir("graft-curate-c")
     val r = Curation.curate(docs, out, seed = "cur-7", budgetTokens = 256L,
       gopher = Some(Curation.GopherConfig(minWords = 20)),
       classifier = Some(Curation.ClassifierConfig(minMargin = 0.0)))
@@ -217,7 +216,7 @@ class CurationSpec extends SparkTestBase {
     // so canonical dedup must keep exactly one doc per page
     val withUrls = UrlQueries.withMessyUrl(docs)
     val block = Seq("example.org").toDF("domain")
-    val out = Files.createTempDirectory("graft-curate-u").toString
+    val out = tempDir("graft-curate-u")
     val r = Curation.curate(withUrls, out, seed = "cur-7", budgetTokens = 256L,
       urlCol = Some("url"), domainBlocklist = Some(block))
 
@@ -244,7 +243,7 @@ class CurationSpec extends SparkTestBase {
     val robotsBodies = Seq(("docs.example.io",
       "User-agent: *\nDisallow: /a\n")).toDF("host", "body")
     val rules = UrlOps.parseRobots(robotsBodies, "host", "body")
-    val outR = java.nio.file.Files.createTempDirectory("graft-cur-robots").toString
+    val outR = tempDir("graft-cur-robots")
     val rr = Curation.curate(withUrls, outR, seed = "cur-robots",
       urlCol = Some("url"), robotsRules = Some(rules))
     assert(rr.nAfterRobots >= 0 && rr.nAfterRobots < rr.nAfterUrlDedup,
@@ -276,10 +275,10 @@ class CurationSpec extends SparkTestBase {
       when(col("doc_id") % 5 === 0, concat(lit(p), col("text")))
         .otherwise(col("text")))
 
-    val outA = Files.createTempDirectory("graft-curate-e1").toString
+    val outA = tempDir("graft-curate-e1")
     val rA = Curation.curate(prefixed(dirtyPfx), outA, seed = "cur-enc",
       budgetTokens = 256L, encodingRepair = true)
-    val outB = Files.createTempDirectory("graft-curate-e2").toString
+    val outB = tempDir("graft-curate-e2")
     val rB = Curation.curate(prefixed(cleanPfx), outB, seed = "cur-enc",
       budgetTokens = 256L)
 
@@ -346,7 +345,7 @@ class CurationSpec extends SparkTestBase {
         val spark2 = spark; import spark2.implicits._
         Seq("ZZQXBAD").toDF("word") // case-mangled: folding is load-bearing
       })
-    val out1 = Files.createTempDirectory("graft-curate-all1").toString
+    val out1 = tempDir("graft-curate-all1")
     val r1 = build(out1)
     // every optional stage reported (nothing left at the -1 sentinel)
     assert(r1.nAfterUrlDedup > 0 && r1.nAfterBlocklist > 0)
@@ -372,7 +371,7 @@ class CurationSpec extends SparkTestBase {
       "a word-blocklisted doc survived the full pipeline")
     // bit-identical rerun with all stages on (binary payload compared by
     // digest — Array[Byte] equality in a Row is referential)
-    val out2 = Files.createTempDirectory("graft-curate-all2").toString
+    val out2 = tempDir("graft-curate-all2")
     val r2 = build(out2)
     assert(r2 == r1)
     def snapshot(dir: String) = spark.read.parquet(dir)
@@ -391,7 +390,7 @@ class CurationSpec extends SparkTestBase {
       .withColumn("caption",
         when(col("doc_id") % 5 === 0, lit("z" * 40))
           .otherwise(expr("substring(text, 1, 96)")))
-    val out = Files.createTempDirectory("graft-curate-m").toString
+    val out = tempDir("graft-curate-m")
     val r = Curation.curate(paired, out, seed = "cur-m6",
       budgetTokens = 256L,
       captionAlign = Some(Curation.CaptionAlignConfig("payload", "caption")))
@@ -412,7 +411,7 @@ class CurationSpec extends SparkTestBase {
       when(col("doc_id") % 7 === 0,
         concat(lit("contact bob42@example.com code 123 "), col("text")))
         .otherwise(col("text")))
-    val out = Files.createTempDirectory("graft-curate-p").toString
+    val out = tempDir("graft-curate-p")
     val r = Curation.curate(planted, out, seed = "cur-7",
       budgetTokens = 256L, piiRedact = true)
 

@@ -45,7 +45,7 @@ class DedupSpec extends SparkTestBase {
     val fresh = docs.filter(org.apache.spark.sql.functions.col("doc_id") >= 30)
     assert(old.count() > 0 && fresh.count() > 0)
     // persist the index through parquet, as a real pipeline would
-    val idxPath = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val idxPath = tempDir("lshidx")
     Dedup.lshIndex(old, "doc_id", "text").write.mode("overwrite").parquet(idxPath)
     val index = spark.read.parquet(idxPath)
     val inc = Dedup.incrementalNearDuplicates(fresh, index, "doc_id", "text")
@@ -227,7 +227,7 @@ class DedupSpec extends SparkTestBase {
 
   test("connected components works through reliable checkpoints too") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("graft.checkpoint.reliable", "true")
     try {

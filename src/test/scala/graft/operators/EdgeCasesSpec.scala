@@ -67,7 +67,7 @@ class EdgeCasesSpec extends SparkTestBase {
   }
 
   test("prefix-token index handles an empty corpus and rejects a missing table") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-d6idx-edge").toString
+    val wh = tempDir("graft-d6idx-edge")
     Dedup.prefixTokenIndexWrite(emptyDocs, "doc_id", "text",
       name = "d6idx_empty", buckets = 4, externalPath = Some(wh))
     try

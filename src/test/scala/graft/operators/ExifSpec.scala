@@ -194,7 +194,7 @@ class ExifSpec extends SparkTestBase {
       (i.toLong, s"document number $i with enough words to pass the " +
         s"quality gate easily ${"filler " * 12}content-$i", payload)
     }.toDF("doc_id", "text", "img")
-    val dir = java.nio.file.Files.createTempDirectory("graft-exifcur").toString
+    val dir = tempDir("graft-exifcur")
     val report = Curation.curate(docs, s"$dir/out", seed = "exif-14",
       quality = Curation.QualityConfig(minTokens = 3),
       exifGpsStrip = Some("img"))

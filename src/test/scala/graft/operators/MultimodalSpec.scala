@@ -20,7 +20,7 @@ class MultimodalSpec extends SparkTestBase {
 
   test("binaryFile ingestion: raw files become typed media rows, payloads intact") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("mediafiles")
+    val dir = java.nio.file.Paths.get(tempDir("mediafiles"))
     val blobs = Map("a.jpg" -> Array[Byte](1, 2, 3, 4),
       "b.wav" -> Array[Byte](9, 8), "c.mp4" -> Array[Byte](5, 5, 5),
       "notes.txt" -> Array[Byte](7)) // unknown extension: dropped

@@ -326,6 +326,18 @@ class PipelineSpec extends SparkTestBase {
     assert(exchanges == 1, s"expected one shared window exchange ($exchanges):\n$p")
   }
 
+  test("redactTyped: a bare number after a dashed phone stays a number") {
+    import spark.implicits._
+    // the PiiProps document that once read as one four-group phone
+    val got = Seq("call +1-555-925-6475 8349 now", "ring +1 212-555-0123 ok",
+        "dial +44 20 7946 0958 ok").toDF("text")
+      .select(Pipeline.redactTyped(col("text")).as("p"))
+      .select(col("p.n_phones"), col("p.n_nums"), col("p.clean"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSeq
+    assert(got == Seq((1, 1, "call <PHONE> <NUM> now"), (1, 0, "ring <PHONE> ok"),
+      (1, 0, "dial <PHONE> ok")))
+  }
+
   test("redactTyped: every PII class tags, counts are stage-exact, zero residual") {
     import spark.implicits._
     val hostile = Seq(

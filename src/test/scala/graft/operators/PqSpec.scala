@@ -88,7 +88,7 @@ class PqSpec extends SparkTestBase {
     val model = VectorOps.ivfPqTrain(corpus, "vec_id", "embedding",
       nlist = 8, m = 4, ksub = 8, iterations = 3)
     val codes = VectorOps.ivfPqEncode(corpus, "vec_id", "embedding", model)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val path = tempDir("graft-ivfpq")
     VectorOps.ivfPqWriteIndex(codes, path)
     val nLists = codes.select("list_id").distinct().count()
     // probe-only read: the planned file set lives entirely under probed
@@ -159,7 +159,7 @@ class PqSpec extends SparkTestBase {
     val model = VectorOps.ivfPqTrain(corpus, "vec_id", "embedding",
       nlist = 16, m = 4, ksub = 16, iterations = 3)
     val codes = VectorOps.ivfPqEncode(corpus, "vec_id", "embedding", model)
-    val path = java.nio.file.Files.createTempDirectory("graft-v21").toString
+    val path = tempDir("graft-v21")
     VectorOps.ivfPqWriteIndex(codes, path)
     // the FILE cut: the probed read plans at most nprobe/nlist + eps of
     // the index's files (eps absorbs list-size imbalance)

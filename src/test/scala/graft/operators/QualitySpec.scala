@@ -77,7 +77,7 @@ class QualitySpec extends SparkTestBase {
     // rows are untouched
     assert(passthrough.columns.toSeq == df.columns.toSeq)
     // the metrics materialize with the job's own action (a write here)
-    val out = java.nio.file.Files.createTempDirectory("observed").toString
+    val out = tempDir("observed")
     passthrough.write.mode("overwrite").parquet(out)
     val metrics = obs.get
     assert(metrics("not_null(status)") == 1L)

@@ -128,7 +128,7 @@ class SimilaritySpec extends SparkTestBase {
     // the r12 VERDICT #6 composition: incremental index consumers feed
     // from the TABLE'S OWN manifest diff instead of an external changeset
     import graft.sources.SnapshotTable
-    val t = java.nio.file.Files.createTempDirectory("graft-cdc-ivf").toString
+    val t = tempDir("graft-cdc-ivf")
     val path = t + "/index"
     val evens = emb.filter(col("vec_id") % 2 === 0)
     val odds = emb.filter(col("vec_id") % 2 === 1)
@@ -161,7 +161,7 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ivfAppend: O(batch) append ≡ rebuild-with-same-centroids; idempotent; untouched files byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-append").toString
+    val dir = tempDir("ivf-append")
     val path = s"$dir/index"
     def fileMap(): Map[String, Vector[Byte]] = {
       val root = new java.io.File(path)
@@ -226,7 +226,7 @@ class SimilaritySpec extends SparkTestBase {
     // vector already sits at ~max distance and no batch can look worse):
     // same deterministic 8-center construction as the recall test
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-drift").toString
+    val dir = tempDir("ivf-drift")
     val path = s"$dir/index"
     val rnd = new scala.util.Random(7)
     val centers = Array.fill(8)(Array.fill(16)(rnd.nextGaussian()))

@@ -167,7 +167,7 @@ class SubstringDedupSpec extends SparkTestBase {
     val old = docs.filter(col("doc_id") < 300)
     val fresh = docs.filter(col("doc_id") >= 300)
     // persist the index state through an actual parquet round-trip
-    val dir = java.nio.file.Files.createTempDirectory("graft-grams").toString + "/idx"
+    val dir = tempDir("graft-grams") + "/idx"
     Dedup.windowCountIndex(old, "doc_id", "text", k).write.parquet(dir)
     val index = spark.read.parquet(dir)
 

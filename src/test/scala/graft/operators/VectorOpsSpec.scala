@@ -77,7 +77,7 @@ class VectorOpsSpec extends SparkTestBase {
     def dirBytes(p: java.io.File): Long =
       if (p.isDirectory) p.listFiles().map(dirBytes).sum
       else if (p.getName.endsWith(".parquet")) p.length else 0L
-    val out = java.nio.file.Files.createTempDirectory("quant").toFile
+    val out = new java.io.File(tempDir("quant"))
     VectorOps.quantizedTable(emb, "vec_id", "embedding")
       .write.mode("overwrite").parquet(out.getPath)
     val qBytes = dirBytes(out)

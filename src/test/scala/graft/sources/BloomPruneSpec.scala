@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
@@ -14,7 +13,7 @@ class BloomPruneSpec extends SparkTestBase {
   import SnapshotTable._
 
   test("point lookups skip most files; kept set always contains the match") {
-    val t = Files.createTempDirectory("graft-bloom").toString
+    val t = tempDir("graft-bloom")
     // ids deliberately SCATTERED across files: stats ranges all overlap,
     // only the blooms can prune an equality probe
     val df = (1 to 4000).map(i => (i.toLong, 2000 + i % 4, s"p-$i"))
@@ -46,7 +45,7 @@ class BloomPruneSpec extends SparkTestBase {
   }
 
   test("files without recorded blooms are always kept (may-contain)") {
-    val t = Files.createTempDirectory("graft-bloom2").toString
+    val t = tempDir("graft-bloom2")
     commitOverwrite(Seq((1L, 2000, "a")).toDF("id", "year", "payload"),
       t, Seq("year"), bloomCols = Seq("id"))
     // second commit WITHOUT blooms: its file must survive any probe
@@ -58,7 +57,7 @@ class BloomPruneSpec extends SparkTestBase {
   }
 
   test("columnPrune survives partition-spec evolution (mixed layouts)") {
-    val t = Files.createTempDirectory("graft-pspec").toString
+    val t = tempDir("graft-pspec")
     // generation 1: UNPARTITIONED commit; generation 2: year-partitioned
     commitOverwrite(Seq((1L, 2000, "a"), (2L, 2001, "b"))
       .toDF("id", "year", "payload"), t)
@@ -78,7 +77,7 @@ class BloomPruneSpec extends SparkTestBase {
   }
 
   test("string columns probe with string values (type-sensitive hash)") {
-    val t = Files.createTempDirectory("graft-bloom3").toString
+    val t = tempDir("graft-bloom3")
     val df = (1 to 1000).map(i => (i.toLong, 2000, s"user-${i % 100}"))
       .toDF("id", "year", "who")
     commitOverwrite(df, t, Seq("year"), filesPerPartition = 8,

@@ -20,7 +20,7 @@ class CorruptRecordsSpec extends SparkTestBase {
     StructField("_corrupt_record", StringType)))
 
   private lazy val jsonPath = {
-    val dir = Files.createTempDirectory("dirty").toString
+    val dir = tempDir("dirty")
     Files.writeString(java.nio.file.Paths.get(dir, "data.json"),
       """{"id": 1, "name": "ok", "qty": 2}
         |{"id": 2, "name": "also ok", "qty": 5}
@@ -32,7 +32,7 @@ class CorruptRecordsSpec extends SparkTestBase {
   }
 
   private lazy val csvPath = {
-    val dir = Files.createTempDirectory("dirtycsv").toString
+    val dir = tempDir("dirtycsv")
     Files.writeString(java.nio.file.Paths.get(dir, "data.csv"),
       """id,name,qty
         |1,ok,2

@@ -3,7 +3,6 @@ package graft.sources
 import graft.SparkTestBase
 import graft.operators.SimilaritySearch
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Layout-on-disk checks: hive-style partition directories must prune at
   * the scan (the plan reads fewer partitions, not just fewer rows), ORC
@@ -23,7 +22,7 @@ class LakeLayoutSpec extends SparkTestBase {
   }
 
   test("writePartitioned creates partition dirs and the scan prunes them") {
-    val path = Files.createTempDirectory("lake").toString + "/li"
+    val path = tempDir("lake") + "/li"
     LakeLayout.writePartitioned(li, path,
       partitionCols = Seq("l_returnflag"), clusterCols = Seq("l_shipdate"))
 
@@ -57,8 +56,8 @@ class LakeLayoutSpec extends SparkTestBase {
   }
 
   test("compact rewrites a many-small-file table into the target file count") {
-    val in = Files.createTempDirectory("compact_in").toString
-    val out = Files.createTempDirectory("compact_out").toString
+    val in = tempDir("compact_in")
+    val out = tempDir("compact_out")
     // 40 tiny files
     li.repartition(40).write.mode("overwrite").parquet(in)
     val (before, after) = LakeLayout.compact(spark, in, out,
@@ -78,7 +77,7 @@ class LakeLayoutSpec extends SparkTestBase {
 
   test("schema evolution: mergeSchema unifies widening parquet batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("evolve").toString
+    val dir = tempDir("evolve")
     // batch 1: (id, a); batch 2 adds column b
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .write.mode("append").parquet(dir)
@@ -93,7 +92,7 @@ class LakeLayoutSpec extends SparkTestBase {
   }
 
   test("ORC round-trip is lossless and pushes filters") {
-    val path = Files.createTempDirectory("lake").toString + "/orc"
+    val path = tempDir("lake") + "/orc"
     LakeLayout.writeOrc(li.select("l_orderkey", "l_linenumber", "l_quantity"), path)
     val back = LakeLayout.readOrc(spark, path)
     val a = li.select("l_orderkey", "l_linenumber", "l_quantity")
@@ -112,7 +111,7 @@ class LakeLayoutSpec extends SparkTestBase {
     val rnd = new scala.util.Random(11)
     val df = (0 until n).map(_ => (rnd.nextInt(1 << 16), rnd.nextInt(1 << 16)))
       .toDF("x", "y").repartition(8)
-    val root = Files.createTempDirectory("zorder").toString
+    val root = tempDir("zorder")
 
     // skipping power per dimension: fraction of files whose [min,max]
     // range for that column a random point predicate fails to rule out —
@@ -151,7 +150,7 @@ class LakeLayoutSpec extends SparkTestBase {
       .select("embedding").head().getSeq[Float](0).toArray
     val base = emb.filter(col("vec_id") =!= 0)
     val idx = SimilaritySearch.ivfIndex(base, "embedding", nlist = 8)
-    val path = Files.createTempDirectory("lake").toString + "/ivf"
+    val path = tempDir("lake") + "/ivf"
     SimilaritySearch.ivfWrite(idx, path)
     val reread = SimilaritySearch.ivfRead(spark, path)
     assert(reread.centroids.length == 8)
@@ -177,7 +176,7 @@ class LakeLayoutSpec extends SparkTestBase {
 
   test("mergeUpsert rewrites only touched partitions; untouched files stay byte-identical") {
     import spark.implicits._
-    val path = Files.createTempDirectory("lake").toString + "/t"
+    val path = tempDir("lake") + "/t"
     // 3 partitions p=1,2,3 with 2 keys each
     Seq((1L, 1, "a", 10.0), (2L, 1, "b", 20.0),
         (3L, 2, "c", 30.0), (4L, 2, "d", 40.0),
@@ -220,7 +219,7 @@ class LakeLayoutSpec extends SparkTestBase {
 
   test("mergeUpsert with an empty changeset is a no-op") {
     import spark.implicits._
-    val path = Files.createTempDirectory("lake").toString + "/t2"
+    val path = tempDir("lake") + "/t2"
     Seq((1L, 1, 5.0)).toDF("k", "p", "v").write.partitionBy("p").parquet(path)
     val empty = Seq.empty[(Long, Int, Double)].toDF("k", "p", "v")
     assert(LakeLayout.mergeUpsert(spark, path, empty, Seq("k"), Seq("p")) == 0L)
@@ -230,7 +229,7 @@ class LakeLayoutSpec extends SparkTestBase {
   test("maintainAggregate applies the delta exactly; untouched partitions stay byte-identical") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val path = Files.createTempDirectory("lake").toString + "/agg"
+    val path = tempDir("lake") + "/agg"
     // facts across 3 partitions (p = year-like), grouped by (p, g)
     val facts = Seq(
       (1, "a", 10.0), (1, "a", 20.0), (1, "b", 5.0),
@@ -289,7 +288,7 @@ class LakeLayoutSpec extends SparkTestBase {
 
   test("schema evolution: appended columns surface via mergeSchema with nulls backfilled") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = tempDir("graft-evolve")
     // v1 writer: (id, a)
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .write.mode("append").parquet(dir)

@@ -29,7 +29,7 @@ class ManifestScaleSpec extends SparkTestBase {
     * files that do not exist: these tests measure DRIVER metadata costs,
     * which never open data files). */
   private def synthTable(n: Int): String = {
-    val t = Files.createTempDirectory("graft-mscale").toString
+    val t = tempDir("graft-mscale")
     val sb = new StringBuilder(n * 160)
     sb.append("#txn=synth\n#prev=0\n")
     var i = 0
@@ -95,7 +95,7 @@ class ManifestScaleSpec extends SparkTestBase {
 
   test("pruned readSnapshot: 1e4 cold entries ride the parse, never the plan") {
     // real table: 2 partitions of real data
-    val t = Files.createTempDirectory("graft-mscale-rs").toString
+    val t = tempDir("graft-mscale-rs")
     val df = (1 to 200).map(i => (i.toLong, 2000 + i % 2, s"p-$i"))
       .toDF("id", "year", "payload")
     SnapshotTable.commitOverwrite(df, t, Seq("year"), statsCols = Seq("id"))

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.operators.Curation
@@ -37,7 +36,7 @@ class ContinuousCurationSpec extends SparkTestBase {
   private val seed = "cc-spec-12"
 
   private def batchSurvivors(docs: DataFrame): Set[(Long, String)] = {
-    val out = Files.createTempDirectory("graft-cc-batch").toString
+    val out = tempDir("graft-cc-batch")
     Curation.curate(docs, out, seed = seed,
       urlCol = Some("url"), domainBlocklist = Some(blockedDomains),
       wordBlocklist = Some(blockedWords))
@@ -59,7 +58,7 @@ class ContinuousCurationSpec extends SparkTestBase {
   test("two id-ordered waves ≡ one batch Curation.curate (ids and splits)") {
     val docs = planted.localCheckpoint()
     val mid = docs.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val work = Files.createTempDirectory("graft-cc-stream").toString
+    val work = tempDir("graft-cc-stream")
     val r1 = wave(docs.filter(col("doc_id") <= mid), 0L, work)
     val r2 = wave(docs.filter(col("doc_id") > mid), 1L, work)
     assert(r1.nInput + r2.nInput == docs.count())
@@ -85,10 +84,10 @@ class ContinuousCurationSpec extends SparkTestBase {
     val w1 = docs.filter(col("doc_id") <= mid)
     val w2 = docs.filter(col("doc_id") > mid)
 
-    val clean = Files.createTempDirectory("graft-cc-clean").toString
+    val clean = tempDir("graft-cc-clean")
     wave(w1, 0L, clean); wave(w2, 1L, clean)
 
-    val crashy = Files.createTempDirectory("graft-cc-crash").toString
+    val crashy = tempDir("graft-cc-crash")
     wave(w1, 0L, crashy)
     wave(w1, 0L, crashy) // replay after a simulated post-write crash
     wave(w2, 1L, crashy)
@@ -106,8 +105,8 @@ class ContinuousCurationSpec extends SparkTestBase {
   test("exactly-once through the real stream front door (AvailableNow, two arrivals)") {
     val docs = planted.localCheckpoint()
     val mid = docs.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val src = Files.createTempDirectory("graft-cc-src").toString
-    val work = Files.createTempDirectory("graft-cc-work").toString
+    val src = tempDir("graft-cc-src")
+    val work = tempDir("graft-cc-work")
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("url", StringType), StructField("text", StringType)))
     def run(): Unit = ContinuousCuration.runAvailableNow(spark, src, schema,
@@ -123,7 +122,7 @@ class ContinuousCurationSpec extends SparkTestBase {
   test("snapshotOut: each wave is one atomic versioned commit; replay rolls forward, history time-travels") {
     val docs = planted.localCheckpoint()
     val mid = docs.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val work = Files.createTempDirectory("graft-cc-snap").toString
+    val work = tempDir("graft-cc-snap")
     def waveSnap(d: DataFrame, b: Long) =
       ContinuousCuration.curateWave(d, b, work, "url", Some(blockedDomains),
         Some(blockedWords), Curation.QualityConfig(), 0.7,
@@ -158,7 +157,7 @@ class ContinuousCurationSpec extends SparkTestBase {
       (2L, "https://h.chain.org/p/2", (w.take(70) ++ x).mkString(" ")),
       (3L, "https://h.chain.org/p/3", (w ++ x).mkString(" "))
     ).toDF("doc_id", "url", "text")
-    val work = Files.createTempDirectory("graft-cc-chain").toString
+    val work = tempDir("graft-cc-chain")
     val r = ContinuousCuration.curateWave(docs, 0L, work, "url", None, None,
       Curation.QualityConfig(minTokens = 5, minTtr = 0.0, minCharEntropy = 0.0,
         maxDupNgramFrac = 1.0),
@@ -197,13 +196,13 @@ class ContinuousCurationSpec extends SparkTestBase {
     // the same adapted documents through the BATCH build must agree.
     val segs = graft.operators.WarcQueries
       .plantedSegments(spark, sfDir("0.001")).collect()
-    val srcDir = Files.createTempDirectory("graft-e2e-warc").toString
+    val srcDir = tempDir("graft-e2e-warc")
     segs.foreach { case (name, bytes) =>
       java.nio.file.Files.write(
         java.nio.file.Paths.get(srcDir, s"$name.warc.gz"), bytes)
     }
-    val recDir = Files.createTempDirectory("graft-e2e-rec").toString
-    val ckpt = Files.createTempDirectory("graft-e2e-ckpt").toString
+    val recDir = tempDir("graft-e2e-rec")
+    val ckpt = tempDir("graft-e2e-ckpt")
     IncrementalIngest.warcAvailableNow(spark, srcDir, recDir, ckpt)
     val records = spark.read.parquet(recDir)
     assert(records.filter(col("malformed") === 1).count() > 0,
@@ -214,7 +213,7 @@ class ContinuousCurationSpec extends SparkTestBase {
         col("url"), expr("decode(payload, 'UTF-8')").as("text"))
       .localCheckpoint()
     assert(docs.count() > 0)
-    val work = Files.createTempDirectory("graft-e2e-work").toString
+    val work = tempDir("graft-e2e-work")
     // same stage config as batchSurvivors (the lists are no-ops on crawl
     // hosts/text, but both sides must run the same chain)
     val r = ContinuousCuration.curateWave(docs, 0L, work, "url",
@@ -238,7 +237,7 @@ class ContinuousCurationSpec extends SparkTestBase {
     // emitted representatives — where batch semantics keep exactly one.
     val w = (1 to 100).map(i => s"w$i")
     val x = (1 to 30).map(i => s"x$i")
-    val work = Files.createTempDirectory("graft-cc-ooo").toString
+    val work = tempDir("graft-cc-ooo")
     val cfg = Curation.QualityConfig(minTokens = 5, minTtr = 0.0,
       minCharEntropy = 0.0, maxDupNgramFrac = 1.0)
     def wave(d: DataFrame, b: Long) =
@@ -263,7 +262,7 @@ class ContinuousCurationSpec extends SparkTestBase {
   test("reconcile is a NO-OP when streamed semantics already equal batch (real corpus)") {
     val docs = planted.localCheckpoint()
     val mid = docs.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val work = Files.createTempDirectory("graft-cc-noop").toString
+    val work = tempDir("graft-cc-noop")
     def waveSnap(d: DataFrame, b: Long) =
       ContinuousCuration.curateWave(d, b, work, "url", Some(blockedDomains),
         Some(blockedWords), Curation.QualityConfig(), 0.7,

@@ -16,7 +16,7 @@ class IncrementalIngestSpec extends SparkTestBase {
     StructField("amount", DoubleType)))
 
   test("each run drains only newly-arrived files, exactly once") {
-    val root = Files.createTempDirectory("incr").toString
+    val root = tempDir("incr")
     val src = s"$root/src"; val dst = s"$root/dst"; val ckp = s"$root/ckp"
     Files.createDirectories(Paths.get(src))
 
@@ -51,7 +51,7 @@ class IncrementalIngestSpec extends SparkTestBase {
   }
 
   test("WARC front door: new segments split exactly once, quarantine rides along") {
-    val root = Files.createTempDirectory("incr-warc").toString
+    val root = tempDir("incr-warc")
     val src = s"$root/src"; val dst = s"$root/dst"; val ckp = s"$root/ckp"
     Files.createDirectories(Paths.get(src))
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The foreachBatch JDBC sink must deliver each micro-batch exactly once
@@ -18,7 +17,7 @@ class StreamSinksSpec extends SparkTestBase {
   test("micro-batches land in JDBC exactly once, even when re-executed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val url = s"jdbc:derby:${Files.createTempDirectory("sink-derby")}/db;create=true"
+    val url = s"jdbc:derby:${tempDir("sink-derby")}/db;create=true"
     val sink = StreamSinks.jdbcBatchSink(url, "events_out")
 
     val input = MemoryStream[Event]
@@ -44,7 +43,7 @@ class StreamSinksSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.TarShardIO
-    val table = Files.createTempDirectory("sink-tar").toString + "/t"
+    val table = tempDir("sink-tar") + "/t"
     def member(id: Long) = (id % 2, id,
       f"$id%08d.txt", s"doc-$id".getBytes("UTF-8"))
     val sink = StreamSinks.tarTxnSink(table, numFiles = 2, txnAppId = "cur")
@@ -88,7 +87,7 @@ class StreamSinksSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.SnapshotTable
-    val root = Files.createTempDirectory("sink-snap").toString
+    val root = tempDir("sink-snap")
     val table = s"$root/t"
     val ckpt = s"$root/ckpt"
     def rows(ids: Long*) = ids.map(id => (id, 2000 + (id % 2).toInt, id * 1.5))
