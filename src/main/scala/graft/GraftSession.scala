@@ -33,21 +33,6 @@ object GraftSession {
       // session running many distinct queries wants the same headroom; the
       // cost is bounded driver metaspace.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // r18: localCheckpoint blocks from finished queries stay pinned until
-      // the ContextCleaner sees their RDD objects die — and that needs a
-      // driver full GC, which Spark only forces every
-      // spark.cleaner.periodicGC.interval (default 30 min — never inside a
-      // battery). Stale blocks occupy the non-evictable half of the unified
-      // pool (spark.memory.storageFraction), so later queries run
-      // execution-memory-starved: paired single-shot-battery A/B measured
-      // 255.0 s -> 225.1 s (geomean 0.916) at a 30 s interval, with the
-      // post-lifecycle e-class queries recovering 6-8x (q_e1 3.29 ->
-      // 0.45). Interval tuned against the 3-rep-median bench: 30 s taxes
-      // the tail with stop-the-world pauses (186.5 s total) while 120 s
-      // keeps the cleanup and drops the tax (165.3 s vs 179.9 s without
-      // the conf). A long-lived session with high query turnover wants the
-      // cleaner interval scaled to turnover, not wall-clock defaults.
-      .config("spark.cleaner.periodicGC.interval", "120s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     plans.GraftExtensions.register(spark)

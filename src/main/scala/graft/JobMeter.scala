@@ -4,11 +4,14 @@ import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** One Spark job seen by [[JobMeter]]. `site` is the call site Spark names
-  * the job's final stage after; `start`/`end` are epoch ms; `taskMs` is the
-  * summed executor run time of the job's tasks; byte counts are summed over
-  * its tasks and `peakExecMem` is the largest task's peak execution memory.
+  * the job's final stage after; `group` is the job group it ran under (the
+  * [[QueryScope]] name, "" if none); `start`/`end` are epoch ms; `taskMs` is
+  * the summed executor run time of the job's tasks; byte counts are summed
+  * over its tasks and `peakExecMem` is the largest task's peak execution
+  * memory.
   */
-final case class JobRecord(id: Int, site: String, start: Long, end: Long = 0L,
+final case class JobRecord(id: Int, site: String, group: String, start: Long,
+                           end: Long = 0L,
                            stages: Int = 0, tasks: Int = 0, taskMs: Long = 0L,
                            shuffleRead: Long = 0L, shuffleWrite: Long = 0L,
                            memSpill: Long = 0L, diskSpill: Long = 0L,
@@ -43,7 +46,9 @@ object JobMeter {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         val site = e.stageInfos.maxByOption(_.stageId).fold("")(_.name)
-        jobs(e.jobId) = JobRecord(e.jobId, site, e.time)
+        val group = Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobs(e.jobId) = JobRecord(e.jobId, site, group, e.time)
         e.stageIds.foreach(s => stageToJob(s) = e.jobId)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {

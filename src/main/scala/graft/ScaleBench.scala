@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.util.control.NonFatal
 
 /** Scaling-curve bench over the flagship operators, run against SynthScale
   * output dirs (factor 1 / 3 / 10 of sf0.1 ~= sf0.1 / sf0.3 / sf1). Prints
@@ -958,8 +959,8 @@ object ScaleBench {
       // spill make the next one a NUMBER that moves before the wall does.
       val m = JobMeter(spark.sparkContext) {
         val t0 = System.nanoTime()
-        val rows = try Force.rows(fn(spark, dir))
-        catch { case e: Throwable =>
+        val rows = try QueryScope(spark, name)(Force.rows(fn(spark, dir)))
+        catch { case NonFatal(e) =>
           System.err.println(s"[scalebench] $name FAILED: $e"); -1L
         }
         (rows, (System.nanoTime() - t0) / 1e9)

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The battery's built-once artifacts (pair sets, indexes, base tables),
   * scoped to one SparkContext. An artifact is keyed by the context, the
@@ -24,6 +25,14 @@ object Artifacts {
   def frame(s: SparkSession, dir: String, name: String)
            (build: => DataFrame): DataFrame =
     once(s.sparkContext, dir, name)(build.localCheckpoint())
+
+  /** The ids of the checkpointed RDDs behind `sc`'s [[frame]]s: the
+    * blocks [[graft.QueryScope]] keeps when a query ends. */
+  private[graft] def rddIds(sc: SparkContext): Set[Int] = built.synchronized {
+    built.iterator.collect { case (k, f: Dataset[_]) if k.sc eq sc =>
+      f.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+    }.flatten.toSet
+  }
 
   /** A directory under the context's root, written once per (context,
     * dir, name) by `write`; returns its path. The leaf name is `name`

@@ -295,20 +295,21 @@ object PreferencePairs {
         coalesce(length(col("rec.chosen")), lit(0)).cast("long").as("chosen_chars"),
         coalesce(length(col("rec.rejected")), lit(0)).cast("long").as("rejected_chars"))
     val flagged = withPromptDup(base, "id", "valid", "prompt", family).persist()
-    val nInput = flagged.count()
-    val agg = flagged.agg(
-      sum("valid").as("v"), sum("prompt_dup").as("d"), sum("kept").as("k"),
-      sum(when(col("kept") === 1, col("chosen_chars")).otherwise(lit(0L))).as("cc"),
-      sum(when(col("kept") === 1, col("rejected_chars")).otherwise(lit(0L))).as("rc"))
-      .head()
-    val shipped = Pipeline.hashSplit(
-        flagged.filter(col("kept") === 1), "prompt", s"$seed-split", splits)
-      .select("id", "split", "prompt", "chosen_text", "rejected_text")
-    val splitCounts = shipped.groupBy("split").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    flagged.unpersist()
-    (shipped, PrefReport(nInput, agg.getAs[Long]("v"), agg.getAs[Long]("d"),
-      agg.getAs[Long]("k"), splitCounts,
-      agg.getAs[Long]("cc"), agg.getAs[Long]("rc")))
+    try {
+      val nInput = flagged.count()
+      val agg = flagged.agg(
+        sum("valid").as("v"), sum("prompt_dup").as("d"), sum("kept").as("k"),
+        sum(when(col("kept") === 1, col("chosen_chars")).otherwise(lit(0L))).as("cc"),
+        sum(when(col("kept") === 1, col("rejected_chars")).otherwise(lit(0L))).as("rc"))
+        .head()
+      val shipped = Pipeline.hashSplit(
+          flagged.filter(col("kept") === 1), "prompt", s"$seed-split", splits)
+        .select("id", "split", "prompt", "chosen_text", "rejected_text")
+      val splitCounts = shipped.groupBy("split").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      (shipped, PrefReport(nInput, agg.getAs[Long]("v"), agg.getAs[Long]("d"),
+        agg.getAs[Long]("k"), splitCounts,
+        agg.getAs[Long]("cc"), agg.getAs[Long]("rc")))
+    } finally flagged.unpersist()
   }
 }

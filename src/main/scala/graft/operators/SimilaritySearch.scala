@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.VectorExprs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column: brute-force cosine top-k as the exact baseline, and a
@@ -693,28 +694,32 @@ object SimilaritySearch {
     val statsRow = spark.read.parquet(s"${path}__stats").head()
     val (buildN, buildSum) = (statsRow.getLong(0), statsRow.getDouble(1))
 
-    val assigned = ivfAssign(batch.dropDuplicates(idCol), embCol,
-      centroids).persist()
-    val nBatch = assigned.count()
-    val touched = assigned.select("list_id").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val existingIds = spark.read.parquet(path)
-      .filter(col("list_id").isin(touched: _*))
-      .select(col(idCol))
-    val newRows = assigned.join(existingIds, Seq(idCol), "left_anti").persist()
-    val agg = newRows.agg(count(lit(1)), sum(col("_qdist"))).head()
-    val (nNew, newSum) =
-      (agg.getLong(0), if (agg.isNullAt(1)) 0d else agg.getDouble(1))
+    // the frames the append persists, released on success or on a throw
+    val held = mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { held += df; df.persist() }
+    val (nBatch, touched, nNew, newSum) = try {
+      val assigned = ivfAssign(batch.dropDuplicates(idCol), embCol,
+        centroids).transform(keep)
+      val nBatch = assigned.count()
+      val touched = assigned.select("list_id").distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+      val existingIds = spark.read.parquet(path)
+        .filter(col("list_id").isin(touched: _*))
+        .select(col(idCol))
+      val newRows = assigned.join(existingIds, Seq(idCol), "left_anti").transform(keep)
+      val agg = newRows.agg(count(lit(1)), sum(col("_qdist"))).head()
+      val (nNew, newSum) =
+        (agg.getLong(0), if (agg.isNullAt(1)) 0d else agg.getDouble(1))
 
-    if (nNew > 0) {
-      newRows.drop("_qdist")
-        .repartition(math.max(1, touched.size), col("list_id"))
-        .sortWithinPartitions(col(idCol))
-        .write.mode("append").partitionBy("list_id").parquet(path)
-      writeStats(spark, path, (buildN + nNew, buildSum + newSum))
-    }
-    assigned.unpersist()
-    newRows.unpersist()
+      if (nNew > 0) {
+        newRows.drop("_qdist")
+          .repartition(math.max(1, touched.size), col("list_id"))
+          .sortWithinPartitions(col(idCol))
+          .write.mode("append").partitionBy("list_id").parquet(path)
+        writeStats(spark, path, (buildN + nNew, buildSum + newSum))
+      }
+      (nBatch, touched, nNew, newSum)
+    } finally held.foreach(_.unpersist())
 
     val buildMse = if (buildN > 0) buildSum / buildN else 0d
     val batchMse = if (nNew > 0) newSum / nNew else 0d

@@ -19,7 +19,7 @@ class GraftSessionSpec extends SparkTestBase {
   private def unresolved: Seq[String] = graftFunctions.filterNot(f =>
     spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(f)))
 
-  test("the test session carries UTC, nanosAsLong, no UI, 4 shuffle partitions and the r18 tunings") {
+  test("the test session carries UTC, nanosAsLong, no UI, 4 shuffle partitions, the codegen cache and no cleaner key") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
@@ -27,7 +27,8 @@ class GraftSessionSpec extends SparkTestBase {
     assert(sc.getConf.get("spark.ui.enabled") == "false")
     assert(sc.uiWebUrl.isEmpty)
     assert(sc.getConf.get("spark.sql.codegen.cache.maxEntries") == "8192")
-    assert(sc.getConf.get("spark.cleaner.periodicGC.interval") == "120s")
+    // blocks are freed by QueryScope, not by a forced periodic GC
+    assert(!sc.getConf.getAll.exists(_._1.startsWith("spark.cleaner.")))
   }
 
   test("all 16 graft SQL functions resolve by name") {

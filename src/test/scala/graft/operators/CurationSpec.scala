@@ -94,6 +94,17 @@ class CurationSpec extends SparkTestBase {
     assert(Curation.Report(1, 1, 1, 1, Map.empty, 1, 1).nAfterDecontam == -1L)
   }
 
+  test("a build that fails at its write releases every frame it persisted") {
+    val sc = spark.sparkContext
+    val blocker = new java.io.File(tempDir("graft-curate-fail"), "file")
+    java.nio.file.Files.writeString(blocker.toPath, "not a directory")
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Curation.curate(docs, s"$blocker/out", seed = "cur-7", budgetTokens = 256L)
+    }
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("quality gate drops degenerate docs and only those kinds") {
     import spark.implicits._
     val crafted = Seq(
