@@ -7,10 +7,10 @@ import java.sql.Timestamp
 
 /** Structured Streaming operators over the events schema (the streaming
   * surface the reference defers to "future improvements" — README.md:101 —
-  * built Spark-first here): watermarked tumbling-window rollups and
-  * gap-based sessionization via flatMapGroupsWithState.
+  * built Spark-first here): gap-based sessionization, a stream-stream
+  * interval join and windowed heavy hitters.
   *
-  * Both transforms take the streaming DataFrame from any source
+  * The transforms take the streaming DataFrame from any source
   * (readStream on files/kafka, or MemoryStream in tests) — source and sink
   * are the caller's concern, keeping the operators testable and reusable in
   * batch mode (same code path runs on a batch DataFrame).
@@ -28,14 +28,6 @@ import java.sql.Timestamp
   */
 case class SessionBuffer(ts: Seq[Long], value: Seq[Double])
 
-/** Per-user funnel buffer: raw (event-time micros, event type) pairs
-  * awaiting the quiet-gap seal (same rationale as [[SessionBuffer]]: the
-  * funnel's chained minima are order-sensitive, and a late view can
-  * re-qualify earlier clicks, so no fold is final while admissible events
-  * remain possible).
-  */
-case class FunnelBuffer(us: Seq[Long], tpe: Seq[String])
-
 /** Per-window Misra-Gries summary: parallel (key, counter) sequences plus
   * the window's exact row total. At most k = ceil(slack/theta) counters
   * per window — the state bound the frequent-items shape needs (ranking
@@ -51,29 +43,6 @@ object EventStreams {
 
   case class Session(user_id: Long, session_start: Timestamp,
                      session_end: Timestamp, n_events: Int, total_value: Double)
-
-  /** Tumbling 1-hour event-time windows with a watermark for state cleanup:
-    * counts and value sums per (window, event_type). Late events beyond the
-    * watermark are dropped — the streaming contract for bounded state.
-    */
-  def hourlyRollup(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-      .select(col("window.start").as("hour_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-  /** Streaming exact deduplication by event_id with bounded state:
-    * duplicates arriving within the watermark window are dropped, and state
-    * for old ids is evicted once the watermark passes — the streaming twin
-    * of batch dropDuplicates, with the memory bound a 100 TB/day stream
-    * needs.
-    */
-  def dedupEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Gap-based sessionization: a session closes when `gapSeconds` pass with
     * no event from the user (event time). A session is emitted only once
@@ -152,74 +121,6 @@ object EventStreams {
       }
   }
 
-  case class FunnelRow(user_id: Long, view_us: Option[Long],
-                       click_us: Option[Long], purchase_us: Option[Long],
-                       funnel_depth: Int)
-
-  /** Streaming twin of the q_e4 ordered funnel: per user, the earliest
-    * view, the earliest click at-or-after it, and the earliest purchase
-    * at-or-after that — emitted once the user has been quiet for
-    * `quietSeconds` of event time AND the watermark has sealed that quiet
-    * gap, after which no admissible event can change the row (a late view
-    * could otherwise lower `view_us` and re-qualify earlier clicks, so the
-    * chain is only final behind the watermark).
-    *
-    * Raw (micros, type) pairs buffer in state and the batch fold runs at
-    * seal time — bit-identical chaining to the batch query, which is what
-    * the spec pins (stream under full disorder ≡ q_e4's window fold).
-    * State per user is the unsealed event tail, bounded by watermark
-    * delay × per-user rate, evicted on emit.
-    */
-  def funnel(events: Dataset[Event], quietSeconds: Long,
-             watermark: String = "2 hours"): Dataset[FunnelRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    def us(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
-    def foldFunnel(uid: Long, evs: Array[(Long, String)]): FunnelRow = {
-      val view = evs.iterator.filter(_._2 == "view").map(_._1).minOption
-      val click = view.flatMap(v =>
-        evs.iterator.filter(e => e._2 == "click" && e._1 >= v).map(_._1).minOption)
-      val purchase = click.flatMap(c =>
-        evs.iterator.filter(e => e._2 == "purchase" && e._1 >= c).map(_._1).minOption)
-      val depth =
-        if (purchase.isDefined) 3
-        else if (click.isDefined) 2
-        else if (view.isDefined) 1
-        else 0
-      FunnelRow(uid, view, click, purchase, depth)
-    }
-
-    val quietMs = quietSeconds * 1000L
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelBuffer, FunnelRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[FunnelBuffer]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val prior = state.getOption
-            .map(b => b.us.iterator.zip(b.tpe.iterator).toArray)
-            .getOrElse(Array.empty[(Long, String)])
-          val all = (prior ++ batch.map(e => (us(e.ts), e.event_type)))
-            .sortBy(_._1)
-          if (all.isEmpty) {
-            if (state.hasTimedOut) state.remove()
-            Iterator.empty
-          } else {
-            val lastMs = all.last._1 / 1000L
-            if (wm >= lastMs + quietMs) {
-              state.remove()
-              Iterator.single(foldFunnel(uid, all))
-            } else {
-              state.update(FunnelBuffer(all.map(_._1).toSeq, all.map(_._2).toSeq))
-              state.setTimeoutTimestamp(math.max(lastMs + quietMs, wm + 1))
-              Iterator.empty
-            }
-          }
-      }
-  }
-
   /** Stream-stream interval join: pair every click with each view by the
     * same user in the preceding `attributionWindow`. Both inputs carry
     * watermarks and the join condition bounds click_ts relative to view_ts,
@@ -247,46 +148,6 @@ object EventStreams {
         col("view_ts"), col("click_ts"))
   }
 
-  /** Stream-static enrichment: left-join the event stream against a small
-    * static dimension via broadcast hash join. No streaming state at all —
-    * the dimension is (re)broadcast per micro-batch, so dimension updates
-    * between batches are picked up and executor memory holds only the dim.
-    */
-  def enrichEvents(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  /** The counting half of windowed TOP-K over the stream (trending keys):
-    * per tumbling event-time window, the count of EVERY value of `keyCol`.
-    * Built as the watermarked windowed count (state = windows x distinct
-    * keys, evicted on watermark passage, same bound as [[hourlyRollup]])
-    * in APPEND mode — a window's counts emit exactly once, when the
-    * watermark seals it. [[topKOfWindows]] then keeps the k most frequent
-    * per window with a (count DESC, key) tie-break, in the foreachBatch
-    * sink, where the sealed window's frame is tiny (distinct keys of ONE
-    * window). Emitting top-k mid-window would be wrong under disorder: a
-    * late-but-admitted event can reorder ranks until the seal, which is
-    * why the rank runs on sealed windows only.
-    */
-  def windowedTopK(events: DataFrame, keyCol: String,
-                   windowLength: String = "1 hour",
-                   watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col(keyCol), col("n"))
-
-  /** The per-sealed-window rank step of [[windowedTopK]] — runs inside
-    * foreachBatch (or as a batch query over the materialized counts).
-    */
-  def topKOfWindows(counts: DataFrame, keyCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("window_start")
-      .orderBy(col("n").desc, col(keyCol))
-    counts.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** One sealed-window frequent-item candidate: the Misra-Gries residual
     * counter is a LOWER bound on the key's true count (decrement steps
     * only ever subtract); `n_total` is the window's exact row count. */
@@ -297,10 +158,10 @@ object EventStreams {
     * Misra-Gries with k = ceil(slack/theta) counters per window inside
     * `flatMapGroupsWithState`, emitted when the watermark seals the
     * window. This is pass 1 of the batch [[graft.operators.HeavyHitters]]
-    * scheme lifted to streams — the frequent-items shape [[windowedTopK]]
-    * does not cover: that aggregation bounds ROWS per window but shuffles
-    * every distinct key; this bounds STATE by k·(open windows) however
-    * large the key universe grows (URLs, n-grams at 100 TB/day).
+    * scheme lifted to streams. A watermarked windowed count would bound
+    * ROWS per window but shuffle every distinct key; this bounds STATE by
+    * k·(open windows) however large the key universe grows (URLs, n-grams
+    * at 100 TB/day).
     *
     * Guarantees (order-insensitive, so full event-time disorder within
     * the watermark changes nothing):
