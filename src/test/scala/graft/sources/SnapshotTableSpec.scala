@@ -200,31 +200,6 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(SnapshotTable.txnOf(t, 3L).contains("batch-2"))
   }
 
-  test("snapshotAvailableNow: streamed arrivals become atomic versioned commits, exactly-once") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val src = tempDir("graft-snap-src")
-    val t = freshTable()
-    val ckpt = tempDir("graft-snap-ckpt")
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("year", org.apache.spark.sql.types.IntegerType),
-      StructField("payload", StringType)))
-    def run(): Unit = graft.streaming.IncrementalIngest.snapshotAvailableNow(
-      spark, src, schema, t, ckpt, partitionCols = Seq("year"))
-    rows(2000, 5, "w1").write.mode("append").json(src)
-    run()
-    assert(SnapshotTable.currentVersion(t).contains(1L))
-    assert(SnapshotTable.readSnapshot(spark, t).count() == 5)
-    rows(2010, 5, "w2").write.mode("append").json(src)
-    run()
-    assert(SnapshotTable.currentVersion(t).contains(2L))
-    assert(SnapshotTable.readSnapshot(spark, t).count() == 10)
-    // the batch-1 snapshot is still the 5-row corpus (ingest time travel)
-    assert(SnapshotTable.readSnapshot(spark, t, Some(1L)).count() == 5)
-    run() // nothing new: no version, no rows
-    assert(SnapshotTable.currentVersion(t).contains(2L))
-    assert(SnapshotTable.readSnapshot(spark, t).count() == 10)
-  }
-
   test("mergeUpsert inserts into a BRAND-NEW partition (pruned read selects zero files)") {
     val t = freshTable()
     val base = (1 to 10).map(i => (i.toLong, 2000, i * 1.0)).toDF("id", "year", "amount")

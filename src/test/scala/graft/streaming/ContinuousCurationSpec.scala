@@ -187,24 +187,15 @@ class ContinuousCurationSpec extends SparkTestBase {
     assert(ContinuousCuration.reconcile(spark, work, 0.7) == ((2L, 0L)))
   }
 
-  test("end-to-end: raw WARC bytes → exactly-once record split → curation wave → versioned corpus") {
+  test("end-to-end: raw WARC bytes → record split → curation wave → versioned corpus") {
     // the full crawl-to-corpus composition: constructed gzip WARC
-    // segments (with the planted seg%7==3 truncations) drain through
-    // warcAvailableNow into a record table, records adapt to documents
+    // segments (with the planted seg%7==3 truncations) split through
+    // WarcIngest.readWarc into records, records adapt to documents
     // (id recovered from the planted URL, payload decoded), and ONE
     // curation wave commits the survivors as an atomic snapshot — then
     // the same adapted documents through the BATCH build must agree.
-    val segs = graft.operators.WarcQueries
-      .plantedSegments(spark, sfDir("0.001")).collect()
-    val srcDir = tempDir("graft-e2e-warc")
-    segs.foreach { case (name, bytes) =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(srcDir, s"$name.warc.gz"), bytes)
-    }
-    val recDir = tempDir("graft-e2e-rec")
-    val ckpt = tempDir("graft-e2e-ckpt")
-    IncrementalIngest.warcAvailableNow(spark, srcDir, recDir, ckpt)
-    val records = spark.read.parquet(recDir)
+    val segs = graft.operators.WarcQueries.plantedSegments(spark, sfDir("0.001"))
+    val records = graft.sources.WarcIngest.readWarc(segs).toDF()
     assert(records.filter(col("malformed") === 1).count() > 0,
       "planted truncations should quarantine")
     val docs = records.filter(col("malformed") === 0)
