@@ -1,9 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import java.sql.DriverManager
-import java.util.Properties
 
 /** Streaming sinks for destinations without a native exactly-once
   * streaming writer. Structured Streaming's contract for such sinks is
@@ -12,76 +9,6 @@ import java.util.Properties
   * twice with the same batchId.
   */
 object StreamSinks {
-
-  /** Idempotent JDBC micro-batch sink: rows are tagged with their batchId,
-    * and each (re)execution first deletes rows the same batchId may have
-    * left behind in a half-finished attempt, then appends. Combined with
-    * the checkpoint's batch tracking this yields exactly-once table
-    * contents across restarts. The delete is a driver-side statement on
-    * the batch-id index; the append is Spark's parallel JDBC writer.
-    *
-    * Use as: `df.writeStream.foreachBatch(StreamSinks.jdbcBatchSink(url, table)).start()`
-    */
-  def jdbcBatchSink(url: String, table: String,
-                    props: Properties = new Properties())
-      : (DataFrame, Long) => Unit = (df, batchId) => {
-    // identifier discipline mirrors Spark's JDBC writer exactly: the table
-    // name goes into SQL verbatim (so case folding matches the CREATE the
-    // writer issued), while COLUMN names are dialect-quoted
-    // (case-sensitive) — an unquoted batch_id would fold to BATCH_ID on
-    // Derby and miss, silently skipping the delete.
-    val qCol = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
-      .quoteIdentifier("batch_id")
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      val st = conn.createStatement()
-      try st.executeUpdate(s"DELETE FROM $table WHERE $qCol = $batchId")
-      catch { case _: java.sql.SQLException => () } // first batch: no table yet
-      finally st.close()
-    } finally conn.close()
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode("append").jdbc(url, table, props)
-  }
-
-  /** Exactly-once tar/WebDataset micro-batch delivery (round 16): each
-    * micro-batch's members commit as a shard set through
-    * [[graft.sources.TarShardIO.writeTxn]] under a batch-id-derived txn
-    * id — a re-executed micro-batch settles as a committed-txn no-op
-    * WITHOUT re-shipping a byte (and a crash between staging and commit
-    * converges to byte-identical shards on replay, the writeTxn
-    * contract), so this sink needs no delete-then-append dance: the
-    * atomic metadata commit IS the idempotence. Consumers stream the
-    * committed union via `readPublished`; half-delivered batches are
-    * invisible. This is the training-data egress shape at 100 TB/day —
-    * curated samples flowing continuously into loader-ready WebDataset
-    * shards with exactly-once semantics end to end (checkpointed source
-    * offsets × idempotent txn commits).
-    *
-    * `df` must carry the [[graft.sources.TarShardIO.writeTxn]] member
-    * columns; `numFiles` is shards PER MICRO-BATCH (route by key stem
-    * upstream to keep sample adjacency within the batch).
-    *
-    * **`txnAppId` is the Delta `txn.appId` discipline and MUST be unique
-    * per (checkpoint location, destination table) pair** — the txn id is
-    * `appId-b<batchId>`, and batch ids are only meaningful within one
-    * checkpoint lifetime. Restarting a query against the same table with
-    * a FRESH checkpoint but a reused appId restarts batch ids at 0, and
-    * every batch whose id was already committed settles as a no-op: NEW
-    * data silently dropped. Tie the appId to the checkpoint (e.g. a hash
-    * of its path, or a per-deployment constant that changes when the
-    * checkpoint does). A per-run random component would be WRONG the
-    * other way — a crash-replayed batch from the SAME checkpoint would
-    * get a new txn id and commit twice.
-    */
-  def tarTxnSink(tableDir: String, numFiles: Int, txnAppId: String,
-                 fileKeyCol: String = "fkey", sortCol: String = "ord",
-                 nameCol: String = "name", payloadCol: String = "payload",
-                 compress: Boolean = false): (DataFrame, Long) => Unit =
-    (df, batchId) => {
-      graft.sources.TarShardIO.writeTxn(df, fileKeyCol, sortCol, nameCol,
-        payloadCol, tableDir, numFiles, s"$txnAppId-b$batchId", compress)
-      ()
-    }
 
   /** Exactly-once streaming ingestion into a [[graft.sources.SnapshotTable]]
     * (r16 VERDICT #3) — the loop-closer: continuous corpus ingestion
@@ -101,11 +28,16 @@ object StreamSinks {
     *    stream feeds the table and the table feeds incremental consumers,
     *    with no at-least-once seam in between.
     *
-    * **`txnAppId` carries the same uniqueness contract as [[tarTxnSink]]**
-    * (Delta's `txn.appId`): unique per (checkpoint location, table) pair,
-    * stable across restarts of the SAME checkpoint — a reused appId with
-    * a fresh checkpoint silently no-ops new data; a per-run random appId
-    * double-commits crash replays.
+    * **`txnAppId` is the Delta `txn.appId` discipline and MUST be unique
+    * per (checkpoint location, table) pair** — the txn id is
+    * `appId-b<batchId>`, and batch ids are only meaningful within one
+    * checkpoint lifetime. Restarting a query against the same table with
+    * a FRESH checkpoint but a reused appId restarts batch ids at 0, and
+    * every batch whose id was already committed settles as a no-op: NEW
+    * data silently dropped. Tie the appId to the checkpoint (e.g. a hash
+    * of its path). A per-run random component would be WRONG the other
+    * way — a crash-replayed batch from the SAME checkpoint would get a
+    * new txn id and commit twice.
     *
     * Use as:
     * `df.writeStream.foreachBatch(StreamSinks.snapshotTxnSink(path, Seq("year"), appId)).option("checkpointLocation", ckpt).start()`

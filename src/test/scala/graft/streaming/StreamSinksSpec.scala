@@ -2,84 +2,12 @@ package graft.streaming
 
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.sql.Timestamp
 
-/** The foreachBatch JDBC sink must deliver each micro-batch exactly once
-  * into the table — including when a batch is re-executed after a
+/** The foreachBatch snapshot sink must deliver each micro-batch exactly
+  * once into the table — including when a batch is re-executed after a
   * failure, which Structured Streaming is allowed to do.
   */
 class StreamSinksSpec extends SparkTestBase {
-
-  import EventStreams.Event
-
-  private def ts(minutes: Long): Timestamp = new Timestamp((1440 + minutes) * 60000L)
-
-  test("micro-batches land in JDBC exactly once, even when re-executed") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val url = s"jdbc:derby:${tempDir("sink-derby")}/db;create=true"
-    val sink = StreamSinks.jdbcBatchSink(url, "events_out")
-
-    val input = MemoryStream[Event]
-    val q = input.toDS().toDF().writeStream.foreachBatch(sink).start()
-    try {
-      input.addData(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(1), 2, "view", 2.0))
-      q.processAllAvailable()
-      input.addData(Event(3, ts(2), 1, "purchase", 3.0))
-      q.processAllAvailable()
-      val read = () => spark.read.jdbc(url, "events_out", new java.util.Properties())
-      assert(read().count() == 3)
-
-      // a failure-replay of batch 1: same batchId, same data — must converge
-      val replay = spark.createDataset(Seq(Event(3, ts(2), 1, "purchase", 3.0))).toDF()
-      sink(replay, 1L)
-      assert(read().count() == 3, "re-executed batch must not duplicate rows")
-      assert(read().select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("tar txn sink: micro-batches commit shards exactly once — replays " +
-       "settle as no-ops, half-delivered batches invisible") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.TarShardIO
-    val table = tempDir("sink-tar") + "/t"
-    def member(id: Long) = (id % 2, id,
-      f"$id%08d.txt", s"doc-$id".getBytes("UTF-8"))
-    val sink = StreamSinks.tarTxnSink(table, numFiles = 2, txnAppId = "cur")
-
-    val input = MemoryStream[Long]
-    val q = input.toDS()
-      .map(member)
-      .toDF("fkey", "ord", "name", "payload")
-      .writeStream.foreachBatch(sink).start()
-    try {
-      input.addData(1L, 2L, 3L)
-      q.processAllAvailable()
-      input.addData(4L, 5L)
-      q.processAllAvailable()
-      def published() = TarShardIO.readPublished(spark, table).collect()
-        .map(e => e.name -> new String(e.payload, "UTF-8")).sorted.toSeq
-      val after2 = published()
-      assert(after2.map(_._2) == (1L to 5L).map(i => s"doc-$i"))
-
-      // failure replay of batch 1 (same batchId, same data): the txn
-      // settles committed — no new shards, catalog byte-stable
-      val catBefore = TarShardIO.publishedShards(spark, table)
-        .collect().map(_.toString).sorted.toSeq
-      val replay = spark.createDataset(Seq(4L, 5L)).map(member)
-        .toDF("fkey", "ord", "name", "payload")
-      sink(replay, 1L)
-      assert(published() == after2, "replayed micro-batch duplicated members")
-      assert(TarShardIO.publishedShards(spark, table)
-        .collect().map(_.toString).sorted.toSeq == catBefore)
-
-      // a NEW batch id appends its own shard set
-      sink(spark.createDataset(Seq(6L)).map(member)
-        .toDF("fkey", "ord", "name", "payload"), 2L)
-      assert(published().map(_._2) == (1L to 6L).map(i => s"doc-$i"))
-    } finally q.stop()
-  }
 
   test("snapshot txn sink: each micro-batch is one atomic versioned " +
        "commit — replays settle as no-ops, refs and followChanges see " +
