@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
   *     table written from 10k tasks without sizing yields millions of tiny
   *     files (listing + open dominate) or a few huge ones (no read
   *     parallelism). Target files in the 100 MB–1 GB range.
-  *
-  * ORC passthroughs mirror the parquet entry points: Spark ships the ORC
-  * datasource in-core, and both formats carry the same pushdown/pruning
-  * contract, so the layout story is format-agnostic.
   */
 object LakeLayout {
 
@@ -97,61 +93,6 @@ object LakeLayout {
       .repartition(nFiles)
       .write.format(format).mode(SaveMode.Overwrite).save(outPath)
     (before, dataFileStats(spark, outPath)._1)
-  }
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
-  /** Z-order curve value for multi-column clustering: each column is
-    * quantile-bucketed into 2^bitsPerCol ranks (cutpoints from a SAMPLED
-    * approxQuantile — no global sort), and the bucket bits are interleaved
-    * so that sorting by the result keeps every participating column
-    * locally dense. A plain sort bounds the min/max range of its leading
-    * column only; z-order bounds ALL of them, so parquet row-group stats
-    * skip data for predicates on any clustered column.
-    */
-  def zorderValue(df: DataFrame, cols: Seq[String],
-                  bitsPerCol: Int = 4): Column = {
-    require(cols.nonEmpty && bitsPerCol >= 1 && cols.size * bitsPerCol <= 60)
-    val nBuckets = 1 << bitsPerCol
-    // sample-based cutpoints: (2^b - 1) inner quantiles per column
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val cuts = df.stat.approxQuantile(cols.toArray, probs, 0.01)
-    val bucketCols = cols.zip(cuts).map { case (c, cut) =>
-      // rank = number of cutpoints <= value (codegen'd comparison chain)
-      cut.foldLeft(lit(0)) { (acc, q) =>
-        acc + when(col(c).cast("double") >= q, 1).otherwise(0)
-      }
-    }
-    // interleave: bit j of column k lands at position j*nCols + k
-    val n = cols.size
-    (0 until bitsPerCol).flatMap { j =>
-      bucketCols.zipWithIndex.map { case (b, k) =>
-        shiftleft(shiftright(b.cast("long").bitwiseAND(lit(1L << j)), j), j * n + k)
-      }
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** Write `df` z-ordered by `cols`: range-partition then sort by the
-    * interleaved curve value, so row groups stay dense in every clustered
-    * column. One shuffle (the range partitioning), stats-based skipping on
-    * every `cols` member at read time.
-    */
-  def writeZOrdered(df: DataFrame, path: String, cols: Seq[String],
-                    bitsPerCol: Int = 4,
-                    numFiles: Int = 0,
-                    format: String = "parquet"): Unit = {
-    val parts = if (numFiles > 0) numFiles
-                else df.sparkSession.sessionState.conf.numShufflePartitions
-    val withZ = df.withColumn("_z", zorderValue(df, cols, bitsPerCol))
-    withZ
-      .repartitionByRange(parts, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.format(format).mode(SaveMode.Overwrite).save(path)
   }
 
   /** MERGE-style CDC apply into a hive-partitioned parquet table: rows in

@@ -102,8 +102,8 @@ object ColStats {
   *    the committer passes `statsCols`; [[readSnapshot]]'s `statsPruning`
   *    skips files whose bounds provably exclude the predicate BEFORE any
   *    Spark scan is planned. Pair with `clusterBy` (range-clustered file
-  *    layout, composable with [[LakeLayout.zorderValue]]) so bounds are
-  *    tight enough to skip.
+  *    layout, on one column or on a z-order curve of several) so bounds
+  *    are tight enough to skip.
   *
   * Reads: the manifest is the unit of PRUNING — partition pruning and
   * stats pruning both select the file subset driver-side (manifest rows
@@ -1134,7 +1134,7 @@ object SnapshotTable {
     * manifest entries (version attr attached later, at manifest compose
     * time). When `statsCols` is nonempty, one read-back pass over the
     * just-written files records per-file min/max bounds; pass `clusterBy`
-    * (e.g. the predicate column, or [[LakeLayout.zorderValue]]) to
+    * (e.g. the predicate column, or a z-order curve of several) to
     * range-cluster rows across files so those bounds are tight enough to
     * skip.
     *

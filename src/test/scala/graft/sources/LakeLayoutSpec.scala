@@ -5,21 +5,13 @@ import graft.operators.SimilaritySearch
 import org.apache.spark.sql.functions._
 
 /** Layout-on-disk checks: hive-style partition directories must prune at
-  * the scan (the plan reads fewer partitions, not just fewer rows), ORC
-  * round-trips losslessly, and the on-disk IVF index prunes unprobed
-  * inverted lists at the directory level.
+  * the scan (the plan reads fewer partitions, not just fewer rows), and
+  * the on-disk IVF index prunes unprobed inverted lists at the directory
+  * level.
   */
 class LakeLayoutSpec extends SparkTestBase {
 
   private lazy val li = spark.read.parquet(sfDir("0.001") + "/lineitem.parquet")
-
-  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-    df.collect()
-    val full = df.queryExecution.executedPlan.toString
-    val start = full.indexOf("== Final Plan ==")
-    val end = full.indexOf("== Initial Plan ==")
-    if (start >= 0 && end > start) full.substring(start, end) else full
-  }
 
   test("writePartitioned creates partition dirs and the scan prunes them") {
     val path = tempDir("lake") + "/li"
@@ -89,59 +81,6 @@ class LakeLayoutSpec extends SparkTestBase {
     assert(rows.length == 3)
     assert(rows(0).isNullAt(rows(0).fieldIndex("b")), "old rows surface NULL for new columns")
     assert(rows(2).getDouble(rows(2).fieldIndex("b")) == 9.5)
-  }
-
-  test("ORC round-trip is lossless and pushes filters") {
-    val path = tempDir("lake") + "/orc"
-    LakeLayout.writeOrc(li.select("l_orderkey", "l_linenumber", "l_quantity"), path)
-    val back = LakeLayout.readOrc(spark, path)
-    val a = li.select("l_orderkey", "l_linenumber", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber").collect().toSeq
-    val b = back.orderBy("l_orderkey", "l_linenumber").collect().toSeq
-    assert(a == b, "ORC round-trip diverged")
-    val p = finalPlan(back.filter(col("l_quantity") > 45).select("l_orderkey"))
-    assert(p.contains("PushedFilters: [IsNotNull(l_quantity)"),
-      s"ORC scan did not push filters:\n$p")
-  }
-
-  test("z-order bounds per-file spread on BOTH columns; plain sort only on one") {
-    import spark.implicits._
-    // two independent uniform dims: a linear sort cannot be dense in both
-    val n = 1 << 14
-    val rnd = new scala.util.Random(11)
-    val df = (0 until n).map(_ => (rnd.nextInt(1 << 16), rnd.nextInt(1 << 16)))
-      .toDF("x", "y").repartition(8)
-    val root = tempDir("zorder")
-
-    // skipping power per dimension: fraction of files whose [min,max]
-    // range for that column a random point predicate fails to rule out —
-    // the quantity file/row-group stats pruning actually uses
-    def touchFraction(path: String, c: String): Double = {
-      val boxes = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col(c)).as("lo"), max(col(c)).as("hi"))
-        .collect().map(r => (r.getInt(1), r.getInt(2)))
-      val probes = (0 until 200).map(_ => rnd.nextInt(1 << 16))
-      probes.map(p =>
-        boxes.count { case (lo, hi) => p >= lo && p <= hi }.toDouble / boxes.length
-      ).sum / probes.size
-    }
-
-    LakeLayout.writeZOrdered(df, s"$root/z", Seq("x", "y"),
-      bitsPerCol = 4, numFiles = 32)
-    df.repartitionByRange(32, col("x"))
-      .sortWithinPartitions("x")
-      .write.parquet(s"$root/linear")
-
-    assert(spark.read.parquet(s"$root/z").count() == n)
-    // the linear sort is laser-precise on its leading column but BLIND on
-    // the other: a y predicate reads every file
-    assert(touchFraction(s"$root/linear", "x") < 0.1)
-    assert(touchFraction(s"$root/linear", "y") > 0.9)
-    // the curve bounds BOTH dimensions — each predicate skips most files
-    val zx = touchFraction(s"$root/z", "x")
-    val zy = touchFraction(s"$root/z", "y")
-    assert(zx < 0.5 && zy < 0.5, s"z-order touch fractions: x=$zx y=$zy")
   }
 
   test("on-disk IVF prunes unprobed inverted lists at the directory level") {

@@ -581,7 +581,7 @@ class SnapshotTableSpec extends SparkTestBase {
       val y = (i * 40503 % 4096).toInt
       (i.toLong, x, y)
     }.toDF("id", "x", "y")
-    val z = LakeLayout.zorderValue(df, Seq("x", "y"), bitsPerCol = 4)
+    val z = ZOrder.value(df, Seq("x", "y"), bitsPerCol = 4)
     SnapshotTable.commitOverwrite(df, t, Nil, filesPerPartition = 16,
       clusterBy = Seq(z), statsCols = Seq("x", "y"))
     val entries = SnapshotTable.manifest(t, None)
