@@ -83,43 +83,6 @@ object Multimodal {
       .as[MediaRecord]
   }
 
-  /** Raw-file ingestion: read a directory of media blobs as binary rows via
-    * Spark's `binaryFile` source (path, modificationTime, length, content).
-    * This is how real image/audio/video corpora enter the engine — each
-    * file becomes one row, read distributed, payloads never on the driver.
-    * `maxBytes` guards against a stray huge blob blowing an executor.
-    */
-  def readBinaryFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      glob: String = "*", maxBytes: Long = 64L << 20): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .filter(col("length") <= maxBytes)
-
-  private val KindByExt = Map(
-    "jpg" -> "image", "jpeg" -> "image", "png" -> "image",
-    "wav" -> "audio", "mp3" -> "audio", "flac" -> "audio",
-    "mp4" -> "video", "mkv" -> "video", "webm" -> "video")
-
-  /** Lift a binaryFile frame into the typed media table: media_id is the
-    * xxhash64 of the file path (stable across re-ingestion), kind inferred
-    * from the extension, unknown extensions dropped.
-    */
-  def mediaFromFiles(files: DataFrame): Dataset[MediaRecord] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val kindExpr = KindByExt.foldLeft(lit(null).cast("string")) {
-      case (acc, (ext, kind)) =>
-        when(lower(col("path")).endsWith("." + ext), kind).otherwise(acc)
-    }
-    files.select(
-      xxhash64(col("path")).as("media_id"),
-      kindExpr.as("kind"),
-      col("content").as("payload"))
-      .filter(col("kind").isNotNull)
-      .as[MediaRecord]
-  }
-
   /** Decode + feature-extract: one partition-preserving typed pass; batch
     * shape (iterator-in/iterator-out per partition) is exactly where a
     * vectorized/native decoder would batch its calls.
@@ -238,19 +201,6 @@ object Multimodal {
       .withColumn("align6", expr(alignmentScore6("media_feats", "caption_feats")))
       .withColumn("aligned", (col("align6") >= floor6).cast("int"))
       .select("media_id", "caption_chars", "align6", "aligned")
-
-  /** "Resize": renormalize a feature vector to a new width by linear
-    * bucket re-averaging — the plumbing twin of image resizing.
-    */
-  def resizeFeatures(features: Dataset[MediaFeatures], newDim: Int): DataFrame = {
-    features.toDF().withColumn("features",
-      expr(
-        s"""transform(sequence(0, ${newDim - 1}), i ->
-           |  aggregate(slice(features, CAST(i * size(features) / $newDim AS INT) + 1,
-           |                  greatest(1, CAST(size(features) / $newDim AS INT))),
-           |            CAST(0.0 AS DOUBLE), (acc, x) -> acc + x,
-           |            acc -> CAST(acc / greatest(1, CAST(size(features) / $newDim AS INT)) AS FLOAT)))""".stripMargin))
-  }
 
   /** One voice-activity segment of [[pcmVad]]: consecutive speech frames
     * merged, with the EXACT integer energy mass (sum over the segment's

@@ -18,32 +18,6 @@ class MultimodalSpec extends SparkTestBase {
       again.map(m => m.media_id -> m.kind).toMap)
   }
 
-  test("binaryFile ingestion: raw files become typed media rows, payloads intact") {
-    import java.nio.file.Files
-    val dir = java.nio.file.Paths.get(tempDir("mediafiles"))
-    val blobs = Map("a.jpg" -> Array[Byte](1, 2, 3, 4),
-      "b.wav" -> Array[Byte](9, 8), "c.mp4" -> Array[Byte](5, 5, 5),
-      "notes.txt" -> Array[Byte](7)) // unknown extension: dropped
-    blobs.foreach { case (name, bytes) =>
-      Files.write(dir.resolve(name), bytes)
-    }
-    val media = Multimodal.mediaFromFiles(
-      Multimodal.readBinaryFiles(spark, dir.toString)).collect()
-    assert(media.length == 3, "unknown extension should be dropped")
-    assert(media.map(_.kind).sorted.toSeq == Seq("audio", "image", "video"))
-    // payload bytes round-trip exactly
-    val byKind = media.map(m => m.kind -> m.payload.toSeq).toMap
-    assert(byKind("image") == Seq[Byte](1, 2, 3, 4))
-    assert(byKind("audio") == Seq[Byte](9, 8))
-    // stable ids across re-ingestion of the same paths
-    val again = Multimodal.mediaFromFiles(
-      Multimodal.readBinaryFiles(spark, dir.toString)).collect()
-    assert(media.map(_.media_id).sorted.toSeq == again.map(_.media_id).sorted.toSeq)
-    // size guard drops oversized blobs (b.wav 2B + notes.txt 1B survive)
-    val small = Multimodal.readBinaryFiles(spark, dir.toString, maxBytes = 2)
-    assert(small.count() == 2)
-  }
-
   test("decodeFeatures yields fixed-width normalized vectors and metadata") {
     val feats = Multimodal.decodeFeatures(
       Multimodal.mediaFromDocuments(docs), dim = 16).collect()
@@ -62,12 +36,6 @@ class MultimodalSpec extends SparkTestBase {
       assert(fs.map(_.frame_idx).sorted.toSeq == Seq(0, 1, 2, 3))
       assert(fs.forall(_.frame_bytes.length <= 32))
     }
-  }
-
-  test("resizeFeatures halves the vector width") {
-    val feats = Multimodal.decodeFeatures(Multimodal.mediaFromDocuments(docs), dim = 16)
-    val resized = Multimodal.resizeFeatures(feats, 8).collect()
-    assert(resized.forall(_.getAs[Seq[Float]]("features").length == 8))
   }
 
   test("caption alignment: matched captions keep, planted misaligned pairs drop") {
