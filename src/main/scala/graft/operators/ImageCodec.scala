@@ -87,10 +87,11 @@ object ImageCodec {
     } catch { case scala.util.control.NonFatal(_) => null }
 
   /** The stub-contract gray feature vector of a decoded image: BT.601
-    * integer luma per pixel, position-mod-dim bucket means, /255 at the
-    * edge — the ONE copy of the math `grayFeatures` and
-    * `imageCaptionPairs` share (the q_m10 oracle leans on the two paths
-    * staying bit-identical). */
+    * integer luma per pixel (for r=g=b images exactly the channel byte),
+    * position-mod-dim bucket means, /255 at the edge, in the stub's exact
+    * float32 arithmetic. An image whose pixels are a byte stream features
+    * exactly like [[Multimodal.StubCodec.features]] over that stream —
+    * q_m10's oracle leans on this. */
   private def grayVector(img: java.awt.image.BufferedImage, dim: Int): Array[Float] = {
     val w = img.getWidth
     val h = img.getHeight
@@ -120,27 +121,17 @@ object ImageCodec {
     out
   }
 
-  private[operators] def decodeOne(id: Long, payload: Array[Byte],
-                                   gridW: Int, gridH: Int): DecodedImage =
-    decodeWithOrientation(id, payload, gridW, gridH, orientation = 1)
-
   /** The ONE luma-grid kernel (r14 review: two copies of the BT.601 /
     * binning arithmetic would have to stay bit-identical for hashes to
-    * compare across decode paths). `orientation` 1 keeps the hoisted
-    * fast row loop; 2-8 remap each pixel into display coordinates. */
-  private def decodeWithOrientation(id: Long, payload: Array[Byte],
-                                    gridW: Int, gridH: Int,
-                                    orientation: Int): DecodedImage = {
+    * compare across decode paths). */
+  private[operators] def decodeOne(id: Long, payload: Array[Byte],
+                                   gridW: Int, gridH: Int): DecodedImage = {
     val img = decode(payload)
     if (img == null)
       return DecodedImage(id, decoded = false, 0, 0,
         Array.empty[Long], Array.empty[Int], 0L, 0L)
-    val o = if (orientation >= 1 && orientation <= 8) orientation else 1
     val w = img.getWidth
     val h = img.getHeight
-    val swap = o >= 5
-    val dw = if (swap) h else w
-    val dh = if (swap) w else h
     val grid = new Array[Long](gridW * gridH)
     val gridN = new Array[Int](gridW * gridH)
     // bulk ARGB fetch: one row at a time keeps the buffer row-sized for
@@ -149,66 +140,21 @@ object ImageCodec {
     var y = 0
     while (y < h) {
       img.getRGB(0, y, w, 1, row, 0, w)
-      val gy = y * gridH / h // hoisted for the dominant o = 1 case
+      val gy = y * gridH / h
       var x = 0
       while (x < w) {
         val p = row(x)
         val luma1000 = 299 * ((p >> 16) & 0xff) + 587 * ((p >> 8) & 0xff) +
           114 * (p & 0xff)
-        val cell =
-          if (o == 1) gy * gridW + x * gridW / w
-          else {
-            var dx = x
-            var dy = y
-            o match {
-              case 2 => dx = w - 1 - x
-              case 3 => dx = w - 1 - x; dy = h - 1 - y
-              case 4 => dy = h - 1 - y
-              case 5 => dx = y; dy = x
-              case 6 => dx = h - 1 - y; dy = x
-              case 7 => dx = h - 1 - y; dy = w - 1 - x
-              case _ => dx = y; dy = w - 1 - x // 8
-            }
-            (dy * gridH / dh) * gridW + dx * gridW / dw
-          }
+        val cell = gy * gridW + x * gridW / w
         grid(cell) += luma1000
         gridN(cell) += 1
         x += 1
       }
       y += 1
     }
-    DecodedImage(id, decoded = true, dw, dh, grid, gridN,
+    DecodedImage(id, decoded = true, w, h, grid, gridN,
       ahash(grid, gridN), dhash(grid, gridN, gridW))
-  }
-
-  /** [[decodeImages]] composed with the EXIF orientation tag
-    * ([[Multimodal.exifOrientation]]): pixels are binned into the grid
-    * in DISPLAY orientation (the 8 JEITA CP-3451 cases — rotations,
-    * mirrors, and transposes), so two captures of the same scene that
-    * differ only in stored orientation hash TOGETHER — without this, a
-    * rotated duplicate never collides on aHash/dHash. width/height
-    * report display dims; payloads without EXIF (BMP/PNG) or with an
-    * unparseable container decode identity, never fail. */
-  def decodeImagesOriented(df: DataFrame, idCol: String, payloadCol: String,
-                           gridW: Int = 8, gridH: Int = 8): Dataset[DecodedImage] = {
-    require(gridW >= 1 && gridH >= 1 && gridW * gridH <= 64,
-      s"grid must have 1..64 cells for a LONG aHash, got ${gridW}x$gridH")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        decodeOneOriented(id, payload, gridW, gridH)
-      })
-  }
-
-  private[operators] def decodeOneOriented(id: Long, payload: Array[Byte],
-                                           gridW: Int, gridH: Int): DecodedImage = {
-    // the EXIF walk is payload-local and cheap next to the image decode;
-    // absent/unparseable orientation decodes identity, never fails
-    val o = Multimodal.exifOrientation(payload)
-    decodeWithOrientation(id, payload, gridW, gridH,
-      if (o >= 1 && o <= 8) o else 1)
   }
 
   /** aHash over an already-computed luma grid: bit i set iff cell i's mean
@@ -250,35 +196,11 @@ object ImageCodec {
     bits
   }
 
-  /** [[Multimodal.StubCodec.features]]-COMPATIBLE feature vector from REAL
-    * decoded pixels: gray value per pixel (integer `luma1000 / 1000` — for
-    * r=g=b images exactly the channel byte), bucketed by raster position
-    * `p % dim`, mean per bucket / 255 with the stub's exact float32
-    * arithmetic (integer sums < 2^24 are float-exact; the two divisions
-    * replay bit-for-bit in any engine's FLOAT). An image whose pixels are
-    * a byte stream therefore features EXACTLY like the stub over that
-    * stream — q_m10's oracle leans on this. */
-  def grayFeatures(df: DataFrame, idCol: String, payloadCol: String,
-                   dim: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          val img = decode(payload)
-          if (img == null) (id, false, new Array[Float](dim))
-          else (id, true, grayVector(img, dim))
-        }
-      }
-      .toDF("media_id", "decoded", "media_feats")
-  }
-
   /** REAL-pixel caption alignment pairs (the [[Multimodal
     * .captionFeaturePairs]] twin with the image side decoded, not
     * stubbed): ONE partition-preserving typed pass computes the media
-    * features from `ImageIO`-decoded pixels ([[grayFeatures]] math) and
-    * the caption features from [[Multimodal.StubCodec]] over the caption
+    * features from `ImageIO`-decoded pixels (`grayVector`) and the
+    * caption features from [[Multimodal.StubCodec]] over the caption
     * bytes — payloads and captions never shuffle, and
     * [[Multimodal.alignmentScore6]] scores the pair row-locally
     * downstream. Undecodable payloads feature as zero vectors (centered

@@ -1254,14 +1254,6 @@ object Multimodal {
     }
   }
 
-  /** Orientation tag of a payload's EXIF, 1..8, or -1 when the tag (or
-    * a parseable container) is absent — the row-local hook
-    * [[ImageCodec.decodeImagesOriented]] composes with the pixel decode
-    * so perceptual hashes are computed in DISPLAY orientation. */
-  private[operators] def exifOrientation(payload: Array[Byte]): Int =
-    exifWalk(if (payload == null) Array.emptyByteArray else payload)
-      .map(_.orientation).getOrElse(-1)
-
   /** One image after GPS stripping: the (possibly rewritten) payload plus
     * the governance verdict. `gps_stripped` = a GPS IFD was found and
     * surgically zeroed; invalid containers pass through UNTOUCHED with

@@ -329,10 +329,11 @@ object MultimodalQueries {
     // byte (p mod plen) of the prefix); the caption is that same prefix,
     // except every 6th doc takes the REVERSED prefix (the planted
     // misalignment). Decoded-gray bucket profiles of a byte-stream image
-    // equal the stub text profile of the stream (ImageCodec.grayFeatures
-    // contract), so an aligned pair with plen = 96 scores centered
-    // cosine EXACTLY 1 — and any decode defect (row order, BGR, luma)
-    // breaks that equality against the oracle's analytic replay.
+    // equal the stub text profile of the stream (the gray-vector
+    // contract of ImageCodec.imageCaptionPairs), so an aligned pair with
+    // plen = 96 scores centered cosine EXACTLY 1 — and any decode defect
+    // (row order, BGR, luma) breaks that equality against the oracle's
+    // analytic replay.
     "q_m10_image_caption_align" -> ((s, dir) => {
       import s.implicits._
       val d = Tables.read(s, dir, "documents")
@@ -1129,7 +1130,7 @@ object MultimodalQueries {
         |ORDER BY keeper""".stripMargin,
 
     // replays the prefix-cycled 96-pixel image profile (6 pixels per
-    // bucket, the grayFeatures float32 divisions), the stub caption
+    // bucket, the gray-vector float32 divisions), the stub caption
     // profile, and the q_m6 centered-cosine/floor machinery
     "q_m10_image_caption_align" ->
       """WITH d AS (

@@ -106,86 +106,6 @@ class ExifSpec extends SparkTestBase {
       java.util.Arrays.equals(again.payload, out(1L).payload))
   }
 
-  test("oriented decode: EXIF orientation rotates the grid; hashes collide across orientations") {
-    // a 32x16 gradient image written as REAL JPEG, EXIF spliced after SOI
-    val img = new java.awt.image.BufferedImage(32, 16,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 16; x <- 0 until 32) {
-      val v = (x * 8 + y * 2) & 0xff
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val jpegOut = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", jpegOut)
-    val jpeg = jpegOut.toByteArray
-    assert((jpeg(0) & 0xff) == 0xff && (jpeg(1) & 0xff) == 0xd8)
-    def withOrientation(o: Int): Array[Byte] = {
-      val tiff = Multimodal.tiffExif(little = true, o, dt, None)
-      val app1 = java.nio.ByteBuffer.allocate(4 + 6 + tiff.length)
-      app1.put(0xff.toByte).put(0xe1.toByte)
-        .putShort((2 + 6 + tiff.length).toShort)
-        .put("Exif".getBytes("US-ASCII")).put(0.toByte).put(0.toByte)
-        .put(tiff)
-      jpeg.take(2) ++ app1.array() ++ jpeg.drop(2)
-    }
-    def gridsOf(payloads: (Long, Array[Byte])*): Map[Long, ImageCodec.DecodedImage] =
-      ImageCodec.decodeImagesOriented(
-          payloads.toSeq.toDF("id", "payload"), "id", "payload")
-        .collect().map(d => d.media_id -> d).toMap
-    val base = ImageCodec.decodeImages(
-        Seq((0L, jpeg)).toDF("id", "payload"), "id", "payload").head()
-    val got = gridsOf((1L, withOrientation(1)), (3L, withOrientation(3)),
-      (6L, withOrientation(6)), (2L, withOrientation(2)))
-    // orientation 1 ≡ the plain decode (and BMP/no-EXIF payloads too)
-    assert(got(1L).grid.toSeq == base.grid.toSeq &&
-      got(1L).width == 32 && got(1L).height == 16)
-    // 32x16 divides the 8x8 grid evenly both ways, so binning commutes
-    // with the pixel remap EXACTLY: oriented grids are permutations of
-    // the base grid (same luma sums, regrouped losslessly)
-    def cell(g: Array[Long], r: Int, c: Int) = g(r * 8 + c)
-    for (r <- 0 until 8; c <- 0 until 8) {
-      assert(cell(got(3L).grid, r, c) == cell(base.grid, 7 - r, 7 - c),
-        s"180° mismatch at ($r,$c)") // rotate 180
-      assert(cell(got(2L).grid, r, c) == cell(base.grid, r, 7 - c),
-        s"mirror mismatch at ($r,$c)") // horizontal mirror
-      assert(cell(got(6L).grid, r, c) == cell(base.grid, 7 - c, r),
-        s"90°CW mismatch at ($r,$c)") // rotate 90 CW
-    }
-    assert(got(6L).width == 16 && got(6L).height == 32, "display dims swap")
-    // the governance payoff: a camera that stored the scene PHYSICALLY
-    // rotated (pixels 90°CCW in file, tag o=6 saying "rotate back")
-    // hashes WITH the upright capture once decode honors the tag — and
-    // provably not without. Stored(x, y) = display(31-y, x), 16x32.
-    val stored = new java.awt.image.BufferedImage(16, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 16)
-      stored.setRGB(x, y, img.getRGB(31 - y, x))
-    val storedOut = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(stored, "jpg", storedOut)
-    val storedTagged = {
-      val sj = storedOut.toByteArray
-      val tiff = Multimodal.tiffExif(little = true, 6, dt, None)
-      val app1 = java.nio.ByteBuffer.allocate(4 + 6 + tiff.length)
-      app1.put(0xff.toByte).put(0xe1.toByte)
-        .putShort((2 + 6 + tiff.length).toShort)
-        .put("Exif".getBytes("US-ASCII")).put(0.toByte).put(0.toByte)
-        .put(tiff)
-      sj.take(2) ++ app1.array() ++ sj.drop(2)
-    }
-    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    val orientedRot = gridsOf((11L, storedTagged))(11L)
-    val naiveRot = ImageCodec.decodeImages(
-        Seq((12L, storedTagged)).toDF("id", "payload"), "id", "payload").head()
-    assert(orientedRot.width == 32 && orientedRot.height == 16)
-    // two separate JPEG encodes drift a little, so the collision bound is
-    // perceptual (the ImageCodecSpec JPEG-drift discipline), but honoring
-    // the tag must land FAR closer to the upright hash than ignoring it
-    val dOriented = hamming(orientedRot.ahash, base.ahash)
-    val dNaive = hamming(naiveRot.ahash, base.ahash)
-    assert(dOriented <= 4, s"oriented decode drifted $dOriented bits")
-    assert(dNaive > dOriented + 8,
-      s"naive=$dNaive oriented=$dOriented — orientation must matter on this gradient")
-  }
-
   test("curation gate counts stripped files (exifGpsStrip beside the PII redaction)") {
     val docs = (0 until 30).map { i =>
       val payload =

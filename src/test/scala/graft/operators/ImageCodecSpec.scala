@@ -116,19 +116,6 @@ class ImageCodecSpec extends SparkTestBase {
     assert(got == Map(1L -> false, 2L -> false, 3L -> false, 4L -> true, 5L -> false))
   }
 
-  test("grayFeatures over a byte-stream image equals StubCodec over the stream (q_m10 contract)") {
-    val bytes = "the quick brown fox jumps over the lazy dog, twice over."
-      .getBytes("UTF-8") // 56 bytes
-    val px = bytes.map(_ & 0xff)
-    val bmp = ImageCodec.grayBmp(8, 7, px.toArray) // 56 pixels, raster order
-    val got = ImageCodec.grayFeatures(
-        Seq((1L, bmp)).toDF("id", "payload"), "id", "payload", dim = 16)
-      .select("media_feats").as[Array[Float]].head()
-    val want = Multimodal.StubCodec.features(bytes, 16)
-    assert(got.toSeq == want.toSeq,
-      "decoded-gray bucket profile must equal the stub profile of the byte stream")
-  }
-
   test("perceptual duplicates: in-cell pixel swaps preserve aHash/dHash while bytes differ") {
     val base = Array.tabulate(256)(p => ((p % 16) * 7 + (p / 16) * 13 + 5) % 256)
     val swapped = Array.tabulate(256) { p =>
