@@ -1356,57 +1356,6 @@ object Dedup {
       .withColumn("island", col("island").cast("int"))
   }
 
-  /** The PERSISTABLE substring-dedup index state: corpus-wide window-key
-    * counts (gkey, n_sites) at a fixed k — write it once per corpus (at
-    * rest it is a two-column table a lake partitions by gkey range), and
-    * each incoming batch joins against it instead of re-scanning history.
-    * Merge a batch in with [[mergeWindowCountIndex]].
-    */
-  def windowCountIndex(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int, family: String = "xx64"): DataFrame =
-    windowSites(wordsFrame(docs, idCol, textCol), k, family)
-      .groupBy("gkey").agg(count(lit(1)).as("n_sites"))
-
-  /** The refreshed index after a batch lands: per-key sum of stored and
-    * batch counts — one map-side-combined aggregate over index ∪ batch,
-    * O(index keys + batch), associative so arbitrary batch orderings
-    * converge to the same table.
-    */
-  def mergeWindowCountIndex(index: DataFrame, newDocs: DataFrame,
-                            idCol: String, textCol: String, k: Int,
-                            family: String = "xx64"): DataFrame =
-    index.unionByName(windowCountIndex(newDocs, idCol, textCol, k, family))
-      .groupBy("gkey").agg(sum("n_sites").as("n_sites"))
-
-  /** Incremental substring dedup: duplicated spans in a NEW batch, where a
-    * window counts as duplicated when its sites across the stored
-    * [[windowCountIndex]] PLUS the batch reach `minSites` — the
-    * continuous-ingestion shape that keeps span detection O(batch): the
-    * corpus participates only through one equi-join on its already-counted
-    * window keys. Same one-sided contract as [[incrementalNearDuplicates]]:
-    * spans the batch newly creates inside OLD documents are not re-emitted
-    * (re-scrub history on the next full build, or feed old docs back as a
-    * batch). For batch docs the output EQUALS the full-corpus
-    * [[duplicatedSpans]] restricted to batch ids (spec-asserted through a
-    * parquet round-trip of the index).
-    */
-  def incrementalDuplicatedSpans(newDocs: DataFrame, index: DataFrame,
-                                 idCol: String, textCol: String, k: Int,
-                                 minSites: Int = 2,
-                                 family: String = "xx64"): DataFrame = {
-    val w = wordsFrame(newDocs, idCol, textCol)
-    val sites = windowSites(w, k, family).persist()
-    try {
-      val dupKeys = sites.groupBy("gkey").agg(count(lit(1)).as("n_new"))
-        .join(index.withColumnRenamed("n_sites", "n_old"), Seq("gkey"), "left")
-        .where(col("n_new") + coalesce(col("n_old"), lit(0L)) >= minSites)
-        .select("gkey")
-      val dupSites = sites.join(dupKeys, Seq("gkey"), "left_semi")
-        .select("id", "pos")
-      spansFromDupSites(dupSites, w, k).pipe(materialize)
-    } finally sites.unpersist()
-  }
-
   /** The corpus AFTER substring dedup: drop every word covered by a
     * duplicated length-`k` window (see [[duplicatedSpans]]) and reassemble
     * the remainder — the "cut the duplicated span out of every copy"

@@ -28,10 +28,9 @@ class EdgeCasesSpec extends SparkTestBase {
   }
 
   test("substring-dedup family on empty, single-doc, and null-free degenerate input") {
-    // empty corpus: no spans, no scrub rows, empty index, no overlap
+    // empty corpus: no spans, no scrub rows, no overlap
     assert(Dedup.duplicatedSpans(emptyDocs, "doc_id", "text", k = 5).count() == 0)
     assert(Dedup.scrubDuplicatedSpans(emptyDocs, "doc_id", "text", k = 5).count() == 0)
-    assert(Dedup.windowCountIndex(emptyDocs, "doc_id", "text", k = 5).count() == 0)
     assert(Dedup.crossCorpusWindowOverlap(emptyDocs, "doc_id", "text",
       emptyDocs.selectExpr("doc_id AS bench_id", "text AS btext"),
       "bench_id", "btext", k = 5).count() == 0)
@@ -44,17 +43,6 @@ class EdgeCasesSpec extends SparkTestBase {
     // empty-text doc flows through scrub (the sequence-descend regression)
     val withEmpty = Seq((1L, ""), (2L, "x y z")).toDF("doc_id", "text")
     assert(Dedup.scrubDuplicatedSpans(withEmpty, "doc_id", "text", k = 2).count() == 2)
-    // incremental against an empty index equals batch-only detection
-    val batch = Seq(
-      (10L, "p q r s t u p q r s t u"),
-      (11L, "unrelated words here entirely")).toDF("doc_id", "text")
-    val incr = Dedup.incrementalDuplicatedSpans(batch,
-      Dedup.windowCountIndex(emptyDocs, "doc_id", "text", k = 3),
-      "doc_id", "text", k = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(2), r.getInt(3))).toSet
-    val full = Dedup.duplicatedSpans(batch, "doc_id", "text", k = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(2), r.getInt(3))).toSet
-    assert(incr == full && incr.nonEmpty)
     // invalid window length fails loudly
     intercept[IllegalArgumentException] {
       Dedup.duplicatedSpans(one, "doc_id", "text", k = 1)

@@ -160,32 +160,4 @@ class SubstringDedupSpec extends SparkTestBase {
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"), plan.take(2000))
   }
-
-  test("incremental spans vs stored index equal the full-batch spans on batch docs") {
-    val docs = spark.read.parquet(sfDir("0.001") + "/documents.parquet")
-    val k = 5
-    val old = docs.filter(col("doc_id") < 300)
-    val fresh = docs.filter(col("doc_id") >= 300)
-    // persist the index state through an actual parquet round-trip
-    val dir = tempDir("graft-grams") + "/idx"
-    Dedup.windowCountIndex(old, "doc_id", "text", k).write.parquet(dir)
-    val index = spark.read.parquet(dir)
-
-    val inc = Dedup.incrementalDuplicatedSpans(fresh, index, "doc_id", "text", k)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getInt(4), r.getString(5))).toSet
-    val full = Dedup.duplicatedSpans(docs, "doc_id", "text", k)
-      .filter(col("id") >= 300)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getInt(4), r.getString(5))).toSet
-    assert(inc == full)
-    assert(inc.nonEmpty, "batch should contain duplicated spans")
-
-    // the merged index equals a from-scratch index over the whole corpus
-    val merged = Dedup.mergeWindowCountIndex(index, fresh, "doc_id", "text", k)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val scratch = Dedup.windowCountIndex(docs, "doc_id", "text", k)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(merged == scratch)
-  }
 }
