@@ -186,19 +186,6 @@ object Pipeline {
       .drop("_cap")
   }
 
-  /** Deterministic corpus shuffle for training-order writes: range-partition
-    * on the shuffle key, sort within partitions. File j then holds the j-th
-    * contiguous slice of the global shuffled order — a total order across
-    * files WITHOUT a global sort bottleneck (range exchange + local sorts),
-    * which is how a 100 TB corpus gets written in training order.
-    */
-  def deterministicShuffle(df: DataFrame, idCol: String, seed: String,
-                           numPartitions: Int): DataFrame =
-    df.withColumn("_shuffle_key", shuffleKey(col(idCol), seed))
-      .repartitionByRange(numPartitions, col("_shuffle_key"))
-      .sortWithinPartitions("_shuffle_key")
-      .drop("_shuffle_key")
-
   /** Streaming sequence packing: within each group (shard), walk rows in
     * `orderCol` order and assign row r to bin floor(tokens_before_r /
     * budget). This is the standard one-pass distributed approximation of

@@ -33,9 +33,7 @@ object PipelineQueries {
         .orderBy("split", "lang")),
 
     // Deterministic corpus shuffle: seed-keyed md5 defines the training
-    // order; first 100 docs of the permutation. The write path is
-    // Pipeline.deterministicShuffle (range exchange + local sorts — no
-    // global sort); here the top-k prefix doubles as its oracle check.
+    // order; first 100 docs of the permutation.
     "q_sp2_det_shuffle" -> ((s, dir) =>
       docs(s, dir)
         .select(Pipeline.shuffleKey(col("doc_id"), shuffleSeed).as("shuffle_key"),

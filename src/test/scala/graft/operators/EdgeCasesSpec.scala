@@ -74,7 +74,6 @@ class EdgeCasesSpec extends SparkTestBase {
     assert(Pipeline.stratifiedSample(emptyDocs, "text", "doc_id", "s",
       Map("en" -> 0.5)).count() == 0)
     assert(Pipeline.capPerGroup(emptyDocs, "text", Seq(col("doc_id")), 5).count() == 0)
-    assert(Pipeline.deterministicShuffle(emptyDocs, "doc_id", "s", 3).count() == 0)
     val one = Seq((1L, "solo doc text")).toDF("doc_id", "text")
     assert(Pipeline.hashSplit(one, "doc_id", "s", fr).count() == 1)
     assert(Pipeline.capPerGroup(one, "text", Seq(col("doc_id")), 5).count() == 1)

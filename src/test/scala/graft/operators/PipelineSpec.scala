@@ -4,9 +4,8 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Properties of the corpus-preparation operators that the DuckDB oracles
-  * can't express: split stability under corpus growth, the cross-partition
-  * total order of the deterministic shuffle, and the packing overflow
-  * bound.
+  * can't express: split stability under corpus growth and the packing
+  * overflow bound.
   */
 class PipelineSpec extends SparkTestBase {
 
@@ -40,23 +39,6 @@ class PipelineSpec extends SparkTestBase {
       assert(full(r.getLong(0)) == r.getString(1),
         s"doc ${r.getLong(0)} moved splits when the corpus grew")
     }
-  }
-
-  test("deterministicShuffle: global total order across partitions, stable across runs") {
-    def runOnce(): Seq[Long] =
-      Pipeline.deterministicShuffle(docs, "doc_id", "sh7", 5)
-        // monotonically_increasing_id after the per-partition sort encodes
-        // (partition, position): range partitions are in key order, so
-        // ordering by it reads back the global shuffled order.
-        .withColumn("_mid", monotonically_increasing_id())
-        .orderBy("_mid").select("doc_id").collect().map(_.getLong(0)).toSeq
-    val got = runOnce()
-    val expected = docs
-      .select(col("doc_id"), Pipeline.shuffleKey(col("doc_id"), "sh7").as("k"))
-      .collect().sortBy(_.getString(1)).map(_.getLong(0)).toSeq
-    assert(got == expected, "shuffle order is not the seeded md5 permutation")
-    assert(runOnce() == got, "shuffle order changed between runs")
-    assert(got.sorted == docs.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted)
   }
 
   test("packSequences: bins overflow by at most one document, bins contiguous") {
