@@ -181,20 +181,6 @@ object SimilaritySearch {
         round(col("c6") / 1e6, 6).as("cosine"))
   }
 
-  /** The corpus with every semantically-contaminated doc removed: an
-    * anti-join against [[semanticFlaggedPairs]]'s flagged ids (flagged set
-    * is benchmark-neighborhood sized — AQE broadcasts it).
-    */
-  def semanticDecontaminate(corpus: DataFrame, idCol: String,
-                            embCol: String, bench: DataFrame,
-                            benchIdCol: String, benchEmbCol: String,
-                            minCosine: Double): DataFrame =
-    corpus.join(
-      semanticFlaggedPairs(corpus, idCol, embCol, bench, benchIdCol,
-          benchEmbCol, minCosine)
-        .select(col("id").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-
   /** HARD-NEGATIVE MINING for retrieval/contrastive training (the
     * DPR/Contriever data-prep step, Karpukhin et al. 2020,
     * arXiv:2004.04906): for each (query, positive) training pair, the k

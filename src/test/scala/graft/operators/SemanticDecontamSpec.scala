@@ -4,8 +4,7 @@ import graft.SparkTestBase
 import graft.functions.VectorExprs
 import org.apache.spark.sql.functions._
 
-/** [[SimilaritySearch.semanticFlaggedPairs]] /
-  * [[SimilaritySearch.semanticDecontaminate]]: embedding-space benchmark
+/** [[SimilaritySearch.semanticFlaggedPairs]]: embedding-space benchmark
   * decontamination. Planted geometry (unit-ish vectors, controlled
   * perturbations) fixes which pairs must flag; the plan must broadcast
   * the benchmark and never shuffle the corpus.
@@ -38,14 +37,6 @@ class SemanticDecontamSpec extends SparkTestBase {
     // 0 is verbatim (cos 1.0), 4 is a light rotation (cos ~0.995); the
     // 45-degree probe (cos ~0.707 to both 0 and 2) flags nothing
     assert(pairs === Set((0L, 100L), (4L, 100L)))
-  }
-
-  test("decontaminate drops flagged ids and only those") {
-    val survivors = SimilaritySearch.semanticDecontaminate(
-        corpus, "vec_id", "embedding", bench, "bench_id", "b_emb",
-        minCosine = 0.9)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(survivors === Set(1L, 2L, 3L))
   }
 
   test("matches the declarative HOF cosine on the same floor") {
