@@ -11,10 +11,6 @@ object TextAnalysis {
 
   private def w(textCol: String): String = Dedup.tokensExpr(textCol)
 
-  /** Token count (whitespace tokenization, empties dropped). */
-  def tokenCount(textCol: String): Column =
-    expr(s"CAST(size(${w(textCol)}) AS INT)")
-
   /** BPE-ish subword count: words plus length and digit-run surcharges — a
     * cheap upper-bound proxy for tokenizer counts (every 4 chars of a long
     * word and every maximal digit run count as an extra subword). Digit runs
@@ -343,16 +339,6 @@ object TextAnalysis {
     val sh = Dedup.shinglesExprStr(textCol, k)
     expr(s"slice(array_sort(transform($sh, s -> ${hash60("s", family)})), 1, $n)")
   }
-
-  /** Full per-document text profile. */
-  def profile(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(
-      col(idCol),
-      tokenCount(textCol).as("n_tokens"),
-      approxSubwordCount(textCol).as("n_subwords"),
-      languageId(textCol).as("lang_id"),
-      qualityScore(textCol).as("quality"),
-      fingerprint60(textCol).as("fingerprint"))
 
   /** Corpus-level BOILERPLATE profile (the RefinedWeb/C4-style "how much of
     * this document is repeated across the corpus" signal): for each doc,
@@ -822,26 +808,6 @@ object TextAnalysis {
       w.toSeq.zipWithIndex.map { case (v, d) => (d, v) }.toDF("dim", "weight")
     } finally feats.unpersist()
   }
-
-  /** Score documents with a trained (dim -> weight) perceptron model:
-    * margin = Σ_d w_d·x_d as an exact integer, pred = sign. The model
-    * joins as a dim-keyed frame (AQE broadcasts anything dim-sized), so
-    * the corpus pays one explode + one per-doc aggregation — the same
-    * shuffle-free-model posture as [[hashedLinearScore]]. Docs with no
-    * tokens have no feature rows and produce NO output row (mirroring
-    * training, where they never vote); a pipeline that needs a verdict
-    * for them should left-join this result and default the prediction.
-    */
-  def perceptronScore(docs: DataFrame, idCol: String, textCol: String,
-                      model: DataFrame, dim: Int = 64,
-                      family: String = graft.functions.HashFamily.Xx64): DataFrame =
-    hashedBowDims(docs.select(col(idCol), col(textCol)), Seq(idCol), textCol,
-        dim, family)
-      .join(model.select(col("dim"), col("weight")), Seq("dim"), "left")
-      .groupBy(idCol)
-      .agg(sum(coalesce(col("weight"), lit(0L)) * col("wt")).as("margin"))
-      .select(col(idCol), col("margin"),
-        when(col("margin") > 0, 1).otherwise(-1).as("pred"))
 
   /** Token-distribution drift of each corpus slice against a base slice:
     * KL(P_slice ‖ P_base) with add-one smoothing over the WHOLE corpus

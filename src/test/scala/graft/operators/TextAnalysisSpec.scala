@@ -41,9 +41,8 @@ class TextAnalysisSpec extends SparkTestBase {
     assert(a != c)
   }
 
-  test("token count and shingle sketch shapes") {
+  test("shingle sketch shape") {
     val df = one("a b c d")
-    assert(df.select(TextAnalysis.tokenCount("text")).head().getInt(0) == 4)
     val sketch = df.select(TextAnalysis.shingleSketch("text", k = 2, n = 2))
       .head().getSeq[Long](0)
     assert(sketch.length == 2)
@@ -217,6 +216,7 @@ class TextAnalysisSpec extends SparkTestBase {
 
   test("perceptron learns a separable concept to 100% training accuracy") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
     // Separable by construction: positive docs carry 'alphamark', negative
     // docs 'betamark', over shared filler. Enough iterations to converge;
     // dim large enough that a hash collision between the two markers is
@@ -229,8 +229,14 @@ class TextAnalysisSpec extends SparkTestBase {
     val model = TextAnalysis.perceptronTrain(docs, "doc_id", "text", "y",
       dim = 256, iterations = 10)
     assert(model.count() == 256)
-    val scored = TextAnalysis.perceptronScore(docs, "doc_id", "text", model,
-        dim = 256)
+    // score with the learned weights: margin = sum over dims of w_d * x_d,
+    // pred = its sign
+    val scored = TextAnalysis.hashedBowDims(docs.select("doc_id", "text"),
+        Seq("doc_id"), "text", dims = 256)
+      .join(model, Seq("dim"), "left")
+      .groupBy("doc_id")
+      .agg(sum(coalesce(col("weight"), lit(0L)) * col("wt")).as("margin"))
+      .select(col("doc_id"), when(col("margin") > 0, 1).otherwise(-1).as("pred"))
       .join(docs.select("doc_id", "y"), "doc_id")
       .collect()
     assert(scored.length == 30)
