@@ -1,12 +1,10 @@
 package graft.streaming
 
-
 import graft.SparkTestBase
 import graft.operators.Curation
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** r11 VERDICT #5 done-criteria: two streamed waves produce EXACTLY the
   * batch [[Curation.curate]] survivor set (ids AND split labels) on the
@@ -100,23 +98,6 @@ class ContinuousCurationSpec extends SparkTestBase {
     for (idx <- Seq("url_index", "norm_index", "lsh_index", "audit"))
       assert(spark.read.parquet(s"$crashy/$idx").count() ==
         spark.read.parquet(s"$clean/$idx").count(), s"$idx diverged on replay")
-  }
-
-  test("exactly-once through the real stream front door (AvailableNow, two arrivals)") {
-    val docs = planted.localCheckpoint()
-    val mid = docs.agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val src = tempDir("graft-cc-src")
-    val work = tempDir("graft-cc-work")
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("url", StringType), StructField("text", StringType)))
-    def run(): Unit = ContinuousCuration.runAvailableNow(spark, src, schema,
-      work, "url", Some(blockedDomains), Some(blockedWords), seed = seed)
-    docs.filter(col("doc_id") <= mid).write.mode("append").json(src)
-    run()
-    docs.filter(col("doc_id") > mid).write.mode("append").json(src)
-    run()
-    run() // third run with nothing new: must be a no-op, not a reprocess
-    assert(streamedSurvivors(work) == batchSurvivors(docs))
   }
 
   test("snapshotOut: each wave is one atomic versioned commit; replay rolls forward, history time-travels") {
