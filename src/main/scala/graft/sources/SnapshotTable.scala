@@ -412,34 +412,6 @@ object SnapshotTable {
   def prevOf(tablePath: String, version: Long): Option[Long] =
     headersOf(tablePath, version).flatMap(_.get("prev")).map(_.toLong)
 
-  /** Commit wall-clock of snapshot `version` (`#ts` header, epoch ms) —
-    * recorded from round 17 on; `None` for older manifests. */
-  def commitTimestamp(tablePath: String, version: Long): Option[Long] =
-    headersOf(tablePath, version).flatMap(_.get("ts")).map(_.toLong)
-
-  /** TIMESTAMP time travel: the newest version on the COMMITTED chain
-    * whose commit time is ≤ `tsMillis` — `readSnapshot(versionAt(...))`
-    * is the Delta/Iceberg `AS OF TIMESTAMP` surface. `None` when the
-    * table has no commit that old (or predates `#ts` recording).
-    * Commit timestamps are driver wall-clocks: monotone per table in
-    * practice (commits serialize on the table lock), but use versions
-    * for exact replay semantics. */
-  def versionAt(tablePath: String, tsMillis: Long): Option[Long] = {
-    val cur = currentVersion(tablePath).getOrElse(return None)
-    var v = cur
-    while (v > 0) {
-      commitTimestamp(tablePath, v) match {
-        case Some(ts) if ts <= tsMillis => return Some(v)
-        case _ => ()
-      }
-      prevOf(tablePath, v) match {
-        case Some(p) if p < v => v = p
-        case _ => return None
-      }
-    }
-    None
-  }
-
   /** Was snapshot `version` committed by [[compact]] (row-preserving —
     * every file replaced, no row added, removed, or changed)? A
     * vacuumed/unknown version answers false — callers fall back to the
@@ -714,23 +686,6 @@ object SnapshotTable {
         allowSchemaEvolution, targetSchema)
   }
 
-  /** Partition-VALUE pruning predicate for [[readSnapshot]]'s
-    * `partitionPruning` that stays correct across PARTITION-SPEC
-    * evolution (a table whose early commits were unpartitioned or
-    * partitioned differently): entries whose hive spec CARRIES `colName`
-    * prune by `keep(value)`; entries without the column (other
-    * generations of the layout) are KEPT — they may contain matching
-    * rows, and only a residual row filter can decide. Compose with a
-    * row-level filter exactly like stats pruning. */
-  def columnPrune(colName: String, keep: String => Boolean): String => Boolean =
-    spec => spec.split("/").filter(_.nonEmpty)
-      .collectFirst {
-        case kv if kv.takeWhile(_ != '=') == colName => kv.drop(colName.length + 1)
-      } match {
-        case Some(v) => keep(v)
-        case None => true
-      }
-
   /** POINT-LOOKUP file pruning predicate for [[readSnapshot]]'s
     * `bloomPruning`: may a file whose manifest bloom for `colName` was
     * recorded contain `value`? Files without a recorded bloom always MAY
@@ -748,22 +703,6 @@ object SnapshotTable {
         .readFrom(new java.io.ByteArrayInputStream(bytes))
         .mightContainLong(h)
     }
-  }
-
-  /** The Iceberg `files` metadata-table surface: one row per LIVE data
-    * file of the snapshot, entirely from the manifest — no data file is
-    * listed, opened, or planned (the result is a LocalRelation). Stats
-    * ride as string-rendered `(min, max)` maps exactly as committed. */
-  def metadataFiles(spark: SparkSession, tablePath: String,
-                    version: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    manifest(tablePath, version).filterNot(_.isDelete)
-      .map { e =>
-        (e.partSpec, e.relPath, e.commitVersion, e.rowCount,
-          e.stats.map { case (c, s) => c -> s.min },
-          e.stats.map { case (c, s) => c -> s.max })
-      }
-      .toDF("part_spec", "rel_path", "commit_version", "rows", "mins", "maxs")
   }
 
   /** Metadata-ONLY aggregates: per-partition file count, EXACT row
@@ -1744,12 +1683,6 @@ object SnapshotTable {
       to
     }
 
-  /** Drop ref `name`; returns whether it existed. The pinned snapshot
-    * becomes reclaimable by the NEXT [[vacuum]] (if outside its
-    * retention set). */
-  def dropRef(tablePath: String, name: String): Boolean =
-    lockFor(tablePath).synchronized(Files.deleteIfExists(refPath(tablePath, name)))
-
   /** All refs as name → pinned version. */
   def listRefs(tablePath: String): Map[String, Long] = {
     val d = refsDir(tablePath)
@@ -1773,24 +1706,6 @@ object SnapshotTable {
       sys.error(s"no ref '$name' at $tablePath"))
     readSnapshot(spark, tablePath, Some(v), partitionPruning,
       allowSchemaEvolution, statsPruning)
-  }
-
-  /** Table history as a DataFrame — (version, committed, txn, n_files,
-    * n_partitions, n_delete_files): the DESCRIBE-HISTORY introspection a
-    * maintenance job reads before choosing what to vacuum or which
-    * version to pin. Driver-side over the manifests (version-count-
-    * bounded). */
-  def history(spark: SparkSession, tablePath: String): DataFrame = {
-    import spark.implicits._
-    val committed = currentVersion(tablePath).getOrElse(-1L)
-    snapshots(tablePath).map { v =>
-      val es = manifest(tablePath, Some(v))
-      val (dels, datas) = es.partition(_.isDelete)
-      (v, v <= committed, txnOf(tablePath, v).getOrElse(""),
-        datas.size.toLong, datas.map(_.partSpec).distinct.size.toLong,
-        dels.size.toLong)
-    }.toDF("version", "committed", "txn", "n_files", "n_partitions",
-      "n_delete_files")
   }
 
   /** Compaction as a COMMIT: rewrite the current snapshot into one fresh

@@ -1,6 +1,5 @@
 package graft.sources
 
-
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
@@ -54,26 +53,6 @@ class BloomPruneSpec extends SparkTestBase {
     val rows = readSnapshot(spark, t, bloomPruning = bloomPrune("id", 2L))
       .select("id").as[Long].collect().sorted.toSeq
     assert(rows.contains(2L), "bloom-less file must never be pruned")
-  }
-
-  test("columnPrune survives partition-spec evolution (mixed layouts)") {
-    val t = tempDir("graft-pspec")
-    // generation 1: UNPARTITIONED commit; generation 2: year-partitioned
-    commitOverwrite(Seq((1L, 2000, "a"), (2L, 2001, "b"))
-      .toDF("id", "year", "payload"), t)
-    commitAppend(Seq((3L, 2000, "c"), (4L, 2001, "d"))
-      .toDF("id", "year", "payload"), t, Seq("year"))
-    val pred = columnPrune("year", _ == "2000")
-    // pruned read + residual filter: correct rows from BOTH generations
-    val rows = readSnapshot(spark, t, partitionPruning = pred,
-        allowSchemaEvolution = true)
-      .filter(col("year") === 2000)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(rows == Seq(1L, 3L))
-    // the partitioned generation's year=2001 file was PRUNED: only 3
-    // entries survive the predicate (2 unpartitioned-gen + year=2000)
-    val kept = manifest(t).filterNot(_.isDelete).count(e => pred(e.partSpec))
-    assert(kept == manifest(t).filterNot(_.isDelete).size - 1)
   }
 
   test("string columns probe with string values (type-sensitive hash)") {

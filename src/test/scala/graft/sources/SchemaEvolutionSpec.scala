@@ -180,23 +180,6 @@ class SchemaEvolutionSpec extends SparkTestBase {
     }
   }
 
-  test("versionAt: timestamp time travel lands on the committed chain") {
-    val t = tmp()
-    val t0 = System.currentTimeMillis() - 1
-    commitOverwrite(Seq((1L, 2000)).toDF("id", "year"), t, Seq("year"))
-    Thread.sleep(5)
-    val t1 = System.currentTimeMillis()
-    Thread.sleep(5)
-    commitAppend(Seq((2L, 2000)).toDF("id", "year"), t, Seq("year"))
-    val t2 = System.currentTimeMillis() + 1
-    assert(versionAt(t, t0).isEmpty, "before the first commit")
-    assert(versionAt(t, t1).contains(1L))
-    assert(versionAt(t, t2).contains(2L))
-    assert(commitTimestamp(t, 1L).exists(_ <= commitTimestamp(t, 2L).get))
-    // reads compose: AS OF t1 sees only the first row
-    assert(readSnapshot(spark, t, versionAt(t, t1)).count() == 1L)
-  }
-
   test("changes() diffs correctly across a rename inside the range") {
     val t = tmp()
     commitOverwrite(Seq((1L, 2000, 5.0), (2L, 2001, 7.0))

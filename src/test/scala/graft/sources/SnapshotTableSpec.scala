@@ -249,7 +249,7 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(SnapshotTable.readSnapshot(spark, t).count() == 8)
   }
 
-  test("named refs: create/advance/drop, pinned reads, per-ref OCC, vacuum retention (r13 VERDICT #7)") {
+  test("named refs: create/advance, pinned reads, per-ref OCC, vacuum retention (r13 VERDICT #7)") {
     val t = freshTable()
     SnapshotTable.commitOverwrite(rows(2000, 6, "v1"), t, Seq("year"))
     SnapshotTable.commitAppend(rows(2010, 6, "v2"), t, Seq("year"))
@@ -277,12 +277,6 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(SnapshotTable.readRef(spark, t, "baseline").count() == 6)
     // … while unreferenced v2 is reclaimed
     assert(!Files.exists(Paths.get(t, "_manifests", "v00000002.manifest")))
-    // drop, then the next vacuum reclaims the pin too
-    assert(SnapshotTable.dropRef(t, "baseline"))
-    assert(!SnapshotTable.dropRef(t, "baseline"))
-    SnapshotTable.vacuum(spark, t, keepSnapshots = 1, minAgeMs = 0)
-    assert(SnapshotTable.refVersion(t, "baseline").isEmpty)
-    assert(!Files.exists(Paths.get(t, "_manifests", "v00000001.manifest")))
     assert(SnapshotTable.readSnapshot(spark, t).count() == 18)
   }
 
@@ -491,17 +485,6 @@ class SnapshotTableSpec extends SparkTestBase {
     SnapshotTable.maintainAggregate(spark, t, kill, Seq("year", "grp"), "n",
       Map("revenue" -> col("rev")), Seq("year"), Some("_del"))
     assert(SnapshotTable.readSnapshot(spark, t).filter(col("grp") === "C").count() == 0)
-  }
-
-  test("history lists every version with commit status, txn, and file/partition counts") {
-    val t = freshTable()
-    SnapshotTable.commitOverwrite(rows(2000, 4, "a"), t, Seq("year"))
-    SnapshotTable.commitAppendTxn(rows(2010, 4, "b"), t, Seq("year"), "batch-7")
-    SnapshotTable.prepare(rows(2020, 4, "c"), t, Seq("year"), 1)((_, f) => f) // orphan
-    val h = SnapshotTable.history(spark, t)
-      .orderBy("version").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getString(2))).toSeq
-    assert(h == Seq((1L, true, ""), (2L, true, "batch-7"), (3L, false, "")))
   }
 
   test("stats pruning: range-clustered commit records bounds; predicate skips >half the files") {
@@ -815,12 +798,6 @@ class SnapshotTableSpec extends SparkTestBase {
       assert(nr == fnr && mn == fmn && mx == fmx,
         s"$spec: metadata ($nr, $mn, $mx) != scan ($fnr, $fmn, $fmx)")
     }
-    // metadataFiles: one row per live entry, rows recorded, local plan
-    val mf = SnapshotTable.metadataFiles(spark, t)
-    assert(mf.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.isEmpty)
-    assert(mf.count() == 4 && mf.filter(col("rows").isNull).count() == 0)
     // numeric fold discipline: "9" < "10" must fold numerically — plant
     // a table whose string ordering would lie
     val t2 = freshTable()
