@@ -89,21 +89,6 @@ object Quality {
       .orderBy("rule")
   }
 
-  /** Zero-extra-pass auditing: attach row-rule violation counters to `df`
-    * as observed metrics, so the counts ride along with whatever action
-    * the pipeline runs anyway (a write, a count) instead of costing a
-    * second scan — the production shape for auditing a 100 TB write.
-    * After the first action, `observation.get` holds
-    * rule-name -> violation-count; rows pass through untouched.
-    */
-  def observed(df: DataFrame, rules: Seq[RowRule])
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    require(rules.nonEmpty, "observed audit needs at least one row rule")
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = rules.map(r => sum(when(r.violated, 1L).otherwise(0L)).as(r.name))
-    (df.observe(obs, aggs.head, aggs.tail: _*), obs)
-  }
-
   /** k-anonymity suppression over a quasi-identifier: rows whose
     * quasi-identifier combination occurs fewer than `k` times get every
     * quasi column replaced by `marker`, so no released group identifies

@@ -70,24 +70,6 @@ class QualitySpec extends SparkTestBase {
     assert(scans == 1, s"expected exactly one scan for row-level rules, got $scans:\n$p")
   }
 
-  test("observed audit rides along with the pipeline action, zero extra passes") {
-    val rules = Seq(Quality.notNull("status"), Quality.nonNegative("qty"),
-      Quality.inRange("score", 0.0, 1.0))
-    val (passthrough, obs) = Quality.observed(df, rules)
-    // rows are untouched
-    assert(passthrough.columns.toSeq == df.columns.toSeq)
-    // the metrics materialize with the job's own action (a write here)
-    val out = tempDir("observed")
-    passthrough.write.mode("overwrite").parquet(out)
-    val metrics = obs.get
-    assert(metrics("not_null(status)") == 1L)
-    assert(metrics("non_negative(qty)") == 1L)
-    assert(metrics("in_range(score)") == 1L)
-    // and they agree with the standalone audit
-    val standalone = results(rules)
-    rules.foreach(r => assert(metrics(r.name) == standalone(r.name)))
-  }
-
   test("kAnonymize suppresses quasi groups below k and only those") {
     import spark.implicits._
     val people = Seq(
