@@ -29,8 +29,4 @@ object VectorExprs {
     * stays in whole-stage codegen with zero per-row allocation.
     */
   def cosineFast(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
-
-  /** Squared euclidean distance. */
-  def sqDist(a: String, b: String): Column = expr(
-    s"aggregate(zip_with($a, $b, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
 }

@@ -547,8 +547,7 @@ object SimilaritySearch {
   }
 
   /** Squared euclidean distance between a (normalized) array<double>
-    * column and one centroid literal — Column-API twin of
-    * [[graft.functions.VectorExprs.sqDist]]. */
+    * column and one centroid literal. */
   private def sqDistTo(nvec: Column, centroid: Array[Double]): Column =
     aggregate(
       zip_with(nvec, typedLit(centroid.toSeq), (x, y) => (x - y) * (x - y)),
