@@ -19,14 +19,11 @@ object VectorExprs {
   def l2Norm(a: String): Column = expr(
     s"sqrt(aggregate($a, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))")
 
-  /** Cosine similarity in [-1, 1] (declarative HOF formulation). */
-  def cosine(a: String, b: String): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** Cosine similarity via the native codegen'd expression
-    * (graft.functions.CosineSimilarity) — bit-identical results to
-    * `cosine`, ~an order of magnitude faster on wide fan-outs because it
-    * stays in whole-stage codegen with zero per-row allocation.
+    * (graft.functions.CosineSimilarity) — bit-identical results to the
+    * declarative `dot(a, b) / (l2Norm(a) * l2Norm(b))`, ~an order of
+    * magnitude faster on wide fan-outs because it stays in whole-stage
+    * codegen with zero per-row allocation.
     */
   def cosineFast(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 }

@@ -340,23 +340,6 @@ object Dedup {
     } finally newIdx.unpersist()
   }
 
-  /** Brute-force n-gram Jaccard pairs — the quadratic reference path used to
-    * validate LSH recall (and fine on dimension-sized inputs). The self-join
-    * is a broadcast when one side is small; never use at corpus scale.
-    */
-  def ngramJaccardPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 2, threshold: Double = 0.7): DataFrame = {
-    val sets = docs.select(col(idCol), shingles(textCol, shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0)
-    sets.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-      .crossJoin(sets.select(col(idCol).as("id_b"), col("sh").as("sh_b")))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("jaccard", jaccard("sh_a", "sh_b"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
   /** EXACT n-gram-Jaccard self-join via prefix filtering (the
     * SSJoin/AllPairs idea of Chaudhuri et al. 2006 / Bayardo et al. 2007):
     * order each doc's distinct shingle-hash set in ONE global order (the
@@ -368,7 +351,8 @@ object Dedup {
     * |A|/t) prunes length-incompatible candidates before verification.
     * Candidates are exact-verified, so the output equals the brute force
     * (modulo a 64-bit shingle-hash collision, p < 1e-9 for 1e5 shingles).
-    * Same result as [[ngramJaccardPairs]]; ~linear instead of quadratic.
+    * Same result as the quadratic all-pairs Jaccard; ~linear instead of
+    * quadratic.
     */
   def jaccardSimilarityJoin(
       docs: DataFrame, idCol: String, textCol: String,

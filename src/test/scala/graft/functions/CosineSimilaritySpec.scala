@@ -16,7 +16,7 @@ class CosineSimilaritySpec extends SparkTestBase {
     val q = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
     val both = emb
       .withColumn("q_emb", typedLit(q))
-      .withColumn("hof", VectorExprs.cosine("embedding", "q_emb"))
+      .withColumn("hof", VectorReference.cosine("embedding", "q_emb"))
       .withColumn("native", VectorExprs.cosineFast("embedding", "q_emb"))
       .select("hof", "native").collect()
     both.foreach { r =>

@@ -31,7 +31,7 @@ class CurationSpec extends SparkTestBase {
     assert(written.count() == r1.nAfterNearDedup)
 
     // the shipped corpus contains NO near-dup pair at the build threshold
-    val residual = Dedup.ngramJaccardPairs(written, "doc_id", "text",
+    val residual = DedupReference.ngramJaccardPairs(written, "doc_id", "text",
       shingleSize = 2, threshold = 0.7).count()
     assert(residual == 0, s"shipped corpus still has $residual near-dup pairs")
 

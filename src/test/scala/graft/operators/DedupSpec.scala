@@ -22,7 +22,7 @@ class DedupSpec extends SparkTestBase {
   test("minhash-LSH equals brute-force ngram jaccard at threshold 0.7") {
     val lsh = Dedup.minHashNearDuplicates(df(corpus), "doc_id", "text", threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = Dedup.ngramJaccardPairs(df(corpus), "doc_id", "text", threshold = 0.7)
+    val brute = DedupReference.ngramJaccardPairs(df(corpus), "doc_id", "text", threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == brute)
     assert(lsh.contains((1L, 2L)) && lsh.contains((1L, 4L)) && lsh.contains((2L, 4L)))
@@ -33,7 +33,7 @@ class DedupSpec extends SparkTestBase {
     val docs = spark.read.parquet(sfDir("0.001") + "/documents.parquet")
     val lsh = Dedup.minHashNearDuplicates(docs, "doc_id", "text", threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.7)
+    val brute = DedupReference.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == brute)
     assert(lsh.nonEmpty, "sf0.001 corpus should contain planted near-dups")
@@ -66,7 +66,7 @@ class DedupSpec extends SparkTestBase {
       val fast = Dedup.jaccardSimilarityJoin(df(corpus), "doc_id", "text",
           shingleSize = 2, threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val brute = Dedup.ngramJaccardPairs(df(corpus), "doc_id", "text",
+      val brute = DedupReference.ngramJaccardPairs(df(corpus), "doc_id", "text",
           shingleSize = 2, threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(fast == brute, s"mismatch at threshold $t")
@@ -75,7 +75,7 @@ class DedupSpec extends SparkTestBase {
     val fast = Dedup.jaccardSimilarityJoin(docs, "doc_id", "text",
         shingleSize = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val brute = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+    val brute = DedupReference.ngramJaccardPairs(docs, "doc_id", "text",
         shingleSize = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fast == brute)
@@ -120,7 +120,7 @@ class DedupSpec extends SparkTestBase {
     assert(got == Set((11L, 10L, 1.0)), got.toString)
     // the symmetric Jaccard join misses this pair at any comparable bar:
     // J = 4/18 — which is exactly why the containment operator exists
-    val jac = Dedup.ngramJaccardPairs(df(cases), "doc_id", "text",
+    val jac = DedupReference.ngramJaccardPairs(df(cases), "doc_id", "text",
         shingleSize = 3, threshold = 0.9)
       .collect()
     assert(jac.isEmpty)

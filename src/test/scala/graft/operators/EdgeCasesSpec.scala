@@ -20,7 +20,7 @@ class EdgeCasesSpec extends SparkTestBase {
   test("dedup operators return empty on empty input") {
     assert(Dedup.minHashNearDuplicates(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.simHashNearDuplicates(emptyDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.ngramJaccardPairs(emptyDocs, "doc_id", "text").count() == 0)
+    assert(DedupReference.ngramJaccardPairs(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.jaccardSimilarityJoin(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.incrementalNearDuplicates(
       emptyDocs, Dedup.lshIndex(emptyDocs, "doc_id", "text"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
-import graft.functions.VectorExprs
+import graft.functions.VectorReference
 import org.apache.spark.sql.functions._
 
 /** [[SimilaritySearch.semanticFlaggedPairs]]: embedding-space benchmark
@@ -41,7 +41,7 @@ class SemanticDecontamSpec extends SparkTestBase {
 
   test("matches the declarative HOF cosine on the same floor") {
     val brute = corpus.crossJoin(bench)
-      .withColumn("c", VectorExprs.cosine("embedding", "b_emb"))
+      .withColumn("c", VectorReference.cosine("embedding", "b_emb"))
       .filter(round(col("c"), 6) >= 0.9)
       .select("vec_id", "bench_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
