@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
 object Clustering {
 
   /** Quantized squared euclidean distance to a centroid literal. */
-  private def sqDist(q: Column, cent: Seq[Long]): Column =
+  private def quantSqDist(q: Column, cent: Seq[Long]): Column =
     aggregate(
       zip_with(q, typedLit(cent), (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, v) => acc + v)
@@ -67,7 +67,7 @@ object Clustering {
 
     def assign(c: Seq[(Long, Seq[Long])]): DataFrame = {
       val scored = c.map { case (cid, vec) =>
-        struct(sqDist(col("q"), vec).as("d"), lit(cid).as("cid")) }
+        struct(quantSqDist(col("q"), vec).as("d"), lit(cid).as("cid")) }
       // array_min over struct(d, cid): lexicographic -> min distance,
       // smallest cid on ties (mirrors the oracle's ORDER BY d, cid)
       quant.withColumn("best", array_min(array(scored: _*)))
