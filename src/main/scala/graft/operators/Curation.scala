@@ -212,6 +212,8 @@ object Curation {
     // on a throw
     val held = mutable.ArrayBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { held += df; df.persist() }
+    val sc = docs.sparkSession.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     try {
       val nInput = docs.count()
 
@@ -547,6 +549,15 @@ object Curation {
         ruleDropsAll, nClassifier, nUrlDedup, nBlocklist,
         nParagraph, nRepetition, nRepaired, nPii, nCaptionAlign, nWordBlock,
         nRobotsKept, nGps)
-    } finally held.foreach(_.unpersist())
+    } finally {
+      held.foreach(_.unpersist())
+      // operators on the path (connectedComponents, ...) local-checkpoint
+      // their intermediates, and nothing the build made is read after it
+      // ends; checkpoints that existed before, or that Artifacts owns, stay
+      val kept = before ++ Artifacts.rddIds(sc)
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!kept(id) && rdd.isCheckpointed) rdd.unpersist(blocking = true)
+      }
+    }
   }
 }
