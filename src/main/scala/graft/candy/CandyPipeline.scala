@@ -14,14 +14,25 @@ import scala.jdk.CollectionConverters._
   *
   * [[run]] reads each input once and computes each output once. It caches
   * the ordered transactions, `fulfilled`, `orders` and `lineItems`, and
-  * holds products.csv as a driver-local frame. The batch shuffles once per
-  * key it needs (product for dedup and fold, order for the orders table)
-  * and once more into the single partition each large output's sink
-  * writes; the dimension-sized outputs (daily summary, inventory
-  * write-back, forecast) are collected and handed on as driver-local
-  * frames. The caller releases the caches (`spark.catalog.clearCache()` or
-  * `spark.stop()`); only when `run` itself throws does it unpersist them
-  * before rethrowing.
+  * holds the products.csv rows on the driver. The batch shuffles once, by
+  * product for dedup and fold; the line items, orders and daily summary
+  * are each built by one task over narrow coalesces of the caches, with
+  * no exchange, and their joins broadcast one side. The inventory
+  * write-back is the first job over the transactions: one stage of it
+  * builds their cache, which every later plan reads. The dimension-sized
+  * outputs (daily summary, inventory write-back, forecast) are
+  * driver-local frames built from driver rows. The caller releases the
+  * caches (`spark.catalog.clearCache()` or `spark.stop()`); only when
+  * `run` itself throws does it unpersist them before rethrowing.
+  *
+  * The batch keeps its generated code small, because Spark caches compiled
+  * classes by (class loader, code): 100 of them by default, in 4 LRU
+  * segments of 25, and a whole-stage class takes two entries (driver and
+  * tasks). A batch whose classes overflow a segment evicts its own early
+  * classes and recompiles them on every pass. So the ingest is one scan
+  * whose code does not depend on the number of days, the dimension-sized
+  * work is plain Scala on the driver, and the tables built after the fold
+  * fuse into few whole-stage units (CandyPipelineSpec caps their count).
   */
 object CandyPipeline {
 
@@ -50,23 +61,24 @@ object CandyPipeline {
     try {
       val transactions = keep(Ingest.readTransactionsOrdered(spark, dataDir))
       val scan = Ingest.readProducts(spark, s"$dataDir/products.csv")
-      // one scan; the snapshot, the write-back and the summary's cost join
-      // all read this LocalRelation
-      val products = spark.createDataFrame(scan.collect().toSeq.asJava, scan.schema)
+      // one scan: the snapshot, the write-back and the summary's cost
+      // lookup read these rows on the driver
+      val productRows = scan.collect().toSeq
 
       val items = Outputs.prepareItems(transactions)
-      val inventory = Fulfillment.snapshot(products)
-      val fulfilled = keep(Fulfillment.run(spark, items, inventory, reloadDaily))
+      val fulfilled = keep(Fulfillment.run(spark, items, Fulfillment.snapshot(productRows), reloadDaily))
+      // the first job over the transactions: one stage of it builds their
+      // cache, before the orders and line items read it
+      val updated = Fulfillment.updatedInventory(productRows, fulfilled, reloadDaily)
 
       val lineItems = keep(Outputs.lineItemsFinal(fulfilled))
       val orders = keep(Outputs.ordersFinal(transactions, fulfilled))
-      // one row per day: collected once, in date order, for the forecast
-      // and the sink
-      val summary = Outputs.dailySummary(orders, lineItems, products)
-      val daily = spark.createDataFrame(summary.collect().toSeq.asJava, summary.schema)
-      val forecast = Forecast.forecastSalesAndProfits(spark, daily, forecastDays)
-      val updated = Outputs.updatedInventoryFinal(
-        Fulfillment.updatedInventory(products, fulfilled, reloadDaily))
+      // one row per day: collected once and put in date order, for the
+      // sink and the forecast
+      val summary = Outputs.dailySummary(orders, lineItems, productRows)
+      val summaryRows = summary.collect().toSeq.sortBy(_.getAs[java.sql.Date]("date").toLocalDate.toEpochDay)
+      val daily = spark.createDataFrame(summaryRows.asJava, summary.schema)
+      val forecast = Forecast.forecastSalesAndProfits(spark, summaryRows, forecastDays)
       Results(orders, lineItems, updated, daily, forecast)
     } catch {
       case t: Throwable =>

@@ -1,8 +1,9 @@
 package graft.candy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DateType, DoubleType, StructField, StructType}
 import java.time.LocalDate
+import scala.jdk.CollectionConverters._
 
 /** Driver-side univariate forecasting over the (tiny) daily summary series.
   *
@@ -64,28 +65,31 @@ object Forecast {
     * sorted by date here, on the driver.
     */
   def forecastSalesAndProfits(spark: SparkSession, dailySummary: DataFrame,
-                              days: Int = 1): DataFrame = {
-    import spark.implicits._
-    val rows = dailySummary.select("date", "total_sales", "total_profit").collect()
-      .sortBy(_.get(0).toString)
+                              days: Int = 1): DataFrame =
+    forecastSalesAndProfits(spark, dailySummary.select("date", "total_sales", "total_profit").collect().toSeq, days)
+
+  /** [[forecastSalesAndProfits]] over summary rows already on the driver,
+    * read by field name. The table is built as a driver-local frame: the
+    * values are rounded as Spark's `round` does ([[Fulfillment.round2]]). */
+  def forecastSalesAndProfits(spark: SparkSession, dailySummary: Seq[Row], days: Int): DataFrame = {
+    val rows = dailySummary.sortBy(_.getAs[Any]("date").toString)
     require(rows.nonEmpty, "daily summary is empty")
-    val dates = rows.map(r => LocalDate.parse(r.get(0).toString))
-    val sales = rows.map(_.getString(1).toDouble)
-    val profit = rows.map(_.getString(2).toDouble)
-
-    val salesModel = new LinearTrendForecaster
-    val profitModel = new LinearTrendForecaster
-    salesModel.fit(sales)
-    profitModel.fit(profit)
-
-    val lastDate = dates.last
-    val out = (1 to days).map { i =>
-      (java.sql.Date.valueOf(lastDate.plusDays(i)),
-        salesModel.predict(days)(i - 1),
-        profitModel.predict(days)(i - 1))
+    val lastDate = LocalDate.parse(rows.last.getAs[Any]("date").toString)
+    def predict(field: String): Array[Double] = {
+      val model = new LinearTrendForecaster
+      model.fit(rows.map(_.getAs[String](field).toDouble).toArray)
+      model.predict(days).map(Fulfillment.round2)
     }
-    out.toDF("date", "forecasted_sales", "forecasted_profit")
-      .withColumn("forecasted_sales", round(col("forecasted_sales"), 2))
-      .withColumn("forecasted_profit", round(col("forecasted_profit"), 2))
+    val sales = predict("total_sales")
+    val profit = predict("total_profit")
+    val out = (1 to days).map { i =>
+      Row(java.sql.Date.valueOf(lastDate.plusDays(i)), sales(i - 1), profit(i - 1))
+    }
+    spark.createDataFrame(out.asJava, ForecastSchema)
   }
+
+  private val ForecastSchema = StructType(Seq(
+    StructField("date", DateType),
+    StructField("forecasted_sales", DoubleType, nullable = false),
+    StructField("forecasted_profit", DoubleType, nullable = false)))
 }

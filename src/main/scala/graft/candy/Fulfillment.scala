@@ -1,7 +1,9 @@
 package graft.candy
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -85,7 +87,8 @@ object Fulfillment {
 
   /** 2-dp HALF_UP rounding on the shortest decimal representation of the
     * double — the same contract as Spark's `round` expression, used inside
-    * the kernel so kernel output and DataFrame-side rounding agree.
+    * the kernel and the driver-side forecast so they agree with
+    * DataFrame-side rounding.
     */
   def round2(x: Double): Double =
     BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -130,17 +133,25 @@ object Fulfillment {
     * empty product_id is skipped: no item can match it.
     */
   def snapshot(products: DataFrame): Map[Long, InventoryEntry] =
-    products.select("product_id", "stock", "sales_price").collect().collect {
-      case r if !r.isNullAt(0) =>
-        r.getAs[Number](0).longValue -> InventoryEntry(
-          if (r.isNullAt(1)) 0 else r.getInt(1),
-          if (r.isNullAt(2)) 0.0 else r.getDouble(2))
+    snapshot(products.select("product_id", "stock", "sales_price").collect().toSeq)
+
+  /** [[snapshot]] of product rows already on the driver, read by field
+    * name; a later row of the same product_id wins. */
+  def snapshot(products: Seq[Row]): Map[Long, InventoryEntry] =
+    products.collect {
+      case r if !r.isNullAt(r.fieldIndex("product_id")) =>
+        val stock = r.fieldIndex("stock")
+        val price = r.fieldIndex("sales_price")
+        r.getAs[Number]("product_id").longValue -> InventoryEntry(
+          if (r.isNullAt(stock)) 0 else r.getInt(stock),
+          if (r.isNullAt(price)) 0.0 else r.getDouble(price))
     }.toMap
 
-  /** Post-fulfillment inventory (replaces the reference's per-day
-    * outer-join stack, reference src/data_processor.py:444-464): every
-    * product row with its stock minus the units it sold, as a driver-local
-    * frame in product_id order (an empty id first, its stock unchanged).
+  /** The products_updated output (reference src/data_processor.py:444-464,
+    * :574-582; it replaces the reference's per-day outer-join stack):
+    * (product_id, product_name, current_stock) for every product row, its
+    * stock minus the units it sold, as a driver-local frame in product_id
+    * order (an empty id first, its stock unchanged).
     *
     * Units sold per (product, day) are summed inside each partition of
     * `fulfilled` and merged on the driver: one job and no shuffle, and at
@@ -148,27 +159,41 @@ object Fulfillment {
     * carry-over every day's sales count; with `reloadDaily` each day
     * restarts from the snapshot, so only the final day's sales do.
     *
-    * @param products the product rows, driver-local (its collect runs no job)
+    * @param products the product rows, on the driver (schema [[Schemas.products]])
     */
-  def updatedInventory(products: DataFrame, fulfilled: Dataset[FulfilledLine],
+  def updatedInventory(products: Seq[Row], fulfilled: Dataset[FulfilledLine],
                        reloadDaily: Boolean): DataFrame = {
-    val spark = products.sparkSession
-    import spark.implicits._
-    val sold = fulfilled.mapPartitions { lines =>
-      val units = mutable.HashMap.empty[(Long, String), Long].withDefaultValue(0L)
-      lines.foreach(l => units((l.product_id, l.order_date)) += l.quantity)
-      units.iterator.map { case ((pid, day), n) => (pid, day, n) }
-    }.collect()
+    val schema = fulfilled.schema
+    val (pidAt, qtyAt, dayAt) =
+      (schema.fieldIndex("product_id"), schema.fieldIndex("quantity"), schema.fieldIndex("order_date"))
+    // The rows as the plan produces them: no encoder, so no generated
+    // (de)serializer. The job runs as a SQL execution of the session, as a
+    // Dataset action would, so its stages (and any cache they build) run
+    // with the session's task class loader.
+    val qe = fulfilled.queryExecution
+    val sold = SQLExecution.withNewExecutionId(qe, Some("updatedInventory")) {
+      qe.toRdd.mapPartitions { lines =>
+        val units = mutable.HashMap.empty[(Long, String), Long].withDefaultValue(0L)
+        lines.foreach(l => units((l.getLong(pidAt), l.getUTF8String(dayAt).toString)) += l.getInt(qtyAt))
+        units.iterator.map { case ((pid, day), n) => (pid, day, n) }
+      }.collect()
+    }
     val lastDay = if (sold.isEmpty) "" else sold.map(_._2).max
     val soldByProduct = sold.collect { case (pid, day, n) if !reloadDaily || day == lastDay => pid -> n }
       .groupMapReduce(_._1)(_._2)(_ + _)
-    val pid = products.schema.fieldIndex("product_id")
-    val stock = products.schema.fieldIndex("stock")
-    val updated = products.collect().map { r =>
-      if (r.isNullAt(pid) || r.isNullAt(stock)) r
-      else Row.fromSeq(r.toSeq.updated(stock,
-        (r.getInt(stock) - soldByProduct.getOrElse(r.getAs[Number](pid).longValue, 0L)).toInt))
-    }.sortBy(r => Option(r.getAs[Number](pid)).map(_.longValue))
-    spark.createDataFrame(updated.toSeq.asJava, products.schema)
+    val rows = products.map { r =>
+      val pid = r.getAs[Number]("product_id")
+      val stock = r.getAs[Integer]("stock")
+      val current =
+        if (pid == null || stock == null) stock
+        else Integer.valueOf((stock - soldByProduct.getOrElse(pid.longValue, 0L)).toInt)
+      Row(pid, r.getAs[String]("product_name"), current)
+    }.sortBy(r => Option(r.getAs[Number](0)).map(_.longValue))
+    fulfilled.sparkSession.createDataFrame(rows.asJava, UpdatedSchema)
   }
+
+  private val UpdatedSchema = StructType(Seq(
+    Schemas.products("product_id"),
+    Schemas.products("product_name"),
+    Schemas.products("stock").copy(name = "current_stock")))
 }

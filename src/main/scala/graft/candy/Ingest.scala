@@ -11,6 +11,8 @@ import scala.jdk.CollectionConverters._
   * only ever consumes the files, so the file readers are the canonical
   * sources here; JDBC/document-store variants hang off the same helpers via
   * Spark's built-in `format("jdbc")` connectors when a URL is supplied.
+  * All day files of transactions are read by one scan, whose generated
+  * code is the same for any number of days ([[readTransactionsOrdered]]).
   */
 object Ingest {
 
@@ -20,24 +22,32 @@ object Ingest {
     * were produced by a run that processed each day's rows in JSON-array
     * order (a stable sort on the date only — see SURVEY §5.3; simulation
     * confirms zero golden diff under this order). We materialize that order
-    * explicitly: files sorted by name (= by day), each read as its own
-    * non-splittable single-partition scan so `monotonically_increasing_id`
-    * yields the contiguous in-file row position, then `seq = fileIdx << 40 |
-    * rowIdx`. A glob scan would NOT work: Spark packs small non-splittable
-    * files into partitions by size, scrambling arrival order.
+    * explicitly as `seq = fileIdx << 40 | rowIdx`, over ONE scan of all the
+    * day files:
+    *   - `fileIdx` is the file's position in name (= day) order, looked up
+    *     by `_metadata.file_name` in one map literal. Spark packs small
+    *     non-splittable files into partitions by size, so a file's
+    *     partition says nothing about its day; the name does.
+    *   - `rowIdx` is the low 33 bits of `monotonically_increasing_id`: the
+    *     record's position within its partition. A multiline JSON file is
+    *     not splittable, so it sits whole in one partition and its records
+    *     keep their array order there; rows of other files packed before
+    *     it only shift its positions, which never reach bit 40.
+    * The map literal travels as a reference object, not as code, so the
+    * scan's generated class is the same for any number of days.
     */
   def readTransactionsOrdered(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val files = Files.list(Paths.get(dir)).iterator().asScala
-      .map(_.toString)
-      .filter(p => p.substring(p.lastIndexOf('/') + 1).matches("transactions_.*\\.json"))
+      .map(_.getFileName.toString)
+      .filter(_.matches("transactions_.*\\.json"))
       .toSeq.sorted
     require(files.nonEmpty, s"no transaction files under $dir")
-    files.zipWithIndex.map { case (path, i) =>
-      spark.read.schema(Schemas.transactions)
-        .option("multiLine", value = true).json(path)
-        .withColumn("seq", lit(i.toLong << 40) + monotonically_increasing_id())
-    }.reduce(_.unionByName(_))
+    val fileIdx = typedLit(files.zipWithIndex.map { case (f, i) => f -> i.toLong }.toMap)
+    val rowIdx = monotonically_increasing_id().bitwiseAND((1L << 33) - 1)
+    spark.read.schema(Schemas.transactions)
+      .option("multiLine", value = true).json(files.map(f => Paths.get(dir, f).toString): _*)
+      .select(col("*"), shiftleft(element_at(fileIdx, col("_metadata.file_name")), 40).plus(rowIdx).as("seq"))
   }
 
   /** S2 — products CSV scan (reference src/data_processor.py:104-107). */

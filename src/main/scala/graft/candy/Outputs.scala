@@ -1,19 +1,21 @@
 package graft.candy
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-/** Explode/clean of raw transactions and construction of the four tabular
-  * outputs (orders, order_line_items, products_updated, daily_summary).
-  * Column-level semantics mirror reference src/data_processor.py:316-345,
-  * :466-572 — see each method.
+/** Explode/clean of raw transactions and construction of three tabular
+  * outputs (orders, order_line_items, daily_summary; products_updated is
+  * [[Fulfillment.updatedInventory]]). Column-level semantics mirror
+  * reference src/data_processor.py:316-345, :466-572 — see each method.
   *
-  * Each output arrives in the one partition its single-file sink writes,
-  * already in golden row order, so no output pays for a global sort: line
-  * items and orders take one exchange into that partition and sort there,
-  * the daily summary (one row per day) merges into it without an exchange,
-  * and products_updated is a driver-local frame built in product order.
+  * Line items and orders arrive in the one partition their single-file
+  * sink writes, already in golden row order, so no output pays for a
+  * global sort or an exchange: one task reads every partition of its
+  * cached input (a narrow coalesce) and builds and sorts the table there.
+  * The daily summary (one row per day) is built the same way and ordered
+  * by its caller on the driver. Each of these tables is one whole-stage
+  * unit, plus one for the side its join broadcasts.
   */
 object Outputs {
 
@@ -29,6 +31,11 @@ object Outputs {
     * include product_id), and [[Fulfillment.run]]'s own repartition by
     * product is planned away, leaving one shuffle for both where a dedup
     * shuffle followed by a fulfillment shuffle would move every row twice.
+    *
+    * `explode_outer`, not `explode`: the one row a null or empty items
+    * array yields has a null qty and goes with the null-qty items, so the
+    * result is the same, and no array-size filter is inferred onto the
+    * cached scan (a predicate Spark would generate code for).
     */
   def prepareItems(transactions: DataFrame)(implicit spark: SparkSession): Dataset[ItemRow] = {
     import spark.implicits._
@@ -40,7 +47,7 @@ object Outputs {
         col("transaction_id").as("order_id"),
         col("timestamp").as("order_datetime"),
         seqCol.as("seq"),
-        explode(col("items")).as("item"))
+        explode_outer(col("items")).as("item"))
       .select(
         col("order_id"),
         col("order_datetime"),
@@ -57,99 +64,113 @@ object Outputs {
       .as[ItemRow]
   }
 
-  /** A sink's rows in its golden order: one exchange into the single
-    * partition the sink writes, sorted there. Row order is part of the
-    * golden contract; a global `orderBy` would instead range-partition
-    * (sampling job plus exchange) only for the sink to coalesce it back.
-    */
-  private def sortedInOnePartition(df: DataFrame, by: String*): DataFrame =
-    df.repartition(1).sortWithinPartitions(by.map(col): _*)
-
   /** Final order_line_items table (reference src/data_processor.py:476-487):
     * sorted by (order_id, product_id) with money columns rendered 2-dp via
-    * format_number, in one partition (see [[sortedInOnePartition]]).
+    * format_number. One task reads every partition of `fulfilled` (a
+    * narrow coalesce, no exchange), formats and sorts, so the table is the
+    * single partition its sink writes, in golden row order. A global
+    * `orderBy` would instead range-partition (sampling job plus exchange)
+    * only for the sink to coalesce it back.
     */
   def lineItemsFinal(fulfilled: Dataset[FulfilledLine]): DataFrame =
-    sortedInOnePartition(
-      fulfilled.toDF().select(
+    fulfilled.toDF().coalesce(1)
+      .select(
         col("order_id"), col("product_id"), col("quantity"),
         format_number(col("unit_price"), 2).as("unit_price"),
-        format_number(round(col("line_total").cast("double"), 2), 2).as("line_total")),
-      "order_id", "product_id")
+        format_number(round(col("line_total").cast("double"), 2), 2).as("line_total"))
+      .sortWithinPartitions("order_id", "product_id")
 
   /** Final orders table (reference src/data_processor.py:490-513): distinct
-    * transaction headers left-joined to per-order totals; orders whose every
-    * item had null qty produce no line items, get a null total, and are
-    * silently dropped by na.drop (154 orders in the corpus — load-bearing).
-    * num_items counts ALL line items including cancelled ones. Sorted by
-    * order_id in one partition (see [[sortedInOnePartition]]).
+    * transaction headers joined to per-order totals. Orders whose every
+    * item had null qty produce no line items and no totals, so they are
+    * absent (154 orders in the corpus — load-bearing; the reference drops
+    * them with a left join and `na.drop`, which the inner join here equals:
+    * headers and totals carry no nulls). num_items counts ALL line items
+    * including cancelled ones. Sorted by order_id in one partition.
     *
-    * The headers are hash-partitioned by order_id before the `distinct`, so
-    * the distinct and the join to the per-order totals share that one
-    * partitioning instead of shuffling the headers twice.
+    * The header rows are broadcast to the per-order totals, which one task
+    * sums over every partition of `fulfilled` (a narrow coalesce, no
+    * exchange); the same task drops duplicate rows and sorts. Totals depend
+    * on order_id alone, so dropping duplicates after the join equals the
+    * reference's `distinct` on the headers before it.
     */
   def ordersFinal(transactions: DataFrame, fulfilled: Dataset[FulfilledLine]): DataFrame = {
-    val totals = fulfilled.groupBy("order_id").agg(
-      round(sum("line_total"), 2).as("total_amount"),
-      count("product_id").as("num_items"))
-    val orders = transactions
+    val headers = transactions
       .na.drop()
       .select(
         col("transaction_id").as("order_id"),
         col("timestamp").as("order_datetime"),
         col("customer_id"))
-      .repartition(col("order_id"))
+    fulfilled.coalesce(1)
+      .groupBy("order_id").agg(
+        round(sum("line_total"), 2).as("total_amount"),
+        count("product_id").as("num_items"))
+      .join(broadcast(headers), Seq("order_id"))
+      .select(
+        col("order_id"), col("order_datetime"), col("customer_id"),
+        format_number(col("total_amount"), 2).as("total_amount"), col("num_items"))
       .distinct()
-      .join(totals, Seq("order_id"), "left")
-      .select("order_id", "order_datetime", "customer_id", "total_amount", "num_items")
-      .na.drop()
-      .withColumn("total_amount", format_number(col("total_amount"), 2))
-    sortedInOnePartition(orders, "order_id")
+      .sortWithinPartitions("order_id")
   }
 
-  /** products_updated output projection (reference
-    * src/data_processor.py:574-582) of [[Fulfillment.updatedInventory]]'s
-    * driver-local frame, which is already in product_id order; the
-    * projection stays a local relation, so the sink runs one job.
-    */
-  def updatedInventoryFinal(updated: DataFrame): DataFrame =
-    updated.select(col("product_id"), col("product_name"), col("stock").as("current_stock"))
-
-  /** Daily summary (reference src/data_processor.py:517-572), sorted by
-    * date in one partition. NOTE: consumes the FORMATTED orders/line-items
-    * tables (strings) exactly like the reference does — line_total is
-    * re-cast string→double, which is part of the observable numeric
-    * behavior. cost_to_make joins from the inventory dimension (broadcast).
+  /** Daily summary (reference src/data_processor.py:517-572): one row per
+    * date, in one partition, in no particular order (the caller orders the
+    * dimension-sized rows; [[CandyPipeline.run]] sorts them by date on the
+    * driver). NOTE: consumes the FORMATTED orders/line-items tables
+    * (strings) exactly like the reference does — line_total is re-cast
+    * string→double, which is part of the observable numeric behavior.
+    * cost_to_make comes from the inventory dimension, collected to the
+    * driver.
+    *
+    * The reference joins every line item to the distinct (order, date)
+    * pairs and sums per date; here the lines are summed per order first and
+    * each pair takes its order's sums. Both add the same 2-dp values (once
+    * per pair the order appears in), and a sum of 2-dp values rounded to
+    * 2 dp does not depend on the order of summation. num_orders counts the
+    * pairs of each date, as `countDistinct(order_id)` over them would; a
+    * date none of whose orders has a line item is dropped, as the
+    * reference's inner join on date drops it.
+    *
+    * One task reads both inputs (narrow coalesces) and runs the whole
+    * summary, with no exchange.
     */
   def dailySummary(ordersFinal: DataFrame, lineItemsFinal: DataFrame,
-                   inventory: DataFrame): DataFrame = {
-    val withProfit = lineItemsFinal
-      .join(broadcast(inventory.select("product_id", "cost_to_make")), Seq("product_id"), "left")
-      .withColumn("line_profit",
-        round(col("line_total").cast("double") - col("quantity") * col("cost_to_make"), 2))
+                   inventory: DataFrame): DataFrame =
+    dailySummary(ordersFinal, lineItemsFinal, inventory.collect().toSeq)
 
-    val ordersWithDate = ordersFinal
+  /** [[dailySummary]] over inventory rows already on the driver, read by
+    * field name. */
+  def dailySummary(ordersFinal: DataFrame, lineItemsFinal: DataFrame,
+                   inventory: Seq[Row]): DataFrame = {
+    // each product_id's cost_to_make per product row, looked up in one map
+    // literal; explode_outer yields a line once per product row, or once
+    // with a null cost when none matches, as the reference's left join does
+    val costs = typedLit(inventory
+      .filterNot(r => r.isNullAt(r.fieldIndex("product_id")))
+      .groupMap(_.getAs[Number]("product_id").longValue)(r =>
+        Option(r.getAs[java.lang.Double]("cost_to_make")).map(_.doubleValue)))
+    val lineTotal = col("line_total").cast("double")
+    val perOrder = lineItemsFinal.coalesce(1)
+      .withColumn("cost_to_make", explode_outer(try_element_at(costs, col("product_id"))))
+      .groupBy("order_id")
+      .agg(
+        sum(lineTotal).as("sales"),
+        sum(round(lineTotal - col("quantity") * col("cost_to_make"), 2)).as("profit"),
+        count(lit(1)).as("lines"))
+    ordersFinal.coalesce(1)
       .select(col("order_id"), to_date(col("order_datetime")).as("date"))
       .distinct()
-
-    val dailyOrders = ordersWithDate.groupBy("date")
-      .agg(countDistinct("order_id").as("num_orders"))
-
-    val salesProfit = withProfit
-      .join(ordersWithDate, Seq("order_id"), "left")
+      .join(broadcast(perOrder), Seq("order_id"), "left")
       .groupBy("date")
       .agg(
-        round(sum("line_total").cast("double"), 2).as("total_sales"),
-        round(sum("line_profit").cast("double"), 2).as("total_profit"))
-
-    // one row per day: the final stage merges into one partition without
-    // an exchange and sorts there
-    dailyOrders.join(salesProfit, Seq("date"), "inner")
+        count("order_id").as("num_orders"),
+        round(sum("sales"), 2).as("total_sales"),
+        round(sum("profit"), 2).as("total_profit"),
+        count(when(col("date").isNotNull, col("lines"))).as("lines"))
+      .where(col("lines") > 0)
       .select(
         col("date"), col("num_orders"),
         format_string("%.2f", col("total_sales")).as("total_sales"),
         format_string("%.2f", col("total_profit")).as("total_profit"))
-      .coalesce(1)
-      .sortWithinPartitions("date")
   }
 }

@@ -53,7 +53,8 @@ object Schemas {
 }
 
 /** One exploded, cleaned order line item (pre-fulfillment). `seq` is the
-  * deterministic arrival position (file index << 40 | row-in-file) — the
+  * deterministic arrival position (file index << 40 | row position in the
+  * scan partition holding the whole file) — the
   * golden fulfillment order is (order_date, seq), i.e. day-file arrival
   * order, NOT the datetime sort (see SURVEY §5.3 and Ingest.readTransactionsOrdered).
   */

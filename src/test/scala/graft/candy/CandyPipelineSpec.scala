@@ -2,9 +2,10 @@ package graft.candy
 
 import graft.SparkTestBase
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -240,6 +241,76 @@ class CandyPipelineSpec extends SparkTestBase {
       } finally spark.listenerManager.unregister(listener)
       val rowsRead = scans.synchronized(scans.asScala.toSeq.map(_.metrics("numOutputRows").value).sum)
       assert(rowsRead == transactionCount + products.size - 1)
+    }
+  }
+
+  /** What the whole batch ([[batch]]) ran: its executed plans, the RDD ids
+    * of the transaction caches they read (taken while they are live), and,
+    * per completed stage, its own RDD id and the accumulator ids it updated. */
+  private final case class BatchRecord(plans: Seq[SparkPlan], transactionCaches: Set[Int],
+                                       stages: Seq[(Int, Set[Long])])
+
+  private def batchRecord(dir: Path): BatchRecord = {
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val caches = mutable.Set.empty[Int]
+    val stages = mutable.ArrayBuffer.empty[(Int, Set[Long])]
+    val queries = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized {
+          plans += qe.executedPlan
+          caches ++= nodes(qe.executedPlan).collect {
+            case m: InMemoryTableScanExec if m.relation.output.exists(_.name == "items") =>
+              m.relation.cacheBuilder.cachedColumnBuffers.id
+          }
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val stageListener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.synchronized {
+        stages += e.stageInfo.rddInfos.head.id -> e.stageInfo.accumulables.keySet.toSet
+      }
+    }
+    spark.listenerManager.register(queries)
+    spark.sparkContext.addSparkListener(stageListener)
+    try {
+      batch(dir, reloadDaily = false)
+      ListenerBusDrain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(queries)
+      spark.sparkContext.removeSparkListener(stageListener)
+    }
+    plans.synchronized(BatchRecord(plans.toList, caches.toSet, stages.synchronized(stages.toList)))
+  }
+
+  test("one stage builds the transactions cache, and each input is scanned by one stage") {
+    withCorpus(days) { dir =>
+      val r = batchRecord(dir)
+      // a stage lists a scan's row metric only if the scan ran in it; a
+      // stage that reads the cached transactions runs no scan
+      val scans = r.plans.flatMap(nodes).collect { case s: FileSourceScanExec => s }
+      def stagesScanning(prefix: String): Int = {
+        val ids = scans.filter(_.relation.location.inputFiles.exists(_.contains(s"/$prefix")))
+          .map(_.metrics("numOutputRows").id).toSet
+        assert(ids.nonEmpty, s"no scan of $prefix*")
+        r.stages.count(_._2.exists(ids))
+      }
+      assert(stagesScanning("transactions_") == 1)
+      assert(stagesScanning("products") == 1)
+      // a stage whose own RDD is the cache computes (or waits on) every
+      // partition of it: two such stages race to build the same blocks
+      assert(r.transactionCaches.size == 1)
+      assert(r.stages.count(st => r.transactionCaches(st._1)) == 1, r.stages.mkString("\n"))
+    }
+  }
+
+  test("the batch generates at most 9 distinct whole-stage code bodies") {
+    withCorpus(days) { dir =>
+      // Spark compiles each distinct body once per class loader (driver and
+      // tasks) and keeps 100 compiled classes by default, in 4 segments of
+      // 25; a batch that needs more than fit recompiles on every pass
+      val bodies = batchRecord(dir).plans.flatMap(nodes)
+        .collect { case w: WholeStageCodegenExec => w.doCodeGen()._2.body }.distinct
+      assert(bodies.size <= 9, s"${bodies.size} whole-stage code bodies")
     }
   }
 

@@ -1,20 +1,26 @@
 package graft.candy
 
 import graft.SparkTestBase
+import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 
 /** Guards the arrival-order invariant behind the golden fulfillment order
   * (SURVEY §5.3): `Ingest.readTransactionsOrdered` must yield `seq` values
   * whose sort order is (file name order, in-JSON-array order) — even under
-  * scan configurations that aggressively pack or split files.
+  * scan configurations that aggressively pack or split files — from one
+  * scan of all the day files.
   *
   * The second test is the failing-by-construction proof that the invariant
-  * NEEDS the per-file read: a naive glob scan + monotonically_increasing_id
-  * orders rows by Spark's size-descending file packing, not by file name,
-  * so its order diverges on the same inputs. If Spark's packing ever
-  * changed to make the naive path accidentally correct, that test flags
-  * the guard as obsolete rather than silently passing.
+  * NEEDS the file-index bits of `seq`: a naive glob scan +
+  * monotonically_increasing_id orders rows by Spark's size-descending file
+  * packing, not by file name, so its order diverges on the same inputs;
+  * `readTransactionsOrdered` therefore takes a file's rank from its name
+  * and keeps the scan's row number only for the order within the file. If
+  * Spark's packing ever changed to make the naive path accidentally
+  * correct, that test flags the file-index bits as possibly obsolete
+  * rather than silently passing.
   */
 class IngestOrderSpec extends SparkTestBase {
 
@@ -79,7 +85,25 @@ class IngestOrderSpec extends SparkTestBase {
       assert(naive.sorted == expected.sorted, "same rows must be read")
       assert(naive != expected,
         "glob scan now preserves name order — packing behavior changed; " +
-          "re-evaluate whether readTransactionsOrdered still needs per-file reads")
+          "re-evaluate whether readTransactionsOrdered still needs the file-index bits of seq")
+    }
+  }
+
+  test("readTransactionsOrdered plans one file scan and no union, for 3 and for 7 day files") {
+    for (days <- Seq(3, 7)) {
+      val dir = Paths.get(tempDir("graft-ingest-scan"))
+      for (day <- 1 to days) {
+        val body = (0 until 2).map(txJson(day, _)).mkString("[\n", ",\n", "\n]")
+        Files.writeString(dir.resolve(f"transactions_2024010$day.json"), body)
+      }
+      val df = Ingest.readTransactionsOrdered(spark, dir.toString)
+      val plan = df.queryExecution.sparkPlan
+      val scans = plan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"$days day files:\n$plan")
+      assert(plan.collect { case u: UnionExec => u }.isEmpty, s"$days day files:\n$plan")
+      assert(df.queryExecution.optimizedPlan.collect { case u: Union => u }.isEmpty)
+      val got = df.orderBy("seq").select("transaction_id").collect().map(_.getLong(0)).toSeq
+      assert(got == (1 to days).flatMap(day => Seq(day * 1000L, day * 1000L + 1)))
     }
   }
 }
