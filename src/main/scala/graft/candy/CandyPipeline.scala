@@ -39,7 +39,9 @@ object CandyPipeline {
   /** The five output tables, each in its sink's row order. `orders` and
     * `orderLineItems` are cached, each in one sorted partition;
     * `productsUpdated`, `dailySummary` and `forecast` are driver-local
-    * frames (local relations). Writing any of them recomputes nothing. */
+    * frames (local relations). Writing any of them recomputes nothing:
+    * [[Ingest.saveSingleCsv]] runs no Spark job for a driver-local frame
+    * and one collect over the cache for `orders` and `orderLineItems`. */
   final case class Results(
       orders: DataFrame,
       orderLineItems: DataFrame,

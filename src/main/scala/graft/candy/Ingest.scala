@@ -1,7 +1,12 @@
 package graft.candy
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Sources and sinks for the candy pipeline.
@@ -13,6 +18,9 @@ import scala.jdk.CollectionConverters._
   * Spark's built-in `format("jdbc")` connectors when a URL is supplied.
   * All day files of transactions are read by one scan, whose generated
   * code is the same for any number of days ([[readTransactionsOrdered]]).
+  * The single-file CSV sink collects its frame's rows to the driver and
+  * formats them there with Spark's own CSV generator ([[saveSingleCsv]]),
+  * so it runs no write job and is bounded by driver memory.
   */
 object Ingest {
 
@@ -75,28 +83,39 @@ object Ingest {
       .options(options).mode("overwrite").save()
 
   /** S7 — single-file CSV sink (reference src/data_processor.py:584-610):
-    * coalesce(1) + header, then promote the lone part file to the target name.
-    * Only used for final, small, ordered outputs — never mid-pipeline. The
-    * scratch directory `.tmp_<fileName>` is removed whether or not the write
-    * succeeds; a failed write leaves an existing target file as it was.
+    * one UTF-8 file with a header, byte for byte what Spark's
+    * `df.coalesce(1).write.option("header", true).csv(...)` puts in its
+    * lone part file, rows in partition order. The plan runs once, as a
+    * named SQL execution of the frame's session (so its tasks keep the
+    * session's class loader and query listeners see the plan), and its rows
+    * are formatted on the driver by Spark's own CSV generator under the
+    * options its CSV writer builds. A driver-local frame (a local relation)
+    * runs no job at all, and no frame goes through an output committer.
+    * Every row passes through driver memory, so this is only for final,
+    * small, ordered outputs — never mid-pipeline. The rows go to
+    * `.tmp_<fileName>`, which then replaces the target; the scratch file is
+    * removed whether or not the write succeeds, and a failed write leaves
+    * an existing target file as it was.
     */
   def saveSingleCsv(df: DataFrame, outputDir: String, fileName: String): Unit = {
-    val out = Paths.get(outputDir)
-    Files.createDirectories(out)
+    // a column type Spark's CSV writer refuses is refused with its error,
+    // before anything runs
+    DataSourceUtils.verifySchema(new CSVFileFormat, df.schema)
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("saveSingleCsv")) {
+      qe.executedPlan.executeCollect()
+    }
+    val conf = qe.sparkSession.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val out = Files.createDirectories(Paths.get(outputDir))
     val tmp = out.resolve(s".tmp_$fileName")
     try {
-      df.coalesce(1).write.option("header", value = true).mode("overwrite")
-        .csv(tmp.toString)
-      val part = Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".csv"))
-        .getOrElse(sys.error(s"no part file produced under $tmp"))
-      Files.move(part, out.resolve(fileName), StandardCopyOption.REPLACE_EXISTING)
-    } finally deleteRecursively(tmp)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+      val gen = new UnivocityGenerator(df.schema, Files.newBufferedWriter(tmp, StandardCharsets.UTF_8), options)
+      try {
+        gen.writeHeaders()
+        rows.foreach(gen.write)
+      } finally gen.close()
+      Files.move(tmp, out.resolve(fileName), StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 }

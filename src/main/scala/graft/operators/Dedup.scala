@@ -983,105 +983,6 @@ object Dedup {
     s"pigeonhole_keys($hCol, $bits, $chunks, $maxDist)"
   }
 
-  /** The geometry AUTO-DIAL: pick the chunk count minimizing the modeled
-    * work of a pigeonhole join over `n` signatures — the
-    * [[graft.operators.SimilaritySearch.nearDupPairsAuto]] cost-planning
-    * discipline applied to Hamming banding. Work model per candidate
-    * geometry c (m = C(c, maxDist) key expansions, keybits =
-    * bits·(c−maxDist)/c):
-    *
-    *   work(c) ≈ m·n  (explode + shuffle rows)  +  m·n²/2^keybits
-    *             (expected random-collision candidates, each one
-    *             bit_count + filter inside the join)
-    *
-    * Small corpora land on the minimal maxDist+1 banding (the expansion
-    * term dominates — break-even is ~3×10^5 uniform 64-bit signatures at
-    * maxDist 4, receipts in SCALING.md r16); web-scale corpora land on
-    * wide combination keys where the candidate term would otherwise be
-    * quadratic. Clustered real-world signatures shift the break-even
-    * LOWER (collisions above the uniform model), so the model is
-    * conservative in exactly the safe direction at scale. Pure driver
-    * arithmetic over (n, bits, maxDist); recall is 100% at every answer.
-    */
-  def pigeonholeChunksAuto(n: Long, bits: Int, maxDist: Int): Int = {
-    require(n >= 0 && maxDist >= 0 && maxDist < bits)
-    // symmetric form + saturation: C(c, k) = C(c, c-k), and the candidate
-    // range keeps c - maxDist small, so reducing k to min(k, c-k) bounds the
-    // running product for every legal maxDist (< bits). If an intermediate
-    // would still overflow Long, saturate to Long.MaxValue — the <= 4096
-    // filter then rejects that geometry instead of comparing garbage, so
-    // the c = maxDist + 1 candidate (C = maxDist + 1) always survives.
-    def comb(c: Int, k0: Int): Long = {
-      val k = math.min(k0, c - k0)
-      var a = 1L
-      var i = 0
-      while (i < k) {
-        val num = c - i
-        if (a > Long.MaxValue / num) return Long.MaxValue
-        a = a * num / (i + 1)
-        i += 1
-      }
-      a
-    }
-    // the range always contains maxDist + 1 (its expansion count is
-    // maxDist + 1 <= 4096 for every legal maxDist), so the minBy can
-    // never see an empty set — maxDist >= 16 degrades to the minimal
-    // geometry instead of crashing a domain the fixed dial accepts
-    val candidates = (maxDist + 1) to math.min(bits, math.max(16, maxDist + 1))
-    candidates
-      .filter(c => comb(c, maxDist) <= 4096)
-      .minBy { c =>
-        val m = comb(c, maxDist).toDouble
-        val keyBits = bits.toDouble * (c - maxDist) / c
-        val buckets = math.pow(2.0, math.min(62.0, keyBits))
-        m * n + m * n.toDouble * n.toDouble / buckets
-      }
-  }
-
-  /** [[hammingNearDuplicates64]] with the geometry chosen by
-    * [[pigeonholeChunksAuto]] from the corpus size — the production entry
-    * point (one count job, then the banded join at the right scale
-    * posture; identical output at every geometry). */
-  def hammingNearDuplicates64Auto(
-      sigs: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int, carry: Seq[String] = Nil): DataFrame = {
-    // persist BEFORE the sizing count: sigs is typically a decode-heavy
-    // frame (image decode -> perceptual hash), and without the cache the
-    // count job and the banded join would each run the full upstream
-    // lineage — one whole extra corpus pass at lake scale
-    val cached = sigs.persist()
-    try {
-      val n = cached.count()
-      val c = pigeonholeChunksAuto(n, 64, maxDist)
-      System.err.println(
-        s"hammingNearDuplicates64Auto: n=$n maxDist=$maxDist -> chunks=$c")
-      hammingNearDuplicates64(cached, idCol, hashCol, maxDist, carry, chunks = c)
-    } finally cached.unpersist()
-  }
-
-  /** [[simHashNearDuplicates]] with the geometry chosen by
-    * [[pigeonholeChunksAuto]] from the corpus size — the text twin of
-    * [[hammingNearDuplicates64Auto]] (the doc count is a metadata-cheap
-    * scan; the signature build itself is persisted inside the banded
-    * join either way). */
-  def simHashNearDuplicatesAuto(
-      docs: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3,
-      family: String = graft.functions.HashFamily.Xx64): DataFrame = {
-    // persist BEFORE the sizing count (the hamming twin's discipline):
-    // docs is typically a derived frame (parsed/filtered text), and the
-    // count would otherwise re-run its full lineage beside the signature
-    // build's own pass
-    val cached = docs.persist()
-    try {
-      val n = cached.count()
-      val c = pigeonholeChunksAuto(n, 60, maxDist)
-      System.err.println(
-        s"simHashNearDuplicatesAuto: n=$n maxDist=$maxDist -> chunks=$c")
-      simHashNearDuplicates(cached, idCol, textCol, maxDist, family, chunks = c)
-    } finally cached.unpersist()
-  }
-
   /** SimHash near-duplicates with Hamming distance <= maxDist: the 60-bit
     * signature is banded by [[pigeonholeKeys]], so any pair within
     * maxDist shares at least one combination key — candidates come from

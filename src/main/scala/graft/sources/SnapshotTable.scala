@@ -1235,7 +1235,6 @@ object SnapshotTable {
     val header = txn.map(id => s"#txn=$id\n").getOrElse("") +
       s"#prev=${prevV.getOrElse(0L)}\n" +
       schemaIdHeader.map(id => s"#schemaid=$id\n").getOrElse("") +
-      s"#ts=${System.currentTimeMillis()}\n" +
       headers.toSeq.sorted.map { case (k, hv) => s"#$k=$hv\n" }.mkString
     val lines = header + compose(prev, stamped).map(renderEntry).mkString("\n")
     Files.createDirectories(manifestDir(tablePath))

@@ -33,11 +33,7 @@ class ReachGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     "DuckDbDialect.ensureRegistered" ->
       "the second JDBC dialect of the reference's ingest parity; JdbcDocStoreSpec pins it",
     "SparkEntry.entry" ->
-      "the flagship entry point SparkEntry exposes to external callers",
-    "Dedup.hammingNearDuplicates64Auto" ->
-      "spec-only (DedupSpec), kept for a later deletion",
-    "Dedup.simHashNearDuplicatesAuto" ->
-      "spec-only (DedupSpec), kept for a later deletion")
+      "the flagship entry point SparkEntry exposes to external callers")
 
   /** `src` with comments, string literals and char literals blanked to
     * spaces (newlines kept, so line numbers survive). In an interpolated

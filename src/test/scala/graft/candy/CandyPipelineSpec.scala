@@ -2,9 +2,9 @@ package graft.candy
 
 import graft.SparkTestBase
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.classic
+import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -30,9 +30,10 @@ import scala.jdk.CollectionConverters._
   *
   * Beside the values it pins the batch's shape: every input record is read
   * from its file once, dedup and fold share one shuffle, no output is
-  * range-sorted, the inventory sink shuffles nothing, the bytes written do
-  * not depend on the shuffle partition count, and neither a failing `run`
-  * nor a failing sink leaves anything behind.
+  * range-sorted, the inventory sink shuffles nothing, the driver-local
+  * sinks run no job, the bytes written do not depend on the shuffle
+  * partition count, and neither a failing `run` nor a failing sink leaves
+  * anything behind.
   */
 class CandyPipelineSpec extends SparkTestBase {
 
@@ -350,6 +351,37 @@ class CandyPipelineSpec extends SparkTestBase {
       assert(ranged.isEmpty, ranged.mkString("\n"))
       assert(inventoryPlans.nonEmpty)
       assert(exchanges(inventoryPlans).isEmpty, inventoryPlans.mkString("\n"))
+    }
+  }
+
+  test("the driver-local sinks run no job, and the orders and line-item sinks one each") {
+    withCorpus(days) { dir =>
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      val out = Paths.get(tempDir("graft-candy-out"))
+      try {
+        val r = CandyPipeline.run(spark, dir.toString)
+        ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.addSparkListener(listener)
+        /** The Spark jobs that writing `df` to `file` submits. */
+        def jobsOf(df: DataFrame, file: String): Int = {
+          jobs.set(0)
+          Ingest.saveSingleCsv(df, out.toString, file)
+          ListenerBusDrain(spark.sparkContext)
+          jobs.get
+        }
+        assert(jobsOf(r.productsUpdated, "products_updated.csv") == 0)
+        assert(jobsOf(r.dailySummary, "daily_summary.csv") == 0)
+        assert(jobsOf(r.forecast, "sales_profit_forecast.csv") == 0)
+        assert(jobsOf(r.orders, "orders.csv") <= 1)
+        assert(jobsOf(r.orderLineItems, "order_line_items.csv") <= 1)
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        spark.catalog.clearCache()
+        deleteRecursively(out)
+      }
     }
   }
 

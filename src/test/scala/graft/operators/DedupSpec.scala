@@ -398,32 +398,6 @@ class DedupSpec extends SparkTestBase {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
-  test("pigeonholeChunksAuto: minimal banding for small corpora, wide " +
-       "combination keys at scale, bounded expansion everywhere") {
-    // small n: the expansion term dominates -> minimal maxDist+1 geometry
-    assert(Dedup.pigeonholeChunksAuto(10000L, 64, 4) == 5)
-    // web scale: the candidate term dominates -> wide keys (the model
-    // widens monotonically: 8 chunks/32-bit keys at 1e9, 9+ at 1e10)
-    assert(Dedup.pigeonholeChunksAuto(1000000000L, 64, 4) >= 7)
-    assert(Dedup.pigeonholeChunksAuto(10000000000L, 64, 4) >= 9)
-    // the dial never exceeds the expansion cap or the bit budget
-    for (n <- Seq(0L, 100L, 100000L, 10000000L, 10000000000L);
-         d <- Seq(0, 1, 3, 4, 8)) {
-      val c = Dedup.pigeonholeChunksAuto(n, 64, d)
-      assert(c > d && c <= 16, s"n=$n d=$d -> c=$c")
-    }
-    // and the auto entry point returns the same pairs as any fixed dial
-    import spark.implicits._
-    val sigs = (0 until 64).map(i =>
-      (i.toLong, i.toLong * 0x9E3779B97F4A7C15L ^ (i % 3).toLong)).toDF("id", "h")
-    val auto = Dedup.hammingNearDuplicates64Auto(sigs, "id", "h", maxDist = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = Dedup.hammingNearDuplicates64(sigs, "id", "h", maxDist = 4,
-        chunks = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto == fixed)
-  }
-
   test("simHashNearDuplicates pair set is geometry-invariant (chunks dial)") {
     val base = Dedup.simHashNearDuplicates(df(corpus), "doc_id", "text",
         maxDist = 3)
@@ -432,9 +406,5 @@ class DedupSpec extends SparkTestBase {
         maxDist = 3, chunks = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(base == wide)
-    val auto = Dedup.simHashNearDuplicatesAuto(df(corpus), "doc_id", "text",
-        maxDist = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(base == auto)
   }
 }
